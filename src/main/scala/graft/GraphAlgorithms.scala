@@ -13,19 +13,157 @@ import org.apache.spark.sql.graftext.CappedCheckpoint._
   */
 object GraphAlgorithms {
 
-  /** Minimum-label propagation connected components.
+  /** Minimum-label connected components.
     * Returns (id, component) where component = min node id in the component
     * (deterministic, unlike scipy's arbitrary int labels — semantics
     * equivalent up to relabeling; networkframe.py:721-730).
     *
-    * connection="weak" (or undirected frames) symmetrizes edges. Converges in
+    * connection="weak" (or undirected frames) ignores edge direction;
+    * connection="strong" on a directed frame is [[strongComponentLabels]].
+    * Integral-id graphs whose induced distinct edge relation has at most
+    * [[DriverContractionCap]] rows finish on the driver: one collect and a
+    * union-find, the scipy shape (see [[driverComponents]]). Larger graphs
+    * and string/fractional ids run the distributed [[weakFixpoint]].
+    */
+  def componentLabels(nf: NetworkFrame, connection: String = "weak"): DataFrame =
+    if (connection == "strong" && nf.directed) strongComponentLabels(nf)
+    else driverComponents(nf, unionFindMinLabels).getOrElse(weakFixpoint(nf))
+
+  /** Strongly connected components, labeled by the min member id of each
+    * SCC (deterministic; scipy's int labels are arbitrary,
+    * networkframe.py:722). Integral-id graphs with at most
+    * [[DriverContractionCap]] induced distinct edges finish on the driver
+    * with an iterative Tarjan (see [[driverComponents]]); larger graphs and
+    * string/fractional ids run the distributed [[sccFixpoint]].
+    */
+  def strongComponentLabels(nf: NetworkFrame): DataFrame =
+    driverComponents(nf, tarjanMinLabels).getOrElse(sccFixpoint(nf))
+
+  /** Edge relations at or below this row count are labeled on the driver
+    * instead of by a distributed fixpoint — one collect job (~16 MB of long
+    * pairs at the cap, the size class AQE broadcasts) replaces the
+    * fixpoint's jobs. Used by the component finishes above and by the
+    * Borůvka contraction in [[minimumSpanningForest]].
+    */
+  private val DriverContractionCap = 1L << 20
+
+  /** The driver finish shared by [[componentLabels]] and
+    * [[strongComponentLabels]]. Applies when the node ids and edge
+    * endpoints are integral ([[numericCol]]) and the distinct
+    * (source, target) pairs with BOTH endpoints in the node table — the
+    * edges the fixpoints can see; dangling edges drop exactly as they do
+    * there — number at most [[DriverContractionCap]]: the pairs are
+    * cached, counted, and collected in one job, `label` maps every
+    * endpoint id to its component's min member id, and that small
+    * (id, component) frame left-joins onto the node table, so nodes are
+    * never collected and untouched nodes label themselves. Output rows,
+    * column names and types match the distributed fixpoints. None when
+    * the gate fails.
+    */
+  private def driverComponents(nf: NetworkFrame,
+      label: Array[(Long, Long)] => Seq[(Long, Long)]): Option[DataFrame] = {
+    if (!(numericCol(nf.nodes, "id") && numericCol(nf.edges, "source") &&
+          numericCol(nf.edges, "target"))) return None
+    val ids = nf.nodes.select("id")
+    // persisted, not localCheckpointed: the count that materializes the
+    // cache is the cap check itself, one job fewer than a checkpoint + count
+    val pairs = nf.edges.select(col("source"), col("target")).distinct()
+      .join(ids.withColumnRenamed("id", "source"), Seq("source"), "left_semi")
+      .join(ids.withColumnRenamed("id", "target"), Seq("target"), "left_semi")
+      .select(col("source").cast("long"), col("target").cast("long"))
+      .rdd.map(r => (r.getLong(0), r.getLong(1)))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val collected =
+      try if (pairs.count() > DriverContractionCap) None else Some(pairs.collect())
+      finally pairs.unpersist(blocking = false)
+    collected.map { p =>
+      val idType = nf.nodes.schema("id").dataType
+      val lab = nf.nodes.sparkSession.createDataFrame(label(p)).toDF("id", "component")
+        .select(col("id").cast(idType), col("component").cast(idType))
+      ids.join(lab, Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+    }
+  }
+
+  /** Driver-side union-find over integral id pairs: every id in `pairs`
+    * with the min member id of its connected component. A union hangs the
+    * larger root under the smaller, so every root is its set's minimum and
+    * `find` returns the min-member label directly.
+    */
+  private def unionFindMinLabels(pairs: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val nxt = parent(c); parent(c) = r; c = nxt }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    pairs.iterator.flatMap(p => Iterator(p._1, p._2)).distinct.map(c => c -> find(c)).toSeq
+  }
+
+  /** Driver-side Tarjan SCC over directed integral id pairs: every id in
+    * `pairs` with the min member id of its strong component. Iterative
+    * (an explicit DFS stack of (node, out-neighbors not yet tried)
+    * frames), so a long chain cannot overflow the JVM stack.
+    */
+  private def tarjanMinLabels(pairs: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val ids = pairs.flatMap(p => Array(p._1, p._2)).distinct
+    val at = scala.collection.mutable.LongMap.empty[Int]
+    ids.indices.foreach(i => at(ids(i)) = i)
+    val adj = Array.fill(ids.length)(List.empty[Int])
+    pairs.foreach { case (s, t) => adj(at(s)) ::= at(t) }
+    val index = Array.fill(ids.length)(-1)
+    val low = new Array[Int](ids.length)
+    val onStack = new Array[Boolean](ids.length)
+    val label = new Array[Long](ids.length)
+    var stack = List.empty[Int]
+    var counter = 0
+    def visit(v: Int): Unit = {
+      index(v) = counter; low(v) = counter; counter += 1
+      stack ::= v; onStack(v) = true
+    }
+    for (root <- ids.indices if index(root) < 0) {
+      visit(root)
+      var dfs = List(root -> adj(root))
+      while (dfs.nonEmpty) {
+        val (v, out) = dfs.head
+        out match {
+          case w :: rest =>
+            dfs = (v -> rest) :: dfs.tail
+            if (index(w) < 0) { visit(w); dfs ::= (w -> adj(w)) }
+            else if (onStack(w)) low(v) = math.min(low(v), index(w))
+          case Nil =>
+            dfs = dfs.tail
+            dfs.headOption.foreach { case (u, _) => low(u) = math.min(low(u), low(v)) }
+            if (low(v) == index(v)) {
+              // v roots an SCC: it and everything above it on the stack
+              val (above, rest) = stack.span(_ != v)
+              val members = v :: above
+              val m = members.map(ids(_)).min
+              members.foreach { u => onStack(u) = false; label(u) = m }
+              stack = rest.tail
+            }
+        }
+      }
+    }
+    ids.indices.map(i => ids(i) -> label(i))
+  }
+
+  /** Distributed weak components: minimum-label propagation over the
+    * symmetrized edges, the [[componentLabels]] path for graphs above
+    * [[DriverContractionCap]] and for non-integral ids. Converges in
     * O(diameter) rounds; each round localCheckpoints to keep lineage flat.
     * At 100 TB scale: edges pre-partitioned by source reuse the same
     * partitioning across rounds; AQE handles hub-node skew in the join.
+    * Throws IllegalStateException if `maxRounds` rounds do not converge.
     */
-  def componentLabels(nf: NetworkFrame, connection: String = "weak"): DataFrame = {
-    if (connection == "strong" && nf.directed) return strongComponentLabels(nf)
-    withoutConstraintPropagation(nf.edges) {
+  private[graft] def weakFixpoint(nf: NetworkFrame, maxRounds: Int = 200): DataFrame =
+      withoutConstraintPropagation(nf.edges) {
     val sym = nf.symmetrizedEdges
     val e = sym.distinct().localCheckpointCapped()
 
@@ -43,7 +181,7 @@ object GraphAlgorithms {
       if (sumProbe) monotoneSum(labels, "component") else None
     var converged = false
     var rounds = 0
-    while (!converged && rounds < 200) {
+    while (!converged && rounds < maxRounds) {
       // every node receives the min label of its in-neighbors; keep the min
       // of own and received. Join-based (not union+groupBy): same single
       // shuffle, and it avoids a Catalyst Union-constraint-rewrite bug that
@@ -97,23 +235,12 @@ object GraphAlgorithms {
       labels = next
       rounds += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"componentLabels did not converge within $rounds rounds")
     System.err.println(s"[graft] componentLabels converged in $rounds rounds")
     labels
-    }
   }
 
-  /** Strongly connected components via forward-max coloring (Orzan-style
-    * FW-BW coloring, the standard distributed SCC algorithm): repeat
-    * { propagate max id forward to fixpoint -> color classes; roots are
-    * nodes whose color is their own id; the SCC of root r is the backward
-    * reachable set of r inside color class r; peel those off } until no
-    * nodes remain. Labels are the min member id of each SCC (deterministic;
-    * scipy's int labels are arbitrary, networkframe.py:722).
-    *
-    * Peeling rounds are O(#SCC levels) on adversarial chains but O(log n)
-    * expected on random id assignment; each inner fixpoint is one
-    * join+aggregate shuffle per round with checkpointed lineage.
-    */
   /** Plain one-shuffle propagation rounds before the SCC coloring fixpoint
     * engages pointer doubling — small cyclic cores converge well before
     * this and never pay the doubling join; a genuinely long chain (the
@@ -276,8 +403,22 @@ object GraphAlgorithms {
     colors
   }
 
-  def strongComponentLabels(nf: NetworkFrame,
-                            doublingAfter: Int = sccDoublingAfter): DataFrame =
+  /** Distributed strongly connected components via forward-max coloring
+    * (Orzan-style FW-BW coloring, the standard distributed SCC algorithm),
+    * the [[strongComponentLabels]] path for graphs above
+    * [[DriverContractionCap]] and for non-integral ids: repeat
+    * { propagate max id forward to fixpoint -> color classes; roots are
+    * nodes whose color is their own id; the SCC of root r is the backward
+    * reachable set of r inside color class r; peel those off } until no
+    * nodes remain. Labels are the min member id of each SCC.
+    *
+    * Peeling rounds are O(#SCC levels) on adversarial chains but O(log n)
+    * expected on random id assignment; each inner fixpoint is one
+    * join+aggregate shuffle per round with checkpointed lineage. Throws
+    * IllegalStateException if nodes remain after `maxRounds` peel rounds.
+    */
+  private[graft] def sccFixpoint(nf: NetworkFrame, doublingAfter: Int = sccDoublingAfter,
+                                 maxRounds: Int = 200): DataFrame =
       withoutConstraintPropagation(nf.edges) {
     val e = nf.edges.select(col("source"), col("target")).distinct().localCheckpointCapped()
     var remaining = nf.nodes.select(col("id")).localCheckpointCapped()
@@ -288,7 +429,7 @@ object GraphAlgorithms {
     // so no isEmpty/count action is ever issued twice for the same frame
     // (driver-action latency, not data volume, dominates the peel rounds)
     var remainingCount = remaining.count()
-    while (remainingCount > 0 && guard < 200) {
+    while (remainingCount > 0 && guard < maxRounds) {
       guard += 1
       System.err.println(s"[graft] scc peel round $guard, remaining=$remainingCount")
       var eR = e
@@ -428,6 +569,10 @@ object GraphAlgorithms {
       remainingCount = remaining.count()
       }
     }
+    if (remainingCount > 0) throw new IllegalStateException(
+      s"strongComponentLabels left $remainingCount nodes unpeeled after $guard rounds")
+    // a frame with no nodes never enters the peel loop
+    if (result == null) return nf.nodes.select(col("id"), col("id").as("component"))
     // relabel each SCC by its min member id
     result.join(result.groupBy("root").agg(min(col("id")).as("component")), Seq("root"))
       .select(col("id"), col("component"))
@@ -2149,14 +2294,6 @@ object GraphAlgorithms {
     c.sparkSession.createDataFrame(c.rdd, c.schema)
   }
 
-  /** Component-contraction graphs at or below this row count are labeled
-    * by a driver-side union-find instead of the distributed min-label
-    * fixpoint — one collect job (~16 MB of long pairs at the cap, the
-    * size class AQE broadcasts) replaces ~9 shuffle jobs per Borůvka
-    * round. Early rounds of a genuinely huge forest stay distributed.
-    */
-  private val DriverContractionCap = 1L << 20
-
   def minimumSpanningForest(nf: NetworkFrame, weightCol: String = "weight",
                             maxRounds: Int = 20,
                             driverContractionCap: Long = DriverContractionCap): DataFrame =
@@ -2215,34 +2352,10 @@ object GraphAlgorithms {
         // column actually being integral — NetworkFrame ids are arbitrary
         // (string/decimal ids would cast to null -> NPE, or truncate and
         // collide); everything else takes the type-agnostic fixpoint
-        val idIsIntegral = ce.schema("a").dataType match {
-          case org.apache.spark.sql.types.ByteType
-             | org.apache.spark.sql.types.ShortType
-             | org.apache.spark.sql.types.IntegerType
-             | org.apache.spark.sql.types.LongType => true
-          case _ => false
-        }
-        val m: DataFrame = if (idIsIntegral && ceCount <= driverContractionCap) {
+        val m: DataFrame = if (numericCol(ce, "a") && ceCount <= driverContractionCap) {
           val pairs = ce.select(col("a").cast("long"), col("b").cast("long"))
             .collect().map(r => (r.getLong(0), r.getLong(1)))
-          val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent(r)
-            var c = x
-            while (parent.getOrElse(c, c) != c) {
-              val nxt = parent(c); parent(c) = r; c = nxt
-            }
-            r
-          }
-          pairs.foreach { case (a, b) =>
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-          }
-          val ids = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
-          val minOf = ids.groupBy(find).map { case (r, ms) => r -> ms.min }
-          val rows = ids.toSeq.map(c => (c, minOf(find(c))))
-          ce.sparkSession.createDataFrame(rows).toDF("c", "lab")
+          ce.sparkSession.createDataFrame(unionFindMinLabels(pairs)).toDF("c", "lab")
         } else {
           var mf = ce.select(col("a").as("c")).distinct()
             .select(col("c"), col("c").as("lab")).transform(flatCheckpoint)

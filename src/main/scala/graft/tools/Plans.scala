@@ -109,9 +109,9 @@ object Plans {
       }
     }
     if (what == "r16scc") {
-      // doublingAfter A/B for strongComponentLabels (round-16): the
-      // result is the same SCC fixpoint at any setting; only round counts
-      // and per-round shapes change
+      // doublingAfter A/B for the distributed SCC fixpoint (round-16):
+      // the result is the same SCC fixpoint at any setting; only round
+      // counts and per-round shapes change
       val cust = spark.read.parquet(s"$dir/customer.parquet")
       val n = cust.count()
       val nodes = cust.select(col("c_custkey").as("id"))
@@ -123,7 +123,7 @@ object Plans {
       for (da <- args.drop(2).headOption.map(_.split(",").map(_.toInt).toSeq)
              .getOrElse(Seq(24, 12, 8))) {
         t(s"scc doublingAfter=$da")(
-          graft.GraphAlgorithms.strongComponentLabels(g, da).count())
+          graft.GraphAlgorithms.sccFixpoint(g, da).count())
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
         System.gc()
       }

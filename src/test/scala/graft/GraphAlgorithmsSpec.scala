@@ -47,6 +47,33 @@ class GraphAlgorithmsSpec extends AnyFunSuite with SparkFixture {
     assert(labels == Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 2L, 4L -> 2L, 5L -> 5L))
   }
 
+  test("component labels of a frame with no nodes are empty on both paths") {
+    val nf = NetworkFrame(Seq.empty[Long].toDF("id"),
+      Seq.empty[(Long, Long)].toDF("source", "target"))
+    Seq(GraphAlgorithms.componentLabels(nf, "weak"), GraphAlgorithms.weakFixpoint(nf),
+        GraphAlgorithms.strongComponentLabels(nf), GraphAlgorithms.sccFixpoint(nf))
+      .foreach { out =>
+        assert(out.columns.toSeq == Seq("id", "component"))
+        assert(out.isEmpty)
+      }
+  }
+
+  test("distributed component fixpoints fail loudly at their round caps") {
+    // two-cycles chained 5<->4 -> 3<->2 -> 1<->0: with descending ids the
+    // SCC peel removes one cycle per round, so two rounds leave two nodes
+    val nodes = (0L to 5L).toDF("id")
+    val edges = Seq((5L, 4L), (4L, 5L), (4L, 3L), (3L, 2L), (2L, 3L), (2L, 1L),
+        (1L, 0L), (0L, 1L)).toDF("source", "target")
+    val nf = NetworkFrame(nodes, edges)
+    val scc = intercept[IllegalStateException](GraphAlgorithms.sccFixpoint(nf, maxRounds = 2))
+    assert(scc.getMessage == "strongComponentLabels left 2 nodes unpeeled after 2 rounds")
+    val weak = intercept[IllegalStateException](GraphAlgorithms.weakFixpoint(nf, maxRounds = 1))
+    assert(weak.getMessage == "componentLabels did not converge within 1 rounds")
+    val labels = GraphAlgorithms.strongComponentLabels(nf).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels == Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 2L, 4L -> 4L, 5L -> 4L))
+  }
+
   test("selectComponentFromNode: directed reachability") {
     // directed: from 3 only 3->4 reachable
     val sub = GraphAlgorithms.selectComponentFromNode(twoCompNf, 3L, directed = true)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -27,6 +28,41 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
 
   private def mk(g: (Seq[(Long, Long)], Seq[(Long, Long)])): NetworkFrame =
     NetworkFrame(g._1.toDF("id", "grp"), g._2.toDF("source", "target"))
+
+  /** Node count and edges over ids 0..n+1: ids n and n+1 are dangling
+    * endpoints; random pairs give isolated nodes and multi-edges, and a
+    * self-loop and a repeated edge are always added.
+    */
+  private val genComponentGraph: Gen[(Int, Seq[(Int, Int)])] = for {
+    n <- Gen.choose(1, 10)
+    m <- Gen.choose(0, 16)
+    edges <- Gen.listOfN(m, Gen.zip(Gen.choose(0, n + 1), Gen.choose(0, n + 1)))
+  } yield (n, edges ++ edges.take(1) :+ ((0, 0)))
+
+  /** Int ids (kind 0), Long ids (kind 1), or Long ids just below
+    * Long.MaxValue (kind 2).
+    */
+  private def idFrame(kind: Int, n: Int, edges: Seq[(Int, Int)]): NetworkFrame =
+    if (kind == 0) NetworkFrame((0 until n).toDF("id"), edges.toDF("source", "target"))
+    else {
+      val base = if (kind == 1) 0L else Long.MaxValue - 20L
+      NetworkFrame((0 until n).map(base + _).toDF("id"),
+        edges.map { case (s, t) => (base + s, base + t) }.toDF("source", "target"))
+    }
+
+  private def assertSameFrame(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema.map(f => f.name -> f.dataType) == want.schema.map(f => f.name -> f.dataType))
+    assert(got.collect().map(_.toString).sorted.toSeq == want.collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("driver component finish equals the distributed weak and strong fixpoints") {
+    (1 to 6).foreach { i =>
+      val (n, edges) = genComponentGraph(Gen.Parameters.default, Seed(i.toLong)).get
+      val nf = idFrame(i % 3, n, edges)
+      assertSameFrame(GraphAlgorithms.componentLabels(nf, "weak"), GraphAlgorithms.weakFixpoint(nf))
+      assertSameFrame(GraphAlgorithms.strongComponentLabels(nf), GraphAlgorithms.sccFixpoint(nf))
+    }
+  }
 
   test("queryNodes induction invariant: edge endpoints are surviving nodes") {
     forAll(8) { g =>
