@@ -722,15 +722,13 @@ object Similarity {
     ivfProbedScoredFromQuantized(b, nprobe)
   }
 
-  /** Probe + score core over a prepared `b(id, qv, n2, cell)` frame (one
-    * row per id; `cell` functional). Centroids aggregate from `b`'s own
-    * quantized vectors — qv IS quantize(vec), so the values are identical
-    * to `ivfCentroids` on the raw column, without a second corpus scan.
+  /** (cell, cv, cn2) from a (cell, qv) frame: each cell's integer
+    * centroid over every vector position as an array (`ivfCentroids`'
+    * values: truncating DECIMAL division) and its squared norm. One
+    * explode, one (cell, pos) aggregation, one per-cell collect.
     */
-  private def ivfProbedScoredFromQuantized(b: DataFrame, nprobe: Int): DataFrame = {
-    require(nprobe >= 1, "nprobe must be >= 1")
-    val cents = b
-      .select(col("cell"), posexplode(col("qv")).as(Seq("pos", "x")))
+  private def cellCentroidArrays(q: DataFrame): DataFrame =
+    q.select(col("cell"), posexplode(col("qv")).as(Seq("pos", "x")))
       .groupBy("cell", "pos")
       .agg(sum(col("x").cast("decimal(38,0)")).as("sx"), count(lit(1)).as("cn"))
       .selectExpr("cell", "pos", "CAST(sx DIV cn AS BIGINT) AS cq")
@@ -738,8 +736,16 @@ object Similarity {
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("cq")))),
         s => s.getField("cq")).as("cv"))
       .withColumn("cn2", dotLong(col("cv"), col("cv")))
+
+  /** Probe + score core over a prepared `b(id, qv, n2, cell)` frame (one
+    * row per id; `cell` functional). Centroids aggregate from `b`'s own
+    * quantized vectors — qv IS quantize(vec), so the values are identical
+    * to `ivfCentroids` on the raw column, without a second corpus scan.
+    */
+  private def ivfProbedScoredFromQuantized(b: DataFrame, nprobe: Int): DataFrame = {
+    require(nprobe >= 1, "nprobe must be >= 1")
     val probed = b.select(col("id").as("qid"), col("qv"), col("n2"))
-      .crossJoin(broadcast(cents))
+      .crossJoin(broadcast(cellCentroidArrays(b)))
       .withColumn("csim", cosineFrom(dotLong(col("qv"), col("cv")),
         col("n2"), col("cn2")))
       .withColumn("pn", row_number().over(
@@ -1241,101 +1247,128 @@ object Similarity {
     * representation that shrinks a 100 TB vector corpus ~64x while keeping
     * asymmetric distance computation. All distances accumulate in
     * DECIMAL(38,0) from scaled longs — deterministic at any parallelism.
-    * Plan: one unnest, one (cell, subspace, dim) aggregation, one
-    * broadcast of the tiny codebook, one per-(vector, subspace) argmin
-    * window.
+    * Plan: the [[pqEncoded]] pass (one codebook aggregation, broadcast;
+    * one per-vector row of array expressions), checkpointed, then one
+    * explode of the per-vector codes. A null cell id fails loudly.
     */
   def pqCodes(df: DataFrame, idCol: String, vecCol: String,
-              cellCol: String, m: Int, dims: Int): DataFrame = {
+              cellCol: String, m: Int, dims: Int): DataFrame =
+    // checkpointed: the encode pass is the whole cost, and a consumer that
+    // runs two jobs over it (a global sort samples its input first) would
+    // otherwise encode every vector twice
+    pqEncoded(df, idCol, vecCol, cellCol, m, dims)
+      .select(col("id").as("vec_id"),
+        transform(col("codes"), j => get(col("ids"), j)).as("codes"))
+      .localCheckpointCapped()
+      .select(col("vec_id"), posexplode(col("codes")).as(Seq("s", "code")))
+      .select(col("vec_id"), col("s").cast("long").as("subspace"), col("code"))
+
+  /** The IVF codebook as ONE row: `ids` (the distinct cell ids,
+    * ascending), `cvs` (each cell's centroid array, see
+    * [[cellCentroidArrays]]) and `cn2s` (their squared norms), aligned by
+    * index. Cells x positions is codebook-sized at any corpus scale, so
+    * the row broadcasts.
+    */
+  private def ivfCodebook(q: DataFrame): DataFrame =
+    cellCentroidArrays(q)
+      .agg(array_sort(collect_list(struct(col("cell"), col("cv"), col("cn2"))))
+        .as("book"))
+      .select(transform(col("book"), e => e.getField("cell")).as("ids"),
+        transform(col("book"), e => e.getField("cv")).as("cvs"),
+        transform(col("book"), e => e.getField("cn2")).as("cn2s"))
+
+  /** PQ encode pass shared by [[pqCodes]] and [[ivfPqSearch]]: one row per
+    * non-null vector, computed in-row against the broadcast
+    * [[ivfCodebook]] row (no per-position rows, no join on subspace or
+    * code):
+    *  - `qv`, `n2`: the full-length quantized vector and its squared norm;
+    *  - `lut`: m arrays of `size(ids)` exact squared distances,
+    *    `lut[s][j] = ||q_s - cvs[j]_s||^2` over positions
+    *    [s * dims/m, (s+1) * dims/m), accumulated in DECIMAL(38,0);
+    *  - `codes`: per subspace the index into `ids` of the minimum of
+    *    `lut[s]`, ties to the smallest index, i.e. the smallest cell id.
+    * PQ reads only the first `dims` positions. A null cell id or a vector
+    * shorter than `dims` raises an error naming the column — a null cell
+    * would otherwise become a codeword that wins every tie.
+    */
+  private def pqEncoded(df: DataFrame, idCol: String, vecCol: String,
+                        cellCol: String, m: Int, dims: Int): DataFrame = {
     require(m >= 1 && dims % m == 0, "m must divide dims")
-    val sub = df.select(col(idCol).as("vec_id"), col(cellCol).as("cell"),
-        posexplode(quantize(col(vecCol))).as(Seq("pos", "x")))
-      .filter(col("pos") < dims)
-      .withColumn("s", expr(s"pos div ${dims / m}"))
-    val cents = sub.groupBy("cell", "s", "pos")
-      .agg(sum(col("x").cast("decimal(38,0)")).as("sx"), count(lit(1)).as("n"))
-      .selectExpr("cell AS code", "s", "pos", "CAST(sx DIV n AS BIGINT) AS c")
-    val d = sub.join(broadcast(cents), Seq("s", "pos"))
-      .groupBy("vec_id", "s", "code")
-      .agg(sum(expr("CAST((x - c) * (x - c) AS DECIMAL(38,0))")).as("d2"))
-    val w = Window.partitionBy("vec_id", "s").orderBy(asc("d2"), asc("code"))
-    d.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("s").as("subspace"), col("code"))
+    LongDot.register(df.sparkSession)
+    val d = dims / m
+    val D38 = "decimal(38,0)"
+    val q = df.filter(col(vecCol).isNotNull)
+      .select(col(idCol).as("id"), col(cellCol).as("cell"),
+        quantize(col(vecCol)).as("qv"))
+    val dist = (s: Column, cv: Column) =>
+      aggregate(sequence(s * d, s * d + (d - 1)), lit(0).cast(D38), (acc, p) => {
+        val diff = get(col("qv"), p) - get(cv, p)
+        (acc + (diff * diff).cast(D38)).cast(D38)
+      })
+    val lut = transform(sequence(lit(0), lit(m - 1)), s =>
+      transform(col("cvs"), cv => dist(s, cv)))
+    q.crossJoin(broadcast(ivfCodebook(q)))
+      .withColumn("n2", dotLong(col("qv"), col("qv")))
+      .withColumn("lut",
+        when(col("cell").isNull,
+          raise_error(lit(s"IVF-PQ: null cell id in column '$cellCol'")))
+          .when(size(col("qv")) < dims,
+            raise_error(lit(s"IVF-PQ: a vector in column '$vecCol' is shorter than dims = $dims")))
+          .otherwise(lut))
+      .withColumn("codes", transform(col("lut"), row =>
+        aggregate(sequence(lit(0), size(row) - 1), lit(0),
+          (b, j) => when(get(row, j) < get(row, b), j).otherwise(b))))
   }
 
   /** IVF-PQ search with asymmetric distance computation (ADC) — the
     * standard billion-scale ANN serving architecture: (1) the coarse stage
     * probes the `nprobe` nearest cells by full-dimension centroid cosine
-    * (broadcast-sized centroid table, identical to `ivfTopKProbe`); (2) the
+    * (cell-id tie-break, the same ranking as `ivfTopKProbe`); (2) the
     * fine stage ranks ONLY vectors in probed cells by PQ distance — each
-    * query builds an m x codes lookup table of exact integer squared
+    * query carries an m x codes lookup table of exact integer squared
     * distances to the per-subspace codebook, and a candidate's approximate
-    * distance is the sum of its m code lookups. The corpus side therefore
-    * reads m small codes per vector (the ~64x at-rest compression of
-    * `pqCodes`), never the raw vectors; the LUT is per-query,
-    * codebook-sized, and broadcastable, so the fine stage is one join from
-    * the code table — the shape that serves a 100 TB vector corpus.
+    * distance is the sum of its m code lookups into it.
+    *
+    * Plan: one encode pass ([[pqEncoded]] plus the probed cells, ranked
+    * in-row) is checkpointed, so every vector is encoded exactly once;
+    * then (query_id, lut, probed cell) joins (neighbor_id, cell, codes) on
+    * the cell and scores each pair in-row with m array lookups. The corpus
+    * side reads m small codes per vector (the ~64x at-rest compression of
+    * `pqCodes`), never the raw vectors; the LUT travels on the query row,
+    * so the only shuffle keys at scale are the cell and the query id —
+    * never a (query, subspace, code) row per pair.
     * Deterministic: all distances are DECIMAL(38,0) sums of scaled longs;
     * ties break (distance, neighbor id). Output:
     * (query_id, neighbor_id, rank, ad2) with ad2 the integer ADC distance.
+    * A null cell id fails loudly.
     */
   def ivfPqSearch(df: DataFrame, idCol: String, vecCol: String,
                   cellCol: String, m: Int, dims: Int, k: Int,
                   nprobe: Int): DataFrame = {
-    require(m >= 1 && dims % m == 0, "m must divide dims")
     require(k >= 1 && nprobe >= 1, "k and nprobe must be >= 1")
-    LongDot.register(df.sparkSession)
-    val sub = df.select(col(idCol).as("vec_id"), col(cellCol).as("cell"),
-        posexplode(quantize(col(vecCol))).as(Seq("pos", "x")))
-      .filter(col("pos") < dims)
-      .withColumn("s", expr(s"pos div ${dims / m}"))
+    // cells ranked by (csim desc, cell asc): ascending on (-csim, cell)
+    val ranked = transform(sequence(lit(0), size(col("ids")) - 1), j =>
+      struct(
+        (-cosineFrom(dotLong(col("qv"), get(col("cvs"), j)), col("n2"),
+          get(col("cn2s"), j))).as("neg_csim"),
+        get(col("ids"), j).as("cell")))
+    val enc = pqEncoded(df, idCol, vecCol, cellCol, m, dims)
+      .select(col("id"), col("cell"), col("lut"), col("codes"),
+        transform(slice(sort_array(ranked), 1, nprobe), e => e.getField("cell"))
+          .as("probe"))
       .localCheckpointCapped()
-    // per-subspace codebook: one entry per coarse cell (same construction
-    // as pqCodes, shared here so codes + LUT read one codebook)
-    val cents = sub.groupBy("cell", "s", "pos")
-      .agg(sum(col("x").cast("decimal(38,0)")).as("sx"), count(lit(1)).as("n"))
-      .selectExpr("cell AS code", "s", "pos", "CAST(sx DIV n AS BIGINT) AS c")
-      .localCheckpointCapped()
-    val codes = sub.join(broadcast(cents), Seq("s", "pos"))
-      .groupBy("vec_id", "s", "code")
-      .agg(sum(expr("CAST((x - c) * (x - c) AS DECIMAL(38,0))")).as("d2"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id", "s").orderBy(asc("d2"), asc("code"))))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("s"), col("code"))
-    // coarse probe: nprobe cells per query by centroid cosine
-    val b = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"),
-        col(cellCol).as("cell"))
-      .withColumn("n2", dotLong(col("qv"), col("qv")))
-      .localCheckpointCapped()
-    val cellCents = ivfCentroids(df, vecCol, cellCol)
-      .groupBy("cell")
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("centroid_q")))),
-        s => s.getField("centroid_q")).as("cv"))
-      .withColumn("cn2", dotLong(col("cv"), col("cv")))
-    val probed = b.select(col("id").as("query_id"), col("qv"), col("n2"))
-      .crossJoin(broadcast(cellCents))
-      .withColumn("csim", cosineFrom(dotLong(col("qv"), col("cv")),
-        col("n2"), col("cn2")))
-      .withColumn("pn", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("csim"), asc("cell"))))
-      .filter(col("pn") <= nprobe)
-      .select(col("query_id"), col("cell"))
-    // per-query ADC lookup table: exact integer ||q_s - codebook[s,code]||^2
-    val lut = sub.join(broadcast(cents), Seq("s", "pos"))
-      .groupBy(col("vec_id").as("query_id"), col("s"), col("code"))
-      .agg(sum(expr("CAST((x - c) * (x - c) AS DECIMAL(38,0))")).as("ld"))
-    val cand = probed
-      .join(b.select(col("id").as("neighbor_id"), col("cell")), Seq("cell"))
+    // m is fixed at plan time: m plain lookups + DECIMAL(38,0) adds compile
+    // into the join's generated code, where a lambda would materialize
+    // every joined (pair, LUT) row
+    val adc = (0 until m)
+      .map(s => get(get(col("lut"), lit(s)), get(col("codes"), lit(s))))
+      .reduce(_ + _)
+    enc.select(col("id").as("query_id"), col("lut"), explode(col("probe")).as("cell"))
+      .join(enc.select(col("id").as("neighbor_id"), col("cell"), col("codes")),
+        Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id")
-    val ad = cand
-      .join(codes.select(col("vec_id").as("neighbor_id"), col("s"), col("code")),
-        Seq("neighbor_id"))
-      .join(lut, Seq("query_id", "s", "code"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum("ld").cast("long").as("ad2"))
-    ad.withColumn("rank", row_number().over(
+      .select(col("query_id"), col("neighbor_id"), adc.cast("long").as("ad2"))
+      .withColumn("rank", row_number().over(
         Window.partitionBy("query_id").orderBy(asc("ad2"), asc("neighbor_id"))))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("ad2"))

@@ -257,7 +257,7 @@ object Plans {
 
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val pq = Similarity.ivfPqSearch(emb, "vec_id", "embedding", "label", 8, 64, 3, 2)
-      println("==== ivfPqSearch plan — expect broadcast codebook/centroids, code-keyed fine join, no cartesian ====")
+      println("==== ivfPqSearch plan — expect broadcast codebook row, one fine join keyed on the probed cell with in-row LUT scoring, no code-keyed join, no cartesian ====")
       pq.explain("formatted")
       t("ivfPqSearch")(pq.count())
     }

@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graftext
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic
@@ -73,7 +75,7 @@ object CappedCheckpoint {
           try spark.sparkContext.getRDDStorageInfo
             .find(_.id == lr.rdd.id)
             .map(i => BigInt(i.memSize + i.diskSize).max(1))
-          catch { case _: Throwable => None }
+          catch { case NonFatal(_) => None }
         val size = actual.getOrElse {
           lr.stats.sizeInBytes.min(Cap).max(1)
         }

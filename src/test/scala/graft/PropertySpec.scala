@@ -64,6 +64,97 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  /** An IVF-PQ corpus: (id, vector, cell) rows plus (m, dims, k, nprobe).
+    * Vectors are 1-4 positions longer than `dims`; components come from a
+    * five-value set with negatives, so codebook distances tie, and some
+    * vectors are zero, so their probe cosine ties on every cell; cell ids
+    * are sparse and partly negative; ids descend as rows go on, so id
+    * order is not row order. One cell, `nprobe` >= #cells and
+    * k > #candidates all occur among the first seeds.
+    */
+  private val genPqCorpus: Gen[(Seq[(Long, Array[Float], Int)], Int, Int, Int, Int)] = for {
+    m <- Gen.oneOf(1, 2, 4)
+    sub <- Gen.choose(1, 3)
+    extra <- Gen.choose(1, 4)
+    nCells <- Gen.frequency(1 -> Gen.const(1), 3 -> Gen.choose(2, 5))
+    n <- Gen.choose(2, 24)
+    rows <- Gen.listOfN(n, Gen.zip(Gen.choose(0, nCells - 1), Gen.frequency(
+      5 -> Gen.listOfN(m * sub + extra, Gen.oneOf(-1.0f, -0.5f, 0.0f, 0.5f, 1.0f)),
+      1 -> Gen.const(List.fill(m * sub + extra)(0.0f)))))
+    k <- Gen.choose(1, n + 1)
+    nprobe <- Gen.choose(1, nCells + 1)
+  } yield (rows.zipWithIndex.map { case ((c, v), i) => (1000L - 3L * i, v.toArray, 7 * c - 10) },
+    m, m * sub, k, nprobe)
+
+  /** Plain-Scala IVF-PQ: truncating integer-mean codebook per cell,
+    * per-subspace exact squared-L2 argmin (ties to the smallest cell),
+    * probe by exact quantized cosine (ties to the smallest cell), ADC sums
+    * over candidates in probed cells, top k by (ad2, neighbor id).
+    * Returns the search rows (query_id, neighbor_id, rank, ad2), the code
+    * rows (vec_id, subspace, code), and whether any argmin was a tie.
+    */
+  private def ivfPqReference(rows: Seq[(Long, Array[Float], Int)], m: Int, dims: Int, k: Int,
+      nprobe: Int): (Seq[(Long, Long, Int, Long)], Seq[(Long, Long, Int)], Boolean) = {
+    val qv = rows.map { case (id, v, _) => id -> v.map(x => math.floor(x.toDouble * 1e7).toLong) }.toMap
+    val cells = rows.map(_._3).distinct.sorted
+    val cent = cells.map { c =>
+      val vs = rows.filter(_._3 == c).map(r => qv(r._1))
+      c -> vs.head.indices.map(p => (vs.map(v => BigInt(v(p))).sum / vs.size).toLong).toArray
+    }.toMap
+    val d = dims / m
+    def lut(id: Long): Seq[Seq[BigInt]] = (0 until m).map(s => cells.map(c =>
+      (s * d until (s + 1) * d).map(p => BigInt(qv(id)(p) - cent(c)(p)).pow(2)).sum))
+    val luts = qv.keys.map(id => id -> lut(id)).toMap
+    val codes = luts.map { case (id, t) => id -> t.map(row => row.indexOf(row.min)) }
+    def dot(a: Array[Long], b: Array[Long]) = a.indices.map(i => a(i) * b(i)).sum
+    def cos(a: Array[Long], b: Array[Long]) = {
+      val (n2a, n2b) = (dot(a, a), dot(b, b))
+      if (n2a == 0 || n2b == 0) 0.0
+      else dot(a, b).toDouble / (math.sqrt(n2a.toDouble) * math.sqrt(n2b.toDouble))
+    }
+    val codeTie = luts.values.exists(_.exists(row => row.count(_ == row.min) > 1))
+    val ranked = rows.flatMap { case (q, _, _) =>
+      val cs = cells.map(c => c -> cos(qv(q), cent(c))).toMap
+      val probed = cells.sortWith((x, y) => cs(x) > cs(y) || (cs(x) == cs(y) && x < y))
+        .take(nprobe).toSet
+      rows.collect { case (nb, _, c) if probed(c) && nb != q =>
+          (nb, (0 until m).map(s => luts(q)(s)(codes(nb)(s))).sum.toLong) }
+        .sortBy { case (nb, ad2) => (ad2, nb) }.take(k).zipWithIndex
+        .map { case ((nb, ad2), r) => (q, nb, r + 1, ad2) }
+    }
+    val codeRows = codes.toSeq.flatMap { case (id, cs) =>
+      cs.zipWithIndex.map { case (j, s) => (id, s.toLong, cells(j)) } }
+    (ranked, codeRows, codeTie)
+  }
+
+  test("ivfPqSearch and pqCodes equal a plain-Scala IVF-PQ reference on random corpora") {
+    val seen = collection.mutable.Set.empty[String]
+    (1 to 10).foreach { i =>
+      val (rows, m, dims, k, nprobe) = genPqCorpus(Gen.Parameters.default, Seed(i.toLong)).get
+      val (want, wantCodes, codeTie) = ivfPqReference(rows, m, dims, k, nprobe)
+      val df = rows.toDF("vec_id", "embedding", "label")
+      val got = graft.functions.Similarity.ivfPqSearch(df, "vec_id", "embedding", "label",
+        m, dims, k, nprobe)
+      assert(got.schema.map(f => f.name -> f.dataType.simpleString) ==
+        Seq("query_id" -> "bigint", "neighbor_id" -> "bigint", "rank" -> "int", "ad2" -> "bigint"))
+      val gotRows = got.as[(Long, Long, Int, Long)].collect().toSeq
+      assert(gotRows.sorted == want.sorted, s"corpus $i: m=$m dims=$dims k=$k nprobe=$nprobe")
+      // a tie between codes with equal centroids leaves every ADC sum
+      // unchanged; the codes themselves show how it was broken
+      val gotCodes = graft.functions.Similarity.pqCodes(df, "vec_id", "embedding", "label", m, dims)
+        .as[(Long, Long, Int)].collect().toSeq
+      assert(gotCodes.sorted == wantCodes.sorted, s"corpus $i codes")
+      val nCells = rows.map(_._3).distinct.size
+      if (nCells == 1) seen += "one cell"
+      if (codeTie && nCells > 1) seen += "code tie"
+      if (nprobe >= nCells && nCells > 1) seen += "nprobe >= cells"
+      if (nprobe < nCells && rows.exists(_._2.forall(_ == 0.0f))) seen += "probe tie"
+      if (want.groupBy(_._1).size < rows.size || want.groupBy(_._1).values.exists(_.size < k))
+        seen += "k > candidates"
+    }
+    assert(seen == Set("one cell", "code tie", "nprobe >= cells", "probe tie", "k > candidates"), seen)
+  }
+
   test("queryNodes induction invariant: edge endpoints are surviving nodes") {
     forAll(8) { g =>
       val sub = mk(g).queryNodes("grp <> 1")

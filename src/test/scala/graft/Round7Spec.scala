@@ -42,9 +42,13 @@ class Round7Spec extends AnyFunSuite with SparkFixture {
     val plan = Similarity.ivfPqSearch(df, "vec_id", "embedding", "label",
         m = 2, dims = 4, k = 1, nprobe = 1)
       .queryExecution.executedPlan.toString
-    // the only all-pairs structure allowed is the query x centroid-table
-    // broadcast (cells, not vectors); the fine stage must join on codes
+    // the only all-pairs structure allowed is the vector x codebook-row
+    // broadcast (cells, not vectors); the fine stage joins on the probed
+    // cell and scores in-row, so no join is keyed on a code
     assert(!plan.contains("CartesianProduct"), plan.take(600))
+    val joinKeys = """Join \[([^\]]*)\], \[([^\]]*)\]""".r
+      .findAllMatchIn(plan).flatMap(mt => Seq(mt.group(1), mt.group(2))).toSeq
+    assert(joinKeys.nonEmpty && joinKeys.forall(_.startsWith("cell#")), plan.take(1200))
   }
 
   test("knContinuation counts bigram types, not token frequency") {
