@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftext.CappedCheckpoint._
 
@@ -156,88 +156,111 @@ object GraphAlgorithms {
 
   /** Distributed weak components: minimum-label propagation over the
     * symmetrized edges, the [[componentLabels]] path for graphs above
-    * [[DriverContractionCap]] and for non-integral ids. Converges in
-    * O(diameter) rounds; each round localCheckpoints to keep lineage flat.
-    * At 100 TB scale: edges pre-partitioned by source reuse the same
-    * partitioning across rounds; AQE handles hub-node skew in the join.
-    * Throws IllegalStateException if `maxRounds` rounds do not converge.
+    * [[DriverContractionCap]] and for non-integral ids. One [[labelFixpoint]]
+    * run: a single hop in the first cycle and two per cycle after it,
+    * pointer doubling every cycle, so it converges in ~O(log diameter)
+    * cycles. At 100 TB scale: edges pre-partitioned by source reuse the
+    * same partitioning across rounds; AQE handles hub-node skew in the
+    * join. Throws IllegalStateException if `maxRounds` cycles do not
+    * converge.
     */
   private[graft] def weakFixpoint(nf: NetworkFrame, maxRounds: Int = 200): DataFrame =
       withoutConstraintPropagation(nf.edges) {
-    val sym = nf.symmetrizedEdges
-    val e = sym.distinct().localCheckpointCapped()
+    val e = nf.symmetrizedEdges.distinct().localCheckpointCapped()
+    labelFixpoint(e, nf.nodes.select("id"), useMax = false, hops = 2, doublingFrom = 0,
+        maxRounds, "componentLabels")
+      .withColumnRenamed("label", "component")
+  }
 
-    var labels = nf.nodes.select(col("id"), col("id").as("component")).localCheckpointCapped()
-    // Convergence probe: labels are node ids and only ever DECREASE
-    // pointwise (least() in the propagation, label(label) <= label in the
-    // doubling), so the exact DECIMAL label sum is strictly decreasing
-    // until the fixpoint — sum equality <=> pointwise equality. One cheap
-    // aggregate over the just-checkpointed frame replaces the former
-    // join-the-previous-round changed-row probe: one fewer join shuffle
-    // per round (guide §2.4), identical round count and output. Non-numeric
-    // (string-id) graphs keep the join probe.
-    val sumProbe = numericCol(labels, "component")
-    var prevSum: Option[java.math.BigDecimal] =
-      if (sumProbe) monotoneSum(labels, "component") else None
+  /** The one monotone label-propagation fixpoint behind [[weakFixpoint]],
+    * the SCC colorings in [[sccFixpoint]] and (through
+    * [[componentLabels]]) the Borůvka contraction. Every id in `ids` starts
+    * labeled by itself; a hop gives each node the min (or, with `useMax`,
+    * the max) of its own label and the labels of its `source` neighbors
+    * along `edges`. Returns (id, label): the least (greatest) id that
+    * reaches each node. Labels only move one way, so the fixpoint is
+    * unique and every schedule below computes the same output.
+    *
+    * Schedule. A cycle chains `hops` hops and materializes once; the FIRST
+    * cycle is always a single hop, so tiny fixpoints that converge at once
+    * (incremental quotients, cc-stream micro-batches) never pay a wasted
+    * shuffle. The plan is LINEAR in the state, so chained hops extend one
+    * plan instead of needing their own checkpoint (round 16: two hops per
+    * cycle for weak components; for the SCC colorings a second hop saved
+    * one cycle and cost q_strong_components 12.6 -> 16.9 s, so they stay
+    * at one). A cycle without doubling hops by union+groupBy, one shuffle
+    * into the aggregate (it would also label edge targets outside `ids`,
+    * so such runs take edges induced on `ids`, as the SCC colorings do);
+    * a doubling cycle hops by join, because the
+    * doubling self-join of a union plan trips Catalyst's Union constraint
+    * rewrite (the join hop costs the SCC colorings two more AQE stage jobs
+    * per plain cycle, 347 -> 363 jobs on the sf0.1 sparse graph at
+    * local[4], so the union hop stays where it can). From cycle
+    * `doublingFrom` on a pointer-doubling step follows the label chain
+    * once more, label(v) <- label(label(v)): labels are node ids that only
+    * move one way, so this is monotone-safe and cuts O(diameter) cycles
+    * to ~O(log diameter). Weak components double from the first cycle; the
+    * SCC colorings start at [[sccDoublingAfter]], because small cyclic
+    * cores converge before the extra self-join and checkpoint pay off
+    * (round 4: doubling from round 1 regressed 18.4 s -> ~50 s at sf0.1).
+    *
+    * Probe. This is the one place that picks the convergence probe: with
+    * integral ids the exact label sum ([[monotoneSum]]) is strictly
+    * monotone until the fixpoint, so sum equality is pointwise equality
+    * in one aggregate job; string and fractional ids, and a round whose
+    * sum overflowed (None), take the exact changed-row join probe.
+    *
+    * Throws IllegalStateException naming `name` if `maxRounds` cycles do
+    * not converge, and logs one `[graft]` line per run otherwise.
+    */
+  private def labelFixpoint(edges: DataFrame, ids: DataFrame, useMax: Boolean, hops: Int,
+      doublingFrom: Int, maxRounds: Int, name: String): DataFrame = {
+    def pick(a: Column, b: Column): Column = if (useMax) greatest(a, b) else least(a, b)
+    def best(c: String): Column = if (useMax) max(c) else min(c)
+    def msgs(lab: DataFrame): DataFrame =
+      edges.join(lab.withColumnRenamed("id", "source"), Seq("source"))
+        .select(col("target").as("id"), col("label"))
+    def unionHop(lab: DataFrame): DataFrame =
+      lab.union(msgs(lab)).groupBy("id").agg(best("label").as("label"))
+    def joinHop(lab: DataFrame): DataFrame =
+      lab.join(msgs(lab).groupBy("id").agg(best("label").as("m")), Seq("id"), "left_outer")
+        .select(col("id"), pick(col("label"), coalesce(col("m"), col("label"))).as("label"))
+    var labels = ids.select(col("id"), col("id").as("label")).localCheckpointCapped()
+    val sumProbe = numericCol(labels, "label")
+    def probe(df: DataFrame) = if (sumProbe) monotoneSum(df, "label")._2 else None
+    var prevSum = probe(labels)
+    var joinProbed = false
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxRounds) {
-      // every node receives the min label of its in-neighbors; keep the min
-      // of own and received. Join-based (not union+groupBy): same single
-      // shuffle, and it avoids a Catalyst Union-constraint-rewrite bug that
-      // a subsequent self-join of the union plan triggers. From the SECOND
-      // cycle on, TWO propagation hops chain before the doubling: the
-      // propagation plan is join-LINEAR in `labels` (no self-join), so the
-      // second hop extends the same plan with one more join+aggregate
-      // instead of needing its own materialization — the per-cycle
-      // checkpoint/probe overhead is paid once for two hops of progress
-      // (round-16; monotonicity makes the fixpoint — and thus the output —
-      // identical). The FIRST cycle stays single-hop so the tiny quotient
-      // fixpoints that converge immediately (incremental maintenance,
-      // cc-stream micro-batches: 1-2 cycles) never pay a wasted second
-      // shuffle.
-      def hop(lab: DataFrame): DataFrame = {
-        val minMsgs = e.join(lab.withColumnRenamed("id", "source"), Seq("source"))
-          .groupBy(col("target").as("id")).agg(min("component").as("mc"))
-        lab.join(minMsgs, Seq("id"), "left_outer")
-          .select(col("id"),
-            least(col("component"), coalesce(col("mc"), col("component"))).as("component"))
-      }
-      val prop = (if (rounds == 0) hop(labels) else hop(hop(labels)))
-        .localCheckpointCapped()
-      // pointer doubling: follow the label chain one extra step
-      // (label(v) <- label(label(v))). Labels are themselves node ids and
-      // only ever decrease, so the lookup's label is always <= the current
-      // one. Cuts convergence from O(diameter) to ~O(log diameter) rounds —
-      // the difference between 15 and 4 rounds here, and between hundreds
-      // and ~10 on a 100 TB graph with a long effective diameter.
-      // (Eliding this checkpoint in favor of ReuseExchange inside `next`'s
-      // plan was measured and is NOT a win at sf0.1: 3-run means were flat
-      // on q_percolation and ~8% worse on q_components.)
-      val next = prop.as("a")
-        .join(prop.select(col("id").as("cid"), col("component").as("c2")).as("b"),
-          col("a.component") === col("cid"), "left_outer")
+      val doubling = rounds >= doublingFrom
+      val prop = Iterator.iterate(labels)(if (doubling) joinHop else unionHop)
+        .drop(if (rounds == 0) 1 else hops).next().localCheckpointCapped()
+      // the doubling joins a checkpointed `prop`: reusing its exchange
+      // instead measured flat on q_percolation and ~8% worse on
+      // q_components at sf0.1
+      val next = if (!doubling) prop else prop.as("a")
+        .join(prop.select(col("id").as("lid"), col("label").as("l2")),
+          col("a.label") === col("lid"), "left_outer")
         .select(col("a.id").as("id"),
-          coalesce(col("c2"), col("a.component")).as("component"))
+          pick(col("a.label"), coalesce(col("l2"), col("a.label"))).as("label"))
         .localCheckpointCapped()
-      val curSum = if (sumProbe) monotoneSum(next, "component") else None
-      (prevSum, curSum) match {
-        case (Some(p), Some(c)) => converged = c.compareTo(p) == 0
+      val curSum = probe(next)
+      converged = (prevSum, curSum) match {
+        case (Some(p), Some(c)) => c.compareTo(p) == 0
         case _ =>
-          // string-id graph, or a decimal-overflow round (None): exact
-          // changed-row join probe
-          converged = next.join(
-              labels.withColumnRenamed("component", "prev"), Seq("id"))
-            .filter(col("component") =!= col("prev"))
-            .limit(1).count() == 0
+          joinProbed = true
+          next.join(labels.withColumnRenamed("label", "prev"), Seq("id"))
+            .filter(col("label") =!= col("prev")).limit(1).count() == 0
       }
       prevSum = curSum
       labels = next
       rounds += 1
     }
     if (!converged) throw new IllegalStateException(
-      s"componentLabels did not converge within $rounds rounds")
-    System.err.println(s"[graft] componentLabels converged in $rounds rounds")
+      s"$name did not converge within $rounds rounds")
+    System.err.println(s"[graft] $name converged in $rounds cycles" +
+      (if (joinProbed) " (join probe)" else " (sum probe)"))
     labels
   }
 
@@ -294,26 +317,27 @@ object GraphAlgorithms {
     }
   }
 
-  /** Exact DECIMAL(38,0) sum of `c` — the convergence probe for fixpoints
-    * whose per-node state moves MONOTONICALLY (component labels only
-    * decrease, SCC colors only increase): the sum changes iff any row
-    * changed, so comparing successive sums detects the fixpoint with one
-    * aggregate job over the just-checkpointed frame instead of a join
-    * against the previous round (guide §2.4 — remove shuffles outright).
-    * Empty frames sum as 0. A NULL sum over a NON-empty frame is a
-    * DECIMAL(38,0) overflow (non-ANSI Spark returns null) — returned as
-    * None so callers fall back to the exact join probe for that round
-    * instead of comparing ZERO == ZERO and forging convergence (round-16
-    * verdict item: unreachable below ~1e19 row-weighted ids, but the
-    * probe's whole point is 100 TB posture and the failure is silent).
+  /** Row count and exact DECIMAL(38,0) sum of `c`, in one aggregate job —
+    * the convergence probe for fixpoints whose per-row state moves
+    * MONOTONICALLY (component labels only decrease, SCC colors only
+    * increase, temporal arrivals only decrease while rows are only added):
+    * the pair changes iff any row changed, so comparing successive results
+    * detects the fixpoint without a join against the previous round
+    * (guide §2.4 — remove shuffles outright). Empty frames sum as 0.
+    *
+    * Overflow is never a forged convergence. Under the default ANSI session
+    * a sum past DECIMAL(38,0) throws `SparkArithmeticException`
+    * (NUMERIC_VALUE_OUT_OF_RANGE) and the run fails loudly. With
+    * `spark.sql.ansi.enabled=false` it is a NULL sum over a NON-empty frame,
+    * returned as None, so callers never compare ZERO == ZERO: the
+    * label fixpoints take the exact join probe that round, temporal reach
+    * keeps relaxing. Unreachable below ~1e19 row-weighted ids either way.
     */
   private[graft] def monotoneSum(df: DataFrame, c: String):
-      Option[java.math.BigDecimal] = {
-    val r = df.agg(sum(col(c).cast("decimal(38,0)")).as("s"),
-      count(lit(1)).as("n")).head
-    val v = r.getDecimal(0)
-    if (v == null && r.getLong(1) > 0L) None
-    else Some(if (v == null) java.math.BigDecimal.ZERO else v)
+      (Long, Option[java.math.BigDecimal]) = {
+    val r = df.agg(count(lit(1)).as("n"), sum(col(c).cast("decimal(38,0)")).as("s")).head
+    val (n, v) = (r.getLong(0), r.getDecimal(1))
+    (n, if (v == null && n > 0L) None else Some(if (v == null) java.math.BigDecimal.ZERO else v))
   }
 
   /** The sum probe only applies to INTEGRAL label types — string-id graphs
@@ -321,8 +345,10 @@ object GraphAlgorithms {
     * fractional-numeric ids (Double/Float/scaled Decimal): the probe casts
     * to decimal(38,0), which ROUNDS, so a pointwise decrease smaller than
     * the rounding granularity (2.4 -> 2.0, both cast to 2) would leave the
-    * sum stationary and forge convergence mid-fixpoint. Same gate as the
-    * MST driver-contraction path (truncate-and-collide hazard).
+    * sum stationary and forge convergence mid-fixpoint. Integral values
+    * cast exactly, so a sum past DECIMAL(38,0) can only be an overflow
+    * ([[monotoneSum]]: loud under ANSI, None without it). Same gate as the
+    * driver component finish (truncate-and-collide hazard).
     */
   private[graft] def numericCol(df: DataFrame, c: String): Boolean =
     df.schema(c).dataType match {
@@ -332,76 +358,6 @@ object GraphAlgorithms {
          | org.apache.spark.sql.types.LongType => true
       case _ => false
     }
-
-  /** Max-id propagation to fixpoint: each node's `color` converges to the
-    * largest node id that reaches it along `edges` (including itself).
-    * Runs `doublingAfter` plain one-shuffle rounds first — a round-4 solo
-    * A/B (BENCH_NOTES) showed engaging the doubling join from round 1
-    * reproducibly REGRESSES 18.4 s -> ~50 s at sf0.1, because small cyclic
-    * cores converge before the extra self-join + checkpoint per round pays
-    * for itself — then adds a pointer-doubling hop per round
-    * (color(v) <- max(color(v), color(color(v))), monotone-safe since
-    * colors only increase) so a genuinely long chain (the 100 TB worry)
-    * closes in O(log L) further rounds instead of O(L). The doubling hop is
-    * a no-op only under adversarially ascending id orderings (color(v)=v
-    * until the max wave arrives); on random id placement color(v) points
-    * far away and the hop compresses the chain geometrically.
-    */
-  private def maxColorFixpoint(edges: DataFrame, nodes: DataFrame,
-                               doublingAfter: Int, tag: String): DataFrame = {
-    var colors = nodes.select(col("id"), col("id").as("color")).localCheckpointCapped()
-    // colors only ever INCREASE pointwise, so the exact color sum is
-    // strictly increasing until the fixpoint — same aggregate probe as
-    // componentLabels, one join shuffle per round removed (string-id
-    // graphs keep the join probe)
-    val sumProbe = numericCol(colors, "color")
-    var prevSum: Option[java.math.BigDecimal] =
-      if (sumProbe) monotoneSum(colors, "color") else None
-    var stable = false
-    var rounds = 0
-    while (!stable) {
-      val next = if (rounds < doublingAfter) {
-        // single hop per cycle, deliberately: chaining a second hop here
-        // (as componentLabels does) was measured in round 16 to save only
-        // ONE cycle (11 -> 10, the doubling rounds already compress the
-        // chain) while doubling the shuffle work of every plain cycle —
-        // q_strong_components regressed 12.6 -> 16.9 s in the closing
-        // bench and recovered on revert
-        val msgs = edges.join(colors.withColumnRenamed("id", "source"), Seq("source"))
-          .select(col("target").as("id"), col("color"))
-        colors.union(msgs).groupBy("id")
-          .agg(max("color").as("color")).localCheckpointCapped()
-      } else {
-        // join-based propagation here (not union+groupBy): the doubling
-        // self-join of a union+groupBy plan trips Catalyst's Union
-        // constraint rewrite
-        val maxMsgs = edges.join(colors.withColumnRenamed("id", "source"), Seq("source"))
-          .groupBy(col("target").as("id")).agg(max("color").as("mc"))
-        val prop = colors.join(maxMsgs, Seq("id"), "left_outer")
-          .select(col("id"),
-            greatest(col("color"), coalesce(col("mc"), col("color"))).as("color"))
-          .localCheckpointCapped()
-        prop.as("a")
-          .join(prop.select(col("id").as("cid"), col("color").as("c2")).as("b"),
-            col("a.color") === col("cid"), "left_outer")
-          .select(col("a.id").as("id"),
-            greatest(col("a.color"), coalesce(col("c2"), col("a.color"))).as("color"))
-          .localCheckpointCapped()
-      }
-      val curSum = if (sumProbe) monotoneSum(next, "color") else None
-      (prevSum, curSum) match {
-        case (Some(p), Some(c)) => stable = c.compareTo(p) == 0
-        case _ =>
-          stable = next.join(colors.withColumnRenamed("color", "prev"), Seq("id"))
-            .filter(col("color") =!= col("prev")).limit(1).count() == 0
-      }
-      prevSum = curSum
-      colors = next
-      rounds += 1
-    }
-    System.err.println(s"[graft] scc $tag coloring converged in $rounds rounds")
-    colors
-  }
 
   /** Distributed strongly connected components via forward-max coloring
     * (Orzan-style FW-BW coloring, the standard distributed SCC algorithm),
@@ -413,9 +369,12 @@ object GraphAlgorithms {
     * nodes remain. Labels are the min member id of each SCC.
     *
     * Peeling rounds are O(#SCC levels) on adversarial chains but O(log n)
-    * expected on random id assignment; each inner fixpoint is one
-    * join+aggregate shuffle per round with checkpointed lineage. Throws
-    * IllegalStateException if nodes remain after `maxRounds` peel rounds.
+    * expected on random id assignment. The forward coloring, and the
+    * backward one when the frontier search below hits [[sccFrontierCap]],
+    * are uncapped max-[[labelFixpoint]] runs: one hop per cycle, pointer
+    * doubling from cycle `doublingAfter` on; monotone over a finite id set,
+    * so they always terminate. Throws IllegalStateException if nodes
+    * remain after `maxRounds` peel rounds.
     */
   private[graft] def sccFixpoint(nf: NetworkFrame, doublingAfter: Int = sccDoublingAfter,
                                  maxRounds: Int = 200): DataFrame =
@@ -485,7 +444,8 @@ object GraphAlgorithms {
       // that reaches v. Roots are nodes with color == own id, and every
       // member of color class c has id <= c (color >= own id always), so
       // the root is the max id of its class.
-      val colors = maxColorFixpoint(eR, remaining, doublingAfter, "fwd")
+      val colors = labelFixpoint(eR, remaining, useMax = true, hops = 1, doublingAfter,
+        Int.MaxValue, "scc fwd coloring").withColumnRenamed("label", "color")
       // 2. backward pass as a SECOND coloring, not a frontier BFS: keep
       // only intra-class edges (any v->root path of an SCC member stays
       // inside the class), reverse them, and propagate max id again. Then
@@ -558,8 +518,9 @@ object GraphAlgorithms {
       System.err.println(s"[graft] scc bwd frontier " +
         s"${if (capped) "capped" else "converged"} in $revRounds rounds")
       if (capped) {
-        val rev = maxColorFixpoint(ec, remaining, doublingAfter, "bwd")
-        scc = colors.join(rev.withColumnRenamed("color", "rc"), Seq("id"))
+        val rev = labelFixpoint(ec, remaining, useMax = true, hops = 1, doublingAfter,
+          Int.MaxValue, "scc bwd coloring")
+        scc = colors.join(rev.withColumnRenamed("label", "rc"), Seq("id"))
           .filter(col("color") === col("rc"))
           .select(col("id"), col("color").as("root"))
           .localCheckpointCapped()
@@ -2268,35 +2229,17 @@ object GraphAlgorithms {
     * total order (wq, u, v), which perturbs weights into distinctness, so
     * the forest is UNIQUE and deterministic. Per round every component
     * picks its lightest incident inter-component edge (one struct-min
-    * aggregation — Spark orders structs lexicographically), the chosen
-    * edges contract via a pointer-doubled min-label fixpoint over the
-    * CONTRACTION graph (component-level, exponentially smaller than the
-    * input), and components at least halve — O(log n) outer rounds, each
-    * one join + one agg shuffle over edges still crossing components.
+    * aggregation — Spark orders structs lexicographically), and the chosen
+    * edges contract through [[componentLabels]] over the CONTRACTION graph
+    * (component-level, exponentially smaller than the input): integral ids
+    * within [[DriverContractionCap]] finish on the driver, larger graphs
+    * and string/fractional ids run [[weakFixpoint]], which fails loudly at
+    * its cap. Components at least halve — O(log n) outer rounds, each one
+    * join + one agg shuffle over edges still crossing components.
     * Returns the forest edge list (u < v, wq cents).
     */
-  /** Eager localCheckpoint that also RESETS plan statistics. Spark's
-    * LogicalRDD preserves the origin plan's stats through localCheckpoint,
-    * and join size estimates are PRODUCTS of child sizes — so a fixpoint
-    * that checkpoints self-joins of its own checkpointed output compounds
-    * sizeInBytes multiplicatively round-over-round. The BigInt digit count
-    * roughly quadruples per round, and by ~8 nested rounds the driver spends
-    * minutes inside BigInteger.multiply in stats estimation (measured: the
-    * Borůvka loop at sf0.01 hard-hangs planning; same family as the
-    * constraint-propagation guard above). The public-API reset is a
-    * Row-encoded rebuild of the checkpointed RDD — per-round state frames
-    * are node-sized, so the re-encode is noise; runtime broadcast decisions
-    * are unaffected because AQE re-plans from ACTUAL shuffle sizes, not
-    * these estimates.
-    */
-  private def flatCheckpoint(df: DataFrame): DataFrame = {
-    val c = df.localCheckpointCapped()
-    c.sparkSession.createDataFrame(c.rdd, c.schema)
-  }
-
   def minimumSpanningForest(nf: NetworkFrame, weightCol: String = "weight",
-                            maxRounds: Int = 20,
-                            driverContractionCap: Long = DriverContractionCap): DataFrame =
+                            maxRounds: Int = 20): DataFrame =
       withoutConstraintPropagation(nf.edges) {
     val canon = nf.edges
       .select(least(col("source"), col("target")).as("u"),
@@ -2304,8 +2247,8 @@ object GraphAlgorithms {
         floor(col(weightCol).cast("double") * 100).cast("long").as("wq"))
       .filter(col("u") =!= col("v"))
       .groupBy("u", "v").agg(min("wq").as("wq"))
-      .transform(flatCheckpoint)
-    var comp = nf.nodes.select(col("id"), col("id").as("comp")).transform(flatCheckpoint)
+      .localCheckpointCapped()
+    var comp = nf.nodes.select(col("id"), col("id").as("comp")).localCheckpointCapped()
     // forest edges accumulate as already-checkpointed per-round picks; the
     // final union is assembled once, never re-checkpointed in the loop
     var picks = List.empty[DataFrame]
@@ -2316,7 +2259,7 @@ object GraphAlgorithms {
         .join(comp.select(col("id").as("u"), col("comp").as("cu")), Seq("u"))
         .join(comp.select(col("id").as("v"), col("comp").as("cv")), Seq("v"))
         .filter(col("cu") =!= col("cv"))
-        .transform(flatCheckpoint)
+        .localCheckpointCapped()
       val pick = struct(col("wq"), col("u"), col("v"), col("cu"), col("cv"))
       val incident = labeled.select(col("cu").as("c"), pick.as("e"))
         .union(labeled.select(col("cv").as("c"), pick.as("e")))
@@ -2324,75 +2267,23 @@ object GraphAlgorithms {
         .select(col("e.wq").as("wq"), col("e.u").as("u"), col("e.v").as("v"),
           col("e.cu").as("cu"), col("e.cv").as("cv"))
         .distinct()
-        .transform(flatCheckpoint)
+        .localCheckpointCapped()
       if (chosen.isEmpty) done = true
       else {
         picks = chosen.select("u", "v", "wq") :: picks
-        // contract the chosen edges: min-label fixpoint over COMPONENT ids.
-        // Only components incident to a chosen edge can change label, so the
-        // fixpoint state is the (exponentially shrinking) contraction graph,
-        // not the full node set.
-        val ce = chosen.select(col("cu").as("a"), col("cv").as("b"))
-          .union(chosen.select(col("cv").as("a"), col("cu").as("b")))
-          .distinct().transform(flatCheckpoint)
-        // The contraction graph is COMPONENT-level: <= 2 rows per chosen
-        // edge, and components at least halve per round — so it shrinks
-        // geometrically while the edge relation stays big. Below the
-        // collect cap (1M rows ~ 16 MB of id pairs, the same size class
-        // AQE broadcasts) a driver-side union-find with min-label
-        // representatives computes the identical labeling in ONE job
-        // instead of ~9 fixpoint jobs; above it (early rounds of a
-        // trillion-edge forest) the distributed pointer-doubled min-label
-        // fixpoint runs as before. Labels are identical by construction:
-        // the fixpoint propagates the minimum component id within each
-        // connected component of `ce`, which is exactly the min member of
-        // each union-find set.
-        val ceCount = ce.count()
-        // the driver path reads ids with getLong, so it is gated on the id
-        // column actually being integral — NetworkFrame ids are arbitrary
-        // (string/decimal ids would cast to null -> NPE, or truncate and
-        // collide); everything else takes the type-agnostic fixpoint
-        val m: DataFrame = if (numericCol(ce, "a") && ceCount <= driverContractionCap) {
-          val pairs = ce.select(col("a").cast("long"), col("b").cast("long"))
-            .collect().map(r => (r.getLong(0), r.getLong(1)))
-          ce.sparkSession.createDataFrame(unionFindMinLabels(pairs)).toDF("c", "lab")
-        } else {
-          var mf = ce.select(col("a").as("c")).distinct()
-            .select(col("c"), col("c").as("lab")).transform(flatCheckpoint)
-          var conv = false
-          var r2 = 0
-          while (!conv && r2 < 40) {
-            // two propagate+double steps per convergence check: the check
-            // is a full job, and the fixpoint almost always needs >= 2
-            // more rounds when it needed any
-            val steps = if (r2 == 0) 1 else 2
-            var k = 0
-            while (k < steps) {
-              val msgs = ce.join(mf.select(col("c").as("a"), col("lab").as("la")), Seq("a"))
-                .groupBy(col("b").as("c")).agg(min("la").as("ml"))
-              val prop = mf.join(msgs, Seq("c"), "left_outer")
-                .select(col("c"),
-                  least(col("lab"), coalesce(col("ml"), col("lab"))).as("lab"))
-              mf = prop.as("x")
-                .join(prop.select(col("c").as("c2"), col("lab").as("l2")).as("y"),
-                  col("x.lab") === col("c2"), "left_outer")
-                .select(col("x.c").as("c"), coalesce(col("l2"), col("x.lab")).as("lab"))
-                .transform(flatCheckpoint)
-              k += 1
-            }
-            // converged when no remaining chosen edge still crosses labels
-            val crossing = ce
-              .join(mf.select(col("c").as("a"), col("lab").as("la")), Seq("a"))
-              .join(mf.select(col("c").as("b"), col("lab").as("lb")), Seq("b"))
-              .filter(col("la") =!= col("lb")).limit(1).count()
-            conv = crossing == 0; r2 += 1
-          }
-          System.err.println(s"[graft] boruvka round ${round + 1}: contraction fixpoint $r2 checks")
-          mf
-        }
-        comp = comp.join(m.select(col("c").as("comp"), col("lab")), Seq("comp"), "left_outer")
+        // contract the chosen edges: min-label components over COMPONENT
+        // ids. Only components incident to a chosen edge can change label,
+        // so the contraction graph (<= 2 rows per chosen edge) is the whole
+        // state, not the full node set. Both directions, so the node set is
+        // one column and the driver gate counts the same distinct pairs as
+        // before; componentLabels deduplicates and checkpoints them itself.
+        val ce = chosen.select(col("cu").as("source"), col("cv").as("target"))
+          .union(chosen.select(col("cv").as("source"), col("cu").as("target")))
+        val m = componentLabels(NetworkFrame(ce.select(col("source").as("id")).distinct(), ce))
+        comp = comp.join(m.select(col("id").as("comp"), col("component").as("lab")),
+            Seq("comp"), "left_outer")
           .select(col("id"), coalesce(col("lab"), col("comp")).as("comp"))
-          .transform(flatCheckpoint)
+          .localCheckpointCapped()
         round += 1
       }
     }
@@ -2405,36 +2296,25 @@ object GraphAlgorithms {
     * temporal-network reachability; static BFS over-counts paths that go
     * "back in time"). Seeds start at arrival -1 so any first edge
     * qualifies. The fixpoint relaxes all seeds simultaneously — state is
-    * (seed, id, arrival), one time-filtered join + one min aggregation per
-    * round, checkpointed flat like every other fixpoint here. Arrivals
-    * only decrease and new nodes only appear, so convergence is monotone;
-    * rounds are bounded by the temporal diameter.
+    * (seed, id, arrival), three time-filtered join + min-aggregation
+    * relaxations per checkpointed cycle. Arrivals only decrease and rows
+    * only appear, so the [[monotoneSum]] (row count, arrival sum) pair is
+    * stationary iff a cycle changed nothing; cycles are bounded by the
+    * temporal diameter. Throws IllegalStateException if `maxRounds`
+    * cycles do not converge.
     */
   def temporalReachability(edges: DataFrame, seeds: DataFrame,
                            maxRounds: Int = 30): DataFrame =
       withoutConstraintPropagation(edges) {
     val e = edges.select(col("source"), col("target"),
         col("t").cast("long").as("t"))
-      .distinct().transform(flatCheckpoint)
+      .distinct().localCheckpointCapped()
     var arr = seeds.select(col("id").as("seed"), col("id"),
         lit(-1L).as("arrival"))
-      .transform(flatCheckpoint)
-    // convergence probe: (seed,id) rows are only ever ADDED and arrivals
-    // only ever DECREASE (min), so the (row count, exact arrival sum) pair
-    // is stationary iff the relaxation changed nothing — one aggregate job
-    // replaces the former full-outer changed-row join per double-round
-    // a NULL sum over a non-empty frame is a DECIMAL(38,0) overflow
-    // (returned as None): the probe is unusable that round, so the loop
-    // conservatively keeps relaxing instead of comparing ZERO == ZERO
-    def reachState(df: DataFrame): (Long, Option[java.math.BigDecimal]) = {
-      val r = df.agg(count(lit(1)).as("n"),
-        sum(col("arrival").cast("decimal(38,0)")).as("s")).head
-      val v = r.getDecimal(1)
-      val s = if (v == null && r.getLong(0) > 0L) None
-        else Some(if (v == null) java.math.BigDecimal.ZERO else v)
-      (r.getLong(0), s)
-    }
-    var prevState = reachState(arr)
+      .localCheckpointCapped()
+    // a None sum (DECIMAL overflow with ANSI off) never counts as stable:
+    // the loop conservatively keeps relaxing
+    var prevState = monotoneSum(arr, "arrival")
     var done = false
     var rounds = 0
     while (!done && rounds < maxRounds) {
@@ -2458,8 +2338,8 @@ object GraphAlgorithms {
               coalesce(col("cand"), col("arrival"))).as("arrival"))
         k += 1
       }
-      arr = flatCheckpoint(cur)
-      val curState = reachState(arr)
+      arr = cur.localCheckpointCapped()
+      val curState = monotoneSum(arr, "arrival")
       done = curState._1 == prevState._1 &&
         ((prevState._2, curState._2) match {
           case (Some(p), Some(c)) => c.compareTo(p) == 0
@@ -2468,6 +2348,8 @@ object GraphAlgorithms {
       prevState = curState
       rounds += 1
     }
+    if (!done) throw new IllegalStateException(
+      s"temporalReachability did not converge within $rounds cycles")
     System.err.println(s"[graft] temporalReachability converged in $rounds triple-relaxation cycles")
     arr
   }

@@ -11,10 +11,19 @@ import org.apache.spark.sql.SparkSession
   * first-consumer cost — the same solo discipline as Bench's outlier
   * re-runs.
   *
-  * Usage: runMain graft.tools.ExplainDump <sfDir> <outDir> <tag> q_a,q_b,...
+  * Usage: runMain graft.ExplainDump <sfDir> <outDir> <tag> q_a,q_b,...
   * (tag is `before`/`after` for the plans/r16 deliverables).
   */
 object ExplainDump {
+  /** Count parquet-scan leaves per base table (by file location) in a
+    * physical plan. Works on `executedPlan.toString`, where each FileScan
+    * prints its InMemoryFileIndex location inline.
+    */
+  def scanCensus(plan: String): Map[String, Int] =
+    "InMemoryFileIndex(?: ?\\(\\d+ paths?\\))?\\[([^\\],]+)".r.findAllMatchIn(plan)
+      .map(m => m.group(1).split("/").last)
+      .toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = if (args.length > 1) args(1) else "/root/repo/plans/r16"

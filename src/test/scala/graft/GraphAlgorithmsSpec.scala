@@ -74,6 +74,36 @@ class GraphAlgorithmsSpec extends AnyFunSuite with SparkFixture {
     assert(labels == Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 2L, 4L -> 4L, 5L -> 4L))
   }
 
+  test("temporalReachability fails loudly at its cycle cap") {
+    // 0 -t=0-> 1 -t=1-> ... -t=6-> 7: one cycle relaxes three edges, so a
+    // single cycle cannot reach the end of the chain
+    val edges = (0L until 7L).map(i => (i, i + 1, i)).toDF("source", "target", "t")
+    val seeds = Seq(0L).toDF("id")
+    val capped = intercept[IllegalStateException](
+      GraphAlgorithms.temporalReachability(edges, seeds, maxRounds = 1))
+    assert(capped.getMessage == "temporalReachability did not converge within 1 cycles")
+    val got = GraphAlgorithms.temporalReachability(edges, seeds).collect()
+      .map(r => r.getLong(1) -> r.getLong(2)).toMap
+    assert(got == (0L to 7L).map(i => i -> (i - 1)).toMap)
+  }
+
+  test("monotoneSum on a DECIMAL(38,0) overflow: None without ANSI, a loud error with it") {
+    val df = spark.range(2).selectExpr("CAST('6e37' AS DECIMAL(38,0)) AS x")
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      assert(GraphAlgorithms.monotoneSum(df, "x") == ((2L, None)))
+      spark.conf.set(key, "true")
+      val e = intercept[ArithmeticException](GraphAlgorithms.monotoneSum(df, "x"))
+      assert(e.getClass.getSimpleName == "SparkArithmeticException")
+      assert(e.getMessage.contains("NUMERIC_VALUE_OUT_OF_RANGE"))
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("selectComponentFromNode: directed reachability") {
     // directed: from 3 only 3->4 reachable
     val sub = GraphAlgorithms.selectComponentFromNode(twoCompNf, 3L, directed = true)

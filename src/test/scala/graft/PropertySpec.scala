@@ -61,6 +61,90 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       val nf = idFrame(i % 3, n, edges)
       assertSameFrame(GraphAlgorithms.componentLabels(nf, "weak"), GraphAlgorithms.weakFixpoint(nf))
       assertSameFrame(GraphAlgorithms.strongComponentLabels(nf), GraphAlgorithms.sccFixpoint(nf))
+      // pointer doubling from the second cycle: the shared fixpoint's
+      // doubling step runs for both max colorings here and min labels above
+      assertSameFrame(GraphAlgorithms.strongComponentLabels(nf),
+        GraphAlgorithms.sccFixpoint(nf, doublingAfter = 1))
+    }
+  }
+
+  /** `genComponentGraph` edges with a weight in {0, 0.25, 0.5, 0.75}
+    * (exact in binary, so the cent quantization is exact; many ties) and a
+    * timestamp in 0..3 (many equal times), both derived from the endpoints
+    * and the edge position.
+    */
+  private def weightedTimed(i: Int): (Int, Seq[(Int, Int, Long, Long)]) = {
+    val (n, edges) = genComponentGraph(Gen.Parameters.default, Seed(i.toLong)).get
+    (n, edges.zipWithIndex.map { case ((s, t), j) =>
+      (s, t, (s + 2 * t + j) % 4 * 25L, (3 * s + t + j) % 4L) })
+  }
+
+  /** Zero-padded string ids: string order equals numeric order. */
+  private def pad(c: String) = lpad(col(c).cast("string"), 2, "0").as(c)
+
+  /** Plain-Scala Kruskal: the minimum spanning forest under the total
+    * order (wq, u, v), over edges with both endpoints among ids 0..n-1.
+    */
+  private def kruskal(n: Int, edges: Seq[(Int, Int, Long)]): Seq[(Long, Long, Long)] = {
+    val lightest = edges.collect { case (s, t, w) if s != t && s < n && t < n =>
+        (math.min(s, t), math.max(s, t)) -> w }
+      .groupMapReduce(_._1)(_._2)(math.min)
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = if (parent(x) == x) x else find(parent(x))
+    lightest.toSeq.map { case ((u, v), w) => (w, u, v) }.sorted.flatMap { case (w, u, v) =>
+      val (ru, rv) = (find(u), find(v))
+      if (ru == rv) None else { parent(ru) = rv; Some((u.toLong, v.toLong, w)) }
+    }.sorted
+  }
+
+  test("minimumSpanningForest equals a plain-Scala Kruskal with integral and string ids") {
+    (1 to 6).foreach { i =>
+      val (n, edges) = weightedTimed(i)
+      val want = kruskal(n, edges.map(e => (e._1, e._2, e._3)))
+      val nodes = (0L until n.toLong).toDF("id")
+      val weighted = edges.map { case (s, t, w, _) => (s.toLong, t.toLong, w / 100.0) }
+        .toDF("source", "target", "weight")
+      // integral ids contract on the driver, string ids through weakFixpoint
+      Seq(NetworkFrame(nodes, weighted),
+          NetworkFrame(nodes.select(pad("id")),
+            weighted.select(pad("source"), pad("target"), col("weight"))))
+        .foreach { nf =>
+          val got = GraphAlgorithms.minimumSpanningForest(nf)
+            .select(col("u").cast("long"), col("v").cast("long"), col("wq"))
+            .as[(Long, Long, Long)].collect().sorted.toSeq
+          assert(got == want, s"seed $i")
+        }
+    }
+  }
+
+  /** Earliest arrival by repeated scans over every edge until nothing
+    * changes: a node is reached over an edge departing no earlier than the
+    * arrival at its source; seeds arrive at -1.
+    */
+  private def earliestArrival(seed: Long, edges: Seq[(Long, Long, Long)]): Map[Long, Long] = {
+    var arr = Map(seed -> -1L)
+    var changed = true
+    while (changed) {
+      val next = edges.foldLeft(arr) { case (a, (s, t, time)) =>
+        if (a.get(s).exists(_ <= time) && a.get(t).forall(_ > time)) a.updated(t, time) else a
+      }
+      changed = next != arr
+      arr = next
+    }
+    arr
+  }
+
+  test("temporalReachability equals a plain-Scala earliest-arrival scan") {
+    (1 to 6).foreach { i =>
+      val (n, edges) = weightedTimed(i)
+      // self-loops, equal times and edges back in time all occur
+      val timed = edges.map { case (s, t, _, time) => (s.toLong, t.toLong, time) }
+      val seeds = Seq(0L, n / 2L, n + 1L).distinct
+      val want = seeds.flatMap(sd => earliestArrival(sd, timed).map { case (id, a) => (sd, id, a) })
+      val got = GraphAlgorithms.temporalReachability(timed.toDF("source", "target", "t"),
+          seeds.toDF("id"))
+        .as[(Long, Long, Long)].collect().toSeq
+      assert(got.sorted == want.sorted, s"seed $i")
     }
   }
 

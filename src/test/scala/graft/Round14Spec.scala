@@ -286,13 +286,20 @@ class Round14Spec extends AnyFunSuite with SparkFixture {
       (math.min(u, v), math.max(u, v), 1.0 + rnd.nextInt(1000) / 10.0)
     }.filter(e => e._1 != e._2).toDF("source", "target", "weight")
     val nodes = (0L until 120L).toDF("id")
-    val nf = NetworkFrame(nodes, edges)
-    val viaDriver = GraphAlgorithms.minimumSpanningForest(nf)
-    val viaFixpoint = GraphAlgorithms.minimumSpanningForest(nf,
-      driverContractionCap = 0L)
-    assert(viaDriver.exceptAll(viaFixpoint).count() == 0)
-    assert(viaFixpoint.exceptAll(viaDriver).count() == 0)
-    assert(viaDriver.count() > 0)
+    // the same graph with zero-padded string ids: string order equals the
+    // numeric order, so the (wq, u, v) tie-break is unchanged, and the
+    // integral-type gate sends every contraction to the distributed
+    // weakFixpoint instead of the driver union-find
+    def pad(c: String) = lpad(col(c).cast("string"), 3, "0").as(c)
+    val padded = NetworkFrame(nodes.select(pad("id")),
+      edges.select(pad("source"), pad("target"), col("weight")))
+    val viaDriver = GraphAlgorithms.minimumSpanningForest(NetworkFrame(nodes, edges))
+      .as[(Long, Long, Long)].collect().sorted.toSeq
+    val viaFixpoint = GraphAlgorithms.minimumSpanningForest(padded)
+      .select(col("u").cast("long"), col("v").cast("long"), col("wq"))
+      .as[(Long, Long, Long)].collect().sorted.toSeq
+    assert(viaDriver.nonEmpty)
+    assert(viaFixpoint == viaDriver)
   }
 
   /** SparkEntry stream queries suffix a counter onto their base name. */

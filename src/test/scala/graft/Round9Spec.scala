@@ -43,7 +43,7 @@ class Round9Spec extends AnyFunSuite with SparkFixture {
   test("q_pipeline_e2e is a single pass over documents (scan fusion pinned)") {
     val df = SparkEntry.queries("q_pipeline_e2e")(spark, "/root/testdata/sf0.001")
     val plan = df.queryExecution.executedPlan.toString
-    val census = Plans.scanCensus(plan)
+    val census = ExplainDump.scanCensus(plan)
     assert(census.getOrElse("documents.parquet", 0) == 1,
       s"pipeline must scan documents exactly once, census: $census\n$plan")
     // the quality gate must be fused against the scan: a Filter node whose
