@@ -588,85 +588,62 @@ object GraphAlgorithms {
     nf.copy(nodes = n, edges = induce(nf.edges, keep))
   }
 
-  /** Reachable set from one node — iterative frontier expansion (BFS), the
-    * distributed analogue of `select_component_from_node`'s single-source
-    * shortest-path shortcut (networkframe.py:962-998). Returns the induced
-    * subgraph on the reachable node set (seed included).
+  /** Induced subgraph on the nodes reachable from `nodeId` (seed included),
+    * the distributed analogue of `select_component_from_node`'s
+    * single-source shortest-path shortcut (networkframe.py:962-998):
+    * [[frontierBfs]] with no hop limit.
     */
   def selectComponentFromNode(nf: NetworkFrame, nodeId: Any,
                               directed: Boolean = true): NetworkFrame = {
-    val reached = bfsReachable(nf, nodeId, directed, maxHops = Int.MaxValue)
+    val reached = bfsFrom(nf, nodeId, directed, maxDepth = Int.MaxValue).select("id")
     val n = nf.nodes.join(reached, Seq("id"), "left_semi")
     nf.copy(nodes = n, edges = induce(nf.edges, reached))
   }
 
   /** Induced subgraph of nodes within <= k unweighted hops of `nodeId`
-    * (self included at k=0; networkframe.py:1241-1277).
+    * (self included at k=0; networkframe.py:1241-1277), by [[frontierBfs]].
     */
   def kHopNeighborhood(nf: NetworkFrame, nodeId: Any, k: Int,
                        directed: Boolean = false): NetworkFrame = {
     require(k >= 0, "k must be non-negative")
-    val reached = bfsReachable(nf, nodeId, directed, maxHops = k)
+    val reached = bfsFrom(nf, nodeId, directed, maxDepth = k).select("id")
     val n = nf.nodes.join(reached, Seq("id"), "left_semi")
     nf.copy(nodes = n, edges = induce(nf.edges, reached))
   }
 
-  /** Single-source BFS: ids reachable within <= maxHops (seed at hop 0).
-    * One semi-join-driven frontier expansion per round; stops when the
-    * frontier is empty or maxHops reached.
-    */
-  private def bfsReachable(nf: NetworkFrame, nodeId: Any, directed: Boolean,
-                           maxHops: Int): DataFrame = withoutConstraintPropagation(nf.edges) {
-    val e0 = if (directed) nf.edges.select(col("source"), col("target"))
-             else nf.symmetrizedEdges
-    val e = e0.distinct().localCheckpointCapped()
-    var visited = nf.nodes.select(col("id")).filter(col("id") === lit(nodeId))
-      .localCheckpointCapped()
-    var frontier = visited
-    var hops = 0
-    var done = frontier.isEmpty
-    while (!done && hops < maxHops) {
-      val next = e.join(frontier.withColumnRenamed("id", "source"), Seq("source"), "left_semi")
-        .select(col("target").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .localCheckpointCapped()
-      if (next.isEmpty) done = true
-      else {
-        visited = visited.union(next).localCheckpointCapped()
-        frontier = next
-      }
-      hops += 1
-    }
-    visited
-  }
+  /** [[frontierBfs]] from `nodeId`, if it is a node, over directed or symmetrized edges. */
+  private def bfsFrom(nf: NetworkFrame, nodeId: Any, directed: Boolean,
+                      maxDepth: Int): DataFrame =
+    frontierBfs(
+      if (directed) nf.edges.select(col("source"), col("target")) else nf.symmetrizedEdges,
+      nf.nodes.select(col("id")).filter(col("id") === lit(nodeId))
+        .select(col("id").as("seed"), col("id")),
+      maxDepth)
 
-  /** Single-source hop distances: (id, dist) for every node within
-    * <= maxDepth unweighted hops of `nodeId` (seed at 0) — the distance
-    * table `select_component_from_node` computes and then discards
-    * (networkframe.py:990-996, scipy shortest_path). A node's first
-    * discovery round IS its hop distance, so this is bfsReachable's frontier
-    * expansion with the round number stamped on: O(depth) rounds, one
-    * shuffle each, frontier-sized state — no dense distance matrix.
+  /** The one frontier BFS, from many seeds at once. `edges` is
+    * (source, target), deduplicated here; `seeds` is (seed, id), a BFS key
+    * and its start node. Returns (seed, id, d) for every id within
+    * `maxDepth` hops of its seed (d = 0 at the seed): a node's first
+    * discovery round is its distance, so the state is the visited set.
+    * Per round one frontier join, one distinct and one anti-join against
+    * the visited set (checkpointed), then one `isEmpty` job.
     */
-  def bfsDistances(nf: NetworkFrame, nodeId: Any, maxDepth: Int,
-                   directed: Boolean = false): DataFrame = withoutConstraintPropagation(nf.edges) {
-    require(maxDepth >= 0, "maxDepth must be non-negative")
-    val e0 = if (directed) nf.edges.select(col("source"), col("target"))
-             else nf.symmetrizedEdges
-    val e = e0.distinct().localCheckpointCapped()
-    var dist = nf.nodes.select(col("id")).filter(col("id") === lit(nodeId))
-      .withColumn("dist", lit(0L)).localCheckpointCapped()
-    var frontier = dist.select("id")
+  private def frontierBfs(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame =
+      withoutConstraintPropagation(edges) {
+    val e = edges.distinct().localCheckpointCapped()
+    var dist = seeds.select(col("seed"), col("id"), lit(0L).as("d")).localCheckpointCapped()
+    var frontier = dist
     var hops = 0
     var done = frontier.isEmpty
     while (!done && hops < maxDepth) {
-      val next = e.join(frontier.withColumnRenamed("id", "source"), Seq("source"), "left_semi")
-        .select(col("target").as("id")).distinct()
-        .join(dist.select("id"), Seq("id"), "left_anti")
+      val next = e.join(frontier.withColumnRenamed("id", "source"), Seq("source"))
+        .select(col("seed"), col("target").as("id"), (col("d") + 1).as("d"))
+        .distinct()
+        .join(dist.select("seed", "id"), Seq("seed", "id"), "left_anti")
         .localCheckpointCapped()
       if (next.isEmpty) done = true
       else {
-        dist = dist.union(next.withColumn("dist", lit(hops + 1L))).localCheckpointCapped()
+        dist = dist.union(next).localCheckpointCapped()
         frontier = next
       }
       hops += 1
@@ -674,30 +651,61 @@ object GraphAlgorithms {
     dist
   }
 
+  /** Single-source hop distances: (id, dist) for every node within
+    * <= maxDepth unweighted hops of `nodeId` (seed at 0) — the distance
+    * table `select_component_from_node` computes and then discards
+    * (networkframe.py:990-996, scipy shortest_path), by [[frontierBfs]].
+    */
+  def bfsDistances(nf: NetworkFrame, nodeId: Any, maxDepth: Int,
+                   directed: Boolean = false): DataFrame = {
+    require(maxDepth >= 0, "maxDepth must be non-negative")
+    bfsFrom(nf, nodeId, directed, maxDepth).select(col("id"), col("d").as("dist"))
+  }
+
   /** Community detection by synchronous label propagation, made
     * deterministic: each round every node adopts the most frequent label
-    * among its neighbors (count desc, then SMALLEST label — the tie-break
-    * that standard async LPA leaves to chance), isolated nodes keep theirs.
-    * Fixed `rounds` so the result is a pure function of the graph,
-    * replayable by an unrolled oracle. Per round: one join (messages), one
-    * count aggregation, one per-node argmax window, one label update —
-    * all shuffles keyed on node id, state = one label per node. Synchronous
-    * LPA can two-cycle on bipartite-ish structures; a fixed even/odd round
-    * count makes that deterministic too.
+    * among its neighbors (ties to the SMALLEST label — the tie-break async
+    * LPA leaves to chance); isolated nodes keep theirs. Fixed `rounds`, so
+    * an unrolled oracle replays it. [[synchronousLabelPropagation]] with
+    * weight 1 on the distinct, self-loop-free symmetrized edges.
     */
-  def labelPropagation(nf: NetworkFrame, rounds: Int): DataFrame = withoutConstraintPropagation(nf.edges) {
+  def labelPropagation(nf: NetworkFrame, rounds: Int): DataFrame =
+    synchronousLabelPropagation(
+      unitWeights(nf.symmetrizedEdges.filter(col("source") =!= col("target"))), nf.nodes, rounds)
+
+  /** Weighted synchronous label propagation: each node adopts the label
+    * with the largest summed cent-quantized edge weight among its
+    * neighbors (ties to the SMALLEST label). [[synchronousLabelPropagation]]
+    * over [[centWeights]], zero-weight pairs dropped.
+    */
+  def labelPropagationWeighted(nf: NetworkFrame, weightCol: String,
+                               rounds: Int): DataFrame =
+    synchronousLabelPropagation(centWeights(nf, weightCol, symmetric = true)
+      .filter(col("w") > 0).withColumn("w", col("w").cast("decimal(38,0)")), nf.nodes, rounds)
+
+  /** The one synchronous label-propagation loop. `sym` is
+    * (source, target, w) in both directions; the per-label sums take w's
+    * type (long for unit weights, DECIMAL(38,0) for cent weights, so hub
+    * sums cannot overflow). Every node starts with its id as label and
+    * each round adopts the label of largest summed w among its neighbors
+    * (ties to the smallest label), or keeps its own; a fixed round count
+    * keeps LPA's two-cycles deterministic. Per round one message join, one
+    * (id, label) sum, one per-node argmax window and one label update, all
+    * keyed on node id. Needs at least one round; returns (id, label).
+    */
+  private def synchronousLabelPropagation(sym: DataFrame, nodes: DataFrame,
+                                          rounds: Int): DataFrame =
+      withoutConstraintPropagation(sym) {
     require(rounds >= 1, "at least one round")
-    val sym = nf.symmetrizedEdges.filter(col("source") =!= col("target"))
-      .distinct().localCheckpointCapped()
-    var labels = nf.nodes.select(col("id"), col("id").as("label")).localCheckpointCapped()
+    val e = sym.localCheckpointCapped()
+    var labels = nodes.select(col("id"), col("id").as("label")).localCheckpointCapped()
+    val best = org.apache.spark.sql.expressions.Window
+      .partitionBy("id").orderBy(desc("ws"), asc("label"))
     for (_ <- 1 to rounds) {
-      val msgs = sym.join(labels.select(col("id").as("source"), col("label")),
-          Seq("source"))
-        .select(col("target").as("id"), col("label"))
-      val counts = msgs.groupBy("id", "label").agg(count(lit(1)).as("c"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("id").orderBy(desc("c"), asc("label"))
-      val picked = counts.withColumn("rn", row_number().over(w))
+      val picked = e.join(labels.select(col("id").as("source"), col("label")), Seq("source"))
+        .groupBy(col("target").as("id"), col("label"))
+        .agg(sum(col("w")).as("ws"))
+        .withColumn("rn", row_number().over(best))
         .filter(col("rn") === 1).select(col("id"), col("label").as("next"))
       labels = labels.join(picked, Seq("id"), "left_outer")
         .select(col("id"), coalesce(col("next"), col("label")).as("label"))
@@ -706,41 +714,20 @@ object GraphAlgorithms {
     labels
   }
 
-  /** Weighted synchronous label propagation: each round every node adopts
-    * the label with the largest summed cent-quantized edge weight among
-    * its neighbors (weight-sum desc, then SMALLEST label — deterministic),
-    * isolated nodes keep theirs. The weighted counterpart of
-    * `labelPropagation` with the identical plan shape: one message join +
-    * one (id, label) sum aggregation + one per-node argmax window per
-    * round. Parallel edges collapse by weight sum up front.
+  /** (source, target, w = 1) over the distinct pairs of `edges`. */
+  private def unitWeights(edges: DataFrame): DataFrame =
+    edges.select(col("source"), col("target")).distinct().withColumn("w", lit(1L))
+
+  /** (source, target, w): cent weights floor(weight * 100) summed per
+    * pair; `symmetric` adds each edge reversed and drops self-loops.
     */
-  def labelPropagationWeighted(nf: NetworkFrame, weightCol: String,
-                               rounds: Int): DataFrame =
-      withoutConstraintPropagation(nf.edges) {
-    require(rounds >= 1, "at least one round")
-    val wq = floor(col(weightCol).cast("double") * 100).cast("long")
-    val sym = nf.edges.select(col("source"), col("target"), wq.as("wq"))
-      .union(nf.edges.select(col("target").as("source"),
-        col("source").as("target"), wq.as("wq")))
-      .filter(col("source") =!= col("target"))
-      .groupBy("source", "target").agg(sum("wq").as("wq"))
-      .filter(col("wq") > 0).localCheckpointCapped()
-    var labels = nf.nodes.select(col("id"), col("id").as("label")).localCheckpointCapped()
-    for (_ <- 1 to rounds) {
-      val msgs = sym.join(labels.select(col("id").as("source"), col("label")),
-          Seq("source"))
-        .select(col("target").as("id"), col("label"), col("wq"))
-      val sums = msgs.groupBy("id", "label")
-        .agg(sum(col("wq").cast("decimal(38,0)")).as("ws"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("id").orderBy(desc("ws"), asc("label"))
-      val picked = sums.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).select(col("id"), col("label").as("next"))
-      labels = labels.join(picked, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("next"), col("label")).as("label"))
-        .localCheckpointCapped()
-    }
-    labels
+  private def centWeights(nf: NetworkFrame, weightCol: String, symmetric: Boolean): DataFrame = {
+    val e = nf.edges.select(col("source"), col("target"),
+      floor(col(weightCol).cast("double") * 100).cast("long").as("w"))
+    val both = if (!symmetric) e
+      else e.union(e.select(col("target").as("source"), col("source").as("target"), col("w")))
+        .filter(col("source") =!= col("target"))
+    both.groupBy("source", "target").agg(sum("w").as("w"))
   }
 
   /** Weighted single-source shortest paths: `rounds` synchronous
@@ -932,143 +919,94 @@ object GraphAlgorithms {
 
   /** Deterministic quantized PageRank — not in the reference (which stops at
     * connectivity), but the canonical importance score for graph-shaped
-    * training data at scale. Same integer discipline as `sortSpectral` so a
-    * DuckDB oracle can replay it exactly: total mass S=1e12 is distributed
-    * uniformly, each round every node ships `qs DIV outdeg` to each
-    * out-neighbor (integral division: deterministic; the sub-ulp remainder
-    * mass stays put, documented divergence from float PageRank), and
-    * `qs' = ((100-d)*S/N + d*received) DIV 100`. Dangling-node mass is
-    * dropped (standard simplification). Edges are deduplicated (simple-graph
-    * semantics). Per round: one join + one aggregation shuffle, lineage cut
-    * by localCheckpoint — O(iterations) rounds regardless of graph size.
+    * training data. [[personalizedPowerIteration]] from S DIV n on every
+    * node over the distinct edges; dangling mass is dropped, and a frame
+    * without nodes gives an empty result. Replayed by the q_pagerank oracle.
     */
-  def pageRank(nf: NetworkFrame, iterations: Int = 10,
-               damping: Int = 85): DataFrame = withoutConstraintPropagation(nf.edges) {
-    val S = 1000000000000L
-    val e = nf.edges.select(col("source"), col("target")).distinct().localCheckpointCapped()
-    val outdeg = e.groupBy(col("source")).agg(count(lit(1)).as("od")).localCheckpointCapped()
-    val n = nf.nodes.count()
-    val base = S / n
-    var v = nf.nodes.select(col("id"), lit(base).as("qs")).localCheckpointCapped()
-    for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(v.withColumnRenamed("id", "source"), Seq("source"))
-        .join(outdeg, Seq("source"))
-        .select(col("target").as("id"), expr("qs div od").as("c"))
-        .groupBy("id").agg(sum(col("c").cast("decimal(38,0)")).as("m"))
-      v = nf.nodes.select(col("id"))
-        .join(contrib, Seq("id"), "left_outer")
-        .selectExpr("id",
-          s"CAST((${(100L - damping) * base} + $damping * coalesce(m, CAST(0 AS DECIMAL(38,0)))) DIV 100 AS BIGINT) AS qs")
-        .localCheckpointCapped()
-    }
-    nf.nodes.join(v, Seq("id"), "left_outer").orderBy(desc("qs"), asc("id"))
-  }
+  def pageRank(nf: NetworkFrame, iterations: Int = 10, damping: Int = 85): DataFrame =
+    personalizedPowerIteration(nf.nodes, unitWeights(nf.edges), uniformRestart(nf),
+      conserveDangling = false, iterations, damping)
 
-  /** Mass-conserving PageRank: like `pageRank` but dangling nodes' damped
-    * mass redistributes uniformly instead of being dropped — the textbook
-    * stochastic-matrix variant (the plain `pageRank` deliberately matches
-    * the reference's mass-dropping behavior; this one conserves total mass
-    * up to integral-division remainders). The per-round dangling sum is a
-    * one-row frame cross-joined in (broadcast — no driver action), and its
-    * per-node share uses integral division so the redistribution is exact
-    * in any engine. Same shuffles per round as `pageRank` plus one tiny
-    * aggregate.
+  /** Mass-conserving PageRank: like `pageRank`, but dangling nodes' damped
+    * mass spreads uniformly instead of being dropped — the textbook
+    * stochastic-matrix variant (`pageRank` matches the reference's
+    * mass-dropping behavior). Replayed by the q_pagerank_cons oracle.
     */
   def pageRankConserving(nf: NetworkFrame, iterations: Int = 10,
                          damping: Int = 85): DataFrame =
-      withoutConstraintPropagation(nf.edges) {
-    val S = 1000000000000L
-    val e = nf.edges.select(col("source"), col("target")).distinct().localCheckpointCapped()
-    val outdeg = e.groupBy(col("source")).agg(count(lit(1)).as("od")).localCheckpointCapped()
-    val n = nf.nodes.count()
-    val base = S / n
-    var v = nf.nodes.select(col("id"), lit(base).as("qs")).localCheckpointCapped()
-    for (_ <- 1 to iterations) {
-      val withOd = v.join(outdeg.withColumnRenamed("source", "id"), Seq("id"), "left_outer")
-      val dangling = withOd.filter(col("od").isNull)
-        .agg(coalesce(sum(col("qs").cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).as("dang"))
-      val contrib = e
-        .join(v.withColumnRenamed("id", "source"), Seq("source"))
-        .join(outdeg, Seq("source"))
-        .select(col("target").as("id"), expr("qs div od").as("c"))
-        .groupBy("id").agg(sum(col("c").cast("decimal(38,0)")).as("m"))
-      v = nf.nodes.select(col("id"))
-        .join(contrib, Seq("id"), "left_outer")
-        .crossJoin(broadcast(dangling))
-        .selectExpr("id",
-          s"CAST((${(100L - damping) * base} + $damping * (coalesce(m, CAST(0 AS DECIMAL(38,0))) + dang DIV $n)) DIV 100 AS BIGINT) AS qs")
-        .localCheckpointCapped()
-    }
-    nf.nodes.join(v, Seq("id"), "left_outer").orderBy(desc("qs"), asc("id"))
-  }
+    personalizedPowerIteration(nf.nodes, unitWeights(nf.edges), uniformRestart(nf),
+      conserveDangling = true, iterations, damping)
 
-  /** Weighted PageRank: mass ships proportionally to cent-quantized edge
-    * weight instead of uniformly — contribution of u to v is
-    * (qs * wq(u,v)) DIV wout(u) in decimal arithmetic (exact; no
-    * remainders drift across engines). Same per-round shuffles and
-    * teleport update as `pageRank`; sources with zero total weight (and
-    * dangling nodes) ship nothing — their damped mass is dropped, not
-    * redistributed, so total mass shrinks toward the teleport floor each
-    * round (consistent with `pageRank` and the oracle).
+  /** Weighted PageRank: mass ships in proportion to cent-quantized edge
+    * weight ([[centWeights]], zero-weight pairs dropped); sources with no
+    * positive weight ship nothing, as in `pageRank`. Replayed by the
+    * q_pagerank_weighted oracle.
     */
   def pageRankWeighted(nf: NetworkFrame, weightCol: String,
-                       iterations: Int = 10, damping: Int = 85): DataFrame = withoutConstraintPropagation(nf.edges) {
-    val S = 1000000000000L
-    val wq = floor(col(weightCol).cast("double") * 100).cast("long")
-    val e = nf.edges.select(col("source"), col("target"), wq.as("wq"))
-      .groupBy("source", "target").agg(sum(col("wq")).as("wq"))
-      .filter(col("wq") > 0).localCheckpointCapped()
-    val wout = e.groupBy(col("source")).agg(sum(col("wq")).as("wt")).localCheckpointCapped()
-    val n = nf.nodes.count()
-    val base = S / n
-    var v = nf.nodes.select(col("id"), lit(base).as("qs")).localCheckpointCapped()
-    for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(v.withColumnRenamed("id", "source"), Seq("source"))
-        .join(wout, Seq("source"))
-        .select(col("target").as("id"),
-          expr("CAST((CAST(qs AS DECIMAL(38,0)) * wq) DIV wt AS DECIMAL(38,0))").as("c"))
-        .groupBy("id").agg(sum(col("c")).as("m"))
-      v = nf.nodes.select(col("id"))
-        .join(contrib, Seq("id"), "left_outer")
-        .selectExpr("id",
-          s"CAST((${(100L - damping) * base} + $damping * coalesce(m, CAST(0 AS DECIMAL(38,0)))) DIV 100 AS BIGINT) AS qs")
-        .localCheckpointCapped()
-    }
-    nf.nodes.join(v, Seq("id"), "left_outer").orderBy(desc("qs"), asc("id"))
-  }
+                       iterations: Int = 10, damping: Int = 85): DataFrame =
+    personalizedPowerIteration(nf.nodes,
+      centWeights(nf, weightCol, symmetric = false).filter(col("w") > 0),
+      uniformRestart(nf), conserveDangling = false, iterations, damping)
 
-  /** Personalized PageRank: identical quantized iteration to `pageRank`,
-    * but ALL teleport mass returns to the seed node — the proximity score
-    * behind node recommendation / related-entity retrieval. Same per-round
-    * shuffles and the same oracle-replayable integer discipline; scores of
-    * nodes unreachable from the seed are exactly 0, so at 100 TB the output
-    * is effectively sparse (filter qs > 0 before materializing).
+  /** Personalized PageRank: ALL teleport mass returns to the seed node —
+    * the proximity score behind node recommendation. A seed set of one;
+    * nodes unreachable from the seed score exactly 0, so the output is
+    * effectively sparse. Replayed by the q_ppr oracle.
     */
   def personalizedPageRank(nf: NetworkFrame, seedId: Any,
-                           iterations: Int = 10, damping: Int = 85): DataFrame = withoutConstraintPropagation(nf.edges) {
-    val S = 1000000000000L
-    val e = nf.edges.select(col("source"), col("target")).distinct().localCheckpointCapped()
-    val outdeg = e.groupBy(col("source")).agg(count(lit(1)).as("od")).localCheckpointCapped()
-    val seedMass = when(col("id") === lit(seedId), lit(S)).otherwise(lit(0L))
-    var v = nf.nodes.select(col("id"), seedMass.as("qs")).localCheckpointCapped()
+                           iterations: Int = 10, damping: Int = 85): DataFrame =
+    personalizedPageRankMulti(nf, Seq(seedId), iterations, damping)
+
+  /** Total quantized PageRank mass S: every score is an integer share of it. */
+  private val PageRankMass = 1000000000000L
+
+  /** S DIV n on every node (one count job); 0 on a frame without nodes. */
+  private def uniformRestart(nf: NetworkFrame): Column = {
+    val n = nf.nodes.count()
+    lit(if (n == 0) 0L else PageRankMass / n)
+  }
+
+  /** The one quantized power iteration behind every PageRank variant,
+    * integral so a DuckDB oracle replays it bit for bit. `edges` is
+    * (source, target, w > 0); `restart` gives each node's teleport mass
+    * p(v) from `id`, and qs starts at p(v). Each round a node ships
+    * (qs * w) DIV wt along each out-edge (wt: its summed out-weight; the
+    * remainder stays behind), in long arithmetic when w = 1 and in
+    * DECIMAL(38,0), which holds qs * w, otherwise — so unit weights skip
+    * per-edge BigDecimal work. Received mass m sums in DECIMAL(38,0), and
+    * qs' = ((100 - d) * p(v) + d * m) DIV 100. `conserveDangling` adds the
+    * dangling nodes' mass DIV n to every m, from a broadcast one-row
+    * aggregate (no driver action). Per round one join + one aggregation
+    * shuffle, checkpointed. Returns the node columns plus qs, by
+    * (qs desc, id).
+    */
+  private def personalizedPowerIteration(nodes: DataFrame, edges: DataFrame, restart: Column,
+                                         conserveDangling: Boolean, iterations: Int,
+                                         damping: Int): DataFrame =
+      withoutConstraintPropagation(edges) {
+    val e = edges.localCheckpointCapped()
+    val wt = e.groupBy("source").agg(sum("w").as("wt")).localCheckpointCapped()
+    val p = nodes.select(col("id"), restart.as("p"))
+    var v = p.select(col("id"), col("p").as("qs")).localCheckpointCapped()
     for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(v.withColumnRenamed("id", "source"), Seq("source"))
-        .join(outdeg, Seq("source"))
-        .select(col("target").as("id"), expr("qs div od").as("c"))
-        .groupBy("id").agg(sum(col("c").cast("decimal(38,0)")).as("m"))
-      v = nf.nodes.select(col("id"))
-        .join(contrib, Seq("id"), "left_outer")
-        .withColumn("hold", when(col("id") === lit(seedId),
-          lit((100L - damping) * S)).otherwise(lit(0L)))
-        .selectExpr("id",
-          s"CAST((hold + $damping * coalesce(m, CAST(0 AS DECIMAL(38,0)))) DIV 100 AS BIGINT) AS qs")
+      val m = e.join(v.withColumnRenamed("id", "source"), Seq("source"))
+        .join(wt, Seq("source"))
+        .select(col("target").as("id"),
+          expr("CAST(IF(w = 1, qs DIV wt, (CAST(qs AS DECIMAL(38,0)) * w) DIV wt) " +
+            "AS DECIMAL(38,0))").as("c"))
+        .groupBy("id").agg(sum("c").as("m"))
+      val received = p.join(m, Seq("id"), "left_outer")
+      val (in, spread) = if (!conserveDangling) (received, "") else {
+        val dangling = v.join(wt.withColumnRenamed("source", "id"), Seq("id"), "left_outer")
+          .agg(coalesce(sum(when(col("wt").isNull, col("qs").cast("decimal(38,0)"))),
+            lit(0).cast("decimal(38,0)")).as("dang"), count(lit(1)).as("n"))
+        (received.crossJoin(broadcast(dangling)), " + dang DIV n")
+      }
+      v = in.selectExpr("id", s"CAST(((100 - $damping) * p + $damping * " +
+          s"(coalesce(m, CAST(0 AS DECIMAL(38,0)))$spread)) DIV 100 AS BIGINT) AS qs")
         .localCheckpointCapped()
     }
-    nf.nodes.join(v, Seq("id"), "left_outer").orderBy(desc("qs"), asc("id"))
+    nodes.join(v, Seq("id"), "left_outer").orderBy(desc("qs"), asc("id"))
   }
 
   /** Sampled Brandes betweenness, integer-quantized: from the k smallest
@@ -1176,41 +1114,18 @@ object GraphAlgorithms {
 
   /** The k-seed simultaneous multi-source BFS distance table
     * (seed, id, d): seeds are the k smallest node ids, distances are hop
-    * counts on the symmetrized distinct edge set, bounded by `maxDepth`.
-    * This is THE shared input of `closenessCentrality`,
-    * `harmonicCentrality`, `graphVoronoi`, and `eccentricities` — derive
-    * it once, persist it, and fan the four aggregates out from the same
-    * frame (each `*FromDistances` variant below is a single aggregation
-    * pass). All k BFS trees grow in ONE frontier loop keyed on
-    * (seed, node): per round one join shuffle over the combined frontier
-    * plus one anti-join against the visited set, so k seeds cost one
-    * loop, not k.
+    * counts on the symmetrized edges, bounded by `maxDepth`. THE shared
+    * input of `closenessCentrality`, `harmonicCentrality`, `graphVoronoi`
+    * and `eccentricities`: derive it once, persist it, and fan the four
+    * `*FromDistances` aggregates out from it. One [[frontierBfs]] keyed on
+    * (seed, node), so k seeds cost one loop.
     */
   def multiSourceBfsDistances(nf: NetworkFrame, k: Int = 8,
-                              maxDepth: Int = 12): DataFrame =
-      withoutConstraintPropagation(nf.edges) {
+                              maxDepth: Int = 12): DataFrame = {
     require(k >= 1 && maxDepth >= 1, "need at least one seed and one hop")
-    val e = nf.symmetrizedEdges.distinct().localCheckpointCapped()
-    var dist = nf.nodes.select(col("id")).orderBy("id").limit(k)
-      .select(col("id").as("seed"), col("id"), lit(0L).as("d"))
-      .localCheckpointCapped()
-    var frontier = dist
-    var hops = 0
-    var done = frontier.isEmpty
-    while (!done && hops < maxDepth) {
-      val next = e.join(frontier.withColumnRenamed("id", "source"), Seq("source"))
-        .select(col("seed"), col("target").as("id"), (col("d") + 1).as("d"))
-        .distinct()
-        .join(dist.select("seed", "id"), Seq("seed", "id"), "left_anti")
-        .localCheckpointCapped()
-      if (next.isEmpty) done = true
-      else {
-        dist = dist.union(next).localCheckpointCapped()
-        frontier = next
-      }
-      hops += 1
-    }
-    dist
+    frontierBfs(nf.symmetrizedEdges,
+      nf.nodes.select(col("id")).orderBy("id").limit(k).select(col("id").as("seed"), col("id")),
+      maxDepth)
   }
 
   /** Closeness aggregate over a precomputed `multiSourceBfsDistances`
@@ -1248,39 +1163,19 @@ object GraphAlgorithms {
   }
 
   /** Multi-seed personalized PageRank: teleport mass splits evenly across
-    * the seed SET (S DIV k per seed, exact), giving proximity to a
-    * neighborhood of seeds rather than one node — the shape GNN
-    * mini-batch sampling and seed-set expansion use. Same quantized
-    * integral iteration, shuffles, and oracle-replay discipline as the
-    * single-seed `personalizedPageRank`.
+    * the seed SET (S DIV k per distinct seed; a repeated seed counts once)
+    * — the shape GNN mini-batch sampling and seed-set expansion use.
+    * Replayed by the q_ppr_multi oracle.
     */
-  def personalizedPageRankMulti(nf: NetworkFrame, seeds: Seq[Long],
+  def personalizedPageRankMulti(nf: NetworkFrame, seeds: Seq[Any],
                                 iterations: Int = 10,
-                                damping: Int = 85): DataFrame =
-      withoutConstraintPropagation(nf.edges) {
+                                damping: Int = 85): DataFrame = {
     require(seeds.nonEmpty, "at least one seed")
-    val S = 1000000000000L
-    val s0 = S / seeds.length
-    val e = nf.edges.select(col("source"), col("target")).distinct().localCheckpointCapped()
-    val outdeg = e.groupBy(col("source")).agg(count(lit(1)).as("od")).localCheckpointCapped()
-    val isSeed = col("id").isin(seeds.map(Long.box): _*)
-    var v = nf.nodes.select(col("id"),
-      when(isSeed, lit(s0)).otherwise(lit(0L)).as("qs")).localCheckpointCapped()
-    for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(v.withColumnRenamed("id", "source"), Seq("source"))
-        .join(outdeg, Seq("source"))
-        .select(col("target").as("id"), expr("qs div od").as("c"))
-        .groupBy("id").agg(sum(col("c").cast("decimal(38,0)")).as("m"))
-      v = nf.nodes.select(col("id"))
-        .join(contrib, Seq("id"), "left_outer")
-        .withColumn("hold", when(isSeed,
-          lit((100L - damping) * s0)).otherwise(lit(0L)))
-        .selectExpr("id",
-          s"CAST((hold + $damping * coalesce(m, CAST(0 AS DECIMAL(38,0)))) DIV 100 AS BIGINT) AS qs")
-        .localCheckpointCapped()
-    }
-    nf.nodes.join(v, Seq("id"), "left_outer").orderBy(desc("qs"), asc("id"))
+    val distinct = seeds.distinct
+    val restart = when(col("id").isin(distinct: _*), lit(PageRankMass / distinct.length))
+      .otherwise(lit(0L))
+    personalizedPowerIteration(nf.nodes, unitWeights(nf.edges), restart,
+      conserveDangling = false, iterations, damping)
   }
 
   /** Local clustering coefficient: per node, the fraction of its neighbor
@@ -1652,32 +1547,42 @@ object GraphAlgorithms {
         expr("cn * 1000000 div (da + db - cn)").as("jaccard_q"))
   }
 
-  /** k-core membership via fixed-round peeling: repeatedly drop nodes whose
-    * degree in the surviving induced subgraph is < k. `rounds` is fixed (not
-    * run-to-convergence) so the result is a pure function of the input and an
-    * unrolled-CTE oracle can replay it; peeling converges in far fewer rounds
-    * than that on real graphs (each round strictly shrinks the node set).
-    * Returns (id, core_deg) for surviving nodes. Per round: one shuffled
-    * degree aggregation + two semi-joins, lineage cut by localCheckpoint —
-    * the same per-round cost envelope as componentLabels, so the 100 TB
-    * story is identical.
+  /** k-core membership: [[peel]] at threshold k over the distinct,
+    * self-loop-free symmetrized edges with weight 1. Fixed `rounds` keep
+    * the result a pure function of the input that an unrolled-CTE oracle
+    * replays; real graphs converge far sooner. Returns (id, core_deg) for
+    * the survivors, degrees re-derived inside the final core.
     */
-  def kCore(nf: NetworkFrame, k: Int, rounds: Int = 8): DataFrame = withoutConstraintPropagation(nf.edges) {
-    val sym = nf.symmetrizedEdges
-      .select(col("source"), col("target"))
-      .filter(col("source") =!= col("target")).distinct()
+  def kCore(nf: NetworkFrame, k: Int, rounds: Int = 8): DataFrame = {
+    val sym = unitWeights(nf.symmetrizedEdges.filter(col("source") =!= col("target")))
       .localCheckpointCapped()
-    var surviving = nf.nodes.select("id").localCheckpointCapped()
-    for (_ <- 1 to rounds) {
-      surviving = induce(sym, surviving)
-        .groupBy(col("source").as("id"))
-        .agg(count(lit(1)).as("core_deg"))
-        .filter(col("core_deg") >= k).select("id").localCheckpointCapped()
-    }
-    induce(sym, surviving)
-      .groupBy(col("source").as("id"))
-      .agg(count(lit(1)).as("core_deg"))
+    val core = peel(sym, nf.nodes.select("id").localCheckpointCapped(), k, rounds)
+    inducedStrength(sym, core).withColumnRenamed("s", "core_deg")
   }
+
+  /** The one threshold-peeling loop: `rounds` times, keep the nodes of
+    * `alive` whose [[inducedStrength]] is at least `threshold`. `sym` is
+    * (source, target, w) in both directions, checkpointed by the caller so
+    * `coreNumbers` shares it across levels. Per round two semi-joins and
+    * one sum, checkpointed. Returns the surviving ids: the exact core at
+    * convergence, else a superset.
+    */
+  private def peel(sym: DataFrame, alive: DataFrame, threshold: Long,
+                   rounds: Int): DataFrame = withoutConstraintPropagation(sym) {
+    var surviving = alive
+    for (_ <- 1 to rounds) {
+      surviving = inducedStrength(sym, surviving).filter(col("s") >= threshold)
+        .select("id").localCheckpointCapped()
+    }
+    surviving
+  }
+
+  /** (id, s): each node's w summed over its `sym` edges inside `alive`, in
+    * w's type and returned as a long; nodes without such edges are absent.
+    */
+  private def inducedStrength(sym: DataFrame, alive: DataFrame): DataFrame =
+    induce(sym, alive).groupBy(col("source").as("id"))
+      .agg(sum(col("w")).cast("long").as("s"))
 
   /** Densest-subgraph greedy peeling trace, the 2(1+eps)-approximation of
     * Bahmani/Kumar/Vazirani ("Densest Subgraph in Streaming and MapReduce",
@@ -2133,38 +2038,19 @@ object GraphAlgorithms {
       .select("source", "target", "j")
   }
 
-  /** Weighted k-core (s-core) peeling: iteratively remove nodes whose
-    * cent-quantized strength WITHIN the surviving subgraph falls below
-    * `thresholdQ`; after `rounds` fixed rounds, emit each survivor with its
-    * in-core strength. The weighted generalization of `kCore` with the
-    * identical plan shape — per round one induced-strength aggregation over
-    * the alive set (two semi joins + one sum shuffle); parallel edges sum
-    * up front, self-loops drop. Fixed rounds keep it oracle-replayable; at
-    * convergence the alive set is the exact s-core, otherwise a superset
-    * (same contract as `kCore`).
+  /** Weighted k-core (s-core): [[peel]] nodes whose cent-quantized
+    * strength within the surviving subgraph is below `thresholdQ`, over
+    * [[centWeights]] (parallel edges summed, self-loops dropped,
+    * zero-weight pairs kept); emit each survivor's in-core strength. Fixed
+    * rounds keep it oracle-replayable (same contract as `kCore`).
     */
   def weightedKCore(nf: NetworkFrame, weightCol: String, thresholdQ: Long,
-                    rounds: Int = 4): DataFrame = withoutConstraintPropagation(nf.edges) {
+                    rounds: Int = 4): DataFrame = {
     require(rounds >= 1, "at least one peel round")
-    val wq = floor(col(weightCol).cast("double") * 100).cast("long")
-    val sym = nf.edges.select(col("source"), col("target"), wq.as("wq"))
-      .union(nf.edges.select(col("target").as("source"),
-        col("source").as("target"), wq.as("wq")))
-      .filter(col("source") =!= col("target"))
-      .groupBy("source", "target").agg(sum("wq").as("wq"))
-      .localCheckpointCapped()
-    def coreStrength(alive: DataFrame): DataFrame = sym
-      .join(alive.withColumnRenamed("id", "source"), Seq("source"), "left_semi")
-      .join(alive.withColumnRenamed("id", "target"), Seq("target"), "left_semi")
-      .groupBy(col("source").as("id"))
-      .agg(sum(col("wq").cast("decimal(38,0)")).cast("long").as("strength_q"))
-    var alive = nf.nodes.select(col("id")).localCheckpointCapped()
-    for (_ <- 1 to rounds) {
-      alive = coreStrength(alive).filter(col("strength_q") >= thresholdQ)
-        .select("id").localCheckpointCapped()
-    }
-    // strengths RE-derived within the final core (mirrors kCore's contract)
-    coreStrength(alive)
+    val sym = centWeights(nf, weightCol, symmetric = true)
+      .withColumn("w", col("w").cast("decimal(38,0)")).localCheckpointCapped()
+    val core = peel(sym, nf.nodes.select(col("id")).localCheckpointCapped(), thresholdQ, rounds)
+    inducedStrength(sym, core).withColumnRenamed("s", "strength_q")
   }
 
   /** Skip-gram (center, context) pair counts from a walk corpus — the
@@ -2389,35 +2275,19 @@ object GraphAlgorithms {
   }
 
   /** Full k-core decomposition: core_number(v) = the largest k such that v
-    * survives k-core peeling, computed by ascending-k peeling with a warm
-    * start — the k-core is a subset of the (k-1)-core, so level k peels
-    * the level-(k-1) survivor set, not the whole graph (each level's work
-    * shrinks as the graph thins; the standard distributed formulation).
-    * Fixed `rounds` per level keeps the output a pure function of the
-    * graph, replayable by an unrolled oracle (same contract as `kCore`).
-    * Nodes outside the 1-core (isolated or dangling into nothing) report
-    * core 0. Per level-round: one semi-join induction + one degree
-    * aggregation, lineage cut per round.
+    * survives k-core peeling. Level k [[peel]]s the level-(k-1) survivors
+    * (the k-core lies inside the (k-1)-core), so each level's work shrinks
+    * as the graph thins. Fixed `rounds` per level keep it replayable by an
+    * unrolled oracle; nodes outside the 1-core report 0.
     */
-  def coreNumbers(nf: NetworkFrame, maxK: Int = 4, rounds: Int = 8): DataFrame =
-      withoutConstraintPropagation(nf.edges) {
+  def coreNumbers(nf: NetworkFrame, maxK: Int = 4, rounds: Int = 8): DataFrame = {
     require(maxK >= 1 && rounds >= 1, "need at least one level and one round")
-    val sym = nf.symmetrizedEdges
-      .select(col("source"), col("target"))
-      .filter(col("source") =!= col("target")).distinct()
+    val sym = unitWeights(nf.symmetrizedEdges.filter(col("source") =!= col("target")))
       .localCheckpointCapped()
-    var surviving = nf.nodes.select("id").localCheckpointCapped()
-    val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (k <- 1 to maxK) {
-      for (_ <- 1 to rounds) {
-        surviving = induce(sym, surviving)
-          .groupBy(col("source").as("id"))
-          .agg(count(lit(1)).as("d"))
-          .filter(col("d") >= k).select("id").localCheckpointCapped()
-      }
-      levels += surviving.withColumn("k", lit(k.toLong))
-    }
-    val deepest = levels.reduce(_ union _)
+    val levels = (1 to maxK).scanLeft(nf.nodes.select("id").localCheckpointCapped())(
+      (alive, k) => peel(sym, alive, k, rounds)).tail
+    val deepest = levels.zipWithIndex.map { case (core, i) => core.withColumn("k", lit(i + 1L)) }
+      .reduce(_ union _)
       .groupBy("id").agg(max("k").as("core_number"))
     nf.nodes.select("id").join(deepest, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("core_number"), lit(0L)).as("core_number"))

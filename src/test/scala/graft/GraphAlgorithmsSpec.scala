@@ -185,6 +185,26 @@ class GraphAlgorithmsSpec extends AnyFunSuite with SparkFixture {
     assert(pr(3L) < base / 5) // ~0.15 * base
   }
 
+  test("PageRank of a frame with no nodes is empty, not a division by zero") {
+    val nf = NetworkFrame(Seq.empty[Long].toDF("id"),
+      Seq.empty[(Long, Long, Double)].toDF("source", "target", "weight"))
+    Seq(GraphAlgorithms.pageRank(nf), GraphAlgorithms.pageRankConserving(nf),
+        GraphAlgorithms.pageRankWeighted(nf, "weight"))
+      .foreach { out =>
+        assert(out.columns.toSeq == Seq("id", "qs"))
+        assert(out.isEmpty)
+      }
+  }
+
+  test("personalized PageRank gives a repeated seed its share once") {
+    def ppr(seeds: Long*) =
+      GraphAlgorithms.personalizedPageRankMulti(twoCompNf, seeds, iterations = 5).collect().toSeq
+    assert(ppr(0L, 0L, 1L) == ppr(0L, 1L))
+    // the two seeds split the full restart mass: 15% of S/2 each at least
+    val qs = ppr(0L, 1L).map(r => r.getLong(0) -> r.getAs[Long]("qs")).toMap
+    assert(qs(0L) >= 75000000000L && qs(1L) >= 75000000000L)
+  }
+
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0L)
   }

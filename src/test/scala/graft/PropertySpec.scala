@@ -148,6 +148,166 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  // ---------------- the iteration families vs plain-Scala references -----
+
+  private val S = BigInt(1000000000000L)
+
+  /** Plain-Scala quantized PageRank over nodes 0..n-1 with damping 85:
+    * `w` maps each edge (dangling endpoints included) to its weight, `p`
+    * gives each node's restart mass. Every round a node ships
+    * (qs * w) DIV (its summed out-weight) along each edge, and with
+    * `conserve` the nodes without out-edges also spread their mass as
+    * dang DIV n.
+    */
+  private def powerIteration(n: Int, w: Map[(Int, Int), Long], p: Int => BigInt,
+      conserve: Boolean, iterations: Int): Seq[BigInt] = {
+    val wt = w.groupMapReduce(_._1._1)(_._2)(_ + _)
+    (1 to iterations).foldLeft((0 until n).map(p)) { (qs, _) =>
+      val m = w.toSeq.collect { case ((s, t), x) if s < n && t < n => t -> qs(s) * x / wt(s) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      val dang = if (conserve) (0 until n).filterNot(wt.contains).map(qs).sum / n else BigInt(0)
+      (0 until n).map(v => (p(v) * 15 + (m.getOrElse(v, BigInt(0)) + dang) * 85) / 100)
+    }
+  }
+
+  /** Edge (source, target) -> summed cent weight over the given edge list. */
+  private def centSums(edges: Seq[(Int, Int, Long)]): Map[(Int, Int), Long] =
+    edges.groupMapReduce(e => (e._1, e._2))(_._3)(_ + _)
+
+  private def weightedFrame(n: Int, edges: Seq[(Int, Int, Long, Long)]): NetworkFrame =
+    NetworkFrame((0L until n.toLong).toDF("id"),
+      edges.map { case (s, t, w, _) => (s.toLong, t.toLong, w / 100.0) }
+        .toDF("source", "target", "weight"))
+
+  test("the PageRank family equals a plain-Scala BigInt power iteration") {
+    (1 to 5).foreach { i =>
+      val (n, edges) = weightedTimed(i)
+      val nf = weightedFrame(n, edges)
+      val unit = edges.map(e => (e._1, e._2) -> 1L).toMap
+      def want(w: Map[(Int, Int), Long], p: Int => BigInt, conserve: Boolean = false) =
+        powerIteration(n, w, p, conserve, 5).zipWithIndex
+          .map { case (q, v) => (v.toLong, q.toLong) }.toDF("id", "qs")
+      val uniform = (_: Int) => S / n
+      assertSameFrame(GraphAlgorithms.pageRank(nf, 5), want(unit, uniform))
+      assertSameFrame(GraphAlgorithms.pageRankConserving(nf, 5), want(unit, uniform, conserve = true))
+      assertSameFrame(GraphAlgorithms.pageRankWeighted(nf, "weight", 5),
+        want(centSums(edges.map(e => (e._1, e._2, e._3))).filter(_._2 > 0), uniform))
+      // 1 to 3 seeds; n + 1 is a dangling endpoint, not a node
+      val seeds = Seq(0, n + 1, n / 2).take(1 + i % 3).distinct
+      assertSameFrame(GraphAlgorithms.personalizedPageRankMulti(nf, seeds.map(_.toLong), 5),
+        want(unit, v => if (seeds.contains(v)) S / seeds.size else BigInt(0)))
+      assertSameFrame(GraphAlgorithms.personalizedPageRank(nf, seeds.last.toLong, 5),
+        want(unit, v => if (v == seeds.last) S else BigInt(0)))
+    }
+    // string ids: the seed is compared as a string
+    val (n, edges) = weightedTimed(6)
+    val nf = NetworkFrame((0 until n).toDF("id").select(pad("id")),
+      edges.map(e => (e._1, e._2)).toDF("source", "target").select(pad("source"), pad("target")))
+    val want = powerIteration(n, edges.map(e => (e._1, e._2) -> 1L).toMap,
+        v => if (v == 1) S else BigInt(0), conserve = false, 5).zipWithIndex
+      .map { case (q, v) => (f"$v%02d", q.toLong) }.toDF("id", "qs")
+    assertSameFrame(GraphAlgorithms.personalizedPageRank(nf, "01", 5), want)
+  }
+
+  /** Hop distances from `seed` by a FIFO-queue BFS over `adj`, to `maxDepth`. */
+  private def queueBfs(adj: Map[Int, Seq[Int]], seed: Int, maxDepth: Int): Map[Int, Long] = {
+    val dist = collection.mutable.Map(seed -> 0L)
+    val queue = collection.mutable.Queue(seed)
+    while (queue.nonEmpty) {
+      val u = queue.dequeue()
+      if (dist(u) < maxDepth) adj.getOrElse(u, Nil).foreach { v =>
+        if (!dist.contains(v)) { dist(v) = dist(u) + 1; queue.enqueue(v) }
+      }
+    }
+    dist.toMap
+  }
+
+  test("the BFS family equals a plain-Scala queue BFS") {
+    (1 to 4).foreach { i =>
+      val (n, edges) = genComponentGraph(Gen.Parameters.default, Seed(i.toLong)).get
+      val nf = idFrame(1, n, edges)
+      val out = edges.groupMap(_._1)(_._2)
+      val both = (edges ++ edges.map(_.swap)).groupMap(_._1)(_._2)
+      // BFS starts only from a seed in the node table, then walks every edge
+      def bfs(adj: Map[Int, Seq[Int]], seed: Int, depth: Int) =
+        if (seed < n) queueBfs(adj, seed, depth) else Map.empty[Int, Long]
+      def induced(got: NetworkFrame, reached: Set[Int]): Unit = {
+        assertSameFrame(got.nodes, reached.filter(_ < n).toSeq.map(_.toLong).toDF("id"))
+        // the two semi-joins of the induction lead with the join key
+        assertSameFrame(got.edges, edges.filter(e => reached(e._1) && reached(e._2))
+          .map(e => (e._2.toLong, e._1.toLong)).toDF("target", "source"))
+      }
+      // seed n is an edge endpoint absent from the node table
+      Seq(0, n).foreach { seed =>
+        for ((directed, adj) <- Seq(true -> out, false -> both); depth <- Seq(0, 3))
+          assertSameFrame(GraphAlgorithms.bfsDistances(nf, seed.toLong, depth, directed),
+            bfs(adj, seed, depth).toSeq.map(r => (r._1.toLong, r._2)).toDF("id", "dist"))
+        induced(GraphAlgorithms.kHopNeighborhood(nf, seed.toLong, 2),
+          bfs(both, seed, 2).keySet)
+        induced(GraphAlgorithms.selectComponentFromNode(nf, seed.toLong),
+          bfs(out, seed, Int.MaxValue).keySet)
+      }
+      val multi = (0 until math.min(2, n)).flatMap(s =>
+        queueBfs(both, s, 3).map { case (v, d) => (s.toLong, v.toLong, d) })
+      assertSameFrame(GraphAlgorithms.multiSourceBfsDistances(nf, k = 2, maxDepth = 3),
+        multi.toDF("seed", "id", "d"))
+    }
+  }
+
+  /** Both directions of every edge with its cent weight, self-loops dropped. */
+  private def symmetric(edges: Seq[(Int, Int, Long)]): Seq[(Int, Int, Long)] =
+    (edges ++ edges.map(e => (e._2, e._1, e._3))).filter(e => e._1 != e._2)
+
+  /** Synchronous label propagation over nodes 0..n-1: each round every node
+    * takes the label with the largest summed weight `w` among its in-table
+    * neighbours (ties to the smallest label) or keeps its own.
+    */
+  private def labelRounds(n: Int, w: Map[(Int, Int), Long], rounds: Int): Seq[(Long, Long)] =
+    (1 to rounds).foldLeft((0 until n).map(_.toLong)) { (lab, _) =>
+      (0 until n).map { v =>
+        val byLabel = w.toSeq.collect { case ((s, t), x) if t == v && s < n => lab(s) -> x }
+          .groupMapReduce(_._1)(_._2)(_ + _)
+        if (byLabel.isEmpty) lab(v) else byLabel.minBy { case (l, x) => (-x, l) }._1
+      }
+    }.zipWithIndex.map { case (l, v) => (v.toLong, l) }
+
+  /** Summed weight `w` from each node of `alive` to the others in `alive`;
+    * nodes without such an edge are absent.
+    */
+  private def strength(alive: Set[Int], w: Map[(Int, Int), Long]): Map[Int, Long] =
+    w.toSeq.collect { case ((s, t), x) if alive(s) && alive(t) => s -> x }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+
+  private def peelRounds(alive: Set[Int], w: Map[(Int, Int), Long], threshold: Long,
+      rounds: Int): Set[Int] =
+    (1 to rounds).foldLeft(alive)((a, _) => strength(a, w).filter(_._2 >= threshold).keySet)
+
+  test("label propagation and peeling equal plain-Scala synchronous references") {
+    (1 to 4).foreach { i =>
+      val (n, edges) = weightedTimed(i)
+      val nf = weightedFrame(n, edges)
+      val unit = symmetric(edges.map(e => (e._1, e._2, 1L))).map(e => (e._1, e._2) -> 1L).toMap
+      val cents = centSums(symmetric(edges.map(e => (e._1, e._2, e._3))))
+      assertSameFrame(GraphAlgorithms.labelPropagation(nf, 3),
+        labelRounds(n, unit, 3).toDF("id", "label"))
+      assertSameFrame(GraphAlgorithms.labelPropagationWeighted(nf, "weight", 3),
+        labelRounds(n, cents.filter(_._2 > 0), 3).toDF("id", "label"))
+      val nodes = (0 until n).toSet
+      def rows(m: Map[Int, Long]) = m.toSeq.map(r => (r._1.toLong, r._2))
+      val k = 1 + i % 2
+      assertSameFrame(GraphAlgorithms.kCore(nf, k, 2),
+        rows(strength(peelRounds(nodes, unit, k, 2), unit)).toDF("id", "core_deg"))
+      // zero-weight pairs stay in the weighted core's edge set
+      val threshold = 25L * (i % 3)
+      assertSameFrame(GraphAlgorithms.weightedKCore(nf, "weight", threshold, 2),
+        rows(strength(peelRounds(nodes, cents, threshold, 2), cents)).toDF("id", "strength_q"))
+      val levels = (1 to 3).scanLeft(nodes)((a, k) => peelRounds(a, unit, k, 2)).tail
+      assertSameFrame(GraphAlgorithms.coreNumbers(nf, maxK = 3, rounds = 2),
+        rows(nodes.map(v => v -> (levels.lastIndexWhere(_(v)) + 1).toLong).toMap)
+          .toDF("id", "core_number"))
+    }
+  }
+
   /** An IVF-PQ corpus: (id, vector, cell) rows plus (m, dims, k, nprobe).
     * Vectors are 1-4 positions longer than `dims`; components come from a
     * five-value set with negatives, so codebook distances tie, and some

@@ -40,6 +40,17 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
     assert(line.contains("\"n_outliers\":0"))
   }
 
+  test("a failed query's -1.0 sentinel stays out of the total, the guard and the seed") {
+    val results = Map("q_a" -> 1.25, "q_b" -> 2.5, "q_fail" -> -1.0)
+    val line = BenchGuard.summaryLine(results, Nil, Map.empty, "sf", "f")
+    assert(line.contains("\"value\":3.750"))
+    assert(line.contains("\"n\":3"))
+    assert(line.contains("\"n_failed\":1"))
+    assert(BenchGuard.suspects(results.toSeq, Map("q_fail" -> 0.01), floorSec = 0.0).isEmpty)
+    assert(BenchGuard.mergeSeed(Map("q_fail" -> 2.0), results) ==
+      Map("q_a" -> 1.25, "q_b" -> 2.5, "q_fail" -> 2.0))
+  }
+
   // ---------------- zero-norm-safe cosine on both channels ---------------
 
   private def corpusWithZero = {
