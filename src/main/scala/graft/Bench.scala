@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** The bench outlier guard as PURE functions — extracted so the logic that
   * gatekeeps the official performance record is unit-testable (round-12
@@ -215,54 +214,23 @@ object BenchGuard {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark"
-        else System.getProperty("java.io.tmpdir")))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
+    val spark = Harness.session()
+    val selected = Harness.selected
     // absorb JVM/codegen/scheduler/parquet cold-start before timing: the
     // first timed query otherwise carries ~5-10s of warmup (measured), which
     // lands on whichever query the Map iterates first and reads as a fake
     // regression of that query
-    // Between-query hygiene. Async unpersist is NOT enough: leftover
-    // checkpoint blocks + their uncollected heap garbage race the next
-    // query's materialization, and the degradation is progressive —
-    // measured on the 10x corpus, an identical postings checkpoint ran
-    // 24 s in a clean JVM, 291 s after one prior async-unpersisted run,
-    // 87 s with blocking unpersist alone, and 23 s with blocking
-    // unpersist + an explicit gc. This is what produced the historical
-    // "shared-run contention" outliers on string-heavy queries (they ran
-    // late in the 290-query session); bench hygiene, not production code.
-    def reclaim(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
-    }
     selected.headOption.foreach { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      reclaim()
+      Harness.timedCount(spark, sfDir, name, fn)
+      Harness.reclaim(spark)
       System.err.println(f"[bench] warmup ($name) done ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
-    // a thrown query records the -1.0 sentinel, not its time-to-fail (the
-    // same rule as soloRun below): the guard, the seed merge and the
-    // totals all skip non-positive values
     val shared = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] $name%-24s $sec%8.2f s${if (ok) "" else " FAILED"}")
-      reclaim()
-      name -> (if (ok) sec else -1.0)
+      val sec = Harness.timedCount(spark, sfDir, name, fn)
+      System.err.println(f"[bench] $name%-24s $sec%8.2f s")
+      Harness.reclaim(spark)
+      name -> sec
     }
     // ---- outlier self-defense (rounds 12-13, logic in BenchGuard above):
     // shared times over 3x their best prior record re-run solo; the
@@ -303,22 +271,19 @@ object Bench {
     // a gc+settle pause when the first one doesn't clear the trigger
     val suspects = BenchGuard.suspects(shared.toSeq, prior)
     def soloRun(name: String): Double = {
-      reclaim()
+      Harness.reclaim(spark)
       // solos must pay first-consumer cost for memo-backed families: a
       // same-JVM re-run otherwise times a bare scratch-parquet read, which
       // reproduces across attempts and forges a "confirmed" speedup
       // (observed: q_strong_components 0.2 s twice vs ~9 s honest)
       SparkEntry.resetMemoizedArtifacts()
-      val t0 = System.nanoTime()
       // a thrown query must yield the -1.0 sentinel (dropped by
       // adjudicate's positive filter), NOT its time-to-fail: two fast
       // failures would otherwise agree within 25%, pass the double-solo
       // confirmation, and poison the seed with a near-zero "best"
-      val ok = try { selected(name)(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      reclaim()
-      if (ok) sec else -1.0
+      val sec = Harness.timedCount(spark, sfDir, name, selected(name))
+      Harness.reclaim(spark)
+      sec
     }
     val outliers = suspects.map { case (name, sharedSec) =>
       val solo1 = soloRun(name)
@@ -371,7 +336,7 @@ object Bench {
     // driver's bench scale also writes the repo-tracked
     // BENCH_full_latest.json — committed at round close, it is the
     // cross-round comparison source the bounded stdout tail cannot be
-    if (only.isEmpty && results.nonEmpty && BenchGuard.seedScaleOk(sfDir)) {
+    if (Harness.only.isEmpty && results.nonEmpty && BenchGuard.seedScaleOk(sfDir)) {
       try {
         val f = Seq(new java.io.File("/root/repo"), new java.io.File("."))
           .filter(_.isDirectory)
@@ -390,7 +355,7 @@ object Bench {
     // 0.3x floor only blocks rows whose small-scale time is BELOW 0.3x;
     // measured round 14: q_mst 14.7 -> 7.0, q_copurchase 2.9 -> 0.86),
     // and every later sf0.1 run would read as a fleet-wide regression
-    if (only.isEmpty && results.nonEmpty && BenchGuard.seedScaleOk(sfDir)) {
+    if (Harness.only.isEmpty && results.nonEmpty && BenchGuard.seedScaleOk(sfDir)) {
       try {
         val seedF = Seq(new java.io.File("/root/repo"), new java.io.File("."))
           .filter(_.isDirectory).map(d => new java.io.File(d, "BENCH_seed.json")).head

@@ -492,9 +492,12 @@ object GraphAlgorithms {
         pendingV.foldLeft(df.join(visited, Seq("id"), "left_anti"))(
           (d, p) => d.join(p, Seq("id"), "left_anti"))
       var frontier = visited
+      // one emptiness job per round: the checkpointed frontier is tested
+      // once, and the result serves both the buffer and the loop head
+      var live = !frontier.isEmpty
       var revRounds = 0
       var capped = false
-      while (!capped && !frontier.isEmpty) {
+      while (!capped && live) {
         if (revRounds >= math.max(doublingAfter, sccFrontierCap)) capped = true
         else {
           val next = notSeen(ecc
@@ -503,7 +506,8 @@ object GraphAlgorithms {
             .select(col("target").as("id"), col("root")).distinct())
             .localCheckpointCapped()
           frontier = next
-          if (!next.isEmpty) pendingV += next
+          live = !next.isEmpty
+          if (live) pendingV += next
           if (pendingV.size >= 4) {
             visited = (visited +: pendingV).reduce(_ union _).localCheckpointCapped()
             pendingV.clear()

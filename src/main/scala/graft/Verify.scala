@@ -1,40 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark"
-        else System.getProperty("java.io.tmpdir")))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=name1,name2 restricts to a subset (local iteration)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    selected.foreach { case (name, fn) =>
+    Harness.selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.toString.take(500)}")
       }
       // free accumulated localCheckpoint blocks between queries
-      // blocking + gc: async unpersist leaves blocks/garbage that race the
-      // next query's checkpoints and degrade it progressively (see the
-      // measured note in Bench.reclaim)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
+      Harness.reclaim(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

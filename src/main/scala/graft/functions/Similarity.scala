@@ -945,8 +945,7 @@ object Similarity {
     *  - RESIDUAL: within each coarse membership the vector is re-expressed
     *    as (qv - coarse centroid) — inside a coarse cell all members look
     *    like the centroid, so the residual carries the discriminative
-    *    signal the raw cosine saturates away (`residual = false` keeps the
-    *    raw geometry for A/B measurement).
+    *    signal the raw cosine saturates away.
     *  - FINE: per coarse cell, ceil(sqrt(cellsize)) KMV seeds drawn FROM
     *    the cell's members (smallest md5(id || "@" || cell) — per-cell
     *    stream-independent draw); members join their `mFine` nearest fine
@@ -975,50 +974,30 @@ object Similarity {
     */
   def mutualKnnGraphTwoLevel(df: DataFrame, idCol: String, vecCol: String,
                              k: Int, pCoarse: Int, pFine: Int,
-                             mCoarse: Int = 1, mFine: Int = 1,
-                             residual: Boolean = true): DataFrame = {
+                             mCoarse: Int = 1, mFine: Int = 1): DataFrame = {
     LongDot.register(df.sparkSession)
     val q = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
       .withColumn("n2", dotLong(col("qv"), col("qv")))
       .localCheckpointCapped()
     mutualFromScored(scoreCandidatePairs(q,
-      twoLevelCandidatesFromQuantized(q, pCoarse, pFine, mCoarse, mFine,
-        residual)), k)
+      twoLevelCandidatesFromQuantized(q, pCoarse, pFine, mCoarse, mFine)), k)
   }
 
   /** Candidate-pair count of the two-level channel at an operating point —
-    * the honest cost axis for grid comparisons against the flat channel
-    * (whose cost is counted the same way by [[kmvCandidateCount]]).
+    * the honest cost axis: DISTINCT (qid, nid) pairs, each scored once.
     */
   private[graft] def twoLevelCandidateCount(df: DataFrame, idCol: String,
-      vecCol: String, pCoarse: Int, pFine: Int, mCoarse: Int, mFine: Int,
-      residual: Boolean = true): Long = {
+      vecCol: String, pCoarse: Int, pFine: Int, mCoarse: Int, mFine: Int): Long = {
     LongDot.register(df.sparkSession)
     val q = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
       .withColumn("n2", dotLong(col("qv"), col("qv")))
       .localCheckpointCapped()
-    twoLevelCandidatesFromQuantized(q, pCoarse, pFine, mCoarse, mFine,
-      residual).count()
-  }
-
-  /** Flat-channel candidate count at (nprobe, massign, indexes) — same
-    * DISTINCT-pair units as [[twoLevelCandidateCount]].
-    */
-  private[graft] def kmvCandidateCount(df: DataFrame, idCol: String,
-      vecCol: String, nprobe: Int, massign: Int, indexes: Int = 1): Long = {
-    LongDot.register(df.sparkSession)
-    val q = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
-      .withColumn("n2", dotLong(col("qv"), col("qv")))
-      .localCheckpointCapped()
-    (0 until indexes).map { i =>
-      multiCandidatePairs(q,
-        kmvAssignFromQuantized(q, probe = massign, salt = i), nprobe)
-    }.reduce(_ unionByName _).distinct().count()
+    twoLevelCandidatesFromQuantized(q, pCoarse, pFine, mCoarse, mFine).count()
   }
 
   /** The two-level candidate core over a prepared (id, qv, n2) frame. */
   private def twoLevelCandidatesFromQuantized(q: DataFrame, pCoarse: Int,
-      pFine: Int, mCoarse: Int, mFine: Int, residual: Boolean): DataFrame = {
+      pFine: Int, mCoarse: Int, mFine: Int): DataFrame = {
     require(pCoarse >= 1 && pFine >= 1 && mCoarse >= 1 && mFine >= 1,
       "two-level probe/membership widths must be >= 1")
     val n = q.count()
@@ -1046,8 +1025,7 @@ object Similarity {
       .groupBy("ccell")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("cq")))),
         s => s.getField("cq")).as("ccv"))
-    def rez(v: Column, c: Column): Column =
-      if (residual) zip_with(v, c, (x, cc) => x - cc) else v
+    def rez(v: Column, c: Column): Column = zip_with(v, c, (x, cc) => x - cc)
     // members re-expressed as residuals against their coarse centroid;
     // one checkpoint — this frame feeds fine seeds, fine training, AND
     // fine assignment

@@ -23,12 +23,11 @@ object Tuning {
     * triggers). Production executors run 4-8 cores per JVM, which is
     * exactly the regime that measured flat-fast; a large input never
     * reaches this code because callers only spread when the scan has
-    * fewer partitions than this target. Override with SPARK_GRAFT_SPREAD.
+    * fewer partitions than this target. The value is the session's
+    * shuffle partitions clamped to [2, 8].
     */
-  def spreadPartitions(spark: SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_SPREAD").map(_.toInt).getOrElse {
-      val shuffle =
-        spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      math.max(2, math.min(shuffle, 8))
-    }
+  def spreadPartitions(spark: SparkSession): Int = {
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    math.max(2, math.min(shuffle, 8))
+  }
 }

@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftext.CappedCheckpoint._
+import scala.util.control.NonFatal
 
 /** Multimodal column plumbing: image/audio/video travel as opaque `BINARY`
   * columns with typed metadata, processed per-partition in fixed-size
@@ -77,6 +78,15 @@ object Multimodal {
     (w, h, 3, feats)
   }
 
+  /** The JDK-decoded image, or None when no ImageIO codec reads the
+    * payload (ImageIO returns null or throws on it). Only non-fatal errors
+    * mean "undecodable": an OOM or an interrupt propagates instead of
+    * becoming a silent null-pixel row.
+    */
+  private def readImage(media: Array[Byte]): Option[java.awt.image.BufferedImage] =
+    try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(media)))
+    catch { case NonFatal(_) => None }
+
   /** Decode + feature-extract images, batch-at-a-time per partition.
     * Plan shape: narrow mapPartitions — no shuffle; upstream should size
     * partitions via `spark.sql.files.maxPartitionBytes` so one batch of
@@ -96,10 +106,7 @@ object Multimodal {
     ds.mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
         batch.map { r =>
-          val img =
-            try Option(javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.media)))
-            catch { case _: Throwable => None }
+          val img = readImage(r.media)
           val (w, h, c, f) = img match {
             case Some(im) =>
               val raster = im.getRaster
@@ -162,10 +169,7 @@ object Multimodal {
     ds.mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
         batch.map { r =>
-          val img =
-            try Option(javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.media)))
-            catch { case _: Throwable => None }
+          val img = readImage(r.media)
           img match {
             case Some(im) =>
               val raster = im.getRaster
@@ -214,10 +218,7 @@ object Multimodal {
     ds.mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
         batch.map { r =>
-          val img =
-            try Option(javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.media)))
-            catch { case _: Throwable => None }
+          val img = readImage(r.media)
           img match {
             case Some(im) =>
               val raster = im.getRaster

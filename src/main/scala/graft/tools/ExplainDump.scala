@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round evidence harness: for each named gated query, write
   * its `.explain("formatted")` physical plan to `<outDir>/<name>_<tag>.txt`
   * and time one noop-sink materialization (guide §1.4 — computes every
@@ -11,8 +9,10 @@ import org.apache.spark.sql.SparkSession
   * first-consumer cost — the same solo discipline as Bench's outlier
   * re-runs.
   *
-  * Usage: runMain graft.ExplainDump <sfDir> <outDir> <tag> q_a,q_b,...
-  * (tag is `before`/`after` for the plans/r16 deliverables).
+  * Usage: runMain graft.ExplainDump <sfDir> <outDir> <tag> [q_a,q_b,...]
+  * (tag is `before`/`after` for the plans/r16 deliverables; without a
+  * query list it dumps every query). All three leading arguments are
+  * required, so a bare run cannot overwrite committed plans.
   */
 object ExplainDump {
   /** Count parquet-scan leaves per base table (by file location) in a
@@ -25,36 +25,26 @@ object ExplainDump {
       .toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val outDir = if (args.length > 1) args(1) else "/root/repo/plans/r16"
-    val tag = if (args.length > 2) args(2) else "before"
+    if (args.length < 3) {
+      System.err.println(
+        "usage: runMain graft.ExplainDump <sfDir> <outDir> <tag> [q_a,q_b,...]")
+      sys.exit(2)
+    }
+    val Array(sfDir, outDir, tag) = args.take(3)
     val names: Seq[String] =
       if (args.length > 3) args(3).split(",").toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark"
-        else System.getProperty("java.io.tmpdir")))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     def reclaim(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       SparkEntry.resetMemoizedArtifacts()
-      System.gc()
+      Harness.reclaim(spark)
     }
     // absorb JVM/codegen/scheduler cold-start before any timed query —
     // same rationale as Bench's warmup (the first timed query otherwise
     // carries ~5-10 s of warmup and reads as a fake regression)
     SparkEntry.queries.get("q_degrees").foreach { fn =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+      Harness.timedCount(spark, sfDir, "q_degrees", fn)
       reclaim()
     }
     names.foreach { name =>

@@ -30,13 +30,7 @@ trait SparkFixture {
 }
 
 object SparkFixture {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = Harness.session(cores = 4)
 }
 
 class NetworkFrameSpec extends AnyFunSuite with SparkFixture {

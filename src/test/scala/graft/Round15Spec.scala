@@ -28,14 +28,11 @@ class Round15Spec extends AnyFunSuite with SparkFixture {
     // the candidate set is all pairs, so the graph must be bit-exact
     val full = math.ceil(math.sqrt(n)).toInt * c1
     val exact = Similarity.mutualKnnGraph(e, "vec_id", "embedding", k = 5)
-    for (res <- Seq(true, false)) {
-      val tl = Similarity.mutualKnnGraphTwoLevel(e, "vec_id", "embedding",
-        k = 5, pCoarse = c1, pFine = full, mCoarse = 1, mFine = full,
-        residual = res)
-      assert(tl.columns.toSeq == exact.columns.toSeq)
-      assert(tl.exceptAll(exact).count() == 0, s"residual=$res extra edges")
-      assert(exact.exceptAll(tl).count() == 0, s"residual=$res missing edges")
-    }
+    val tl = Similarity.mutualKnnGraphTwoLevel(e, "vec_id", "embedding",
+      k = 5, pCoarse = c1, pFine = full, mCoarse = 1, mFine = full)
+    assert(tl.columns.toSeq == exact.columns.toSeq)
+    assert(tl.exceptAll(exact).count() == 0, "extra edges")
+    assert(exact.exceptAll(tl).count() == 0, "missing edges")
     assert(exact.count() > 0, "fixture must produce mutual edges")
   }
 

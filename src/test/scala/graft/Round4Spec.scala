@@ -87,6 +87,15 @@ class Round4Spec extends AnyFunSuite with SparkFixture {
     assert(png.channel_mean.toSeq == Seq(0.5f, 0.0f, 0.5f))
     // non-image payload falls back to the stub path, flagged undecoded
     assert(!out(2L).decoded && out(2L).channel_mean.isEmpty)
+    // the same payloads through the other two decoders: real pixels for
+    // the PNG, the undecodable fallback for the text
+    val feats = Multimodal.decodeImages(ds).collect().map(f => f.id -> f).toMap
+    assert((feats(1L).width, feats(1L).height, feats(1L).channels) == ((2, 1, 3)))
+    assert(feats(1L).features.toSeq == Seq(0.5f, 0f, 0.5f, 0f, 0.5f, 0f, 0.5f, 0f))
+    assert(feats(2L).features.length == Multimodal.featureDim)
+    val hashes = Multimodal.perceptualHash(ds).collect().map(h => h.id -> h).toMap
+    assert(hashes(1L).decoded)
+    assert(!hashes(2L).decoded && hashes(2L).phash == -1L)
   }
 
   test("SCC coloring doubling path closes a long scrambled cycle correctly") {
