@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** The bench outlier guard as PURE functions — extracted so the logic that
   * gatekeeps the official performance record is unit-testable (round-12
   * advice: the guard lived inline in main() with zero coverage, so a silent
@@ -68,7 +70,7 @@ object BenchGuard {
           case (k, JDecimal(v)) => k -> v.toDouble
         }
       }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
-    } catch { case _: Throwable => Map.empty }
+    } catch { case NonFatal(_) => Map.empty }
   }
 
   /** Best (minimum positive) prior per query across parsed dicts. */
@@ -165,6 +167,27 @@ object BenchGuard {
   def seedScaleOk(sfDir: String): Boolean =
     new java.io.File(sfDir).getName == "sf0.1"
 
+  /** The prior records the guard compares a run with: the files listed in
+    * `explicit` (comma-separated, from `SPARK_GRAFT_BENCH_PREV`) when
+    * given, else every BENCH_r*.json and BENCH_seed.json in `dirs`, but
+    * only when `sfDir` is the seed's scale ([[seedScaleOk]]). Those files
+    * hold sf0.1 times: at another scale every query that pays its family's
+    * build reads as a regression against a warm sf0.1 row (an 8-query
+    * sf0.001 smoke reported q_minhash_sig at 13.18x) and the guard spends
+    * solo re-runs on them. Only existing files are returned.
+    */
+  def priorFiles(sfDir: String, explicit: Option[String],
+                 dirs: Seq[java.io.File]): Seq[java.io.File] =
+    explicit.map(_.split(",").toSeq.map(new java.io.File(_))).getOrElse {
+      if (!seedScaleOk(sfDir)) Nil
+      else dirs.filter(_.isDirectory)
+        .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty).toSeq)
+        // BENCH_seed.json closes the no-prior gap: driver BENCH_r*.json
+        // files keep only the top-25 queries, so Bench merges EVERY
+        // query's adjudicated time into the seed after each run
+        .filter(f => f.getName.matches("BENCH_r\\d+\\.json|BENCH_seed\\.json"))
+    }.filter(_.isFile)
+
   /** Per-row seed-relative ratios for the official record: every row's
     * official/seed-best, kept when >= the reporting bar (1.5x) — a
     * degraded host window is then self-documenting in the file itself
@@ -237,21 +260,13 @@ object Bench {
     // official number is the adjudicated min with the warm-memo refusal;
     // both raw values stay under "outliers" so the adjudication is in the
     // record, not a judging-session archaeology dig.
-    val prevFiles: Seq[java.io.File] = sys.env.get("SPARK_GRAFT_BENCH_PREV")
-      .map(_.split(",").toSeq.map(new java.io.File(_)))
-      .getOrElse {
+    val prevDirs =
         Seq(new java.io.File("."), new java.io.File("/root/repo"))
-          .filter(_.isDirectory)
-          .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty).toSeq)
-          // BENCH_seed.json closes the no-prior gap: driver BENCH_r*.json
-          // files keep only the top-25 queries, so Bench merges EVERY
-          // query's adjudicated time into the seed after each run
-          .filter(f => f.getName.matches("BENCH_r\\d+\\.json|BENCH_seed\\.json"))
-      }.filter(_.isFile)
+    val prevFiles = BenchGuard.priorFiles(sfDir, sys.env.get("SPARK_GRAFT_BENCH_PREV"), prevDirs)
     val prior: Map[String, Double] = BenchGuard.bestPrior(prevFiles.map { f =>
       val text = try new String(
         java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      catch { case _: Throwable => "" }
+      catch { case NonFatal(_) => "" }
       val parsed = BenchGuard.parseQueries(text)
       // a BENCH file that CARRIES a queries dict but contributes zero
       // priors means a parse-shape regression silently disabling the
@@ -329,7 +344,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter(out, "UTF-8")
       try w.println(full) finally w.close()
-    } catch { case e: Throwable => System.err.println(s"[bench] WARN: could not write $out: $e") }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] WARN: could not write $out: $e") }
     // durable copy of the complete record: /tmp/bench.json evaporates
     // between rounds (round 15's totals survived only because they were
     // read before the judge session ended), so a full-bank run at the
@@ -343,7 +358,7 @@ object Bench {
           .map(d => new java.io.File(d, "BENCH_full_latest.json")).head
         val w = new java.io.PrintWriter(f, "UTF-8")
         try w.println(full) finally w.close()
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] WARN: could not write BENCH_full_latest.json: $e") }
     }
     // persist the adjudicated FULL per-query record into the repo-side seed
@@ -367,7 +382,7 @@ object Bench {
         val w = new java.io.PrintWriter(seedF, "UTF-8")
         try w.println(s"""{"queries":$body,"note":"per-query best clean times, min-merged by Bench after every full run (warm-memo lows refused); the 3x outlier guard's prior for queries the driver's top-25 BENCH_r*.json files do not carry"}""")
         finally w.close()
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] WARN: could not write BENCH_seed.json: $e") }
     }
     results.foreach { case (k, v) =>

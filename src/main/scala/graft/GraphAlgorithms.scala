@@ -169,7 +169,7 @@ object GraphAlgorithms {
     val e = nf.symmetrizedEdges.distinct().localCheckpointCapped()
     labelFixpoint(e, nf.nodes.select("id"), useMax = false, hops = 2, doublingFrom = 0,
         maxRounds, "componentLabels")
-      .withColumnRenamed("label", "component")
+      .withColumnRenamed("v", "component")
   }
 
   /** The one monotone label-propagation fixpoint behind [[weakFixpoint]],
@@ -177,7 +177,7 @@ object GraphAlgorithms {
     * [[componentLabels]]) the Borůvka contraction. Every id in `ids` starts
     * labeled by itself; a hop gives each node the min (or, with `useMax`,
     * the max) of its own label and the labels of its `source` neighbors
-    * along `edges`. Returns (id, label): the least (greatest) id that
+    * along `edges`. Returns (id, v): v is the least (greatest) id that
     * reaches each node. Labels only move one way, so the fixpoint is
     * unique and every schedule below computes the same output.
     *
@@ -188,10 +188,11 @@ object GraphAlgorithms {
     * plan instead of needing their own checkpoint (round 16: two hops per
     * cycle for weak components; for the SCC colorings a second hop saved
     * one cycle and cost q_strong_components 12.6 -> 16.9 s, so they stay
-    * at one). A cycle without doubling hops by union+groupBy, one shuffle
+    * at one). A cycle without doubling hops by [[relaxHop]], one shuffle
     * into the aggregate (it would also label edge targets outside `ids`,
     * so such runs take edges induced on `ids`, as the SCC colorings do);
-    * a doubling cycle hops by join, because the
+    * a doubling cycle hops by a left-outer join of the [[relaxMessages]]
+    * (min/max per id) onto the labels, because the
     * doubling self-join of a union plan trips Catalyst's Union constraint
     * rewrite (the join hop costs the SCC colorings two more AQE stage jobs
     * per plain cycle, 347 -> 363 jobs on the sf0.1 sparse graph at
@@ -216,18 +217,14 @@ object GraphAlgorithms {
   private def labelFixpoint(edges: DataFrame, ids: DataFrame, useMax: Boolean, hops: Int,
       doublingFrom: Int, maxRounds: Int, name: String): DataFrame = {
     def pick(a: Column, b: Column): Column = if (useMax) greatest(a, b) else least(a, b)
-    def best(c: String): Column = if (useMax) max(c) else min(c)
-    def msgs(lab: DataFrame): DataFrame =
-      edges.join(lab.withColumnRenamed("id", "source"), Seq("source"))
-        .select(col("target").as("id"), col("label"))
-    def unionHop(lab: DataFrame): DataFrame =
-      lab.union(msgs(lab)).groupBy("id").agg(best("label").as("label"))
+    def unionHop(lab: DataFrame): DataFrame = relaxHop(edges, lab, Nil, col("v"), useMax)
     def joinHop(lab: DataFrame): DataFrame =
-      lab.join(msgs(lab).groupBy("id").agg(best("label").as("m")), Seq("id"), "left_outer")
-        .select(col("id"), pick(col("label"), coalesce(col("m"), col("label"))).as("label"))
-    var labels = ids.select(col("id"), col("id").as("label")).localCheckpointCapped()
-    val sumProbe = numericCol(labels, "label")
-    def probe(df: DataFrame) = if (sumProbe) monotoneSum(df, "label")._2 else None
+      lab.join(relaxMessages(edges, lab, Nil, col("v")).groupBy("id").agg(best(useMax, "v").as("m")),
+          Seq("id"), "left_outer")
+        .select(col("id"), pick(col("v"), coalesce(col("m"), col("v"))).as("v"))
+    var labels = ids.select(col("id"), col("id").as("v")).localCheckpointCapped()
+    val sumProbe = numericCol(labels, "v")
+    def probe(df: DataFrame) = if (sumProbe) monotoneSum(df, "v")._2 else None
     var prevSum = probe(labels)
     var joinProbed = false
     var converged = false
@@ -240,18 +237,17 @@ object GraphAlgorithms {
       // instead measured flat on q_percolation and ~8% worse on
       // q_components at sf0.1
       val next = if (!doubling) prop else prop.as("a")
-        .join(prop.select(col("id").as("lid"), col("label").as("l2")),
-          col("a.label") === col("lid"), "left_outer")
-        .select(col("a.id").as("id"),
-          pick(col("a.label"), coalesce(col("l2"), col("a.label"))).as("label"))
+        .join(prop.select(col("id").as("lid"), col("v").as("l2")),
+          col("a.v") === col("lid"), "left_outer")
+        .select(col("a.id").as("id"), pick(col("a.v"), coalesce(col("l2"), col("a.v"))).as("v"))
         .localCheckpointCapped()
       val curSum = probe(next)
       converged = (prevSum, curSum) match {
         case (Some(p), Some(c)) => c.compareTo(p) == 0
         case _ =>
           joinProbed = true
-          next.join(labels.withColumnRenamed("label", "prev"), Seq("id"))
-            .filter(col("label") =!= col("prev")).limit(1).count() == 0
+          next.join(labels.withColumnRenamed("v", "prev"), Seq("id"))
+            .filter(col("v") =!= col("prev")).limit(1).count() == 0
       }
       prevSum = curSum
       labels = next
@@ -263,6 +259,81 @@ object GraphAlgorithms {
       (if (joinProbed) " (join probe)" else " (sum probe)"))
     labels
   }
+
+  /** The messages of one relaxation hop. `state` is (keys…, id, v); each
+    * row sends `extend` (a column over its v and the edge's columns) along
+    * every edge of `edges` (source, target, …) that leaves its id and passes
+    * `admit`. Returns (keys…, id, v) with id the edge's target. `edges` must
+    * not reuse a state column name other than its join key.
+    */
+  private def relaxMessages(edges: DataFrame, state: DataFrame, keys: Seq[String],
+      extend: Column, admit: Column = lit(true)): DataFrame =
+    edges.join(state.withColumnRenamed("id", "source"), Seq("source")).filter(admit)
+      .select(keys.map(col) :+ col("target").as("id") :+ extend.as("v"): _*)
+
+  /** One relaxation hop: `state` (keys…, id, v), in that column order,
+    * unioned with its [[relaxMessages]] and grouped by (keys…, id), keeping
+    * the min v (the max with `useMax`). Returns the same columns; ids that
+    * only receive messages join the state. Union-then-min/max is exact
+    * because the pick is idempotent (a duplicate offer changes nothing) and
+    * monotone (a row's own value competes with every offer, so no value
+    * ever gets worse): one aggregate over state and messages equals any
+    * pairwise merge of them, which is why it can replace a join of the
+    * per-id best message back onto the state. One shuffle into the
+    * aggregate, with map-side partial mins/maxes.
+    */
+  private def relaxHop(edges: DataFrame, state: DataFrame, keys: Seq[String], extend: Column,
+      useMax: Boolean = false, admit: Column = lit(true)): DataFrame =
+    state.union(relaxMessages(edges, state, keys, extend, admit))
+      .groupBy((keys :+ "id").map(col): _*).agg(best(useMax, "v").as("v"))
+
+  private def best(useMax: Boolean, c: String): Column = if (useMax) max(c) else min(c)
+
+  /** `rounds` [[relaxHop]]s from `init`, each checkpointed, for the
+    * fixed-round callers. `edges` and `init` are checkpointed first, in
+    * that order. Returns the state after every hop, first to last.
+    */
+  private def relaxRounds(edges: DataFrame, init: DataFrame, keys: Seq[String], extend: Column,
+      useMax: Boolean, rounds: Int): Seq[DataFrame] =
+      withoutConstraintPropagation(edges) {
+    val e = edges.localCheckpointCapped()
+    (1 to rounds).scanLeft(init.localCheckpointCapped())(
+      (s, _) => relaxHop(e, s, keys, extend, useMax).localCheckpointCapped()).tail
+  }
+
+  /** One push step of the quantized power family: every `state` row
+    * (id, …) sends `term` (a column over its own and the edge's columns)
+    * along each edge of `edges` whose `from` column is its id, and each
+    * `to` end sums what it receives. Returns (id, s) for the ids that
+    * receive anything; callers coalesce the rest. The sum is
+    * DECIMAL(38,0), exact and order-independent, so hub sums cannot
+    * overflow and any engine replays it bit for bit. One join and one
+    * aggregation shuffle.
+    */
+  private def pushSum(edges: DataFrame, state: DataFrame, from: String, to: String,
+      term: Column): DataFrame =
+    edges.join(state.withColumnRenamed("id", from), Seq(from))
+      .groupBy(col(to).as("id")).agg(sum(term.cast("decimal(38,0)")).as("s"))
+
+  /** The power family's max-renormalization to the 1e6 scale: (id, q) for
+    * every row of `scores` (id, s), q = (s * 1e6) DIV mx with mx the
+    * largest s in `maxOf`, or 0 when mx is null or 0; a null s counts as 0.
+    * Integral division of non-negatives truncates like floor in every
+    * engine. The max rides as a broadcast one-row aggregate, not a
+    * driver-read scalar, so a renorm costs no extra job.
+    */
+  private def renorm(scores: DataFrame, maxOf: DataFrame): DataFrame =
+    scores.crossJoin(broadcast(maxOf.agg(max(col("s")).as("mx"))))
+      .selectExpr("id",
+        """CAST(CASE WHEN mx IS NULL OR mx = 0 THEN 0
+           ELSE (COALESCE(s, 0) * 1000000) DIV mx END AS BIGINT) AS q""")
+
+  /** The distinct, self-loop-free (source, target) pairs of the symmetrized
+    * edges: the simple undirected graph, each edge in both directions.
+    * `kTruss` alone strips self-loops itself (its scaladoc says why).
+    */
+  private def simpleEdges(nf: NetworkFrame): DataFrame =
+    nf.symmetrizedEdges.filter(col("source") =!= col("target")).distinct()
 
   /** Plain one-shuffle propagation rounds before the SCC coloring fixpoint
     * engages pointer doubling — small cyclic cores converge well before
@@ -445,7 +516,7 @@ object GraphAlgorithms {
       // member of color class c has id <= c (color >= own id always), so
       // the root is the max id of its class.
       val colors = labelFixpoint(eR, remaining, useMax = true, hops = 1, doublingAfter,
-        Int.MaxValue, "scc fwd coloring").withColumnRenamed("label", "color")
+        Int.MaxValue, "scc fwd coloring").withColumnRenamed("v", "color")
       // 2. backward pass as a SECOND coloring, not a frontier BFS: keep
       // only intra-class edges (any v->root path of an SCC member stays
       // inside the class), reverse them, and propagate max id again. Then
@@ -524,7 +595,7 @@ object GraphAlgorithms {
       if (capped) {
         val rev = labelFixpoint(ec, remaining, useMax = true, hops = 1, doublingAfter,
           Int.MaxValue, "scc bwd coloring")
-        scc = colors.join(rev.withColumnRenamed("label", "rc"), Seq("id"))
+        scc = colors.join(rev.withColumnRenamed("v", "rc"), Seq("id"))
           .filter(col("color") === col("rc"))
           .select(col("id"), col("color").as("root"))
           .localCheckpointCapped()
@@ -675,7 +746,7 @@ object GraphAlgorithms {
     */
   def labelPropagation(nf: NetworkFrame, rounds: Int): DataFrame =
     synchronousLabelPropagation(
-      unitWeights(nf.symmetrizedEdges.filter(col("source") =!= col("target"))), nf.nodes, rounds)
+      unitWeights(simpleEdges(nf)), nf.nodes, rounds)
 
   /** Weighted synchronous label propagation: each node adopts the label
     * with the largest summed cent-quantized edge weight among its
@@ -744,28 +815,32 @@ object GraphAlgorithms {
     * discipline). One join + one min-agg shuffle per round; parallel edges
     * collapse to their min weight up front. Weights are assumed
     * non-negative (no negative-cycle detection — a negative cycle would
-    * keep relaxing monotonically for all `rounds`).
+    * keep relaxing monotonically for all `rounds`). [[pathRelaxation]]
+    * with extend = v + wq.
     */
   def shortestPaths(nf: NetworkFrame, sourceId: Any, weightCol: String,
-                    rounds: Int, directed: Boolean = true): DataFrame = withoutConstraintPropagation(nf.edges) {
+                    rounds: Int, directed: Boolean = true): DataFrame =
+    pathRelaxation(nf, sourceId, weightCol, rounds, directed, useMax = false, start = 0L,
+      col("v") + col("wq")).withColumnRenamed("v", "dq")
+
+  /** The fixed-round Bellman-Ford shared by [[shortestPaths]] and
+    * [[widestPaths]]: cent-quantized weights wq = floor(w * 100), both
+    * directions unless `directed`, parallel edges collapsed to their best
+    * (min, or max with `useMax`) weight; then `rounds` [[relaxRounds]] hops
+    * from `sourceId` at `start`, if it is a node. Returns (id, v).
+    */
+  private def pathRelaxation(nf: NetworkFrame, sourceId: Any, weightCol: String, rounds: Int,
+      directed: Boolean, useMax: Boolean, start: Long, extend: Column): DataFrame = {
     require(rounds >= 1, "at least one relaxation round")
     val wq = floor(col(weightCol).cast("double") * 100).cast("long")
     val base = nf.edges.select(col("source"), col("target"), wq.as("wq"))
     val dirEdges = if (directed) base
       else base.union(base.select(col("target").as("source"),
         col("source").as("target"), col("wq")))
-    val e = dirEdges
-      .groupBy("source", "target").agg(min("wq").as("wq")).localCheckpointCapped()
-    var dist = nf.nodes.select(col("id")).filter(col("id") === lit(sourceId))
-      .withColumn("dq", lit(0L)).localCheckpointCapped()
-    for (_ <- 1 to rounds) {
-      val relax = e.join(dist.select(col("id").as("source"), col("dq").as("sd")),
-          Seq("source"))
-        .select(col("target").as("id"), (col("sd") + col("wq")).as("dq"))
-      dist = dist.union(relax).groupBy("id").agg(min("dq").as("dq"))
-        .localCheckpointCapped()
-    }
-    dist
+    val init = nf.nodes.select(col("id")).filter(col("id") === lit(sourceId))
+      .withColumn("v", lit(start))
+    relaxRounds(dirEdges.groupBy("source", "target").agg(best(useMax, "wq").as("wq")), init,
+      Nil, extend, useMax, rounds).last
   }
 
   /** Double-sweep diameter lower bound: BFS from the smallest node id,
@@ -885,11 +960,11 @@ object GraphAlgorithms {
     * power iteration is scale-invariant, so max-normalization converges to
     * the same ordering as L2 while avoiding any floating-point accumulation.
     * The start vector is all-ones and A is non-negative, so scores stay
-    * non-negative (Perron) — no eigenvector sign ambiguity.
+    * non-negative (Perron) — no eigenvector sign ambiguity. Each round is a
+    * [[pushSum]] and a [[renorm]] whose max runs over the nodes alone.
     */
   def sortSpectral(nf: NetworkFrame, weightCol: String = "weight",
                    iterations: Int = 30): DataFrame = withoutConstraintPropagation(nf.edges) {
-    val D38 = "decimal(38,0)"
     val sym = nf.edges.select(col("source"), col("target"),
         col(weightCol).cast("decimal(18,2)").as("w"))
       .union(nf.edges.select(col("target").as("source"), col("source").as("target"),
@@ -897,27 +972,16 @@ object GraphAlgorithms {
       .groupBy("source", "target")
       .agg((sum("w") * 100).cast("long").as("wq"))
       .localCheckpointCapped()
-    var v = nf.nodes.select(col("id"), lit(1000000L).as("qs")).localCheckpointCapped()
+    var v = nf.nodes.select(col("id"), lit(1000000L).as("q")).localCheckpointCapped()
     for (_ <- 1 to iterations) {
-      // wq <= ~1e8 cents, qs <= 1e6 -> per-term product fits long; the sum
-      // accumulates in decimal(38,0) so hub nodes can't overflow at scale
-      val prod = sym.join(v.withColumnRenamed("id", "target"), Seq("target"))
-        .groupBy(col("source").as("id"))
-        .agg(sum((col("wq") * col("qs")).cast(D38)).as("ms"))
+      // wq <= ~1e8 cents, q <= 1e6 -> per-term product fits long
       val full = nf.nodes.select(col("id"))
-        .join(prod, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("ms"), lit(0).cast(D38)).as("ms"))
+        .join(pushSum(sym, v, "target", "source", col("wq") * col("q")), Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("s"), lit(0).cast("decimal(38,0)")).as("s"))
         .localCheckpointCapped()
-      // the max rides as a broadcast 1-row aggregate (no driver scalar
-      // read — halves the per-iteration jobs); integral division of
-      // non-negatives: truncation == floor, both engines agree exactly
-      v = full
-        .crossJoin(broadcast(full.agg(max(col("ms")).as("mx"))))
-        .selectExpr("id",
-          """CAST(CASE WHEN mx IS NULL OR mx = 0 THEN 0
-             ELSE (ms * 1000000) DIV mx END AS BIGINT) AS qs""")
+      v = renorm(full, full)
     }
-    nf.nodes.join(v, Seq("id"), "left_outer")
+    nf.nodes.join(v.withColumnRenamed("q", "qs"), Seq("id"), "left_outer")
       .orderBy(col("qs"), col("id"))
   }
 
@@ -1228,8 +1292,7 @@ object GraphAlgorithms {
     */
   def randomWalks(nf: NetworkFrame, steps: Int): DataFrame = withoutConstraintPropagation(nf.edges) {
     require(steps >= 1, "at least one step")
-    val sym = nf.symmetrizedEdges.filter(col("source") =!= col("target"))
-      .distinct()
+    val sym = simpleEdges(nf)
     val adj = adjacencyIndex(sym).localCheckpointCapped()
     val deg = sym.groupBy("source").agg(count(lit(1)).as("deg")).localCheckpointCapped()
     var cur = nf.nodes.select(col("id").as("walk_id"), col("id").as("cur"))
@@ -1340,8 +1403,7 @@ object GraphAlgorithms {
     * enrichment join — one number from any graph size.
     */
   def degreeAssortativity(nf: NetworkFrame): DataFrame = {
-    val sym = nf.symmetrizedEdges.filter(col("source") =!= col("target"))
-      .distinct()
+    val sym = simpleEdges(nf)
     val deg = sym.groupBy(col("source").as("id")).agg(count(lit(1)).as("d"))
     val pairs = sym
       .join(deg.select(col("id").as("source"), col("d").as("x")), Seq("source"))
@@ -1394,9 +1456,7 @@ object GraphAlgorithms {
     * document-frequency cap in [[graft.functions.Dedup.ngramJaccardPairs]].
     */
   def linkPrediction(nf: NetworkFrame, hubCap: Int = 1000): DataFrame = {
-    val adj = nf.symmetrizedEdges
-      .select(col("source").as("z"), col("target").as("n"))
-      .filter(col("z") =!= col("n")).distinct()
+    val adj = simpleEdges(nf).select(col("source").as("z"), col("target").as("n"))
     val kept = adj
       .withColumn("d", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("z")))
@@ -1441,8 +1501,7 @@ object GraphAlgorithms {
   def maximalIndependentSet(nf: NetworkFrame, rounds: Int = 6): DataFrame =
       withoutConstraintPropagation(nf.edges) {
     require(rounds >= 1, "at least one round")
-    val sym = nf.symmetrizedEdges.filter(col("source") =!= col("target"))
-      .distinct().localCheckpointCapped()
+    val sym = simpleEdges(nf).localCheckpointCapped()
     var undecided = nf.nodes.select(col("id")).localCheckpointCapped()
     // round-16 job-count trims (output-identical): the keyed projection is
     // a narrow md5 map over the checkpointed `undecided` — recomputing it
@@ -1490,7 +1549,10 @@ object GraphAlgorithms {
     * handful of rounds (each round strictly shrinks the edge set). Per
     * round: one wedge join + one canonical-pair count shuffle — the
     * `triangleCount` plan run under peeling. Returns surviving (s, t,
-    * support) with the support measured in the final subgraph.
+    * support) with the support measured in the final subgraph. Strips
+    * self-loops itself rather than through [[simpleEdges]]: it
+    * canonicalizes to (least, greatest) before its one distinct, and the
+    * helper's distinct would add a second.
     */
   def kTruss(nf: NetworkFrame, k: Int, rounds: Int = 4): DataFrame =
       withoutConstraintPropagation(nf.edges) {
@@ -1531,9 +1593,7 @@ object GraphAlgorithms {
     * semantics).
     */
   def neighborhoodJaccard(nf: NetworkFrame, hubCap: Int = 1000): DataFrame = {
-    val adj = nf.symmetrizedEdges
-      .select(col("source").as("z"), col("target").as("n"))
-      .filter(col("z") =!= col("n")).distinct()
+    val adj = simpleEdges(nf).select(col("source").as("z"), col("target").as("n"))
     val kept = adj
       .withColumn("d", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("z")))
@@ -1558,8 +1618,7 @@ object GraphAlgorithms {
     * the survivors, degrees re-derived inside the final core.
     */
   def kCore(nf: NetworkFrame, k: Int, rounds: Int = 8): DataFrame = {
-    val sym = unitWeights(nf.symmetrizedEdges.filter(col("source") =!= col("target")))
-      .localCheckpointCapped()
+    val sym = unitWeights(simpleEdges(nf)).localCheckpointCapped()
     val core = peel(sym, nf.nodes.select("id").localCheckpointCapped(), k, rounds)
     inducedStrength(sym, core).withColumnRenamed("s", "core_deg")
   }
@@ -1605,10 +1664,7 @@ object GraphAlgorithms {
     * rounds, lineage cut per round.
     */
   def densestSubgraphTrace(nf: NetworkFrame, rounds: Int = 8): DataFrame = withoutConstraintPropagation(nf.edges) {
-    val sym = nf.symmetrizedEdges
-      .select(col("source"), col("target"))
-      .filter(col("source") =!= col("target")).distinct()
-      .localCheckpointCapped()
+    val sym = simpleEdges(nf).localCheckpointCapped()
     var surviving = nf.nodes.select("id").localCheckpointCapped()
     var trace: DataFrame = null
     for (r <- 0 until rounds) {
@@ -1682,10 +1738,7 @@ object GraphAlgorithms {
   def node2vecTransitions(nf: NetworkFrame, hubCap: Int = 4,
                           wReturn: Long = 1L, wCommon: Long = 4L,
                           wFar: Long = 2L): DataFrame = {
-    val sym = nf.symmetrizedEdges
-      .select(col("source"), col("target"))
-      .filter(col("source") =!= col("target")).distinct()
-      .localCheckpointCapped()
+    val sym = simpleEdges(nf).localCheckpointCapped()
     val curOk = sym.groupBy(col("source").as("id")).agg(count(lit(1)).as("d"))
       .filter(col("d") <= hubCap).select("id")
     val e1 = sym.join(curOk.withColumnRenamed("id", "target"), Seq("target"), "left_semi")
@@ -1713,35 +1766,22 @@ object GraphAlgorithms {
     * as the usual L2 — the `sortSpectral` technique, keeping the result
     * bit-reproducible at any parallelism). A fixed iteration count makes
     * the output a pure function of the graph, replayable by an unrolled
-    * oracle. Per iteration: two join+aggregate shuffle pairs and two
-    * scalar max reads; state is one score per node per direction.
+    * oracle. Per iteration: two [[pushSum]]s, each [[renorm]]ed over its
+    * receivers (dangling endpoints included) and checkpointed; state is one
+    * score per node per direction.
     */
   def hits(nf: NetworkFrame, iterations: Int = 8): DataFrame =
       withoutConstraintPropagation(nf.edges) {
     require(iterations >= 1, "at least one iteration")
-    val D38 = "decimal(38,0)"
     val e = nf.edges.select(col("source"), col("target")).distinct().localCheckpointCapped()
     val nodes = nf.nodes.select(col("id")).localCheckpointCapped()
-    // the max rides along as a broadcast 1-row aggregate instead of a
-    // driver-read scalar: one job per renorm (the checkpoint) instead of
-    // two, halving the per-iteration driver round trips; values identical
-    // (same max, same integral division — operands stay non-negative)
-    def renorm(raw: DataFrame): DataFrame =
-      nodes.join(raw, Seq("id"), "left_outer")
-        .crossJoin(broadcast(raw.agg(max(col("s")).as("mx"))))
-        .selectExpr("id",
-          """CAST(CASE WHEN mx IS NULL OR mx = 0 THEN 0
-             ELSE (COALESCE(s, 0) * 1000000) DIV mx END AS BIGINT) AS q""")
-        .localCheckpointCapped()
+    def pass(raw: DataFrame): DataFrame =
+      renorm(nodes.join(raw, Seq("id"), "left_outer"), raw).localCheckpointCapped()
     var h = nodes.select(col("id"), lit(1000000L).as("q")).localCheckpointCapped()
     var a: DataFrame = h
     for (_ <- 1 to iterations) {
-      a = renorm(e.join(h.withColumnRenamed("id", "source"), Seq("source"))
-        .groupBy(col("target").as("id"))
-        .agg(sum(col("q").cast(D38)).as("s")))
-      h = renorm(e.join(a.select(col("id").as("target"), col("q")), Seq("target"))
-        .groupBy(col("source").as("id"))
-        .agg(sum(col("q").cast(D38)).as("s")))
+      a = pass(pushSum(e, h, "source", "target", col("q")))
+      h = pass(pushSum(e, a, "target", "source", col("q")))
     }
     nodes
       .join(h.select(col("id"), col("q").as("hub_q")), Seq("id"), "left_outer")
@@ -1800,8 +1840,7 @@ object GraphAlgorithms {
     * diagnostic before trusting any hub-cap parameter.
     */
   def richClub(nf: NetworkFrame, k: Int): DataFrame = {
-    val sym = nf.symmetrizedEdges.filter(col("source") =!= col("target"))
-      .distinct().localCheckpointCapped()
+    val sym = simpleEdges(nf).localCheckpointCapped()
     val rich = sym.groupBy(col("source").as("id")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") > k).select("id")
     val nRich = rich.agg(count(lit(1)).as("n_rich"))
@@ -1907,8 +1946,7 @@ object GraphAlgorithms {
     */
   def modularity(nf: NetworkFrame, labels: DataFrame): DataFrame = {
     val lab = labels.select(col("id"), col("community"))
-    val und = nf.symmetrizedEdges.filter(col("source") =!= col("target"))
-      .distinct()
+    val und = simpleEdges(nf)
       .select(least(col("source"), col("target")).as("s"),
         greatest(col("source"), col("target")).as("t"))
       .distinct().localCheckpointCapped()
@@ -1956,8 +1994,7 @@ object GraphAlgorithms {
   def wlRefinement(nf: NetworkFrame, rounds: Int): DataFrame =
       withoutConstraintPropagation(nf.edges) {
     require(rounds >= 1, "at least one refinement round")
-    val e = nf.symmetrizedEdges.filter(col("source") =!= col("target"))
-      .distinct().localCheckpointCapped()
+    val e = simpleEdges(nf).localCheckpointCapped()
     var lab = nf.nodes.select(col("id"), lit("0").as("wl")).localCheckpointCapped()
     for (_ <- 1 to rounds) {
       val msgs = e.join(lab.select(col("id").as("source"), col("wl")), Seq("source"))
@@ -1986,8 +2023,7 @@ object GraphAlgorithms {
   def neighborSample(nf: NetworkFrame, seeds: DataFrame,
                      fanout: Seq[Int]): DataFrame = withoutConstraintPropagation(nf.edges) {
     require(fanout.nonEmpty && fanout.forall(_ >= 1), "per-hop fanout >= 1")
-    val e = nf.symmetrizedEdges.filter(col("source") =!= col("target"))
-      .distinct().localCheckpointCapped()
+    val e = simpleEdges(nf).localCheckpointCapped()
     var frontier = seeds.select(col("id").as("seed"), col("id").as("node")).distinct()
     var out: DataFrame = null
     for ((f, h) <- fanout.zipWithIndex) {
@@ -2082,8 +2118,7 @@ object GraphAlgorithms {
     * aggregation; a single-row result.
     */
   def transitivity(nf: NetworkFrame): DataFrame = {
-    val sym = nf.symmetrizedEdges.filter(col("source") =!= col("target"))
-      .distinct().localCheckpointCapped()
+    val sym = simpleEdges(nf).localCheckpointCapped()
     val tri = triangleCount(nf)
     val wedges = sym.groupBy(col("source").as("id")).agg(count(lit(1)).as("d"))
       .agg(coalesce(sum(expr("d * (d - 1) div 2")), lit(0L)).as("n_wedges"))
@@ -2186,8 +2221,10 @@ object GraphAlgorithms {
     * temporal-network reachability; static BFS over-counts paths that go
     * "back in time"). Seeds start at arrival -1 so any first edge
     * qualifies. The fixpoint relaxes all seeds simultaneously — state is
-    * (seed, id, arrival), three time-filtered join + min-aggregation
-    * relaxations per checkpointed cycle. Arrivals only decrease and rows
+    * (seed, id, arrival), three [[relaxHop]]s per checkpointed cycle (key
+    * seed, admit t >= arrival, extend t, min), each one shuffle into the
+    * aggregate where a full-outer merge of the best message per
+    * (seed, id) takes two. Arrivals only decrease and rows
     * only appear, so the [[monotoneSum]] (row count, arrival sum) pair is
     * stationary iff a cycle changed nothing; cycles are bounded by the
     * temporal diameter. Throws IllegalStateException if `maxRounds`
@@ -2199,12 +2236,11 @@ object GraphAlgorithms {
     val e = edges.select(col("source"), col("target"),
         col("t").cast("long").as("t"))
       .distinct().localCheckpointCapped()
-    var arr = seeds.select(col("id").as("seed"), col("id"),
-        lit(-1L).as("arrival"))
+    var arr = seeds.select(col("id").as("seed"), col("id"), lit(-1L).as("v"))
       .localCheckpointCapped()
     // a None sum (DECIMAL overflow with ANSI off) never counts as stable:
     // the loop conservatively keeps relaxing
-    var prevState = monotoneSum(arr, "arrival")
+    var prevState = monotoneSum(arr, "v")
     var done = false
     var rounds = 0
     while (!done && rounds < maxRounds) {
@@ -2214,22 +2250,9 @@ object GraphAlgorithms {
       // (round-16: was two; the sf0.1 temporal diameter needs ~22
       // relaxations, so three per cycle trims the checkpoint/probe count
       // from 11 to 8 with the same monotone fixpoint)
-      var cur = arr
-      var k = 0
-      while (k < 3) {
-        val msgs = e
-          .join(cur.select(col("seed"), col("id").as("source"), col("arrival")),
-            Seq("source"))
-          .filter(col("t") >= col("arrival"))
-          .groupBy(col("seed"), col("target").as("id")).agg(min("t").as("cand"))
-        cur = cur.join(msgs, Seq("seed", "id"), "full_outer")
-          .select(col("seed"), col("id"),
-            least(coalesce(col("arrival"), col("cand")),
-              coalesce(col("cand"), col("arrival"))).as("arrival"))
-        k += 1
-      }
-      arr = cur.localCheckpointCapped()
-      val curState = monotoneSum(arr, "arrival")
+      arr = Iterator.iterate(arr)(relaxHop(e, _, Seq("seed"), col("t"), admit = col("t") >= col("v")))
+        .drop(3).next().localCheckpointCapped()
+      val curState = monotoneSum(arr, "v")
       done = curState._1 == prevState._1 &&
         ((prevState._2, curState._2) match {
           case (Some(p), Some(c)) => c.compareTo(p) == 0
@@ -2241,7 +2264,7 @@ object GraphAlgorithms {
     if (!done) throw new IllegalStateException(
       s"temporalReachability did not converge within $rounds cycles")
     System.err.println(s"[graft] temporalReachability converged in $rounds triple-relaxation cycles")
-    arr
+    arr.withColumnRenamed("v", "arrival")
   }
 
   /** Katz centrality, quantized: x' = base + (alphaNum * A^T x) DIV alphaDen
@@ -2250,10 +2273,10 @@ object GraphAlgorithms {
     * (truncating DIV of non-negatives == floor in every engine), so a DuckDB
     * oracle can replay every round bit-for-bit. Converges geometrically when
     * alpha < 1/lambda_max; with quantization the iterate is deterministic
-    * regardless. Same per-round shape as `pageRank`: one join + one
-    * aggregation shuffle, lineage cut by localCheckpoint — O(iterations)
-    * rounds independent of graph size, sums accumulate in DECIMAL(38,0) so
-    * hub in-degrees cannot overflow at 100 TB.
+    * regardless. Same per-round shape as `pageRank`: one [[pushSum]],
+    * lineage cut by localCheckpoint — O(iterations) rounds independent of
+    * graph size, sums accumulate in DECIMAL(38,0) so hub in-degrees cannot
+    * overflow at 100 TB.
     */
   def katzCentrality(nf: NetworkFrame, iterations: Int = 8,
                      alphaNum: Int = 5, alphaDen: Int = 100): DataFrame =
@@ -2265,14 +2288,10 @@ object GraphAlgorithms {
       .localCheckpointCapped()
     var v = nf.nodes.select(col("id"), lit(base).as("qs")).localCheckpointCapped()
     for (_ <- 1 to iterations) {
-      val recv = e
-        .join(v.withColumnRenamed("id", "source"), Seq("source"))
-        .groupBy(col("target").as("id"))
-        .agg(sum(col("qs").cast("decimal(38,0)")).as("m"))
       v = nf.nodes.select(col("id"))
-        .join(recv, Seq("id"), "left_outer")
+        .join(pushSum(e, v, "source", "target", col("qs")), Seq("id"), "left_outer")
         .selectExpr("id",
-          s"CAST($base + ($alphaNum * coalesce(m, CAST(0 AS DECIMAL(38,0)))) DIV $alphaDen AS BIGINT) AS qs")
+          s"CAST($base + ($alphaNum * coalesce(s, CAST(0 AS DECIMAL(38,0)))) DIV $alphaDen AS BIGINT) AS qs")
         .localCheckpointCapped()
     }
     nf.nodes.join(v, Seq("id"), "left_outer").orderBy(desc("qs"), asc("id"))
@@ -2286,8 +2305,7 @@ object GraphAlgorithms {
     */
   def coreNumbers(nf: NetworkFrame, maxK: Int = 4, rounds: Int = 8): DataFrame = {
     require(maxK >= 1 && rounds >= 1, "need at least one level and one round")
-    val sym = unitWeights(nf.symmetrizedEdges.filter(col("source") =!= col("target")))
-      .localCheckpointCapped()
+    val sym = unitWeights(simpleEdges(nf)).localCheckpointCapped()
     val levels = (1 to maxK).scanLeft(nf.nodes.select("id").localCheckpointCapped())(
       (alive, k) => peel(sym, alive, k, rounds)).tail
     val deepest = levels.zipWithIndex.map { case (core, i) => core.withColumn("k", lit(i + 1L)) }
@@ -2438,10 +2456,7 @@ object GraphAlgorithms {
   def maximalMatching(nf: NetworkFrame, rounds: Int = 6): DataFrame =
       withoutConstraintPropagation(nf.edges) {
     require(rounds >= 1, "at least one round")
-    val sym = nf.symmetrizedEdges
-      .select(col("source"), col("target"))
-      .filter(col("source") =!= col("target")).distinct()
-      .localCheckpointCapped()
+    val sym = simpleEdges(nf).localCheckpointCapped()
     var unmatched = nf.nodes.select("id").localCheckpointCapped()
     var matched: DataFrame = null
     for (r <- 1 to rounds) {
@@ -2486,29 +2501,12 @@ object GraphAlgorithms {
     * max weight (the widest lane wins). The seed reports Long.MaxValue (an
     * empty path has unbounded bottleneck); `rounds` bounds path length, so
     * cost is O(rounds) join+agg shuffles regardless of graph size.
+    * [[pathRelaxation]] with extend = least(v, wq), keeping the max.
     */
   def widestPaths(nf: NetworkFrame, sourceId: Any, weightCol: String,
                   rounds: Int, directed: Boolean = true): DataFrame =
-      withoutConstraintPropagation(nf.edges) {
-    require(rounds >= 1, "at least one relaxation round")
-    val wq = floor(col(weightCol).cast("double") * 100).cast("long")
-    val base = nf.edges.select(col("source"), col("target"), wq.as("wq"))
-    val dirEdges = if (directed) base
-      else base.union(base.select(col("target").as("source"),
-        col("source").as("target"), col("wq")))
-    val e = dirEdges
-      .groupBy("source", "target").agg(max("wq").as("wq")).localCheckpointCapped()
-    var cap = nf.nodes.select(col("id")).filter(col("id") === lit(sourceId))
-      .withColumn("cq", lit(Long.MaxValue)).localCheckpointCapped()
-    for (_ <- 1 to rounds) {
-      val relax = e.join(cap.select(col("id").as("source"), col("cq").as("sc")),
-          Seq("source"))
-        .select(col("target").as("id"), least(col("sc"), col("wq")).as("cq"))
-      cap = cap.union(relax).groupBy("id").agg(max("cq").as("cq"))
-        .localCheckpointCapped()
-    }
-    cap
-  }
+    pathRelaxation(nf, sourceId, weightCol, rounds, directed, useMax = true,
+      start = Long.MaxValue, least(col("v"), col("wq"))).withColumnRenamed("v", "cq")
 
   /** Distributed greedy graph coloring by iterated Luby MIS layers: layer c
     * computes a maximal independent set of the still-uncolored subgraph and
@@ -2525,10 +2523,7 @@ object GraphAlgorithms {
       DataFrame = withoutConstraintPropagation(nf.edges) {
     require(layers >= 1, "at least one layer")
     val allNodes = nf.nodes.select("id").localCheckpointCapped()
-    val sym = nf.symmetrizedEdges
-      .select(col("source"), col("target"))
-      .filter(col("source") =!= col("target")).distinct()
-      .localCheckpointCapped()
+    val sym = simpleEdges(nf).localCheckpointCapped()
     var uncolored = allNodes
     // color classes are consumed nowhere inside the layer loop (the
     // uncolored update anti-joins the layer's own MIS), so they buffer
@@ -2575,10 +2570,7 @@ object GraphAlgorithms {
   def louvainMoveRound(nf: NetworkFrame, labels: DataFrame,
                        down: Boolean = true): DataFrame =
       withoutConstraintPropagation(nf.edges) {
-    val sym = nf.symmetrizedEdges
-      .select(col("source"), col("target"))
-      .filter(col("source") =!= col("target")).distinct()
-      .localCheckpointCapped()
+    val sym = simpleEdges(nf).localCheckpointCapped()
     val lab = labels.select(col("id"), col("community")).localCheckpointCapped()
     val deg = sym.groupBy(col("source").as("id")).agg(count(lit(1)).as("k"))
     val m2 = sym.agg(count(lit(1)).as("m2"))
@@ -2621,8 +2613,8 @@ object GraphAlgorithms {
     * `rounds` steps. Quantized-integer dynamic program (the same replayable
     * discipline as `pageRank`): p_0 = 1e6 on T else 0, and
     * p_k(v) = 1e6 if v in T else floor(sum over out-nbrs p_{k-1}(u) / deg),
-    * dead ends absorb to 0. One edge join + one (source) aggregation +
-    * one broadcastable target stamp per round — rounds x two shuffles,
+    * dead ends absorb to 0. One [[pushSum]] + one broadcastable target
+    * stamp per round — rounds x two shuffles,
     * no per-walk state, which is why this replaces sampled-walk reach
     * estimation at 100 TB. Output: (id, hit_ppm).
     */
@@ -2643,10 +2635,8 @@ object GraphAlgorithms {
         when(col("isT"), 1000000L).otherwise(0L).as("p"))
       .localCheckpointCapped()
     for (_ <- 1 to rounds) {
-      val m = e.join(p.select(col("id").as("target"), col("p")), Seq("target"))
-        .groupBy(col("source").as("id")).agg(sum("p").as("sp"))
-        .join(deg, Seq("id"))
-        .selectExpr("id", "sp DIV d AS pv")
+      val m = pushSum(e, p, "target", "source", col("p")).join(deg, Seq("id"))
+        .selectExpr("id", "s DIV d AS pv")
       p = nf.nodes.select(col("id"))
         .join(t, Seq("id"), "left_outer")
         .join(m, Seq("id"), "left_outer")
@@ -2691,7 +2681,8 @@ object GraphAlgorithms {
     * 32-bit hashes seeds a node, and the ball sketch is the elementwise MIN
     * over the ball — a mergeable sketch, so one round is exactly one edge
     * join + one (id, trial) min-aggregation, and k rounds cover radius k
-    * with NO per-pair BFS state. This is the scalable estimator sibling of
+    * with NO per-pair BFS state ([[relaxRounds]] keyed by trial over
+    * [[simpleEdges]]). This is the scalable estimator sibling of
     * `kHopNeighborhood` (exact balls; reference networkframe.py:1540-1549
     * territory): the exact count is O(sum of ball sizes) — quadratic on a
     * 100 TB small-world graph — while the sketch is O(k * |E| * trials)
@@ -2703,29 +2694,18 @@ object GraphAlgorithms {
     * the sketch integral keeps the result engine-portable and mergeable).
     */
   def neighborhoodFunction(nf: NetworkFrame, rounds: Int = 3,
-                           trials: Int = 8): DataFrame =
-      withoutConstraintPropagation(nf.edges) {
+                           trials: Int = 8): DataFrame = {
     require(rounds >= 1 && trials >= 1, "rounds and trials must be positive")
-    val und = nf.symmetrizedEdges.filter(col("source") =!= col("target"))
-      .distinct().localCheckpointCapped()
-    var s = nf.nodes.select(col("id"))
-      .select(col("id"), explode(sequence(lit(0), lit(trials - 1))).as("t"))
-      .select(col("id"), col("t"),
+    val init = nf.nodes.select(col("id"))
+      .select(explode(sequence(lit(0), lit(trials - 1))).as("t"), col("id"))
+      .select(col("t"), col("id"),
         conv(substring(md5(concat(col("id").cast("string"), lit(":"),
-          col("t").cast("string"))), 1, 8), 16, 10).cast("long").as("m"))
-      .localCheckpointCapped()
-    var out: DataFrame = null
-    for (k <- 1 to rounds) {
-      val nbr = und
-        .join(s.withColumnRenamed("id", "target"), Seq("target"))
-        .select(col("source").as("id"), col("t"), col("m"))
-      s = s.union(nbr).groupBy("id", "t").agg(min("m").as("m"))
-        .localCheckpointCapped()
-      val row = s.groupBy("id").agg(sum("m").as("kmv_sum"))
-        .select(col("id"), lit(k.toLong).as("k"), col("kmv_sum"))
-      out = if (out == null) row else out.union(row)
-    }
-    out
+          col("t").cast("string"))), 1, 8), 16, 10).cast("long").as("v"))
+    relaxRounds(simpleEdges(nf), init, Seq("t"), col("v"), useMax = false, rounds)
+      .zipWithIndex.map { case (s, k) =>
+        s.groupBy("id").agg(sum("v").as("kmv_sum"))
+          .select(col("id"), lit(k + 1L).as("k"), col("kmv_sum"))
+      }.reduce(_ union _)
   }
 
   private def induce(edges: DataFrame, ids: DataFrame): DataFrame =

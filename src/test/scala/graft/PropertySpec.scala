@@ -308,6 +308,157 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  // ---------------- the relaxation and power families vs plain Scala ------
+
+  /** `rounds` synchronous Bellman-Ford hops from `seed` (only if it is a
+    * node, id < n): every reached endpoint, dangling ones too, extends its
+    * value along each of its (source, target, w) edges and a receiver keeps
+    * `pick` of its own value and every offer.
+    */
+  private def bellmanFord(n: Int, edges: Seq[(Int, Int, Long)], seed: Int, start: Long,
+      rounds: Int, extend: (Long, Long) => Long, pick: (Long, Long) => Long): Map[Int, Long] =
+    (1 to rounds).foldLeft(if (seed < n) Map(seed -> start) else Map.empty[Int, Long]) { (d, _) =>
+      edges.foldLeft(d) { case (acc, (s, t, w)) =>
+        d.get(s).fold(acc)(ds => acc.updated(t, acc.get(t).fold(extend(ds, w))(pick(_, extend(ds, w)))))
+      }
+    }
+
+  test("shortestPaths and widestPaths equal a plain-Scala hop-bounded Bellman-Ford") {
+    (1 to 5).foreach { i =>
+      // zero weights, self-loops, multi-edges, dangling endpoints and
+      // nodes no seed reaches all occur
+      val (n, edges) = weightedTimed(i)
+      val nf = weightedFrame(n, edges)
+      val strNf = NetworkFrame(nf.nodes.select(pad("id")),
+        nf.edges.select(pad("source"), pad("target"), col("weight")))
+      val directedW = edges.map(e => (e._1, e._2, e._3))
+      val undirectedW = directedW ++ directedW.map(e => (e._2, e._1, e._3))
+      for (seed <- Seq(0, n / 2, n + 1).distinct; directed <- Seq(true, false)) {
+        val w = if (directed) directedW else undirectedW
+        val rounds = 1 + (i + seed) % 4
+        val sp = bellmanFord(n, w, seed, 0L, rounds, _ + _, math.min)
+        val wp = bellmanFord(n, w, seed, Long.MaxValue, rounds, math.min, math.max)
+        def rows(m: Map[Int, Long]) = m.toSeq.map(r => (r._1.toLong, r._2))
+        assertSameFrame(GraphAlgorithms.shortestPaths(nf, seed.toLong, "weight", rounds, directed),
+          rows(sp).toDF("id", "dq"))
+        assertSameFrame(GraphAlgorithms.widestPaths(nf, seed.toLong, "weight", rounds, directed),
+          rows(wp).toDF("id", "cq"))
+        def strRows(m: Map[Int, Long]) = m.toSeq.map(r => (f"${r._1}%02d", r._2))
+        assertSameFrame(GraphAlgorithms.shortestPaths(strNf, f"$seed%02d", "weight", rounds, directed),
+          strRows(sp).toDF("id", "dq"))
+        assertSameFrame(GraphAlgorithms.widestPaths(strNf, f"$seed%02d", "weight", rounds, directed),
+          strRows(wp).toDF("id", "cq"))
+      }
+    }
+  }
+
+  /** The first 8 hex digits of md5("id:t"), read as a long. */
+  private def md5Hash(id: String, t: Int): Long =
+    java.security.MessageDigest.getInstance("MD5").digest(s"$id:$t".getBytes("UTF-8"))
+      .take(4).foldLeft(0L)((a, b) => (a << 8) | (b & 0xff))
+
+  test("neighborhoodFunction equals a plain-Scala ball sketch") {
+    (1 to 5).foreach { i =>
+      val (n, edges) = genComponentGraph(Gen.Parameters.default, Seed(i.toLong)).get
+      val both = (edges ++ edges.map(_.swap)).groupMap(_._1)(_._2)
+      val (rounds, trials) = (1 + i % 3, 1 + i % 4)
+      // every endpoint, dangling ones too, relays the sketch; a row exists
+      // once its ball holds a node, and sums each trial's least node hash
+      def want(name: Int => String) = (0 to n + 1).flatMap { v =>
+        val dist = queueBfs(both, v, rounds)
+        (1 to rounds).flatMap { k =>
+          val ball = dist.collect { case (u, d) if d <= k && u < n => name(u) }
+          if (ball.isEmpty) None
+          else Some((name(v), k.toLong, (0 until trials).map(t => ball.map(md5Hash(_, t)).min).sum))
+        }
+      }
+      assertSameFrame(GraphAlgorithms.neighborhoodFunction(idFrame(1, n, edges), rounds, trials),
+        want(_.toString).map(r => (r._1.toLong, r._2, r._3)).toDF("id", "k", "kmv_sum"))
+      val strNf = NetworkFrame((0 until n).toDF("id").select(pad("id")),
+        edges.toDF("source", "target").select(pad("source"), pad("target")))
+      assertSameFrame(GraphAlgorithms.neighborhoodFunction(strNf, rounds, trials),
+        want(v => f"$v%02d").toDF("id", "k", "kmv_sum"))
+    }
+  }
+
+  private val Q = BigInt(1000000)
+
+  /** Sum over `edges` (from, to) of `term(edge, state(from))` per `to`,
+    * for every `from` that holds a state.
+    */
+  private def push(edges: Seq[(Int, Int)], state: Map[Int, BigInt],
+      term: ((Int, Int), BigInt) => BigInt): Map[Int, BigInt] =
+    edges.collect { case e if state.contains(e._1) => e._2 -> term(e, state(e._1)) }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+
+  /** Each node's raw score * 1e6 DIV the largest score in `maxOver`, or 0
+    * when that max is absent or 0.
+    */
+  private def maxRenorm(n: Int, raw: Map[Int, BigInt], maxOver: Iterable[BigInt]): Map[Int, BigInt] = {
+    val mx = maxOver.maxOption.getOrElse(BigInt(0))
+    (0 until n).map(v => v -> (if (mx == 0) BigInt(0) else raw.getOrElse(v, BigInt(0)) * Q / mx)).toMap
+  }
+
+  /** HITS over nodes 0..n-1: each pass is max-renormalized over every
+    * receiver, dangling endpoints included, and kept on the nodes.
+    * Returns (id, hub_q, auth_q).
+    */
+  private def hitsReference(n: Int, edges: Seq[(Int, Int)], iters: Int): Seq[(Long, Long, Long)] = {
+    val ones = (0 until n).map(_ -> Q).toMap
+    val (hub, auth) = (1 to iters).foldLeft((ones, ones)) { case ((h, _), _) =>
+      val ra = push(edges, h, (_, q) => q)
+      val a = maxRenorm(n, ra, ra.values)
+      val rh = push(edges.map(_.swap), a, (_, q) => q)
+      (maxRenorm(n, rh, rh.values), a)
+    }
+    (0 until n).map(v => (v.toLong, hub(v).toLong, auth(v).toLong))
+  }
+
+  test("hits, katzCentrality, sortSpectral and boundedHitting equal BigInt iterations") {
+    (1 to 5).foreach { i =>
+      val (n, edges) = weightedTimed(i)
+      val nf = weightedFrame(n, edges)
+      val distinct = edges.map(e => (e._1, e._2)).distinct
+      val iters = 1 + i % 4
+      val ones = (0 until n).map(_ -> Q).toMap
+      def rows(m: Map[Int, BigInt]) = m.toSeq.map(r => (r._1.toLong, r._2.toLong))
+      assertSameFrame(GraphAlgorithms.hits(nf, iters),
+        hitsReference(n, distinct, iters).toDF("id", "hub_q", "auth_q"))
+      // Katz, alpha = 5/100, over the distinct directed edges
+      val katz = (1 to iters).foldLeft(ones) { (x, _) =>
+        val m = push(distinct, x, (_, q) => q)
+        (0 until n).map(v => v -> (Q + 5 * m.getOrElse(v, BigInt(0)) / 100)).toMap
+      }
+      assertSameFrame(GraphAlgorithms.katzCentrality(nf, iters), rows(katz).toDF("id", "qs"))
+      // spectral: both directions, cents summed per pair (a self-loop
+      // counts twice), max-renormalized over the nodes only
+      val wq = centSums(edges.flatMap(e => Seq((e._1, e._2, e._3), (e._2, e._1, e._3))))
+      val spectral = (1 to iters).foldLeft(ones) { (x, _) =>
+        // wq is symmetric, so pushing along (source, target) sums the same terms
+        val ms = push(wq.keys.toSeq, x, (e, q) => q * wq(e))
+        val onNodes = (0 until n).map(v => ms.getOrElse(v, BigInt(0)))
+        maxRenorm(n, ms, onNodes)
+      }
+      assertSameFrame(GraphAlgorithms.sortSpectral(nf, "weight", iters), rows(spectral).toDF("id", "qs"))
+      // hitting: targets include a dangling endpoint; self-loops dropped
+      val targets = Set(0, n / 2, n + 1)
+      val out = distinct.filter(e => e._1 != e._2)
+      val deg = out.groupMapReduce(_._1)(_ => BigInt(1))(_ + _)
+      val hit = (1 to iters).foldLeft((0 until n).map(v => v -> (if (targets(v)) Q else BigInt(0))).toMap) {
+        (p, _) =>
+          val sp = push(out.map(_.swap), p, (_, q) => q)
+          (0 until n).map(v => v -> (if (targets(v)) Q else sp.get(v).fold(BigInt(0))(_ / deg(v)))).toMap
+      }
+      assertSameFrame(GraphAlgorithms.boundedHitting(nf, targets.toSeq.map(_.toLong).toDF("id"), iters),
+        rows(hit).toDF("id", "hit_ppm"))
+    }
+    // the dangling endpoint 9 holds the largest authority sum and sets the scale
+    val star = Seq((0, 9), (1, 9), (2, 9), (1, 2), (2, 1))
+    assertSameFrame(GraphAlgorithms.hits(NetworkFrame((0L until 3L).toDF("id"),
+        star.map(e => (e._1.toLong, e._2.toLong)).toDF("source", "target")), 2),
+      hitsReference(3, star, 2).toDF("id", "hub_q", "auth_q"))
+  }
+
   /** An IVF-PQ corpus: (id, vector, cell) rows plus (m, dims, k, nprobe).
     * Vectors are 1-4 positions longer than `dims`; components come from a
     * five-value set with negatives, so codebook distances tie, and some

@@ -98,6 +98,24 @@ class Round14Spec extends AnyFunSuite with SparkFixture {
     assert(!BenchGuard.seedScaleOk("/tmp/sf1"))
   }
 
+  test("the default prior files are read only at the seed's scale") {
+    val dir = java.nio.file.Files.createTempDirectory("bench-priors").toFile
+    val names = Seq("BENCH_r07.json", "BENCH_seed.json", "BENCH_full_latest.json", "notes.txt")
+    names.foreach(n => java.nio.file.Files.write(new java.io.File(dir, n).toPath, "{}".getBytes))
+    def found(sf: String, explicit: Option[String] = None) =
+      BenchGuard.priorFiles(sf, explicit, Seq(dir)).map(_.getName).toSet
+    assert(found("data/sf0.1") == Set("BENCH_r07.json", "BENCH_seed.json"))
+    // an sf0.001 smoke compares with nothing instead of with sf0.1 times
+    assert(found("data/sf0.001").isEmpty)
+    assert(found("/tmp/sf1").isEmpty)
+    // an explicit list is honoured at any scale; missing files drop out
+    val listed = Seq("BENCH_full_latest.json", "absent.json")
+      .map(n => new java.io.File(dir, n).getPath).mkString(",")
+    assert(found("data/sf0.001", Some(listed)) == Set("BENCH_full_latest.json"))
+    names.foreach(n => new java.io.File(dir, n).delete())
+    dir.delete()
+  }
+
   test("seedRatios stamps every row at or above the 1.5x reporting bar") {
     val ratios = BenchGuard.seedRatios(
       Map("q_a" -> 15.0, "q_b" -> 7.0, "q_c" -> 5.0),
