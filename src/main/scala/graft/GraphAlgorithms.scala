@@ -205,14 +205,9 @@ object GraphAlgorithms {
     * cores converge before the extra self-join and checkpoint pay off
     * (round 4: doubling from round 1 regressed 18.4 s -> ~50 s at sf0.1).
     *
-    * Probe. This is the one place that picks the convergence probe: with
-    * integral ids the exact label sum ([[monotoneSum]]) is strictly
-    * monotone until the fixpoint, so sum equality is pointwise equality
-    * in one aggregate job; string and fractional ids, and a round whose
-    * sum overflowed (None), take the exact changed-row join probe.
-    *
-    * Throws IllegalStateException naming `name` if `maxRounds` cycles do
-    * not converge, and logs one `[graft]` line per run otherwise.
+    * The loop, its probe, cap and log are [[monotoneFixpoint]]'s: the
+    * unit is rounds, so the cap throws "<name> did not converge within <n>
+    * rounds".
     */
   private def labelFixpoint(edges: DataFrame, ids: DataFrame, useMax: Boolean, hops: Int,
       doublingFrom: Int, maxRounds: Int, name: String): DataFrame = {
@@ -222,42 +217,84 @@ object GraphAlgorithms {
       lab.join(relaxMessages(edges, lab, Nil, col("v")).groupBy("id").agg(best(useMax, "v").as("m")),
           Seq("id"), "left_outer")
         .select(col("id"), pick(col("v"), coalesce(col("m"), col("v"))).as("v"))
-    var labels = ids.select(col("id"), col("id").as("v")).localCheckpointCapped()
-    val sumProbe = numericCol(labels, "v")
-    def probe(df: DataFrame) = if (sumProbe) monotoneSum(df, "v")._2 else None
-    var prevSum = probe(labels)
-    var joinProbed = false
-    var converged = false
+    monotoneFixpoint(ids.select(col("id"), col("id").as("v")), maxRounds, name, "rounds") {
+      (labels, round) =>
+        val doubling = round >= doublingFrom
+        val prop = Iterator.iterate(labels)(if (doubling) joinHop else unionHop)
+          .drop(if (round == 0) 1 else hops).next().localCheckpointCapped()
+        // the doubling joins a checkpointed `prop`: reusing its exchange
+        // instead measured flat on q_percolation and ~8% worse on
+        // q_components at sf0.1
+        if (!doubling) prop else prop.as("a")
+          .join(prop.select(col("id").as("lid"), col("v").as("l2")),
+            col("a.v") === col("lid"), "left_outer")
+          .select(col("a.id").as("id"), pick(col("a.v"), coalesce(col("l2"), col("a.v"))).as("v"))
+          .localCheckpointCapped()
+    }
+  }
+
+  /** The one convergence loop, behind [[labelFixpoint]] and
+    * [[temporalReachability]]. It checkpoints `init` (keys…, id, v) and
+    * runs `cycle(state, round)`, which returns the next checkpointed
+    * state, until [[probe]] finds that a cycle changed nothing. Callers
+    * guarantee that every row's v only moves one way and rows are only
+    * added, so the fixpoint is unique and the probe exact. Throws
+    * IllegalStateException("<name> did not converge within <n> <unit>")
+    * if `maxRounds` cycles do not converge; otherwise logs one `[graft]`
+    * line with the cycles run and the probe path (join when any cycle
+    * took it).
+    */
+  private def monotoneFixpoint(init: DataFrame, maxRounds: Int, name: String, unit: String)(
+      cycle: (DataFrame, Int) => DataFrame): DataFrame = {
+    val sums = numericCol(init, "v")
+    var state = init.localCheckpointCapped()
+    var stateSum: Option[(Long, Option[java.math.BigDecimal])] = None
+    var joined = false
+    var settled = false
     var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      val doubling = rounds >= doublingFrom
-      val prop = Iterator.iterate(labels)(if (doubling) joinHop else unionHop)
-        .drop(if (rounds == 0) 1 else hops).next().localCheckpointCapped()
-      // the doubling joins a checkpointed `prop`: reusing its exchange
-      // instead measured flat on q_percolation and ~8% worse on
-      // q_components at sf0.1
-      val next = if (!doubling) prop else prop.as("a")
-        .join(prop.select(col("id").as("lid"), col("v").as("l2")),
-          col("a.v") === col("lid"), "left_outer")
-        .select(col("a.id").as("id"), pick(col("a.v"), coalesce(col("l2"), col("a.v"))).as("v"))
-        .localCheckpointCapped()
-      val curSum = probe(next)
-      converged = (prevSum, curSum) match {
-        case (Some(p), Some(c)) => c.compareTo(p) == 0
-        case _ =>
-          joinProbed = true
-          next.join(labels.withColumnRenamed("v", "prev"), Seq("id"))
-            .filter(col("v") =!= col("prev")).limit(1).count() == 0
-      }
-      prevSum = curSum
-      labels = next
+    while (!settled && rounds < maxRounds) {
+      val next = cycle(state, rounds)
+      val (s, j, nextSum) = probe(state, next, sums, stateSum)
+      settled = s
+      joined ||= j
+      stateSum = nextSum
+      state = next
       rounds += 1
     }
-    if (!converged) throw new IllegalStateException(
-      s"$name did not converge within $rounds rounds")
-    System.err.println(s"[graft] $name converged in $rounds cycles" +
-      (if (joinProbed) " (join probe)" else " (sum probe)"))
-    labels
+    if (!settled) throw new IllegalStateException(
+      s"$name did not converge within $rounds $unit")
+    System.err.println(s"[graft] $name converged in $rounds $unit" +
+      (if (joined) " (join probe)" else " (sum probe)"))
+    state
+  }
+
+  /** The one convergence probe: whether the monotone state `next` equals
+    * `prev` row for row. With `sums` ([[monotoneFixpoint]] passes
+    * [[numericCol]] of v) it takes each side's [[monotoneSum]] of v —
+    * `prevSum` is the one the previous call returned for `prev` — and,
+    * when both sums are defined, compares the (row count, sum) pairs:
+    * while the state moves one way, each pair is strictly monotone until
+    * the fixpoint, so pair equality is pointwise equality in one
+    * aggregate job. Otherwise — string or fractional v, or an overflowed
+    * (None) sum — it runs the exact changed-row probe: an anti-join of
+    * `next` against `prev` on every column, null-safe, that looks for one
+    * row that is new or changed. Returns (settled, whether the join ran,
+    * `next`'s sum for the following call).
+    */
+  private[graft] def probe(prev: DataFrame, next: DataFrame, sums: Boolean,
+      prevSum: Option[(Long, Option[java.math.BigDecimal])] = None):
+      (Boolean, Boolean, Option[(Long, Option[java.math.BigDecimal])]) = {
+    val before = if (sums) prevSum.orElse(Some(monotoneSum(prev, "v"))) else None
+    val after = if (sums) Some(monotoneSum(next, "v")) else None
+    (before, after) match {
+      case (Some((n0, Some(s0))), Some((n1, Some(s1)))) =>
+        (n0 == n1 && s0.compareTo(s1) == 0, false, after)
+      case _ =>
+        val old = prev.toDF(prev.columns.map("p_" + _): _*)
+        val changed = next.join(old, next.columns.map(c => col(c) <=> col("p_" + c)).reduce(_ && _),
+            "left_anti").limit(1).count() > 0
+        (!changed, true, after)
+    }
   }
 
   /** The messages of one relaxation hop. `state` is (keys…, id, v); each
@@ -349,11 +386,11 @@ object GraphAlgorithms {
     */
   private[graft] val sccDoublingAfter = 8
 
-  /** Round cap for the backward anti-join frontier BFS, decoupled from
-    * [[sccDoublingAfter]] in round 16: frontier rounds cost work
+  /** Hop cap for [[sccFixpoint]]'s backward [[frontierBfs]], decoupled
+    * from [[sccDoublingAfter]] in round 16: frontier hops cost work
     * proportional to the NEWLY reached set (cheap), while hitting the cap
-    * discards the partial sweep and pays a full all-nodes coloring
-    * fixpoint — so the cap should only trip on graphs whose backward
+    * discards the partial sweep and pays a full all-nodes backward
+    * coloring — so the cap should only trip on graphs whose backward
     * depth is genuinely pathological, not merely deeper than the point
     * where the coloring loops engage doubling (the sparse-graph SCC has
     * backward depth 19: with a shared 8-round cap it wasted 8 frontier
@@ -389,7 +426,7 @@ object GraphAlgorithms {
   }
 
   /** Row count and exact DECIMAL(38,0) sum of `c`, in one aggregate job —
-    * the convergence probe for fixpoints whose per-row state moves
+    * the sum half of [[probe]], for fixpoints whose per-row state moves
     * MONOTONICALLY (component labels only decrease, SCC colors only
     * increase, temporal arrivals only decrease while rows are only added):
     * the pair changes iff any row changed, so comparing successive results
@@ -400,9 +437,9 @@ object GraphAlgorithms {
     * a sum past DECIMAL(38,0) throws `SparkArithmeticException`
     * (NUMERIC_VALUE_OUT_OF_RANGE) and the run fails loudly. With
     * `spark.sql.ansi.enabled=false` it is a NULL sum over a NON-empty frame,
-    * returned as None, so callers never compare ZERO == ZERO: the
-    * label fixpoints take the exact join probe that round, temporal reach
-    * keeps relaxing. Unreachable below ~1e19 row-weighted ids either way.
+    * returned as None, so the probe never compares ZERO == ZERO: it takes
+    * the exact join probe that cycle, in every fixpoint. Unreachable
+    * below ~1e19 row-weighted ids either way.
     */
   private[graft] def monotoneSum(df: DataFrame, c: String):
       (Long, Option[java.math.BigDecimal]) = {
@@ -440,12 +477,15 @@ object GraphAlgorithms {
     * nodes remain. Labels are the min member id of each SCC.
     *
     * Peeling rounds are O(#SCC levels) on adversarial chains but O(log n)
-    * expected on random id assignment. The forward coloring, and the
-    * backward one when the frontier search below hits [[sccFrontierCap]],
-    * are uncapped max-[[labelFixpoint]] runs: one hop per cycle, pointer
-    * doubling from cycle `doublingAfter` on; monotone over a finite id set,
-    * so they always terminate. Throws IllegalStateException if nodes
-    * remain after `maxRounds` peel rounds.
+    * expected on random id assignment. The backward search is one
+    * [[frontierBfs]] from every root at once, capped at
+    * [[sccFrontierCap]] hops. The forward coloring, and the backward one
+    * when that search hits its cap, are uncapped max-[[labelFixpoint]]
+    * runs: one hop per cycle, pointer doubling from cycle `doublingAfter`
+    * on; monotone over a finite id set, so they always terminate. Throws
+    * IllegalStateException if nodes remain after `maxRounds` peel rounds,
+    * and logs one `[graft]` line per call with the peel rounds and the
+    * number of them whose frontier search capped.
     */
   private[graft] def sccFixpoint(nf: NetworkFrame, doublingAfter: Int = sccDoublingAfter,
                                  maxRounds: Int = 200): DataFrame =
@@ -459,9 +499,9 @@ object GraphAlgorithms {
     // so no isEmpty/count action is ever issued twice for the same frame
     // (driver-action latency, not data volume, dominates the peel rounds)
     var remainingCount = remaining.count()
+    var cappedRounds = 0
     while (remainingCount > 0 && guard < maxRounds) {
       guard += 1
-      System.err.println(s"[graft] scc peel round $guard, remaining=$remainingCount")
       var eR = e
         .join(remaining.withColumnRenamed("id", "source"), Seq("source"), "left_semi")
         .join(remaining.withColumnRenamed("id", "target"), Seq("target"), "left_semi")
@@ -508,103 +548,53 @@ object GraphAlgorithms {
           .join(remaining.withColumnRenamed("id", "target"), Seq("target"), "left_semi")
           .localCheckpointCapped()
       }
-      if (remainingCount == 0) {
-        System.err.println(s"[graft] scc trim cleared round $guard")
-      } else {
-      // 1. forward max-color propagation to fixpoint: color(v) = max id
-      // that reaches v. Roots are nodes with color == own id, and every
-      // member of color class c has id <= c (color >= own id always), so
-      // the root is the max id of its class.
-      val colors = labelFixpoint(eR, remaining, useMax = true, hops = 1, doublingAfter,
-        Int.MaxValue, "scc fwd coloring").withColumnRenamed("v", "color")
-      // 2. backward pass as a SECOND coloring, not a frontier BFS: keep
-      // only intra-class edges (any v->root path of an SCC member stays
-      // inside the class), reverse them, and propagate max id again. Then
-      // revColor(v) == color(v) iff the class root reaches v backward,
-      // i.e. v -> root forward — combined with color(v) = c meaning
-      // root -> v forward, that is exactly v in SCC(root). Same plan shape
-      // as the forward pass (one shuffle per round + the doubling escape
-      // hatch), and — unlike the anti-join frontier loop it replaces — no
-      // round-over-round plan growth.
-      val ec = eR
-        .join(colors.select(col("id").as("source"), col("color").as("cs")), Seq("source"))
-        .join(colors.select(col("id").as("target"), col("color").as("ct")), Seq("target"))
-        .filter(col("cs") === col("ct"))
-        .select(col("target").as("source"), col("source").as("target"))
-        .localCheckpointCapped()
-      // 2a. cheap path first: anti-join frontier BFS from the roots along
-      // the reversed intra-class edges — per-round work is proportional to
-      // the NEWLY reached frontier, not the whole node set, which is the
-      // right shape at scale (a round-4 A/B at sf0.1 measured 21.9 s vs
-      // 23-24 s for an all-nodes flag-propagation round). O(max SCC
-      // backward depth) rounds with no doubling possible, so the loop is
-      // capped at `sccFrontierCap` rounds (decoupled from the coloring
-      // loops' doubling knob — see its scaladoc); a genuinely deep graph
-      // that hits the cap discards the partial sweep and falls back to the
-      // doubling-capable full coloring below. (The geometric planner
-      // blowup this loop shape used to suffer is gone: with constraint
-      // propagation scoped off, localCheckpoint no longer compounds
-      // constraint sets through the LogicalRDD.)
-      val ecc = ec.join(colors.select(col("id").as("source"), col("color")), Seq("source"))
-        .localCheckpointCapped()
-      // visited-set bookkeeping (round-16): unioning the whole reached set
-      // into a fresh checkpoint EVERY round rewrote all previously reached
-      // rows each time — O(rounds^2) data movement, the same accumulator
-      // shape fixed in maximalIndependentSet. The reached set now lives as
-      // one checkpointed base plus a small buffer of per-round frontier
-      // frames (each already checkpointed for the BFS itself); the
-      // exclusion anti-join runs against base + buffer, and the buffer
-      // folds into the base only every 4 rounds. Exclusion set per round
-      // is identical, so the BFS — and the SCC output — is unchanged.
-      var visited = colors.filter(col("color") === col("id"))
-        .select(col("id"), col("id").as("root")).localCheckpointCapped()
-      val pendingV = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      def notSeen(df: DataFrame): DataFrame =
-        pendingV.foldLeft(df.join(visited, Seq("id"), "left_anti"))(
-          (d, p) => d.join(p, Seq("id"), "left_anti"))
-      var frontier = visited
-      // one emptiness job per round: the checkpointed frontier is tested
-      // once, and the result serves both the buffer and the loop head
-      var live = !frontier.isEmpty
-      var revRounds = 0
-      var capped = false
-      while (!capped && live) {
-        if (revRounds >= math.max(doublingAfter, sccFrontierCap)) capped = true
-        else {
-          val next = notSeen(ecc
-            .join(frontier.select(col("id").as("source"), col("root")), Seq("source"))
-            .filter(col("color") === col("root"))
-            .select(col("target").as("id"), col("root")).distinct())
-            .localCheckpointCapped()
-          frontier = next
-          live = !next.isEmpty
-          if (live) pendingV += next
-          if (pendingV.size >= 4) {
-            visited = (visited +: pendingV).reduce(_ union _).localCheckpointCapped()
-            pendingV.clear()
-          }
-          revRounds += 1
-        }
-      }
-      var scc =
-        if (pendingV.isEmpty) visited
-        else (visited +: pendingV).reduce(_ union _).localCheckpointCapped()
-      pendingV.clear()
-      System.err.println(s"[graft] scc bwd frontier " +
-        s"${if (capped) "capped" else "converged"} in $revRounds rounds")
-      if (capped) {
-        val rev = labelFixpoint(ec, remaining, useMax = true, hops = 1, doublingAfter,
-          Int.MaxValue, "scc bwd coloring")
-        scc = colors.join(rev.withColumnRenamed("v", "rc"), Seq("id"))
-          .filter(col("color") === col("rc"))
-          .select(col("id"), col("color").as("root"))
+      if (remainingCount > 0) {
+        // 1. forward max-color propagation to fixpoint: color(v) = max id
+        // that reaches v. Roots are nodes with color == own id, and every
+        // member of color class c has id <= c (color >= own id always), so
+        // the root is the max id of its class.
+        val colors = labelFixpoint(eR, remaining, useMax = true, hops = 1, doublingAfter,
+          Int.MaxValue, "scc fwd coloring").withColumnRenamed("v", "color")
+        // 2. the class's own edges, reversed: any v->root path of an SCC
+        // member stays inside the class, so SCC(root) is root's backward
+        // reach along them. Every edge joins two nodes of one class, so a
+        // search from all roots at once reaches each node from its own
+        // root alone.
+        val ec = eR
+          .join(colors.select(col("id").as("source"), col("color").as("cs")), Seq("source"))
+          .join(colors.select(col("id").as("target"), col("color").as("ct")), Seq("target"))
+          .filter(col("cs") === col("ct"))
+          .select(col("target").as("source"), col("source").as("target"))
           .localCheckpointCapped()
-      }
-      result = if (result == null) scc else result.union(scc).localCheckpointCapped()
-      remaining = remaining.join(scc.select("id"), Seq("id"), "left_anti").localCheckpointCapped()
-      remainingCount = remaining.count()
+        // 2a. cheap path first: a frontier BFS from the roots, whose
+        // per-round work is proportional to the NEWLY reached frontier, not
+        // the whole node set (a round-4 A/B at sf0.1 measured 21.9 s vs
+        // 23-24 s for an all-nodes flag-propagation round). It takes
+        // O(max SCC backward depth) hops with no doubling possible, so it
+        // is capped; a graph that hits the cap discards the partial sweep
+        // and falls back to 2b.
+        val (reach, capped) = frontierBfs(ec,
+          colors.filter(col("color") === col("id")).select(col("id").as("seed"), col("id")),
+          math.max(doublingAfter, sccFrontierCap))
+        val scc = if (!capped) reach.select(col("id"), col("seed").as("root")) else {
+          // 2b. backward max coloring over the same edges: revColor(v) ==
+          // color(v) iff the class root reaches v backward, i.e. v -> root
+          // forward; with color(v) = root (root -> v), v is in SCC(root)
+          cappedRounds += 1
+          val rev = labelFixpoint(ec, remaining, useMax = true, hops = 1, doublingAfter,
+            Int.MaxValue, "scc bwd coloring")
+          colors.join(rev.withColumnRenamed("v", "rc"), Seq("id"))
+            .filter(col("color") === col("rc"))
+            .select(col("id"), col("color").as("root"))
+            .localCheckpointCapped()
+        }
+        result = result.union(scc).localCheckpointCapped()
+        remaining = remaining.join(scc.select("id"), Seq("id"), "left_anti").localCheckpointCapped()
+        remainingCount = remaining.count()
       }
     }
+    System.err.println(s"[graft] sccFixpoint peeled in $guard rounds" +
+      s" (backward frontier capped in $cappedRounds)")
     if (remainingCount > 0) throw new IllegalStateException(
       s"strongComponentLabels left $remainingCount nodes unpeeled after $guard rounds")
     // a frame with no nodes never enters the peel loop
@@ -693,37 +683,47 @@ object GraphAlgorithms {
       if (directed) nf.edges.select(col("source"), col("target")) else nf.symmetrizedEdges,
       nf.nodes.select(col("id")).filter(col("id") === lit(nodeId))
         .select(col("id").as("seed"), col("id")),
-      maxDepth)
+      maxDepth)._1
 
   /** The one frontier BFS, from many seeds at once. `edges` is
     * (source, target), deduplicated here; `seeds` is (seed, id), a BFS key
     * and its start node. Returns (seed, id, d) for every id within
-    * `maxDepth` hops of its seed (d = 0 at the seed): a node's first
-    * discovery round is its distance, so the state is the visited set.
-    * Per round one frontier join, one distinct and one anti-join against
-    * the visited set (checkpointed), then one `isEmpty` job.
+    * `maxDepth` hops of its seed (d = 0 at the seed) — a node's first
+    * discovery round is its distance, so the state is the visited set —
+    * and whether the frontier was still live after `maxDepth` hops, which
+    * is [[sccFixpoint]]'s cap test. Per round one frontier join, one
+    * distinct and one anti-join against the visited set (checkpointed),
+    * then one `isEmpty` job. The visited set is a checkpointed base plus
+    * at most three buffered frontiers (each already checkpointed for the
+    * round that found it), folded into the base every fourth round:
+    * re-checkpointing the whole set every round rewrote every reached row
+    * each time, O(rounds²) data movement.
     */
-  private def frontierBfs(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame =
+  private def frontierBfs(edges: DataFrame, seeds: DataFrame,
+      maxDepth: Int): (DataFrame, Boolean) =
       withoutConstraintPropagation(edges) {
     val e = edges.distinct().localCheckpointCapped()
-    var dist = seeds.select(col("seed"), col("id"), lit(0L).as("d")).localCheckpointCapped()
-    var frontier = dist
+    var base = seeds.select(col("seed"), col("id"), lit(0L).as("d")).localCheckpointCapped()
+    var buffered = List.empty[DataFrame]
+    def visited = (base :: buffered).reduce(_ union _)
+    var frontier = base
+    var live = !frontier.isEmpty
     var hops = 0
-    var done = frontier.isEmpty
-    while (!done && hops < maxDepth) {
-      val next = e.join(frontier.withColumnRenamed("id", "source"), Seq("source"))
+    while (live && hops < maxDepth) {
+      frontier = e.join(frontier.withColumnRenamed("id", "source"), Seq("source"))
         .select(col("seed"), col("target").as("id"), (col("d") + 1).as("d"))
         .distinct()
-        .join(dist.select("seed", "id"), Seq("seed", "id"), "left_anti")
+        .join(visited.select("seed", "id"), Seq("seed", "id"), "left_anti")
         .localCheckpointCapped()
-      if (next.isEmpty) done = true
-      else {
-        dist = dist.union(next).localCheckpointCapped()
-        frontier = next
+      live = !frontier.isEmpty
+      if (live) buffered ::= frontier
+      if (buffered.size == 4) {
+        base = visited.localCheckpointCapped()
+        buffered = Nil
       }
       hops += 1
     }
-    dist
+    (visited, live)
   }
 
   /** Single-source hop distances: (id, dist) for every node within
@@ -1193,7 +1193,7 @@ object GraphAlgorithms {
     require(k >= 1 && maxDepth >= 1, "need at least one seed and one hop")
     frontierBfs(nf.symmetrizedEdges,
       nf.nodes.select(col("id")).orderBy("id").limit(k).select(col("id").as("seed"), col("id")),
-      maxDepth)
+      maxDepth)._1
   }
 
   /** Closeness aggregate over a precomputed `multiSourceBfsDistances`
@@ -2161,7 +2161,9 @@ object GraphAlgorithms {
     * and string/fractional ids run [[weakFixpoint]], which fails loudly at
     * its cap. Components at least halve — O(log n) outer rounds, each one
     * join + one agg shuffle over edges still crossing components.
-    * Returns the forest edge list (u < v, wq cents).
+    * Returns the forest edge list (u < v, wq cents). Throws
+    * IllegalStateException if an edge still crosses components after
+    * `maxRounds` contractions (the default 20 covers ~2^20 nodes).
     */
   def minimumSpanningForest(nf: NetworkFrame, weightCol: String = "weight",
                             maxRounds: Int = 20): DataFrame =
@@ -2179,7 +2181,7 @@ object GraphAlgorithms {
     var picks = List.empty[DataFrame]
     var round = 0
     var done = false
-    while (!done && round < maxRounds) {
+    while (!done) {
       val labeled = canon
         .join(comp.select(col("id").as("u"), col("comp").as("cu")), Seq("u"))
         .join(comp.select(col("id").as("v"), col("comp").as("cv")), Seq("v"))
@@ -2194,6 +2196,8 @@ object GraphAlgorithms {
         .distinct()
         .localCheckpointCapped()
       if (chosen.isEmpty) done = true
+      else if (round == maxRounds) throw new IllegalStateException(
+        s"minimumSpanningForest did not converge within $round rounds")
       else {
         picks = chosen.select("u", "v", "wq") :: picks
         // contract the chosen edges: min-label components over COMPONENT
@@ -2224,11 +2228,11 @@ object GraphAlgorithms {
     * (seed, id, arrival), three [[relaxHop]]s per checkpointed cycle (key
     * seed, admit t >= arrival, extend t, min), each one shuffle into the
     * aggregate where a full-outer merge of the best message per
-    * (seed, id) takes two. Arrivals only decrease and rows
-    * only appear, so the [[monotoneSum]] (row count, arrival sum) pair is
-    * stationary iff a cycle changed nothing; cycles are bounded by the
-    * temporal diameter. Throws IllegalStateException if `maxRounds`
-    * cycles do not converge.
+    * (seed, id) takes two. Arrivals only decrease and rows only appear,
+    * so the loop is [[monotoneFixpoint]] (unit cycles): its [[probe]]
+    * compares the (row count, arrival sum) pairs, or runs the join when a
+    * sum overflowed. Cycles are bounded by the temporal diameter. Throws
+    * IllegalStateException if `maxRounds` cycles do not converge.
     */
   def temporalReachability(edges: DataFrame, seeds: DataFrame,
                            maxRounds: Int = 30): DataFrame =
@@ -2236,35 +2240,16 @@ object GraphAlgorithms {
     val e = edges.select(col("source"), col("target"),
         col("t").cast("long").as("t"))
       .distinct().localCheckpointCapped()
-    var arr = seeds.select(col("id").as("seed"), col("id"), lit(-1L).as("v"))
-      .localCheckpointCapped()
-    // a None sum (DECIMAL overflow with ANSI off) never counts as stable:
-    // the loop conservatively keeps relaxing
-    var prevState = monotoneSum(arr, "v")
-    var done = false
-    var rounds = 0
-    while (!done && rounds < maxRounds) {
-      // three relaxations per materialization + convergence probe: the
-      // relaxation plan is join-linear in `arr` (no self-join), so chained
-      // steps cost no lineage blowup, and each probe is a full job
-      // (round-16: was two; the sf0.1 temporal diameter needs ~22
-      // relaxations, so three per cycle trims the checkpoint/probe count
-      // from 11 to 8 with the same monotone fixpoint)
-      arr = Iterator.iterate(arr)(relaxHop(e, _, Seq("seed"), col("t"), admit = col("t") >= col("v")))
+    // three relaxations per cycle: the relaxation plan is join-linear in
+    // the state (no self-join), so chained steps cost no lineage blowup,
+    // and each probe is a full job (round-16: was two; the sf0.1 temporal
+    // diameter needs ~22 relaxations, so three per cycle trims the
+    // checkpoint/probe count from 11 to 8 with the same monotone fixpoint)
+    monotoneFixpoint(seeds.select(col("id").as("seed"), col("id"), lit(-1L).as("v")),
+        maxRounds, "temporalReachability", "cycles") { (arr, _) =>
+      Iterator.iterate(arr)(relaxHop(e, _, Seq("seed"), col("t"), admit = col("t") >= col("v")))
         .drop(3).next().localCheckpointCapped()
-      val curState = monotoneSum(arr, "v")
-      done = curState._1 == prevState._1 &&
-        ((prevState._2, curState._2) match {
-          case (Some(p), Some(c)) => c.compareTo(p) == 0
-          case _ => false
-        })
-      prevState = curState
-      rounds += 1
-    }
-    if (!done) throw new IllegalStateException(
-      s"temporalReachability did not converge within $rounds cycles")
-    System.err.println(s"[graft] temporalReachability converged in $rounds triple-relaxation cycles")
-    arr.withColumnRenamed("v", "arrival")
+    }.withColumnRenamed("v", "arrival")
   }
 
   /** Katz centrality, quantized: x' = base + (alphaNum * A^T x) DIV alphaDen

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -87,6 +88,22 @@ class GraphAlgorithmsSpec extends AnyFunSuite with SparkFixture {
     assert(got == (0L to 7L).map(i => i -> (i - 1)).toMap)
   }
 
+  test("minimumSpanningForest fails loudly when Borůvka needs more than maxRounds") {
+    // path 0-1-2-3 weighted 1, 2, 1: the first round contracts {0, 1} and
+    // {2, 3}, and the 1-2 edge still crosses them; the second round ends it
+    val nodes = (0L to 3L).toDF("id")
+    val edges = Seq((0L, 1L, 1.0), (1L, 2L, 2.0), (2L, 3L, 1.0)).toDF("source", "target", "weight")
+    val nf = NetworkFrame(nodes, edges)
+    val capped = intercept[IllegalStateException](
+      GraphAlgorithms.minimumSpanningForest(nf, maxRounds = 1))
+    assert(capped.getMessage == "minimumSpanningForest did not converge within 1 rounds")
+    val want = Seq((0L, 1L, 100L), (1L, 2L, 200L), (2L, 3L, 100L))
+    Seq(GraphAlgorithms.minimumSpanningForest(nf, maxRounds = 2),
+        GraphAlgorithms.minimumSpanningForest(nf)).foreach { forest =>
+      assert(forest.as[(Long, Long, Long)].collect().sorted.toSeq == want)
+    }
+  }
+
   test("monotoneSum on a DECIMAL(38,0) overflow: None without ANSI, a loud error with it") {
     val df = spark.range(2).selectExpr("CAST('6e37' AS DECIMAL(38,0)) AS x")
     val key = "spark.sql.ansi.enabled"
@@ -98,6 +115,27 @@ class GraphAlgorithmsSpec extends AnyFunSuite with SparkFixture {
       val e = intercept[ArithmeticException](GraphAlgorithms.monotoneSum(df, "x"))
       assert(e.getClass.getSimpleName == "SparkArithmeticException")
       assert(e.getMessage.contains("NUMERIC_VALUE_OUT_OF_RANGE"))
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("the convergence probe takes the join on an overflowed sum and finds every change") {
+    // the overflow frame above as a fixpoint state: with ANSI off both
+    // sums are None, so each verdict comes from the changed-row join
+    val state = spark.range(2).selectExpr("id", "CAST('6e37' AS DECIMAL(38,0)) AS v")
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      def probe(next: DataFrame) = GraphAlgorithms.probe(state, next, sums = true)
+      val sameRows = spark.range(2).selectExpr("id", "CAST('6e37' AS DECIMAL(38,0)) AS v")
+      val oneChanged = state.withColumn("v", when(col("id") === 1L, col("v") - 1).otherwise(col("v")))
+      val oneAdded = state.union(state.filter(col("id") === 0L).withColumn("id", lit(2L)))
+      assert(probe(sameRows) == ((true, true, Some((2L, None)))))
+      assert(probe(oneChanged) == ((false, true, Some((2L, None)))))
+      assert(probe(oneAdded) == ((false, true, Some((3L, None)))))
     } finally saved match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)

@@ -68,6 +68,24 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("sccFixpoint's capped backward search equals the driver Tarjan on a 41-cycle") {
+    // ids scrambled by a coprime stride; the cycle's root (its max id, 40)
+    // reaches its farthest member in 40 backward hops, past
+    // sccFrontierCap, so the frontier search caps and the backward
+    // coloring finishes it.
+    // A 2-cycle hangs off the cycle, a tail leads in, and a tail leads out
+    // of the 2-cycle: the trim peels both tails.
+    val n = 41
+    val ids = (0 until n).map(i => (i * 7 % n).toLong)
+    val edges = (0 until n).map(i => (ids(i), ids((i + 1) % n))) ++
+      Seq((40L, 100L), (100L, 101L), (101L, 100L), (101L, 102L), (102L, 103L), (200L, 0L))
+    val nf = NetworkFrame((ids ++ Seq(100L, 101L, 102L, 103L, 200L)).toDF("id"),
+      edges.toDF("source", "target"))
+    val want = GraphAlgorithms.strongComponentLabels(nf)
+    assertSameFrame(GraphAlgorithms.sccFixpoint(nf), want)
+    assertSameFrame(GraphAlgorithms.sccFixpoint(nf, doublingAfter = 1), want)
+  }
+
   /** `genComponentGraph` edges with a weight in {0, 0.25, 0.5, 0.75}
     * (exact in binary, so the cent quantization is exact; many ties) and a
     * timestamp in 0..3 (many equal times), both derived from the endpoints

@@ -100,11 +100,11 @@ class Round4Spec extends AnyFunSuite with SparkFixture {
 
   test("SCC coloring doubling path closes a long scrambled cycle correctly") {
     // a directed 12-cycle with ids scrambled by a coprime stride: plain
-    // max-color propagation needs ~11 rounds, so with doublingAfter=4 both
-    // the forward and backward fixpoints cross the threshold and exercise
-    // the doubling branch (scrambled ids make color(v) point away from v,
-    // so the hop genuinely compresses); the whole cycle is ONE SCC labeled
-    // by its min id
+    // max-color propagation needs ~11 rounds, so with doublingAfter=4 the
+    // forward coloring crosses the threshold and exercises the doubling
+    // branch (scrambled ids make color(v) point away from v, so the hop
+    // genuinely compresses); the backward search (depth 11) stays under
+    // sccFrontierCap. The whole cycle is ONE SCC labeled by its min id
     val n = 12
     val ids = (0 until n).map(i => ((i * 7) % n).toLong)
     val nodes = ids.toDF("id")
