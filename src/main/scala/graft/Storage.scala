@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 
 /** Bucketed at-rest layout for NetworkFrames — the 100 TB deployment story
   * (SCALE.md): edges bucketed by `source` (and optionally a mirrored copy
@@ -11,30 +12,46 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Spark bucketing requires table-managed storage (`saveAsTable`); tables
   * land in the session's warehouse dir.
+  *
+  * Both writers shuffle the frame once before writing, so that each task
+  * holds whole buckets (or cells) and every bucket (or cell) is one file.
+  * Without it every input task writes its own file into every bucket it
+  * holds: input tasks × buckets files, which the write pays per file and
+  * every later scan pays per file opened.
   */
 object Storage {
 
   /** Persist bucketed: `<name>_nodes` bucketed by id, `<name>_edges`
     * bucketed by source, plus `<name>_edges_bytarget` when `mirror` —
     * the two-sided layout that kills the shuffle on whichever endpoint a
-    * join needs.
+    * join needs. Each table holds one file per non-empty bucket.
     */
   def writeBucketed(nf: NetworkFrame, name: String, buckets: Int = 32,
                     mirror: Boolean = false): Unit = {
     val spark = nf.nodes.sparkSession
+    val catalog = spark.sessionState.catalog
+    val writers = math.min(buckets, spark.sessionState.conf.numShufflePartitions)
     def writeTable(df: DataFrame, table: String, key: String): Unit = {
       // A fresh session's in-memory catalog knows nothing about a warehouse
       // dir left behind by a previous JVM; saveAsTable would then fail with
       // LOCATION_ALREADY_EXISTS. Drop both the catalog entry and the stale
-      // physical location before writing.
-      spark.sql(s"DROP TABLE IF EXISTS `$table`")
-      val warehouse = new org.apache.hadoop.fs.Path(
-        spark.sessionState.conf.warehousePath, table.toLowerCase)
-      val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(warehouse)) fs.delete(warehouse, true)
-      df.write.mode(SaveMode.Overwrite)
+      // physical location before writing, both in the table's own database:
+      // the current one unless the name qualifies it.
+      val parsed = spark.sessionState.sqlParser.parseTableIdentifier(table)
+      val ident = parsed.copy(database = parsed.database.orElse(Some(catalog.getCurrentDatabase)))
+      catalog.dropTable(ident, ignoreIfNotExists = true, purge = false)
+      val location = new org.apache.hadoop.fs.Path(catalog.defaultTablePath(ident))
+      val fs = location.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(location)) fs.delete(location, true)
+      // Partition on the bucket id the writer itself computes
+      // (HashPartitioning's partitionIdExpression), so each task holds whole
+      // buckets and writes one file per bucket. No more writers than shuffle
+      // partitions: the cost is per task as well as per file, and a few
+      // tasks writing several buckets each beat one task per bucket.
+      df.repartition(writers, pmod(hash(col(key)), lit(buckets)))
+        .write.mode(SaveMode.Overwrite)
         .bucketBy(buckets, key).sortBy(key)
-        .format("parquet").saveAsTable(table)
+        .format("parquet").saveAsTable(ident.quotedString)
     }
     writeTable(nf.nodes, s"${name}_nodes", "id")
     writeTable(nf.edges, s"${name}_edges", "source")
@@ -56,17 +73,18 @@ object Storage {
     * cell column, so an ANN probe of cell c is a partition-pruned scan that
     * never touches the other cells' files (SCALE.md "store the corpus
     * partitioned by cell"). Plain directory-partitioned parquet — no
-    * catalog dependency.
+    * catalog dependency. Partitioned on the cell first, so each cell
+    * directory holds one file.
     */
   def writeCellPartitioned(df: DataFrame, path: String, cellCol: String): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(cellCol).parquet(path)
+    df.repartition(col(cellCol)).write.mode(SaveMode.Overwrite).partitionBy(cellCol).parquet(path)
 
   /** Scan a single IVF cell; the filter prunes at the partition level
     * (verify via PartitionFilters in the scan node).
     */
   def readCell(spark: SparkSession, path: String, cellCol: String,
                cell: Any): DataFrame =
-    spark.read.parquet(path).filter(org.apache.spark.sql.functions.col(cellCol) === cell)
+    spark.read.parquet(path).filter(col(cellCol) === cell)
 
   /** Z-order (Morton) key: interleave the low `bits` bits of two
     * non-negative integer dimensions — sort/range-partition by this and
@@ -78,7 +96,7 @@ object Storage {
     */
   def zorderKey(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column,
                 bits: Int = 8): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{lit, shiftright}
+    import org.apache.spark.sql.functions.shiftright
     (0 until bits).map { j =>
       shiftright(x.cast("long"), j).bitwiseAND(lit(1L)) * lit(1L << (2 * j)) +
       shiftright(y.cast("long"), j).bitwiseAND(lit(1L)) * lit(1L << (2 * j + 1))
