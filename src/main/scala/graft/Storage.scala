@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import org.apache.spark.sql.functions.col
 
 /** Bucketed at-rest layout for NetworkFrames — the 100 TB deployment story
   * (SCALE.md): edges bucketed by `source` (and optionally a mirrored copy
@@ -13,11 +13,13 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod}
   * Spark bucketing requires table-managed storage (`saveAsTable`); tables
   * land in the session's warehouse dir.
   *
-  * Both writers shuffle the frame once before writing, so that each task
-  * holds whole buckets (or cells) and every bucket (or cell) is one file.
-  * Without it every input task writes its own file into every bucket it
-  * holds: input tasks × buckets files, which the write pays per file and
-  * every later scan pays per file opened.
+  * `writeBucketed` shuffles the frame once before writing, so that each
+  * task holds whole buckets and every bucket is one file. Without it every
+  * input task writes its own file into every bucket it holds: input tasks ×
+  * buckets files, which the write pays per file and every later scan pays
+  * per file opened. The price is the exchange, and a write parallelism of
+  * min(buckets, shuffle partitions) tasks whatever the input size, so
+  * `buckets` must grow with the table.
   */
 object Storage {
 
@@ -39,16 +41,17 @@ object Storage {
       // the current one unless the name qualifies it.
       val parsed = spark.sessionState.sqlParser.parseTableIdentifier(table)
       val ident = parsed.copy(database = parsed.database.orElse(Some(catalog.getCurrentDatabase)))
-      catalog.dropTable(ident, ignoreIfNotExists = true, purge = false)
+      spark.sql(s"DROP TABLE IF EXISTS ${ident.quotedString}")
       val location = new org.apache.hadoop.fs.Path(catalog.defaultTablePath(ident))
       val fs = location.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(location)) fs.delete(location, true)
-      // Partition on the bucket id the writer itself computes
-      // (HashPartitioning's partitionIdExpression), so each task holds whole
-      // buckets and writes one file per bucket. No more writers than shuffle
-      // partitions: the cost is per task as well as per file, and a few
-      // tasks writing several buckets each beat one task per bucket.
-      df.repartition(writers, pmod(hash(col(key)), lit(buckets)))
+      // Partition i of a hash repartition into `buckets` on the key is
+      // exactly bucket i (the writer uses the same partitionIdExpression);
+      // coalescing then hands each task whole buckets, one file each. No
+      // more writers than shuffle partitions: the cost is per task as well
+      // as per file, and a few tasks writing several buckets each beat one
+      // task per bucket.
+      df.repartition(buckets, col(key)).coalesce(writers)
         .write.mode(SaveMode.Overwrite)
         .bucketBy(buckets, key).sortBy(key)
         .format("parquet").saveAsTable(ident.quotedString)
@@ -73,18 +76,17 @@ object Storage {
     * cell column, so an ANN probe of cell c is a partition-pruned scan that
     * never touches the other cells' files (SCALE.md "store the corpus
     * partitioned by cell"). Plain directory-partitioned parquet — no
-    * catalog dependency. Partitioned on the cell first, so each cell
-    * directory holds one file.
+    * catalog dependency.
     */
   def writeCellPartitioned(df: DataFrame, path: String, cellCol: String): Unit =
-    df.repartition(col(cellCol)).write.mode(SaveMode.Overwrite).partitionBy(cellCol).parquet(path)
+    df.write.mode(SaveMode.Overwrite).partitionBy(cellCol).parquet(path)
 
   /** Scan a single IVF cell; the filter prunes at the partition level
     * (verify via PartitionFilters in the scan node).
     */
   def readCell(spark: SparkSession, path: String, cellCol: String,
                cell: Any): DataFrame =
-    spark.read.parquet(path).filter(col(cellCol) === cell)
+    spark.read.parquet(path).filter(org.apache.spark.sql.functions.col(cellCol) === cell)
 
   /** Z-order (Morton) key: interleave the low `bits` bits of two
     * non-negative integer dimensions — sort/range-partition by this and
@@ -96,7 +98,7 @@ object Storage {
     */
   def zorderKey(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column,
                 bits: Int = 8): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.shiftright
+    import org.apache.spark.sql.functions.{lit, shiftright}
     (0 until bits).map { j =>
       shiftright(x.cast("long"), j).bitwiseAND(lit(1L)) * lit(1L << (2 * j)) +
       shiftright(y.cast("long"), j).bitwiseAND(lit(1L)) * lit(1L << (2 * j + 1))

@@ -8,8 +8,6 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 class StorageSpec extends AnyFunSuite with SparkFixture {
-  import spark.implicits._
-
   private def metadata(table: String) =
     spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
 
@@ -62,20 +60,6 @@ class StorageSpec extends AnyFunSuite with SparkFixture {
     } finally {
       spark.catalog.setCurrentDatabase("default")
       spark.sql("DROP DATABASE IF EXISTS graft_spec_other CASCADE")
-    }
-  }
-
-  test("cell-partitioned storage writes one file per cell") {
-    val emb = (0 until 60).map(i => (i.toLong, Array(i.toFloat), i % 3))
-      .toDF("vec_id", "embedding", "label").repartition(4)
-    val path = java.nio.file.Files.createTempDirectory("graft_cells").toString + "/emb"
-    Storage.writeCellPartitioned(emb, path, "label")
-    val cells = new File(path).listFiles().filter(_.getName.startsWith("label="))
-    assert(cells.map(_.getName).sorted.toSeq == Seq("label=0", "label=1", "label=2"))
-    cells.foreach(c => assert(c.listFiles().count(_.getName.endsWith(".parquet")) == 1, c.getName))
-    for (c <- 0 until 3) {
-      val ids = Storage.readCell(spark, path, "label", c).select("vec_id").as[Long].collect()
-      assert(ids.sorted.toSeq == (c until 60 by 3).map(_.toLong))
     }
   }
 }
