@@ -18,8 +18,18 @@ import org.apache.spark.sql.functions.col
   * input task writes its own file into every bucket it holds: input tasks ×
   * buckets files, which the write pays per file and every later scan pays
   * per file opened. The price is the exchange, and a write parallelism of
-  * min(buckets, shuffle partitions) tasks whatever the input size, so
-  * `buckets` must grow with the table.
+  * min(buckets, shuffle partitions) tasks whatever the input size.
+  *
+  * The default bucket count is the session's shuffle partition count
+  * (`spark.sql.shuffle.partitions`, or AQE's initial partition number when
+  * set). A sort-merge join or aggregation aligns every shuffled side to
+  * max(buckets, shuffle partitions) partitions: with fewer buckets Spark
+  * re-shuffles the bucketed side, with more every other side is shuffled
+  * again to the bucket count after its own aggregation. Only equal counts
+  * shuffle each side at most once. A count derived from the plan's size
+  * estimate would not hold that (join estimates multiply), and measuring the
+  * frame costs a pass over it. The trade: a session with thousands of
+  * shuffle partitions writes even a small frame as that many files.
   */
 object Storage {
 
@@ -27,12 +37,18 @@ object Storage {
     * bucketed by source, plus `<name>_edges_bytarget` when `mirror` —
     * the two-sided layout that kills the shuffle on whichever endpoint a
     * join needs. Each table holds one file per non-empty bucket.
+    * `buckets` = 0 (the default) buckets at the session's shuffle partition
+    * count.
     */
-  def writeBucketed(nf: NetworkFrame, name: String, buckets: Int = 32,
+  def writeBucketed(nf: NetworkFrame, name: String, buckets: Int = 0,
                     mirror: Boolean = false): Unit = {
+    require(buckets >= 0,
+      s"buckets must be positive, or 0 for the session's shuffle partition count (got $buckets)")
     val spark = nf.nodes.sparkSession
     val catalog = spark.sessionState.catalog
-    val writers = math.min(buckets, spark.sessionState.conf.numShufflePartitions)
+    val partitions = spark.sessionState.conf.numShufflePartitions
+    val numBuckets = if (buckets == 0) partitions else buckets
+    val writers = math.min(numBuckets, partitions)
     def writeTable(df: DataFrame, table: String, key: String): Unit = {
       // A fresh session's in-memory catalog knows nothing about a warehouse
       // dir left behind by a previous JVM; saveAsTable would then fail with
@@ -45,15 +61,15 @@ object Storage {
       val location = new org.apache.hadoop.fs.Path(catalog.defaultTablePath(ident))
       val fs = location.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(location)) fs.delete(location, true)
-      // Partition i of a hash repartition into `buckets` on the key is
+      // Partition i of a hash repartition into `numBuckets` on the key is
       // exactly bucket i (the writer uses the same partitionIdExpression);
       // coalescing then hands each task whole buckets, one file each. No
       // more writers than shuffle partitions: the cost is per task as well
       // as per file, and a few tasks writing several buckets each beat one
       // task per bucket.
-      df.repartition(buckets, col(key)).coalesce(writers)
+      df.repartition(numBuckets, col(key)).coalesce(writers)
         .write.mode(SaveMode.Overwrite)
-        .bucketBy(buckets, key).sortBy(key)
+        .bucketBy(numBuckets, key).sortBy(key)
         .format("parquet").saveAsTable(ident.quotedString)
     }
     writeTable(nf.nodes, s"${name}_nodes", "id")

@@ -97,16 +97,16 @@ object Dedup {
                    shingleLen: Int = 3): Column = {
     require(numHashes <= 16, "numHashes must be <= 16 (int64 overflow bound)")
     val sh = TextAnalysis.shingles(text, shingleLen)
-    val xy = transform(sh, s => {
-      val m = md5(s)
-      struct(
-        (conv(substring(m, 1, 15), 16, 10).cast("long") % HashModulus).as("x"),
-        (conv(substring(m, 17, 15), 16, 10).cast("long") % HashModulus).as("y"))
-    })
-    val arr = array((0 until numHashes).map(h =>
-      array_min(transform(xy, p =>
-        (p.getField("x") + lit(h.toLong) * p.getField("y")) % HashModulus))): _*)
-    when(size(sh) > 0, arr)
+    // Higher-order functions share no subexpressions: a digest used in
+    // several of them is computed once per use. So md5 appears once, and one
+    // fold over the (x, y) pairs keeps all numHashes minima.
+    val xy = transform(transform(sh, md5(_)), m => struct(
+      (conv(substring(m, 1, 15), 16, 10).cast("long") % HashModulus).as("x"),
+      (conv(substring(m, 17, 15), 16, 10).cast("long") % HashModulus).as("y")))
+    val sig = aggregate(xy, array(Seq.fill(numHashes)(lit(Long.MaxValue)): _*),
+      (acc, p) => array((0 until numHashes).map(h => least(acc.getItem(h),
+        (p.getField("x") + lit(h.toLong) * p.getField("y")) % HashModulus)): _*))
+    when(size(sh) > 0, sig)
   }
 
   /** LSH band buckets from an in-row signature array: (band, bucket) structs

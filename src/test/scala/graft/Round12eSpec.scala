@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Md5
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -34,6 +35,11 @@ class Round12eSpec extends AnyFunSuite with SparkFixture {
     // the short doc produces NULL in-row and no rows in the exploded form
     assert(fixture.select(Dedup.minhashArray(col("text"), 16, 3).as("s"))
       .filter(col("s").isNull).count() == 1)
+  }
+
+  test("minhashArray hashes each shingle once") {
+    val plan = fixture.select(Dedup.minhashArray(col("text"), 16, 3)).queryExecution.analyzed
+    assert(plan.flatMap(_.expressions.flatMap(_.collect { case m: Md5 => m })).size == 1)
   }
 
   test("lshBandArray matches lshBucketsFromSignatures digest for digest") {
