@@ -5,13 +5,14 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{LongDot, NfcNormalize}
 
-/** Canonical plugin wiring for the graft-native Catalyst expressions: set
-  * `spark.sql.extensions=graft.GraftExtensions` and `graft_long_dot` /
-  * `graft_nfc` resolve in ANY session of the application — SQL strings,
-  * views, thrift-server clients — without per-session `register` calls.
-  * (The `LongDot.register`/`NfcNormalize.register` helpers remain for
-  * ad-hoc sessions; this is the deployment-grade path a 100 TB cluster
-  * config uses.)
+/** Canonical plugin wiring for the graft-native Catalyst expressions in
+  * SQL TEXT: set `spark.sql.extensions=graft.GraftExtensions` and
+  * `graft_long_dot` / `graft_nfc` resolve by name in ANY session of the
+  * application — SQL strings, views, thrift-server clients — without
+  * per-session `register` calls. (The `LongDot.register` /
+  * `NfcNormalize.register` helpers do the same for one ad-hoc session.)
+  * The DataFrame API needs neither: `Similarity.dotLong` builds its
+  * expression directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions.requireArity

@@ -1638,7 +1638,6 @@ FROM exact LEFT JOIN mined USING (qid)""")),
     // per-vector quantized squared norm + corpus norm profile: the sanity
     // scan run before any index build (map-only pass + one tiny rollup)
     ("q_embed_norms", (s, dir) => {
-      graft.functions.LongDot.register(s)
       val qv = Similarity.quantize(col("embedding"))
       emb(s, dir)
         .select(col("label"), Similarity.dotLong(qv, qv).as("n2"))

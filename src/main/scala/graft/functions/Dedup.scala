@@ -251,30 +251,40 @@ object Dedup {
 
   /** SimHash near-dup pairs with EXACT recall for `maxHamming <= 3`: by
     * pigeonhole, two 32-bit fingerprints within Hamming distance 3 must
-    * agree on at least one of their four 8-bit blocks, so the block join
-    * finds every such pair while only ever joining colliding blocks (shuffle
-    * key = (block index, block value) — never the O(n^2) pair space). The
-    * exact Hamming distance then filters candidates. For larger radii,
-    * raise the block count (maxHamming+1 blocks preserve exactness).
+    * agree on at least one of their four 8-bit blocks — the
+    * [[hammingBlockPairs]] join over the checkpointed fingerprints. For
+    * larger radii, raise the block count (maxHamming+1 blocks preserve
+    * exactness).
     */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4 blocks guarantee exact recall only to distance 3")
     // fingerprints feed both candidate sides and the final distance check
-    val sh = simhash(df, idCol, textCol).localCheckpointCapped()
-    val blocks = sh.select(col("id"),
-        explode(sequence(lit(0), lit(3))).as("b"), col("simhash"))
-      // floor/pow block extraction mirrors the oracle exactly (simhash < 2^32)
-      .withColumn("blk",
-        floor(col("simhash") / pow(lit(2), col("b") * 8)).cast("long") % 256)
+    val sh = simhash(df, idCol, textCol).withColumnRenamed("simhash", "hash")
+      .localCheckpointCapped()
+    hammingBlockPairs(sh, 4, maxHamming)
+  }
+
+  /** The pigeonhole Hamming block join over (id, hash), hash < 2^(8 *
+    * blocks) read as unsigned: two hashes within distance `maxHamming` <
+    * `blocks` agree on at least one of their `blocks` 8-bit blocks, so the
+    * self-join on (block index, block value) finds every such pair while
+    * only joining colliding blocks (shuffle key = (block index, block
+    * value) — never the O(n^2) pair space). The exact Hamming distance
+    * then filters the distinct candidates. Output: (id_a < id_b, hamming).
+    */
+  private[graft] def hammingBlockPairs(h: DataFrame, blocks: Int,
+                                       maxHamming: Int): DataFrame = {
+    val bl = h.select(col("id"), explode(sequence(lit(0), lit(blocks - 1))).as("b"), col("hash"))
+      .withColumn("blk", expr("shiftrightunsigned(hash, b * 8) & 255"))
       .select("id", "b", "blk")
-    val cand = blocks.as("x").join(blocks.as("y"),
+    val cand = bl.as("x").join(bl.as("y"),
         col("x.b") === col("y.b") && col("x.blk") === col("y.blk") &&
           col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
     cand
-      .join(sh.select(col("id").as("id_a"), col("simhash").as("ha")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("simhash").as("hb")), Seq("id_b"))
+      .join(h.select(col("id").as("id_a"), col("hash").as("ha")), Seq("id_a"))
+      .join(h.select(col("id").as("id_b"), col("hash").as("hb")), Seq("id_b"))
       .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int"))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")

@@ -60,7 +60,10 @@ case class LongDot(left: Expression, right: Expression)
 }
 
 object LongDot {
-  /** Idempotent per-session registration so `call_function` can resolve it. */
+  /** Idempotent per-session registration, so SQL text (and
+    * `call_function`) can resolve `graft_long_dot` by name. The DataFrame
+    * API needs none: `Similarity.dotLong` builds the expression directly.
+    */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_long_dot", exprs => LongDot(exprs(0), exprs(1)), "built-in")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftext.CappedCheckpoint._
+import org.apache.spark.sql.graftext.ExpressionColumns
 
 /** Approximate-nearest-neighbor search over an `ARRAY<FLOAT>` embedding
   * column. Brute-force cosine top-k is the exactness baseline (quadratic in
@@ -45,15 +46,13 @@ object Similarity {
   def quantize(vec: Column): Column =
     transform(vec, x => floor(x.cast("double") * lit(QuantScale)).cast("long"))
 
-  /** Exact integer dot product of two quantized vectors — the codegen'd
-    * LongDot expression (requires LongDot.register on the session, done by
-    * `quantized`). Portable HOF fallback: `dotLongHof`.
+  /** Exact integer dot product of two quantized vectors: the codegen'd
+    * [[LongDot]] expression, built directly, so it resolves in any session
+    * without registration.
     */
-  def dotLong(a: Column, b: Column): Column = call_function("graft_long_dot", a, b)
-
-  /** Higher-order-function fallback (no registration needed; interpreted). */
-  def dotLongHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
+  def dotLong(a: Column, b: Column): Column =
+    ExpressionColumns.column(LongDot(ExpressionColumns.expression(a),
+      ExpressionColumns.expression(b)))
 
   /** Cosine from a precomputed quantized-pair + squared norms, zero-norm
     * safe EVERYWHERE (round-15 verdict #4 unification): a zero-norm vector
@@ -73,35 +72,54 @@ object Similarity {
       .otherwise(dot.cast("double") /
         (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double"))))
 
-  /** Alias kept for the residual-channel call sites that were written
-    * against the explicitly-safe name; same function since the
-    * unification.
-    */
-  private def cosineFromSafe(dot: Column, n2a: Column, n2b: Column): Column =
-    cosineFrom(dot, n2a, n2b)
-
   /** Cosine similarity of two float vectors (convenience form; for bulk
     * workloads use the precomputed-quantized path the operators below take).
     */
   def cosine(a: Column, b: Column): Column = {
     val (qa, qb) = (quantize(a), quantize(b))
-    cosineFrom(dotLongHof(qa, qb), dotLongHof(qa, qa), dotLongHof(qb, qb))
+    cosineFrom(dotLong(qa, qb), dotLong(qa, qa), dotLong(qb, qb))
   }
 
-  /** (id, qv, n2): quantized vector + squared norm, computed once per row.
-    * The repartition is a deliberate materialization barrier: without it
-    * Catalyst collapses the quantize projection into the downstream
-    * (nested-loop) pair join and re-evaluates it per PAIR instead of per row
-    * (measured: 640s -> seconds at 125k pairs). An exchange boundary forces
-    * the projection to run exactly once per input row — and is exactly the
-    * layout a cluster run wants anyway.
+  /** (id, qv, extra..., n2): quantized vector + squared norm, computed once
+    * per row — the one corpus builder every operator starts from. Callers
+    * add their own barrier ([[quantized]]'s repartition or a checkpoint).
     */
-  private def quantized(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    LongDot.register(df.sparkSession)
-    df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
+  private def quantizedRows(df: DataFrame, idCol: String, vecCol: String,
+                            extra: Column*): DataFrame =
+    df.select(col(idCol).as("id") +: quantize(col(vecCol)).as("qv") +: extra: _*)
       .withColumn("n2", dotLong(col("qv"), col("qv")))
-      .repartition(col("id"))
-  }
+
+  /** [[quantizedRows]] behind a repartition on id. The repartition is a
+    * deliberate materialization barrier: without it Catalyst collapses the
+    * quantize projection into the downstream (nested-loop) pair join and
+    * re-evaluates it per PAIR instead of per row (measured: 640s -> seconds
+    * at 125k pairs). An exchange boundary forces the projection to run
+    * exactly once per input row — and is exactly the layout a cluster run
+    * wants anyway.
+    */
+  private def quantized(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    quantizedRows(df, idCol, vecCol).repartition(col("id"))
+
+  /** One end of a scored pair: `q`'s (id, qv, n2) as (`key`, v`s`, n`s`),
+    * plus the `keep` columns after the key. [[pairSim]] reads ends "a" and
+    * "b".
+    */
+  private def pairEnd(q: DataFrame, key: String, s: String, keep: String*): DataFrame =
+    q.select((col("id").as(key) +: keep.map(col)) ++
+      Seq(col("qv").as("v" + s), col("n2").as("n" + s)): _*)
+
+  /** Exact cosine between the "a" and "b" [[pairEnd]]s of a joined pair. */
+  private def pairSim: Column = cosineFrom(dotLong(col("va"), col("vb")), col("na"), col("nb"))
+
+  /** The pair scorer: (`a`, `b`, sim) for each candidate pair of `cand`,
+    * end `a`'s vector joined from `qa` and end `b`'s from `qb` on their
+    * ids. `cand` must hold each pair once: a duplicate is scored, and
+    * ranked, twice.
+    */
+  private def scorePairs(cand: DataFrame, qa: DataFrame, qb: DataFrame,
+                         a: String = "qid", b: String = "nid"): DataFrame =
+    cand.join(pairEnd(qa, a, "a"), Seq(a)).join(pairEnd(qb, b, "b"), Seq(b))
+      .select(col(a), col(b), pairSim.as("sim"))
 
   /** All sign-band buckets of a vector: array of (band, bucket) structs,
     * band b covering dims [b*bits, (b+1)*bits). The banded (OR-amplified)
@@ -145,12 +163,10 @@ object Similarity {
                          minSim: Double, numBands: Int = 16,
                          bandBits: Int = 4, window: Int = 8): DataFrame = {
     require(window >= 1, "window must be >= 1")
-    LongDot.register(df.sparkSession)
     // quantized vectors + band buckets feed three subtrees (both candidate
     // sides and both vector joins) — materialize once
-    val q = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"),
+    val q = quantizedRows(df, idCol, vecCol,
         signLshBandBuckets(col(vecCol), numBands, bandBits).as("bb"))
-      .withColumn("n2", dotLong(col("qv"), col("qv")))
       .repartition(col("id"))
       .localCheckpointCapped()
     val ranked = lshRanked(q)
@@ -159,13 +175,16 @@ object Similarity {
           col("y.rk") > col("x.rk") && col("y.rk") <= col("x.rk") + window)
       .select(least(col("x.id"), col("y.id")).as("id_a"),
         greatest(col("x.id"), col("y.id")).as("id_b")).distinct()
-    cand
-      .join(q.select(col("id").as("id_a"), col("qv").as("va"), col("n2").as("na")), Seq("id_a"))
-      .join(q.select(col("id").as("id_b"), col("qv").as("vb"), col("n2").as("nb")), Seq("id_b"))
-      .withColumn("sim", cosineFrom(dotLong(col("va"), col("vb")), col("na"), col("nb")))
+    nearDupAbove(cand, q, minSim)
+  }
+
+  /** Candidate pairs (id_a, id_b) scored against `q`, kept at cosine >=
+    * minSim, sim rounded to 6 decimals.
+    */
+  private def nearDupAbove(cand: DataFrame, q: DataFrame, minSim: Double): DataFrame =
+    scorePairs(cand, q, q, "id_a", "id_b")
       .filter(col("sim") >= minSim)
       .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
-  }
 
   /** (id, band, bucket, rk): exploded band buckets with the per-band
     * deterministic shuffle rank — rk orders bucket members by
@@ -236,14 +255,12 @@ object Similarity {
     val q = quantized(df, idCol, vecCol).localCheckpointCapped()
     val n = q.count()
     val m = math.max(1L, n / anchorCap)
-    val anchors = q.filter(col("id") % m === 0)
-      .select(col("id").as("aid"), col("qv").as("va"), col("n2").as("na"))
+    val anchors = pairEnd(q.filter(col("id") % m === 0), "aid", "a")
     assertStratum(anchors.count(), n, anchorCap, "cosineNearDupPairsAnchored")
-    q.select(col("id").as("bid"), col("qv").as("vb"), col("n2").as("nb"))
+    pairEnd(q, "bid", "b")
       .crossJoin(broadcast(anchors))
       .filter(col("aid") =!= col("bid"))
-      .withColumn("sim", cosineFrom(dotLong(col("va"), col("vb")),
-        col("na"), col("nb")))
+      .withColumn("sim", pairSim)
       .filter(col("sim") >= minSim)
       .select(least(col("aid"), col("bid")).as("id_a"),
         greatest(col("aid"), col("bid")).as("id_b"),
@@ -260,10 +277,8 @@ object Similarity {
   def cosineNearDupPairsExact(df: DataFrame, idCol: String, vecCol: String,
                               minSim: Double): DataFrame = {
     val q = quantized(df, idCol, vecCol)
-    q.select(col("id").as("id_a"), col("qv").as("va"), col("n2").as("na"))
-      .join(q.select(col("id").as("id_b"), col("qv").as("vb"), col("n2").as("nb")),
-        col("id_a") < col("id_b"))
-      .withColumn("sim", cosineFrom(dotLong(col("va"), col("vb")), col("na"), col("nb")))
+    pairEnd(q, "id_a", "a").join(pairEnd(q, "id_b", "b"), col("id_a") < col("id_b"))
+      .withColumn("sim", pairSim)
       .filter(col("sim") >= minSim)
       .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
   }
@@ -288,22 +303,13 @@ object Similarity {
     */
   def cellScopedNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                              minSim: Double, probe: Int = CellProbe): DataFrame = {
-    LongDot.register(df.sparkSession)
-    val q = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
-      .withColumn("n2", dotLong(col("qv"), col("qv")))
-      .localCheckpointCapped()
+    val q = quantizedRows(df, idCol, vecCol).localCheckpointCapped()
     val asg = kmvAssignFromQuantized(q, probe).localCheckpointCapped()
     val cand = asg.as("a").join(asg.as("b"),
         col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct() // a pair may share more than one probed cell
-    cand
-      .join(q.select(col("id").as("id_a"), col("qv").as("va"), col("n2").as("na")), Seq("id_a"))
-      .join(q.select(col("id").as("id_b"), col("qv").as("vb"), col("n2").as("nb")), Seq("id_b"))
-      .withColumn("sim", cosineFrom(dotLong(col("va"), col("vb")),
-        col("na"), col("nb")))
-      .filter(col("sim") >= minSim)
-      .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
+    nearDupAbove(cand, q, minSim)
   }
 
   /** KMV-seeded cell assignment — the coarse quantizer behind
@@ -316,13 +322,8 @@ object Similarity {
     * id; at probe=1 this is a functional cell membership.
     */
   def kmvCellAssign(df: DataFrame, idCol: String, vecCol: String,
-                    probe: Int = 1): DataFrame = {
-    LongDot.register(df.sparkSession)
-    val q = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
-      .withColumn("n2", dotLong(col("qv"), col("qv")))
-      .localCheckpointCapped()
-    kmvAssignFromQuantized(q, probe)
-  }
+                    probe: Int = 1): DataFrame =
+    kmvAssignFromQuantized(quantizedRows(df, idCol, vecCol).localCheckpointCapped(), probe)
 
   /** Assignment core over an already-quantized (id, qv, n2) frame, so
     * [[cellScopedNearDupPairs]] reuses its verification checkpoint.
@@ -336,25 +337,46 @@ object Similarity {
   private def kmvAssignFromQuantized(q: DataFrame, probe: Int,
                                      salt: Int = 0): DataFrame = {
     require(probe >= 1, "probe at least the nearest cell")
-    // seed count scales with the corpus: one cheap count on the checkpoint
-    val n = q.count()
-    val k = math.max(1, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val hash = if (salt == 0) md5(col("id").cast("string"))
-      else md5(concat(col("id").cast("string"), lit("#" + salt)))
-    val seeds = q.withColumn("m", hash)
-      .orderBy("m", "id").limit(k) // distributed TakeOrdered, no global window
-      .select(col("id").as("sid"), col("qv").as("sv"), col("n2").as("sn2"))
     // multi-probe: each vector lists its `probe` nearest cells, so pairs
     // split by one cell boundary are still candidates via the second cell
     // (candidate space scales by ~probe^2 — still n^1.5 in shape)
-    q.crossJoin(broadcast(seeds))
-      .withColumn("csim", cosineFrom(dotLong(col("qv"), col("sv")),
-        col("n2"), col("sn2")))
-      .withColumn("arn", row_number().over(
-        Window.partitionBy("id").orderBy(desc("csim"), asc("sid"))))
-      .filter(col("arn") <= probe)
-      .select(col("id"), col("sid").as("cell"))
+    nearestCells(q, sqrtSeeds(q, if (salt == 0) "" else "#" + salt), probe)
   }
+
+  /** The KMV seed draw: the `k` rows of `q` (id, qv, n2) with the smallest
+    * (md5(id || salt), id), as a broadcastable (sid, cv, cn2) table — each
+    * seed is the center of its cell.
+    */
+  private def kmvSeeds(q: DataFrame, k: Int, salt: String = ""): DataFrame = {
+    val key = if (salt.isEmpty) col("id").cast("string")
+      else concat(col("id").cast("string"), lit(salt))
+    q.withColumn("m", md5(key))
+      .orderBy("m", "id").limit(k) // distributed TakeOrdered, no global window
+      .select(col("id").as("sid"), col("qv").as("cv"), col("n2").as("cn2"))
+  }
+
+  /** [[kmvSeeds]] at ceil(sqrt(n)) seeds: the count scales with the corpus
+    * (one cheap count on the checkpoint).
+    */
+  private def sqrtSeeds(q: DataFrame, salt: String = ""): DataFrame =
+    kmvSeeds(q, math.max(1, math.ceil(math.sqrt(q.count().toDouble)).toInt), salt)
+
+  /** The nearest-k ranker: every row of `rows` (key, qv, n2, ...) against
+    * the broadcast centroid table `cents` (tid, cv, cn2), keeping its `p`
+    * highest-cosine entries (ties: smaller tid) as rank `rn`. Codegen'd
+    * integer dots, map-side; one window per row key.
+    */
+  private def nearestK(rows: DataFrame, key: String, cents: DataFrame,
+                       tid: String, p: Int): DataFrame =
+    rows.crossJoin(broadcast(cents))
+      .withColumn("csim", cosineFrom(dotLong(col("qv"), col("cv")), col("n2"), col("cn2")))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(key).orderBy(desc("csim"), asc(tid))))
+      .filter(col("rn") <= p)
+
+  /** (id, cell): each row of `q` in its `p` nearest seed cells. */
+  private def nearestCells(q: DataFrame, seeds: DataFrame, p: Int): DataFrame =
+    nearestK(q, "id", seeds, "sid", p).select(col("id"), col("sid").as("cell"))
 
   /** Salted two-phase top-k over a scored (query_id, neighbor_id, sim)
     * frame: a partial top-k inside (query_id, neighbor_id % SaltWidth)
@@ -371,17 +393,20 @@ object Similarity {
   private val SaltWidth = 32
 
   private def topKByQuery(scored: DataFrame, k: Int): DataFrame = {
-    val w1 = Window.partitionBy("query_id", "salt")
-      .orderBy(desc("sim"), asc("neighbor_id"))
-    val partial = scored
-      .withColumn("salt", pmod(col("neighbor_id"), lit(SaltWidth)))
-      .withColumn("prank", row_number().over(w1))
-      .filter(col("prank") <= k)
-      .drop("salt", "prank")
-    val w2 = Window.partitionBy("query_id").orderBy(desc("sim"), asc("neighbor_id"))
-    partial.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
+    val partial = rankTopK(
+        scored.withColumn("salt", pmod(col("neighbor_id"), lit(SaltWidth))),
+        k, "neighbor_id", "query_id", "salt")
+      .drop("salt", "rank")
+    rankTopK(partial, k, "neighbor_id", "query_id")
   }
+
+  /** Rows of a scored frame ranked `rank` by (sim desc, `nbr`) within each
+    * `by` group; the top k kept.
+    */
+  private def rankTopK(scored: DataFrame, k: Int, nbr: String, by: String*): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(by.map(col): _*).orderBy(desc("sim"), asc(nbr))))
+      .filter(col("rank") <= k)
 
   /** Brute-force cosine top-k: for each query row, the k nearest candidates
     * (self excluded), ranked desc by similarity with id tie-break. The
@@ -390,13 +415,10 @@ object Similarity {
     */
   def bruteForceTopK(queries: DataFrame, candidates: DataFrame,
                      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = quantized(queries, idCol, vecCol)
-      .select(col("id").as("query_id"), col("qv").as("qa"), col("n2").as("na"))
-    val c = quantized(candidates, idCol, vecCol)
-      .select(col("id").as("neighbor_id"), col("qv").as("qb"), col("n2").as("nb"))
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", cosineFrom(dotLong(col("qa"), col("qb")), col("na"), col("nb")))
-      .select(col("query_id"), col("neighbor_id"), col("sim"))
+    val scored = pairEnd(quantized(queries, idCol, vecCol), "query_id", "a")
+      .join(pairEnd(quantized(candidates, idCol, vecCol), "neighbor_id", "b"),
+        col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), pairSim.as("sim"))
     topKByQuery(scored, k)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         round(col("sim"), 6).as("sim"))
@@ -444,41 +466,19 @@ object Similarity {
     require(k >= 1, "k at least 1")
     require(nprobe >= 1, "nprobe at least 1")
     require(massign >= 1, "massign at least the nearest cell")
-    LongDot.register(queries.sparkSession)
-    def prep(df: DataFrame) =
-      df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
-        .withColumn("n2", dotLong(col("qv"), col("qv")))
-        .localCheckpointCapped()
-    val qq = prep(queries)
-    val qc = prep(candidates)
-    val nB = qc.count()
-    val kSeeds = math.max(1, math.ceil(math.sqrt(nB.toDouble)).toInt)
-    val seeds = qc.withColumn("m", md5(col("id").cast("string")))
-      .orderBy("m", "id").limit(kSeeds) // distributed TakeOrdered
-      .select(col("id").as("sid"), col("qv").as("sv"), col("n2").as("sn2"))
-    def assign(q: DataFrame, probe: Int) = q.crossJoin(broadcast(seeds))
-      .withColumn("csim", cosineFrom(dotLong(col("qv"), col("sv")),
-        col("n2"), col("sn2")))
-      .withColumn("arn", row_number().over(
-        Window.partitionBy("id").orderBy(desc("csim"), asc("sid"))))
-      .filter(col("arn") <= probe)
-      .select(col("id"), col("sid").as("cell"))
-    val pairs0 = assign(qq, nprobe).select(col("id").as("qid"), col("cell"))
-      .join(assign(qc, massign).select(col("id").as("nid"), col("cell")),
+    val qq = quantizedRows(queries, idCol, vecCol).localCheckpointCapped()
+    val qc = quantizedRows(candidates, idCol, vecCol).localCheckpointCapped()
+    val seeds = sqrtSeeds(qc)
+    val pairs0 = nearestCells(qq, seeds, nprobe).select(col("id").as("qid"), col("cell"))
+      .join(nearestCells(qc, seeds, massign).select(col("id").as("nid"), col("cell")),
         Seq("cell"))
       .select(col("qid"), col("nid"))
     // functional membership (massign=1) yields each pair at most once; a
     // multi-membership pair can collide in several cells and MUST dedup
     // before scoring or duplicates occupy top-m ranks in the margin
     val pairs = if (massign == 1) pairs0 else pairs0.distinct()
-    val scored = pairs
-      .join(qq.select(col("id").as("qid"), col("qv").as("qa"),
-        col("n2").as("na")), Seq("qid"))
-      .join(qc.select(col("id").as("nid"), col("qv").as("qb"),
-        col("n2").as("nb")), Seq("nid"))
-      .select(col("qid"), col("nid"),
-        floor(cosineFrom(dotLong(col("qa"), col("qb")), col("na"), col("nb"))
-          * 1000000d).cast("long").as("cos_q"))
+    val scored = scorePairs(pairs, qq, qc)
+      .select(col("qid"), col("nid"), floor(col("sim") * 1000000d).cast("long").as("cos_q"))
     val w = Window.partitionBy("qid").orderBy(desc("cos_q"), asc("nid"))
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
       .groupBy("qid")
@@ -505,12 +505,8 @@ object Similarity {
   def mutualKnnGraph(df: DataFrame, idCol: String, vecCol: String,
                      k: Int): DataFrame = {
     val q = quantized(df, idCol, vecCol)
-    val a = q.select(col("id").as("qid"), col("qv").as("qa"), col("n2").as("na"))
-    val b = q.select(col("id").as("nid"), col("qv").as("qb"), col("n2").as("nb"))
-    val scored = a.join(b, col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        cosineFrom(dotLong(col("qa"), col("qb")), col("na"), col("nb")).as("sim"))
-    mutualFromScored(scored, k)
+    mutualFromScored(pairEnd(q, "qid", "a").join(pairEnd(q, "nid", "b"), col("qid") =!= col("nid"))
+      .select(col("qid"), col("nid"), pairSim.as("sim")), k)
   }
 
   /** Mutual-kNN graph over IVF multi-probe candidates — the scale path for
@@ -539,10 +535,7 @@ object Similarity {
     * tie-break or edge-orientation discipline.
     */
   private def mutualFromScored(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("qid").orderBy(desc("sim"), asc("nid"))
-    val topk = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("sim"))
+    val topk = rankTopK(scored, k, "nid", "qid").select(col("qid"), col("nid"), col("sim"))
     val rev = topk.select(col("nid").as("qid"), col("qid").as("nid"))
     topk.join(rev, Seq("qid", "nid"), "left_semi")
       .filter(col("qid") < col("nid"))
@@ -597,20 +590,22 @@ object Similarity {
     * shuffle on the bucket id; per-bucket candidate sets are ~n/2^bits.
     */
   def lshTopK(df: DataFrame, idCol: String, vecCol: String,
-              k: Int, bits: Int = 8): DataFrame = {
-    LongDot.register(df.sparkSession)
-    val b = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"),
-        signLshBucket(col(vecCol), bits).as("bucket"))
-      .withColumn("n2", dotLong(col("qv"), col("qv")))
+              k: Int, bits: Int = 8): DataFrame =
+    bucketTopK(quantizedRows(df, idCol, vecCol, signLshBucket(col(vecCol), bits).as("bucket")),
+      "bucket", k)
+
+  /** The bucket top-k behind [[lshTopK]] and [[ivfTopK]]: each row of `b`
+    * (id, qv, `key`, n2) ranks the other rows sharing its `key` by
+    * (sim desc, neighbor id). One shuffle on the key. Output:
+    * (query_id, `key`, neighbor_id, rank).
+    */
+  private def bucketTopK(b: DataFrame, key: String, k: Int): DataFrame = {
     val scored = b.as("q").join(b.as("c"),
-        col("q.bucket") === col("c.bucket") && col("q.id") =!= col("c.id"))
-      .select(col("q.id").as("query_id"), col("c.id").as("neighbor_id"),
-        col("q.bucket").as("bucket"),
+        col(s"q.$key") === col(s"c.$key") && col("q.id") =!= col("c.id"))
+      .select(col("q.id").as("query_id"), col(s"q.$key").as(key), col("c.id").as("neighbor_id"),
         cosineFrom(dotLong(col("q.qv"), col("c.qv")), col("q.n2"), col("c.n2")).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("bucket"), col("neighbor_id"), col("rank"))
+    rankTopK(scored, k, "neighbor_id", "query_id")
+      .select(col("query_id"), col(key), col("neighbor_id"), col("rank"))
   }
 
   /** Recall@k of the sign-LSH ANN against the exact top-k on a
@@ -695,9 +690,7 @@ object Similarity {
                    clusterCol: String, k: Int, nprobe: Int): DataFrame = {
     val scored = ivfProbedScored(df, idCol, vecCol, clusterCol, nprobe)
       .select(col("qid").as("query_id"), col("nid").as("neighbor_id"), col("sim"))
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankTopK(scored, k, "neighbor_id", "query_id")
       .select(col("query_id"), col("neighbor_id"), col("rank"))
   }
 
@@ -713,26 +706,23 @@ object Similarity {
     * each (qid, nid) at most once. Returns (qid, nid, sim), self excluded.
     */
   private def ivfProbedScored(df: DataFrame, idCol: String, vecCol: String,
-                              clusterCol: String, nprobe: Int): DataFrame = {
-    LongDot.register(df.sparkSession)
-    val b = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"),
-        col(clusterCol).as("cell"))
-      .withColumn("n2", dotLong(col("qv"), col("qv")))
-      .localCheckpointCapped()
-    ivfProbedScoredFromQuantized(b, nprobe)
-  }
+                              clusterCol: String, nprobe: Int): DataFrame =
+    ivfProbedScoredFromQuantized(
+      quantizedRows(df, idCol, vecCol, col(clusterCol).as("cell")).localCheckpointCapped(),
+      nprobe)
 
-  /** (cell, cv, cn2) from a (cell, qv) frame: each cell's integer
+  /** The integer-centroid-array builder: (keys..., cv, cn2) from a frame
+    * holding the `keys` and an integer vector column `vec` — each group's
     * centroid over every vector position as an array (`ivfCentroids`'
     * values: truncating DECIMAL division) and its squared norm. One
-    * explode, one (cell, pos) aggregation, one per-cell collect.
+    * explode, one (keys, pos) aggregation, one per-group collect.
     */
-  private def cellCentroidArrays(q: DataFrame): DataFrame =
-    q.select(col("cell"), posexplode(col("qv")).as(Seq("pos", "x")))
-      .groupBy("cell", "pos")
+  private def centroidArrays(q: DataFrame, vec: String, keys: String*): DataFrame =
+    q.select(keys.map(col) :+ posexplode(col(vec)).as(Seq("pos", "x")): _*)
+      .groupBy((keys :+ "pos").map(col): _*)
       .agg(sum(col("x").cast("decimal(38,0)")).as("sx"), count(lit(1)).as("cn"))
-      .selectExpr("cell", "pos", "CAST(sx DIV cn AS BIGINT) AS cq")
-      .groupBy("cell")
+      .selectExpr(keys ++ Seq("pos", "CAST(sx DIV cn AS BIGINT) AS cq"): _*)
+      .groupBy(keys.map(col): _*)
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("cq")))),
         s => s.getField("cq")).as("cv"))
       .withColumn("cn2", dotLong(col("cv"), col("cv")))
@@ -742,24 +732,21 @@ object Similarity {
     * quantized vectors — qv IS quantize(vec), so the values are identical
     * to `ivfCentroids` on the raw column, without a second corpus scan.
     */
-  private def ivfProbedScoredFromQuantized(b: DataFrame, nprobe: Int): DataFrame = {
-    require(nprobe >= 1, "nprobe must be >= 1")
-    val probed = b.select(col("id").as("qid"), col("qv"), col("n2"))
-      .crossJoin(broadcast(cellCentroidArrays(b)))
-      .withColumn("csim", cosineFrom(dotLong(col("qv"), col("cv")),
-        col("n2"), col("cn2")))
-      .withColumn("pn", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("csim"), asc("cell"))))
-      .filter(col("pn") <= nprobe)
-      .select(col("qid"), col("cell"))
-    probed
-      .join(b.select(col("id").as("qid"), col("qv").as("qa"),
-        col("n2").as("na")), Seq("qid"))
-      .join(b.select(col("id").as("nid"), col("cell"),
-        col("qv").as("qb"), col("n2").as("nb")), Seq("cell"))
+  private def ivfProbedScoredFromQuantized(b: DataFrame, nprobe: Int): DataFrame =
+    probedCells(b, b, nprobe)
+      .join(pairEnd(b, "qid", "a"), Seq("qid"))
+      .join(pairEnd(b, "nid", "b", "cell"), Seq("cell"))
       .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        cosineFrom(dotLong(col("qa"), col("qb")), col("na"), col("nb")).as("sim"))
+      .select(col("qid"), col("nid"), pairSim.as("sim"))
+
+  /** (qid, cell): each row of `q` (id, qv, n2) probes its `nprobe` nearest
+    * cells of the broadcast centroid table trained on `memb` (id, qv, cell).
+    */
+  private def probedCells(q: DataFrame, memb: DataFrame, nprobe: Int): DataFrame = {
+    require(nprobe >= 1, "nprobe must be >= 1")
+    nearestK(q.select(col("id").as("qid"), col("qv"), col("n2")), "qid",
+        centroidArrays(memb, "qv", "cell"), "cell", nprobe)
+      .select(col("qid"), col("cell"))
   }
 
   /** Single-scan KMV -> IVF mutual-kNN graph — the fused form of
@@ -792,17 +779,13 @@ object Similarity {
                         indexes: Int = 1): DataFrame = {
     require(massign >= 1, "massign at least the nearest cell")
     require(indexes >= 1, "at least one index")
-    LongDot.register(df.sparkSession)
-    val q = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
-      .withColumn("n2", dotLong(col("qv"), col("qv")))
-      .localCheckpointCapped()
+    val q = quantizedRows(df, idCol, vecCol).localCheckpointCapped()
     if (indexes == 1 && massign == 1) {
       val b = q.join(kmvAssignFromQuantized(q, probe = 1), Seq("id"))
       mutualFromScored(ivfProbedScoredFromQuantized(b, nprobe), k)
     } else if (indexes == 1) {
       val memb = kmvAssignFromQuantized(q, probe = massign)
-      mutualFromScored(scoreCandidatePairs(q,
-        multiCandidatePairs(q, memb, nprobe)), k)
+      mutualFromScored(scorePairs(multiCandidatePairs(q, memb, nprobe), q, q), k)
     } else {
       // multi-index union: L INDEPENDENT KMV indexes (salted seed sets),
       // each probed at (nprobe, massign); candidate pairs union-DISTINCT
@@ -817,7 +800,7 @@ object Similarity {
         multiCandidatePairs(q,
           kmvAssignFromQuantized(q, probe = massign, salt = i), nprobe)
       }.reduce(_ unionByName _).distinct()
-      mutualFromScored(scoreCandidatePairs(q, cand), k)
+      mutualFromScored(scorePairs(cand, q, q), k)
     }
   }
 
@@ -831,51 +814,17 @@ object Similarity {
     * (probed cell, membership) — a cell EQUI-join, never an
     * id-inequality-only join, so candidates are bounded by
     * n * nprobe * massign * avg_cell_size. At massign = 1, scored through
-    * [[scoreCandidatePairs]], this returns exactly
+    * [[scorePairs]], this returns exactly
     * [[ivfProbedScoredFromQuantized]]'s output (the DISTINCT is a no-op
     * there because cell membership is functional and probed cells per
     * query are distinct) — pinned by spec.
     */
   private def multiCandidatePairs(q: DataFrame, memb: DataFrame,
-                                  nprobe: Int): DataFrame = {
-    require(nprobe >= 1, "nprobe must be >= 1")
-    val b = q.join(memb, Seq("id"))
-    val cents = b
-      .select(col("cell"), posexplode(col("qv")).as(Seq("pos", "x")))
-      .groupBy("cell", "pos")
-      .agg(sum(col("x").cast("decimal(38,0)")).as("sx"), count(lit(1)).as("cn"))
-      .selectExpr("cell", "pos", "CAST(sx DIV cn AS BIGINT) AS cq")
-      .groupBy("cell")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cq")))),
-        s => s.getField("cq")).as("cv"))
-      .withColumn("cn2", dotLong(col("cv"), col("cv")))
-    val probed = q.select(col("id").as("qid"), col("qv"), col("n2"))
-      .crossJoin(broadcast(cents))
-      .withColumn("csim", cosineFrom(dotLong(col("qv"), col("cv")),
-        col("n2"), col("cn2")))
-      .withColumn("pn", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("csim"), asc("cell"))))
-      .filter(col("pn") <= nprobe)
-      .select(col("qid"), col("cell"))
-    probed
+                                  nprobe: Int): DataFrame =
+    probedCells(q, q.join(memb, Seq("id")), nprobe)
       .join(memb.select(col("id").as("nid"), col("cell")), Seq("cell"))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid")).distinct()
-  }
-
-  /** Exact-cosine scoring of a DISTINCT (qid, nid) candidate frame against
-    * the quantized corpus `q` — the second half of the split, shared by
-    * the single- and multi-index paths so union candidates are scored
-    * exactly once.
-    */
-  private def scoreCandidatePairs(q: DataFrame, cand: DataFrame): DataFrame =
-    cand
-      .join(q.select(col("id").as("qid"), col("qv").as("qa"),
-        col("n2").as("na")), Seq("qid"))
-      .join(q.select(col("id").as("nid"), col("qv").as("qb"),
-        col("n2").as("nb")), Seq("nid"))
-      .select(col("qid"), col("nid"),
-        cosineFrom(dotLong(col("qa"), col("qb")), col("na"), col("nb")).as("sim"))
 
   /** Exact mutual-kNN edges restricted to pairs with at least one ANCHOR
     * endpoint — the sample-bounded recall denominator for auditing an
@@ -907,13 +856,10 @@ object Similarity {
     // bare query keys would otherwise cap the corpus-scan shuffle's
     // parallelism at ~anchorCap tasks on a large cluster
     def topK(queries: DataFrame): DataFrame = {
-      val scored = q.select(col("id").as("neighbor_id"), col("qv").as("qb"),
-          col("n2").as("nb"))
-        .crossJoin(broadcast(queries.select(col("id").as("query_id"),
-          col("qv").as("qa"), col("n2").as("na"))))
+      val scored = pairEnd(q, "neighbor_id", "b")
+        .crossJoin(broadcast(pairEnd(queries, "query_id", "a")))
         .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineFrom(dotLong(col("qa"), col("qb")), col("na"), col("nb")).as("sim"))
+        .select(col("query_id"), col("neighbor_id"), pairSim.as("sim"))
       topKByQuery(scored, k)
         .select(col("query_id").as("qid"), col("neighbor_id").as("nid"),
           col("sim"))
@@ -975,62 +921,38 @@ object Similarity {
   def mutualKnnGraphTwoLevel(df: DataFrame, idCol: String, vecCol: String,
                              k: Int, pCoarse: Int, pFine: Int,
                              mCoarse: Int = 1, mFine: Int = 1): DataFrame = {
-    LongDot.register(df.sparkSession)
-    val q = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
-      .withColumn("n2", dotLong(col("qv"), col("qv")))
-      .localCheckpointCapped()
-    mutualFromScored(scoreCandidatePairs(q,
-      twoLevelCandidatesFromQuantized(q, pCoarse, pFine, mCoarse, mFine)), k)
+    val q = quantizedRows(df, idCol, vecCol).localCheckpointCapped()
+    mutualFromScored(scorePairs(
+      twoLevelCandidatesFromQuantized(q, pCoarse, pFine, mCoarse, mFine), q, q), k)
   }
 
   /** Candidate-pair count of the two-level channel at an operating point —
     * the honest cost axis: DISTINCT (qid, nid) pairs, each scored once.
     */
   private[graft] def twoLevelCandidateCount(df: DataFrame, idCol: String,
-      vecCol: String, pCoarse: Int, pFine: Int, mCoarse: Int, mFine: Int): Long = {
-    LongDot.register(df.sparkSession)
-    val q = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
-      .withColumn("n2", dotLong(col("qv"), col("qv")))
-      .localCheckpointCapped()
-    twoLevelCandidatesFromQuantized(q, pCoarse, pFine, mCoarse, mFine).count()
-  }
+      vecCol: String, pCoarse: Int, pFine: Int, mCoarse: Int, mFine: Int): Long =
+    twoLevelCandidatesFromQuantized(quantizedRows(df, idCol, vecCol).localCheckpointCapped(),
+      pCoarse, pFine, mCoarse, mFine).count()
 
   /** The two-level candidate core over a prepared (id, qv, n2) frame. */
   private def twoLevelCandidatesFromQuantized(q: DataFrame, pCoarse: Int,
       pFine: Int, mCoarse: Int, mFine: Int): DataFrame = {
     require(pCoarse >= 1 && pFine >= 1 && mCoarse >= 1 && mFine >= 1,
       "two-level probe/membership widths must be >= 1")
-    val n = q.count()
-    val c1 = math.max(1, math.ceil(math.cbrt(n.toDouble)).toInt)
-    val cseeds = q
-      .withColumn("m", md5(concat(col("id").cast("string"), lit("#c"))))
-      .orderBy("m", "id").limit(c1) // distributed TakeOrdered
-      .select(col("id").as("csid"), col("qv").as("csv"), col("n2").as("csn2"))
-    val cmemb = q.crossJoin(broadcast(cseeds))
-      .withColumn("csim", cosineFrom(dotLong(col("qv"), col("csv")),
-        col("n2"), col("csn2")))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("id").orderBy(desc("csim"), asc("csid"))))
-      .filter(col("crn") <= mCoarse)
-      .select(col("id"), col("csid").as("ccell"))
+    val c1 = math.max(1, math.ceil(math.cbrt(q.count().toDouble)).toInt)
+    val cmemb = nearestK(q, "id", kmvSeeds(q, c1, "#c"), "sid", mCoarse)
+      .select(col("id"), col("sid").as("ccell"))
     // coarse centroids train over MEMBERSHIPS (the multiCandidatePairs
     // discipline: boundary vectors pull neighboring centroids toward
     // themselves); integer-exact, so engine-identical at any parallelism
     val b1 = q.join(cmemb, Seq("id"))
-    val ccents = b1
-      .select(col("ccell"), posexplode(col("qv")).as(Seq("pos", "x")))
-      .groupBy("ccell", "pos")
-      .agg(sum(col("x").cast("decimal(38,0)")).as("sx"), count(lit(1)).as("cn"))
-      .selectExpr("ccell", "pos", "CAST(sx DIV cn AS BIGINT) AS cq")
-      .groupBy("ccell")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cq")))),
-        s => s.getField("cq")).as("ccv"))
+    val ccents = centroidArrays(b1, "qv", "ccell")
     def rez(v: Column, c: Column): Column = zip_with(v, c, (x, cc) => x - cc)
     // members re-expressed as residuals against their coarse centroid;
     // one checkpoint — this frame feeds fine seeds, fine training, AND
     // fine assignment
     val rezzed = b1.join(ccents, Seq("ccell"))
-      .withColumn("rv", rez(col("qv"), col("ccv")))
+      .withColumn("rv", rez(col("qv"), col("cv")))
       .withColumn("rn2", dotLong(col("rv"), col("rv")))
       .select("id", "ccell", "rv", "rn2")
       .localCheckpointCapped()
@@ -1047,7 +969,7 @@ object Similarity {
     // fine membership: residual cosine against the SAME cell's fine seeds
     // only — an equi-join on ccell, never all fine seeds
     val fmemb = rezzed.join(fseeds, Seq("ccell"))
-      .withColumn("fsim", cosineFromSafe(dotLong(col("rv"), col("fsv")),
+      .withColumn("fsim", cosineFrom(dotLong(col("rv"), col("fsv")),
         col("rn2"), col("fsn2")))
       .withColumn("frn", row_number().over(
         Window.partitionBy("id", "ccell").orderBy(desc("fsim"), asc("fsid"))))
@@ -1055,34 +977,18 @@ object Similarity {
       .select(col("id"), col("ccell"), col("fsid").as("fcell"))
       .localCheckpointCapped()
     // fine centroids over fine memberships, in residual space
-    val fcents = rezzed.join(fmemb, Seq("id", "ccell"))
-      .select(col("ccell"), col("fcell"), posexplode(col("rv")).as(Seq("pos", "x")))
-      .groupBy("ccell", "fcell", "pos")
-      .agg(sum(col("x").cast("decimal(38,0)")).as("sx"), count(lit(1)).as("cn"))
-      .selectExpr("ccell", "fcell", "pos", "CAST(sx DIV cn AS BIGINT) AS fq")
-      .groupBy("ccell", "fcell")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("fq")))),
-        s => s.getField("fq")).as("fcv"))
-      .withColumn("fcn2", dotLong(col("fcv"), col("fcv")))
+    val fcents = centroidArrays(rezzed.join(fmemb, Seq("id", "ccell")), "rv", "ccell", "fcell")
     // query side: coarse probe against the broadcast (c1 x dims) table...
-    val ccentsN = ccents.withColumn("ccn2", dotLong(col("ccv"), col("ccv")))
-    val cprobed = q.select(col("id").as("qid"), col("qv"), col("n2"))
-      .crossJoin(broadcast(ccentsN))
-      .withColumn("csim", cosineFrom(dotLong(col("qv"), col("ccv")),
-        col("n2"), col("ccn2")))
-      .withColumn("pn", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("csim"), asc("ccell"))))
-      .filter(col("pn") <= pCoarse)
-      .select(col("qid"), col("ccell"),
-        rez(col("qv"), col("ccv")).as("rq"))
+    val cprobed = nearestK(q.select(col("id").as("qid"), col("qv"), col("n2")), "qid",
+        ccents, "ccell", pCoarse)
+      .select(col("qid"), col("ccell"), rez(col("qv"), col("cv")).as("rq"))
       .withColumn("rqn2", dotLong(col("rq"), col("rq")))
     // ...then the pFine best fine cells ACROSS all probed coarse cells
     // jointly — the probe budget flows to the coarse region that actually
     // matches. Equi-join on ccell: each query only ranks the fine
     // centroids of its probed coarse cells.
     val fprobed = cprobed.join(fcents, Seq("ccell"))
-      .withColumn("fsim", cosineFromSafe(dotLong(col("rq"), col("fcv")),
-        col("rqn2"), col("fcn2")))
+      .withColumn("fsim", cosineFrom(dotLong(col("rq"), col("cv")), col("rqn2"), col("cn2")))
       .withColumn("fn", row_number().over(
         Window.partitionBy("qid").orderBy(desc("fsim"), asc("ccell"), asc("fcell"))))
       .filter(col("fn") <= pFine)
@@ -1095,31 +1001,19 @@ object Similarity {
   }
 
   /** One spherical k-means (Lloyd) assignment step: re-assign every vector
-    * to its max-cosine centroid from `ivfCentroids` — paired with
-    * `ivfCentroids` (the M-step) this is the complete training loop of the
-    * IVF coarse quantizer, expressed entirely as DataFrame plans. The
-    * centroid table (cells x dims) broadcasts; assignment is one map-side
-    * pass per vector with the codegen'd long-dot kernel; ties break to the
-    * smaller cell id, so assignments are deterministic at any parallelism.
+    * to its max-cosine centroid (the `ivfCentroids` values, aggregated from
+    * the same quantized rows) — paired with `ivfCentroids` (the M-step)
+    * this is the complete training loop of the IVF coarse quantizer,
+    * expressed entirely as DataFrame plans. The centroid table
+    * (cells x dims) broadcasts; assignment is one map-side pass per vector
+    * with the codegen'd long-dot kernel; ties break to the smaller cell id,
+    * so assignments are deterministic at any parallelism.
     */
   def kmeansAssign(df: DataFrame, idCol: String, vecCol: String,
                    cellCol: String): DataFrame = {
-    LongDot.register(df.sparkSession)
-    val b = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"),
-        col(cellCol).as("cell"))
-      .withColumn("n2", dotLong(col("qv"), col("qv")))
-    val cents = ivfCentroids(df, vecCol, cellCol)
-      .groupBy("cell")
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("centroid_q")))),
-        s => s.getField("centroid_q")).as("cv"))
-      .withColumn("cn2", dotLong(col("cv"), col("cv")))
-      .select(col("cell").as("ncell"), col("cv"), col("cn2"))
-    b.crossJoin(broadcast(cents))
-      .withColumn("csim", cosineFrom(dotLong(col("qv"), col("cv")),
-        col("n2"), col("cn2")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("id").orderBy(desc("csim"), asc("ncell"))))
-      .filter(col("rn") === 1)
+    val b = quantizedRows(df, idCol, vecCol, col(cellCol).as("cell"))
+    val cents = centroidArrays(b, "qv", "cell").withColumnRenamed("cell", "ncell")
+    nearestK(b, "id", cents, "ncell", 1)
       .select(col("id"), col("cell"), col("ncell").as("new_cell"),
         (col("cell") =!= col("ncell")).as("moved"))
   }
@@ -1155,21 +1049,8 @@ object Similarity {
     * so each probe is a partition-pruned scan.
     */
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String, clusterCol: String,
-              k: Int): DataFrame = {
-    LongDot.register(df.sparkSession)
-    val b = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"),
-        col(clusterCol).as("cell"))
-      .withColumn("n2", dotLong(col("qv"), col("qv")))
-    val scored = b.as("q").join(b.as("c"),
-        col("q.cell") === col("c.cell") && col("q.id") =!= col("c.id"))
-      .select(col("q.id").as("query_id"), col("q.cell").as("cell"),
-        col("c.id").as("neighbor_id"),
-        cosineFrom(dotLong(col("q.qv"), col("c.qv")), col("q.n2"), col("c.n2")).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("cell"), col("neighbor_id"), col("rank"))
-  }
+              k: Int): DataFrame =
+    bucketTopK(quantizedRows(df, idCol, vecCol, col(clusterCol).as("cell")), "cell", k)
 
   /** First principal component of the embedding matrix by integer-exact
     * power iteration (the `sortSpectral` discipline applied to X^T X):
@@ -1243,12 +1124,12 @@ object Similarity {
 
   /** The IVF codebook as ONE row: `ids` (the distinct cell ids,
     * ascending), `cvs` (each cell's centroid array, see
-    * [[cellCentroidArrays]]) and `cn2s` (their squared norms), aligned by
+    * [[centroidArrays]]) and `cn2s` (their squared norms), aligned by
     * index. Cells x positions is codebook-sized at any corpus scale, so
     * the row broadcasts.
     */
   private def ivfCodebook(q: DataFrame): DataFrame =
-    cellCentroidArrays(q)
+    centroidArrays(q, "qv", "cell")
       .agg(array_sort(collect_list(struct(col("cell"), col("cv"), col("cn2"))))
         .as("book"))
       .select(transform(col("book"), e => e.getField("cell")).as("ids"),
@@ -1272,7 +1153,6 @@ object Similarity {
   private def pqEncoded(df: DataFrame, idCol: String, vecCol: String,
                         cellCol: String, m: Int, dims: Int): DataFrame = {
     require(m >= 1 && dims % m == 0, "m must divide dims")
-    LongDot.register(df.sparkSession)
     val d = dims / m
     val D38 = "decimal(38,0)"
     val q = df.filter(col(vecCol).isNotNull)
@@ -1416,8 +1296,7 @@ object Similarity {
     val labels = graft.GraphAlgorithms.componentLabels(
       graft.NetworkFrame(nodes, pairs), "weak")
     val n2 = quantized(df, idCol, vecCol).select(col("id"), col("n2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("component").orderBy(desc("n2"), asc("id"))
+    val w = Window.partitionBy("component").orderBy(desc("n2"), asc("id"))
     labels.join(n2, Seq("id"))
       .withColumn("keep", row_number().over(w) === 1)
       .select(col("id"), col("component").as("cluster_rep"),
@@ -1452,12 +1331,8 @@ object Similarity {
       .orderBy(desc("rel_q"), asc("id")).limit(pool)
       .select("id", "qv", "n2", "rel_q")
       .localCheckpointCapped()
-    val pairs = rel.select(col("id").as("ia"), col("qv").as("va"), col("n2").as("na"))
-      .join(rel.select(col("id").as("ib"), col("qv").as("vb"), col("n2").as("nb")),
-        col("ia") =!= col("ib"))
-      .withColumn("sim_q",
-        floor(cosineFrom(dotLong(col("va"), col("vb")), col("na"), col("nb"))
-          * 1000000).cast("long"))
+    val pairs = pairEnd(rel, "ia", "a").join(pairEnd(rel, "ib", "b"), col("ia") =!= col("ib"))
+      .withColumn("sim_q", floor(pairSim * 1000000).cast("long"))
       .select("ia", "ib", "sim_q")
       .localCheckpointCapped()
     var selected = rel.orderBy(desc("rel_q"), asc("id")).limit(1)

@@ -6,15 +6,16 @@ import org.apache.spark.sql.graftext.CappedCheckpoint._
 import scala.util.control.NonFatal
 
 /** Multimodal column plumbing: image/audio/video travel as opaque `BINARY`
-  * columns with typed metadata, processed per-partition in fixed-size
-  * batches (the Scala analogue of a Pandas-UDF-over-mapInPandas pipeline:
-  * same schema contract, same batch shape, same partitioning story).
+  * columns with typed metadata, decoded row by row inside a narrow
+  * per-partition `mapPartitions` (the Scala analogue of a
+  * Pandas-UDF-over-mapInPandas pipeline: same schema contract, same
+  * partitioning story).
   *
   * `decodePixels` is a REAL decoder for the formats the JDK ships codecs
   * for (PNG/BMP/GIF/JPEG via javax.imageio). Formats beyond that — and the
   * video demux in `sampleFrames` — remain clearly-marked deterministic
   * STUBS (no external codec libraries in this container), so the
-  * Spark-side plumbing (schemas, encoders, batching, partition sizing) is
+  * Spark-side plumbing (schemas, encoders, partition sizing) is
   * real and testable either way. Swap the stub branch for a JNI decoder
   * without touching any plan structure.
   */
@@ -87,10 +88,10 @@ object Multimodal {
     try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(media)))
     catch { case NonFatal(_) => None }
 
-  /** Decode + feature-extract images, batch-at-a-time per partition.
-    * Plan shape: narrow mapPartitions — no shuffle; upstream should size
-    * partitions via `spark.sql.files.maxPartitionBytes` so one batch of
-    * decoded images fits executor memory (payloads dominate).
+  /** Decode + feature-extract images, one row at a time per partition.
+    * Plan shape: narrow mapPartitions — no shuffle; each decoded image is
+    * dropped before the next is read, and upstream sizes partitions via
+    * `spark.sql.files.maxPartitionBytes` (payloads dominate).
     *
     * REAL features for any payload the JDK can decode (PNG/BMP/GIF/JPEG
     * via javax.imageio): the 8-dim vector is per-band pixel means
@@ -101,53 +102,51 @@ object Multimodal {
     * for payloads no JDK codec can read (header parse still supplies
     * dimensions when the header is intact but pixel data is absent).
     */
-  def decodeImages(ds: Dataset[MediaRecord], batchSize: Int = 64): Dataset[ImageFeatures] = {
+  def decodeImages(ds: Dataset[MediaRecord]): Dataset[ImageFeatures] = {
     import ds.sparkSession.implicits._
     ds.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val img = readImage(r.media)
-          val (w, h, c, f) = img match {
-            case Some(im) =>
-              val raster = im.getRaster
-              val w0 = im.getWidth; val h0 = im.getHeight
-              val bands = raster.getNumBands
-              val sums = new Array[Long](bands)
-              val sqs = new Array[Long](bands)
-              val buf = new Array[Int](bands)
-              var y = 0
-              while (y < h0) {
-                var x = 0
-                while (x < w0) {
-                  raster.getPixel(x, y, buf)
-                  var b = 0
-                  while (b < bands) {
-                    val v = buf(b); sums(b) += v; sqs(b) += v.toLong * v; b += 1
-                  }
-                  x += 1
+      it.map { r =>
+        val img = readImage(r.media)
+        val (w, h, c, f) = img match {
+          case Some(im) =>
+            val raster = im.getRaster
+            val w0 = im.getWidth; val h0 = im.getHeight
+            val bands = raster.getNumBands
+            val sums = new Array[Long](bands)
+            val sqs = new Array[Long](bands)
+            val buf = new Array[Int](bands)
+            var y = 0
+            while (y < h0) {
+              var x = 0
+              while (x < w0) {
+                raster.getPixel(x, y, buf)
+                var b = 0
+                while (b < bands) {
+                  val v = buf(b); sums(b) += v; sqs(b) += v.toLong * v; b += 1
                 }
-                y += 1
+                x += 1
               }
-              val np = w0.toLong * h0
-              val feats = Array.tabulate(featureDim) { i =>
-                if (i < 4) {
-                  if (i < bands) (sums(i).toDouble / np / 255.0).toFloat else 0f
-                } else {
-                  val b = i - 4
-                  if (b < bands) (sqs(b).toDouble / np / 65025.0).toFloat else 0f
-                }
-              }
-              (w0, h0, bands, feats)
-            case None => decodeHeader(r.media) match {
-              case Some((pw, ph, pc)) =>
-                // intact header, undecodable pixel data: real dimensions,
-                // stub features
-                (pw, ph, pc, stubDecodeImage(r.media)._4)
-              case None => stubDecodeImage(r.media)
+              y += 1
             }
+            val np = w0.toLong * h0
+            val feats = Array.tabulate(featureDim) { i =>
+              if (i < 4) {
+                if (i < bands) (sums(i).toDouble / np / 255.0).toFloat else 0f
+              } else {
+                val b = i - 4
+                if (b < bands) (sqs(b).toDouble / np / 65025.0).toFloat else 0f
+              }
+            }
+            (w0, h0, bands, feats)
+          case None => decodeHeader(r.media) match {
+            case Some((pw, ph, pc)) =>
+              // intact header, undecodable pixel data: real dimensions,
+              // stub features
+              (pw, ph, pc, stubDecodeImage(r.media)._4)
+            case None => stubDecodeImage(r.media)
           }
-          ImageFeatures(r.id, w, h, c, r.media.length.toLong, f)
         }
+        ImageFeatures(r.id, w, h, c, r.media.length.toLong, f)
       }
     }
   }
@@ -161,42 +160,40 @@ object Multimodal {
     * libraries, headless-safe) — with the header-parse/stub fallback
     * (`decoded = false`) for anything ImageIO cannot read. Per-band sample
     * sums accumulate in integers, so the channel means are exact and
-    * reproducible. Same narrow batch-per-partition mapPartitions shape as
+    * reproducible. Same narrow per-partition mapPartitions shape as
     * `decodeImages`: no shuffle, payload-bounded partitions.
     */
-  def decodePixels(ds: Dataset[MediaRecord], batchSize: Int = 64): Dataset[PixelStats] = {
+  def decodePixels(ds: Dataset[MediaRecord]): Dataset[PixelStats] = {
     import ds.sparkSession.implicits._
     ds.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val img = readImage(r.media)
-          img match {
-            case Some(im) =>
-              val raster = im.getRaster
-              val w = im.getWidth; val h = im.getHeight
-              val bands = raster.getNumBands
-              val sums = new Array[Long](bands)
-              val buf = new Array[Int](bands)
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  raster.getPixel(x, y, buf)
-                  var b = 0
-                  while (b < bands) { sums(b) += buf(b); b += 1 }
-                  x += 1
-                }
-                y += 1
+      it.map { r =>
+        val img = readImage(r.media)
+        img match {
+          case Some(im) =>
+            val raster = im.getRaster
+            val w = im.getWidth; val h = im.getHeight
+            val bands = raster.getNumBands
+            val sums = new Array[Long](bands)
+            val buf = new Array[Int](bands)
+            var y = 0
+            while (y < h) {
+              var x = 0
+              while (x < w) {
+                raster.getPixel(x, y, buf)
+                var b = 0
+                while (b < bands) { sums(b) += buf(b); b += 1 }
+                x += 1
               }
-              val n = w.toLong * h
-              PixelStats(r.id, w, h, bands, decoded = true,
-                Array.tabulate(bands)(b => (sums(b).toDouble / n / 255.0).toFloat))
-            case None =>
-              val (w, h, c) = decodeHeader(r.media).getOrElse {
-                val s = stubDecodeImage(r.media); (s._1, s._2, s._3)
-              }
-              PixelStats(r.id, w, h, c, decoded = false, Array.empty[Float])
-          }
+              y += 1
+            }
+            val n = w.toLong * h
+            PixelStats(r.id, w, h, bands, decoded = true,
+              Array.tabulate(bands)(b => (sums(b).toDouble / n / 255.0).toFloat))
+          case None =>
+            val (w, h, c) = decodeHeader(r.media).getOrElse {
+              val s = stubDecodeImage(r.media); (s._1, s._2, s._3)
+            }
+            PixelStats(r.id, w, h, c, decoded = false, Array.empty[Float])
         }
       }
     }
@@ -211,46 +208,44 @@ object Multimodal {
     * and pack the 64 bits row-major. Hamming-close hashes are visually
     * near-duplicate images — the image-side analogue of SimHash text dedup.
     * All arithmetic is integer, so the hash is identical at any
-    * parallelism; same narrow batch mapPartitions shape as `decodePixels`.
+    * parallelism; same narrow mapPartitions shape as `decodePixels`.
     */
-  def perceptualHash(ds: Dataset[MediaRecord], batchSize: Int = 64): Dataset[PHash] = {
+  def perceptualHash(ds: Dataset[MediaRecord]): Dataset[PHash] = {
     import ds.sparkSession.implicits._
     ds.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val img = readImage(r.media)
-          img match {
-            case Some(im) =>
-              val raster = im.getRaster
-              val w = im.getWidth; val h = im.getHeight
-              val bands = raster.getNumBands
-              val cell = new Array[Long](64)
-              val cnt = new Array[Long](64)
-              val buf = new Array[Int](bands)
-              var y = 0
-              while (y < h) {
-                val cy = math.min(7, y * 8 / h)
-                var x = 0
-                while (x < w) {
-                  val cx = math.min(7, x * 8 / w)
-                  raster.getPixel(x, y, buf)
-                  val lum =
-                    if (bands >= 3) 299L * buf(0) + 587L * buf(1) + 114L * buf(2)
-                    else 1000L * buf(0)
-                  cell(cy * 8 + cx) += lum
-                  cnt(cy * 8 + cx) += 1
-                  x += 1
-                }
-                y += 1
+      it.map { r =>
+        val img = readImage(r.media)
+        img match {
+          case Some(im) =>
+            val raster = im.getRaster
+            val w = im.getWidth; val h = im.getHeight
+            val bands = raster.getNumBands
+            val cell = new Array[Long](64)
+            val cnt = new Array[Long](64)
+            val buf = new Array[Int](bands)
+            var y = 0
+            while (y < h) {
+              val cy = math.min(7, y * 8 / h)
+              var x = 0
+              while (x < w) {
+                val cx = math.min(7, x * 8 / w)
+                raster.getPixel(x, y, buf)
+                val lum =
+                  if (bands >= 3) 299L * buf(0) + 587L * buf(1) + 114L * buf(2)
+                  else 1000L * buf(0)
+                cell(cy * 8 + cx) += lum
+                cnt(cy * 8 + cx) += 1
+                x += 1
               }
-              val means = Array.tabulate(64)(i => cell(i) / math.max(1L, cnt(i)))
-              val gridMean = means.sum / 64
-              var hash = 0L
-              var i = 0
-              while (i < 64) { if (means(i) > gridMean) hash |= (1L << i); i += 1 }
-              PHash(r.id, decoded = true, hash)
-            case None => PHash(r.id, decoded = false, -1L)
-          }
+              y += 1
+            }
+            val means = Array.tabulate(64)(i => cell(i) / math.max(1L, cnt(i)))
+            val gridMean = means.sum / 64
+            var hash = 0L
+            var i = 0
+            while (i < 64) { if (means(i) > gridMean) hash |= (1L << i); i += 1 }
+            PHash(r.id, decoded = true, hash)
+          case None => PHash(r.id, decoded = false, -1L)
         }
       }
     }
@@ -258,29 +253,15 @@ object Multimodal {
 
   /** Near-duplicate image pairs with EXACT recall for `maxHamming <= 7`: by
     * pigeonhole, two 64-bit perceptual hashes within Hamming distance 7
-    * agree on at least one of their eight 8-bit blocks, so the block join
-    * finds every such pair while only joining colliding blocks (shuffle key
-    * = (block index, block value) — never the image-pair cross space, the
-    * `simhashNearDupPairs` scheme). Undecodable payloads are excluded.
+    * agree on at least one of their eight 8-bit blocks — the
+    * `Dedup.hammingBlockPairs` join `simhashNearDupPairs` runs, over the
+    * checkpointed hashes. Undecodable payloads are excluded.
     */
   def imageNearDupPairs(ds: Dataset[MediaRecord], maxHamming: Int = 7): DataFrame = {
     require(maxHamming <= 7, "8 blocks guarantee exact recall only to distance 7")
     val ph = perceptualHash(ds).toDF()
-      .filter(col("decoded")).select("id", "phash").localCheckpointCapped()
-    val blocks = ph.select(col("id"),
-        explode(sequence(lit(0), lit(7))).as("b"), col("phash"))
-      .withColumn("blk", expr("shiftrightunsigned(phash, b * 8) & 255"))
-      .select("id", "b", "blk")
-    val cand = blocks.as("x").join(blocks.as("y"),
-        col("x.b") === col("y.b") && col("x.blk") === col("y.blk") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
-    cand
-      .join(ph.select(col("id").as("id_a"), col("phash").as("ha")), Seq("id_a"))
-      .join(ph.select(col("id").as("id_b"), col("phash").as("hb")), Seq("id_b"))
-      .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
+      .filter(col("decoded")).select(col("id"), col("phash").as("hash")).localCheckpointCapped()
+    graft.functions.Dedup.hammingBlockPairs(ph, 8, maxHamming)
   }
 
   /** Sample every `stride`-th "frame" of a video payload. STUB: a frame is a
