@@ -15,6 +15,12 @@ import org.apache.spark.sql.graftext.CappedCheckpoint._
   *  - n-gram Jaccard: exact set overlap via shingle-inverted-index self-join
   *    (bounded by shared-shingle pairs, not all pairs)
   *
+  * Shared kernels: `blockPairs` (the blocking join), `shingleOverlaps`
+  * (df-capped overlap join), `shingleSets` + `verifiedOverlaps` (exact-set
+  * verifier), `jaccardAtLeast`, `signatureAgreement` (LSH agreement
+  * scorer), [[hammingBlockPairs]], `segments` + `keptText` (segment split
+  * and reassembly).
+  *
   * All hashing is MD5-based so the DuckDB oracle can mirror it exactly.
   */
 object Dedup {
@@ -52,7 +58,7 @@ object Dedup {
     * '''numHashes is capped at 16''' (throws above): h <= 15 is the
     * largest coefficient that cannot overflow int64 under the 2^59-1
     * modulus. The cap propagates to every consumer that takes a
-    * `numHashes` parameter (`lshBuckets`, `minhashLshPairs`,
+    * `numHashes` parameter (`minhashArray`, `minhashLshPairs`,
     * `dedupAgainstCorpus`, `incrementalSignatures`, ...). If a larger
     * family is ever needed, derive further (x, y) pairs from additional
     * md5 substrings or a second digest (e.g. md5(shingle || '#2')) rather
@@ -60,28 +66,30 @@ object Dedup {
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 16, shingleLen: Int = 3): DataFrame = {
-    require(numHashes <= 16,
-      s"numHashes must be <= 16 (got $numHashes): (x + h*y) with h <= 15 " +
-        "is the largest coefficient that cannot overflow int64 under " +
-        s"modulus $HashModulus")
-    val sh = df.select(col(idCol).as("id"),
-      explode(TextAnalysis.shingles(col(textCol), shingleLen)).as("shingle"))
+    requireHashCap(numHashes)
     // ONE digest per shingle; the numHashes-member family is derived from
     // its two 60-bit halves via the classic universal-hash form
     // v_h = (x + h*y) mod M — long arithmetic inside whole-stage codegen
     // instead of numHashes md5 calls per shingle (16x fewer digests; the
     // signature value is an 8-byte long instead of a 32-char hex string,
     // so the shuffle and the at-rest signature table shrink ~4x too)
-    val m = md5(col("shingle"))
-    val hs = sh.select(col("id"),
-        (conv(substring(m, 1, 15), 16, 10).cast("long") % HashModulus).as("x"),
-        (conv(substring(m, 17, 15), 16, 10).cast("long") % HashModulus).as("y"))
+    val hs = df.select(col(idCol).as("id"),
+        explode(TextAnalysis.shingles(col(textCol), shingleLen)).as("shingle"))
+      .select(col("id") +: hashHalves(md5(col("shingle"))): _*)
       .select(col("id"), col("x"), col("y"),
         explode(sequence(lit(0), lit(numHashes - 1))).as("h"))
       .select(col("id"), col("h"),
         ((col("x") + col("h") * col("y")) % HashModulus).as("v"))
     hs.groupBy("id", "h").agg(min("v").as("minhash"))
   }
+
+  private def requireHashCap(numHashes: Int): Unit = require(numHashes <= 16,
+    s"numHashes must be <= 16 (got $numHashes): (x + h*y) with h <= 15 is the " +
+      s"largest coefficient that cannot overflow int64 under modulus $HashModulus")
+
+  /** The family's x and y: hex digest `m`'s two 60-bit halves mod M. */
+  private def hashHalves(m: Column): Seq[Column] = Seq("x" -> 1, "y" -> 17).map {
+    case (n, i) => (conv(substring(m, i, 15), 16, 10).cast("long") % HashModulus).as(n) }
 
   /** In-row MinHash signature: the whole numHashes-member signature as ONE
     * `ARRAY<BIGINT>` column computed per row — same md5-derived universal
@@ -95,14 +103,12 @@ object Dedup {
     */
   def minhashArray(text: Column, numHashes: Int = 16,
                    shingleLen: Int = 3): Column = {
-    require(numHashes <= 16, "numHashes must be <= 16 (int64 overflow bound)")
+    requireHashCap(numHashes)
     val sh = TextAnalysis.shingles(text, shingleLen)
     // Higher-order functions share no subexpressions: a digest used in
     // several of them is computed once per use. So md5 appears once, and one
     // fold over the (x, y) pairs keeps all numHashes minima.
-    val xy = transform(transform(sh, md5(_)), m => struct(
-      (conv(substring(m, 1, 15), 16, 10).cast("long") % HashModulus).as("x"),
-      (conv(substring(m, 17, 15), 16, 10).cast("long") % HashModulus).as("y")))
+    val xy = transform(transform(sh, md5(_)), m => struct(hashHalves(m): _*))
     val sig = aggregate(xy, array(Seq.fill(numHashes)(lit(Long.MaxValue)): _*),
       (acc, p) => array((0 until numHashes).map(h => least(acc.getItem(h),
         (p.getField("x") + lit(h.toLong) * p.getField("y")) % HashModulus)): _*))
@@ -116,44 +122,35 @@ object Dedup {
     */
   def lshBandArray(sigArr: Column, numHashes: Int = 16,
                    bands: Int = 4): Column = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must divide evenly into bands ($bands): a " +
-        "remainder would silently drop trailing signature rows here while " +
-        "lshBucketsFromSignatures emits them as an extra band — divergent " +
-        "candidate sets with no error")
-    val rowsPerBand = numHashes / bands
+    val rows = rowsPerBand(numHashes, bands)
     array((0 until bands).map { b =>
-      val parts = (0 until rowsPerBand).map(i =>
-        element_at(sigArr, b * rowsPerBand + i + 1).cast("string"))
+      val parts = (0 until rows).map(i =>
+        element_at(sigArr, b * rows + i + 1).cast("string"))
       struct(lit(b).as("band"), md5(concat_ws("|", parts: _*)).as("bucket"))
     }: _*)
   }
 
-  /** LSH banding: (id, band, bucket) where bucket = md5 of the band's
-    * concatenated signature rows. Docs sharing any (band,bucket) are
-    * candidate near-duplicates. numHashes <= 16 (see
-    * [[minhashSignatures]]).
-    */
-  def lshBuckets(df: DataFrame, idCol: String, textCol: String,
-                 numHashes: Int = 16, bands: Int = 4, shingleLen: Int = 3): DataFrame =
-    lshBucketsFromSignatures(
-      minhashSignatures(df, idCol, textCol, numHashes, shingleLen), numHashes, bands)
+  private def rowsPerBand(numHashes: Int, bands: Int): Int = {
+    require(numHashes % bands == 0, s"numHashes ($numHashes) must divide evenly into " +
+      s"bands ($bands): lshBandArray and lshBucketsFromSignatures must stay digest-identical")
+    numHashes / bands
+  }
 
-  /** LSH banding over precomputed (id, h, minhash) signatures. The signature
-    * pass (shingle explode x numHashes md5s) is the expensive stage of every
-    * MinHash consumer, so a pipeline running several of them — bucketing,
-    * candidate pairs, clustering — should derive signatures ONCE (persist
-    * them in the warehouse at scale) and fan out, like the cached
-    * component-labels pattern.
+  /** LSH banding over precomputed (id, h, minhash) signatures: (id, band,
+    * bucket) where bucket = md5 of the band's concatenated signature rows.
+    * Docs sharing any (band,bucket) are candidate near-duplicates. The
+    * signature pass (shingle explode x numHashes md5s) is the expensive
+    * stage of every MinHash consumer, so a pipeline running several of
+    * them — bucketing, candidate pairs, clustering — should derive
+    * signatures ONCE (persist them in the warehouse at scale) and fan out,
+    * like the cached component-labels pattern. numHashes <= 16 (see
+    * [[minhashSignatures]]).
     */
   def lshBucketsFromSignatures(sig: DataFrame, numHashes: Int = 16,
                                bands: Int = 4): DataFrame = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must divide evenly into bands ($bands) — " +
-        "see lshBandArray, which must stay digest-identical")
-    val rowsPerBand = numHashes / bands
+    val rows = rowsPerBand(numHashes, bands)
     sig
-      .withColumn("band", floor(col("h") / lit(rowsPerBand)).cast("int"))
+      .withColumn("band", floor(col("h") / lit(rows)).cast("int"))
       .groupBy("id", "band")
       // deterministic band digest: rows ordered by h via sort_array on (h, minhash)
       .agg(md5(array_join(transform(sort_array(collect_list(struct(col("h"), col("minhash")))),
@@ -177,19 +174,30 @@ object Dedup {
     * the caller — parquet-backed or checkpointed).
     */
   def minhashLshPairsFromSignatures(sig: DataFrame, numHashes: Int = 16,
-                                    bands: Int = 4): DataFrame = {
-    val b = lshBucketsFromSignatures(sig, numHashes, bands)
-    val cand = b.as("x").join(b.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
-    cand
-      .join(sig.select(col("id").as("id_a"), col("h"), col("minhash").as("va")), Seq("id_a"))
-      .join(sig.select(col("id").as("id_b"), col("h"), col("minhash").as("vb")), Seq("id_b", "h"))
-      .groupBy("id_a", "id_b")
+                                    bands: Int = 4): DataFrame =
+    signatureAgreement(sig, sig, numHashes, bands, "id_a", "id_b", col("x.id") < col("y.id"))
+
+  /** (a, b, est_jaccard): distinct id pairs of `sigA` x `sigB` sharing a
+    * (band, bucket) with `pair` (over x and y), scored by the fraction of
+    * agreeing h.
+    */
+  private def signatureAgreement(sigA: DataFrame, sigB: DataFrame, numHashes: Int,
+                                 bands: Int, a: String, b: String, pair: Column): DataFrame =
+    blockPairs(lshBucketsFromSignatures(sigA, numHashes, bands),
+        lshBucketsFromSignatures(sigB, numHashes, bands), Seq("band", "bucket"), pair, a, b)
+      .join(sigA.select(col("id").as(a), col("h"), col("minhash").as("va")), Seq(a))
+      .join(sigB.select(col("id").as(b), col("h"), col("minhash").as("vb")), Seq(b, "h"))
+      .groupBy(a, b)
       .agg((sum(when(col("va") === col("vb"), 1).otherwise(0)).cast("double") /
         count(lit(1)).cast("double")).as("est_jaccard"))
-  }
+
+  /** The blocking join: distinct (a, b) id pairs of `x` x `y` rows equal on
+    * every `keys` column and satisfying `cond` (over aliases x and y).
+    */
+  private def blockPairs(x: DataFrame, y: DataFrame, keys: Seq[String], cond: Column,
+                         a: String = "id_a", b: String = "id_b"): DataFrame =
+    x.as("x").join(y.as("y"), keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) && cond)
+      .select(col("x.id").as(a), col("y.id").as(b)).distinct()
 
   /** Incremental dedup: screen a NEW document batch against an EXISTING
     * corpus signature table — the production shape of continuous-ingest
@@ -210,20 +218,8 @@ object Dedup {
                          minAgree: Double = 0.5): DataFrame = {
     val newSig = minhashSignatures(newDocs, idCol, textCol, numHashes,
       shingleLen).localCheckpointCapped()
-    val nb = lshBucketsFromSignatures(newSig, numHashes, bands)
-    val cb = lshBucketsFromSignatures(corpusSig, numHashes, bands)
-    val cand = nb.as("x").join(cb.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") =!= col("y.id"))
-      .select(col("x.id").as("new_id"), col("y.id").as("corpus_id")).distinct()
-    cand
-      .join(newSig.select(col("id").as("new_id"), col("h"),
-        col("minhash").as("va")), Seq("new_id"))
-      .join(corpusSig.select(col("id").as("corpus_id"), col("h"),
-        col("minhash").as("vb")), Seq("corpus_id", "h"))
-      .groupBy("new_id", "corpus_id")
-      .agg((sum(when(col("va") === col("vb"), 1).otherwise(0)).cast("double") /
-        count(lit(1)).cast("double")).as("est_jaccard"))
+    signatureAgreement(newSig, corpusSig, numHashes, bands, "new_id", "corpus_id",
+      col("x.id") =!= col("y.id"))
       .filter(col("est_jaccard") >= minAgree)
   }
 
@@ -278,11 +274,7 @@ object Dedup {
     val bl = h.select(col("id"), explode(sequence(lit(0), lit(blocks - 1))).as("b"), col("hash"))
       .withColumn("blk", expr("shiftrightunsigned(hash, b * 8) & 255"))
       .select("id", "b", "blk")
-    val cand = bl.as("x").join(bl.as("y"),
-        col("x.b") === col("y.b") && col("x.blk") === col("y.blk") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
-    cand
+    blockPairs(bl, bl, Seq("b", "blk"), col("x.id") < col("y.id"))
       .join(h.select(col("id").as("id_a"), col("hash").as("ha")), Seq("id_a"))
       .join(h.select(col("id").as("id_b"), col("hash").as("hb")), Seq("id_b"))
       .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int"))
@@ -359,7 +351,14 @@ object Dedup {
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         shingleLen: Int = 3, minJaccard: Double = 0.0,
-                        maxDf: Int = 0): DataFrame = {
+                        maxDf: Int = 0): DataFrame =
+    jaccardAtLeast(shingleOverlaps(df, idCol, textCol, shingleLen, maxDf), minJaccard)
+
+  /** (id_a < id_b, inter, sza, szb) for pairs sharing a shingle of df <=
+    * `maxDf` (`<= 0`: no cap); sizes count the same capped postings.
+    */
+  private def shingleOverlaps(df: DataFrame, idCol: String, textCol: String,
+                              shingleLen: Int, maxDf: Int): DataFrame = {
     val shAll = df.select(col(idCol).as("id"),
       explode(TextAnalysis.shingles(col(textCol), shingleLen)).as("shingle"))
     val filtered =
@@ -382,12 +381,16 @@ object Dedup {
     inter
       .join(sizes.select(col("id").as("id_a"), col("sz").as("sza")), Seq("id_a"))
       .join(sizes.select(col("id").as("id_b"), col("sz").as("szb")), Seq("id_b"))
+  }
+
+  /** (id_a, id_b, jaccard >= `minJaccard`) of (id_a, id_b, inter, sza, szb). */
+  private def jaccardAtLeast(overlaps: DataFrame, minJaccard: Double): DataFrame =
+    overlaps
       .withColumn("jaccard",
         col("inter").cast("double") /
           (col("sza") + col("szb") - col("inter")).cast("double"))
       .filter(col("jaccard") >= minJaccard)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
 
   /** Exact Jaccard-threshold self-join via prefix filtering (the PPJoin /
     * AllPairs family, Bayardo et al. WWW'07): order every document's
@@ -410,11 +413,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     // per-doc distinct shingle SET, materialized once: the postings explode
     // below derives from it, and verification reads the arrays directly
-    val sets = df.select(col(idCol).as("id"),
-        TextAnalysis.shingles(col(textCol), shingleLen).as("shs"))
-      .withColumn("sz", size(col("shs")))
-      .filter(col("sz") > 0)
-      .localCheckpointCapped()
+    val sets = shingleSets(df, col(idCol), textCol, shingleLen).localCheckpointCapped()
     val sh = sets.select(col("id"), col("sz"), explode(col("shs")).as("shingle"))
     val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     val prefix = sh.join(dfreq, Seq("shingle"))
@@ -432,37 +431,40 @@ object Dedup {
     // (rka, rkb) (positional filter). Both prune only provably-sub-tau
     // pairs; the 1e-9 slack keeps borderline IEEE comparisons conservative.
     val eps = 1e-9
-    val cand = prefix.as("a").join(prefix.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id") &&
-          (lit(1.0) + tau) * least(col("a.sz"), col("b.sz")) >=
-            lit(tau) * (col("a.sz") + col("b.sz")) - eps &&
-          (lit(1.0) + tau) *
-            (lit(1) + least(col("a.sz") - col("a.rk"), col("b.sz") - col("b.rk"))) >=
-            lit(tau) * (col("a.sz") + col("b.sz")) - eps)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    // verify each candidate against the two collected sets: one
-    // O(|a|+|b|) array_intersect per PAIR, instead of exploding pairs
-    // against the postings table (a measured 30s -> sub-second change at
-    // sf0.1: the explode shuffled ~50 rows per candidate through two
-    // joins; the arrays ride along with one hash join probe each).
+    val cand = blockPairs(prefix, prefix, Seq("shingle"), col("x.id") < col("y.id") &&
+      (lit(1.0) + tau) * least(col("x.sz"), col("y.sz")) >=
+        lit(tau) * (col("x.sz") + col("y.sz")) - eps &&
+      (lit(1.0) + tau) *
+        (lit(1) + least(col("x.sz") - col("x.rk"), col("y.sz") - col("y.rk"))) >=
+        lit(tau) * (col("x.sz") + col("y.sz")) - eps)
     // The candidate table is re-spread by id_a with a PINNED partition
     // count first: its bytes are tiny (two longs per row) so AQE's
     // bytes-based coalescing collapses the distinct's output to one
     // partition, serializing the intersect verification — per-row COST,
     // not size, is what matters here (measured 5.3 s -> ~0.7 s at sf0.1).
+    jaccardAtLeast(verifiedOverlaps(
+      cand.repartition(Tuning.spreadPartitions(df.sparkSession), col("id_a")), sets), tau)
+  }
+
+  /** (id, shs, sz): the distinct shingle array of each shingled document. */
+  private def shingleSets(df: DataFrame, id: Column, textCol: String,
+                          shingleLen: Int): DataFrame =
+    df.select(id.as("id"), TextAnalysis.shingles(col(textCol), shingleLen).as("shs"))
+      .withColumn("sz", size(col("shs")))
+      .filter(col("sz") > 0)
+
+  /** Candidate pairs (id_a, id_b) with both ends' `shingleSets` rows and
+    * inter = |sa ∩ sb|: one O(|a|+|b|) array_intersect per PAIR instead of
+    * exploding pairs against the postings (measured 30 s -> sub-second at
+    * sf0.1: the explode shuffled ~50 rows per candidate through two joins).
+    */
+  private def verifiedOverlaps(cand: DataFrame, sets: DataFrame): DataFrame =
     cand
-      .repartition(Tuning.spreadPartitions(df.sparkSession), col("id_a"))
       .join(sets.select(col("id").as("id_a"), col("shs").as("sa"),
         col("sz").as("sza")), Seq("id_a"))
       .join(sets.select(col("id").as("id_b"), col("shs").as("sb"),
         col("sz").as("szb")), Seq("id_b"))
       .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (col("sza") + col("szb") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= tau)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
 
   /** Incremental MinHash signature maintenance: given the signature table
     * of the previous corpus snapshot and the batch of upserted documents,
@@ -557,49 +559,28 @@ object Dedup {
     */
   def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
                             shingleLen: Int = 3, thresholdQ: Long = 500000,
-                            maxDf: Int = 20): DataFrame = {
-    val shAll = df.select(col(idCol).as("id"),
-      explode(TextAnalysis.shingles(col(textCol), shingleLen)).as("shingle"))
-    val filtered =
-      if (maxDf <= 0) shAll
-      else shAll.join(
-        shAll.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf).select("shingle"),
-        Seq("shingle"), "left_semi")
-    val sh = filtered.localCheckpointCapped()
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
-    val inter = sh.as("a").join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("id").as("id_a"), col("sz").as("sza")), Seq("id_a"))
-      .join(sizes.select(col("id").as("id_b"), col("sz").as("szb")), Seq("id_b"))
+                            maxDf: Int = 20): DataFrame =
+    shingleOverlaps(df, idCol, textCol, shingleLen, maxDf)
       .withColumn("containment_q",
         expr("inter * 1000000 div least(sza, szb)"))
       .filter(col("containment_q") >= thresholdQ)
       .select(col("id_a"), col("id_b"), col("inter"), col("containment_q"))
-  }
 
   /** Benchmark decontamination: ids of corpus documents sharing at least one
     * `n`-word shingle with any benchmark document (the standard n-gram
     * test-set-overlap filter applied before training). The benchmark side
-    * is distinct shingles of a small table — broadcast-able, so at 100 TB
+    * is distinct shingles of a small table — broadcast, so at 100 TB
     * this is a map-side semi join against the corpus scan (no corpus
     * shuffle); the distinct on ids is the only shuffle, keyed and partial.
     */
   def contaminatedIds(corpus: DataFrame, benchmark: DataFrame,
-                      idCol: String, textCol: String, n: Int = 8,
-                      broadcastBenchmark: Boolean = true): DataFrame = {
+                      idCol: String, textCol: String, n: Int = 8): DataFrame = {
     val bsh = benchmark
       .select(explode(TextAnalysis.shingles(col(textCol), n)).as("shingle"))
       .distinct()
     corpus
       .select(col(idCol), explode(TextAnalysis.shingles(col(textCol), n)).as("shingle"))
-      // a benchmark set is small by construction; the flag covers the
-      // huge-benchmark case, where AQE falls back to shuffled semi join
-      .join(if (broadcastBenchmark) broadcast(bsh) else bsh,
-        Seq("shingle"), "left_semi")
+      .join(broadcast(bsh), Seq("shingle"), "left_semi")
       .select(idCol).distinct()
   }
 
@@ -619,30 +600,35 @@ object Dedup {
   def segmentDedup(df: DataFrame, idCol: String, textCol: String,
                    segLen: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(segLen > 0, "positive segment length")
-    val segs = df
-      .select(col(idCol).as("id"), TextAnalysis.tokens(col(textCol)).as("__toks"))
-      .select(col("id"), col("__toks"),
-        explode(sequence(lit(0L), (size(col("__toks")) - 1).cast("long"),
-          lit(segLen.toLong))).as("seg_start"))
-      .select(col("id"), col("seg_start"),
-        array_join(slice(col("__toks"), col("seg_start") + 1, lit(segLen)), " ")
-          .as("seg"))
+    val segs = segments(df, textCol, segLen, col(idCol).as("id"))
     val w = Window.partitionBy(md5(col("seg"))).orderBy("id", "seg_start")
     val kept = segs.withColumn("rn", row_number().over(w))
       .withColumn("keep", col("rn") === 1)
-    // SQL semantics for the fully-deduplicated document: when no segment
-    // survives, clean_text is NULL (matching string_agg over all-NULL input),
-    // not the empty string array_join would otherwise produce.
-    val nKept = sum(when(col("keep"), 1L).otherwise(0L))
     kept.groupBy("id")
       .agg(count(lit(1)).as("n_segments"),
-        nKept.as("n_kept"),
-        when(nKept > 0, array_join(transform(
-          array_sort(collect_list(when(col("keep"),
-            struct(col("seg_start"), col("seg"))))),
-          s => s.getField("seg")), " ")).as("clean_text"))
+        sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
+        keptText(col("keep")).as("clean_text"))
   }
+
+  /** (keys, seg_start, seg) per non-overlapping `segLen`-token segment. */
+  private def segments(df: DataFrame, textCol: String, segLen: Int,
+                       keys: Column*): DataFrame = {
+    require(segLen > 0, "positive segment length")
+    val toks = df.select(keys :+ TextAnalysis.tokens(col(textCol)).as("__toks"): _*)
+    val names = toks.columns.init.toSeq.map(col)
+    toks.select(names :+ col("__toks") :+ explode(sequence(lit(0L),
+        (size(col("__toks")) - 1).cast("long"), lit(segLen.toLong))).as("seg_start"): _*)
+      .select(names :+ col("seg_start") :+ array_join(slice(col("__toks"),
+        col("seg_start") + 1, lit(segLen)), " ").as("seg"): _*)
+  }
+
+  /** Aggregate: the `keep` segments rejoined in seg_start order; NULL when
+    * none survives (SQL string_agg over no rows), not array_join's "".
+    */
+  private def keptText(keep: Column): Column =
+    when(sum(when(keep, 1L).otherwise(0L)) > 0, array_join(transform(
+      array_sort(collect_list(when(keep, struct(col("seg_start"), col("seg"))))),
+      s => s.getField("seg")), " "))
 
   /** C4/CCNet-style boilerplate stripping: a fixed-length token segment that
     * recurs across >= minDocs DISTINCT documents of the SAME source is
@@ -666,18 +652,8 @@ object Dedup {
   def boilerplateSegments(df: DataFrame, idCol: String, sourceCol: String,
                           textCol: String, segLen: Int = 8,
                           minDocs: Int = 2): DataFrame = {
-    require(segLen > 0, "positive segment length")
     require(minDocs >= 2, "minDocs < 2 would mark every segment boilerplate")
-    val segs = df
-      .select(col(idCol).as("id"), col(sourceCol).as("source"),
-        TextAnalysis.tokens(col(textCol)).as("__toks"))
-      .select(col("id"), col("source"),
-        explode(sequence(lit(0L), (size(col("__toks")) - 1).cast("long"),
-          lit(segLen.toLong))).as("seg_start"),
-        col("__toks"))
-      .select(col("id"), col("source"), col("seg_start"),
-        array_join(slice(col("__toks"), col("seg_start") + 1, lit(segLen)), " ")
-          .as("seg"))
+    val segs = segments(df, textCol, segLen, col(idCol).as("id"), col(sourceCol).as("source"))
     val freq = segs
       .groupBy(col("source").as("__fsrc"), md5(col("seg")).as("__h"))
       .agg(countDistinct(col("id")).as("__nd"))
@@ -689,14 +665,10 @@ object Dedup {
       .join(freq, Seq("__fsrc", "__h"), "left")
       .select(col("id"), col("__fsrc").as("source"), col("seg_start"),
         col("seg"), coalesce(col("__boiler"), lit(false)).as("boiler"))
-    val nClean = sum(when(!col("boiler"), 1L).otherwise(0L))
     flagged.groupBy("id", "source")
       .agg(count(lit(1)).as("n_segments"),
         sum(when(col("boiler"), 1L).otherwise(0L)).as("n_boiler"),
-        when(nClean > 0, array_join(transform(
-          array_sort(collect_list(when(!col("boiler"),
-            struct(col("seg_start"), col("seg"))))),
-          s => s.getField("seg")), " ")).as("clean_text"))
+        keptText(!col("boiler")).as("clean_text"))
   }
 
   /** Fuzzy-duplicate pairs by Levenshtein distance within caller-supplied
@@ -834,23 +806,8 @@ object Dedup {
     val cand = offs.join(ranked.select(col("id").as("id_y"), col("rn")), Seq("rn"))
       .select(least(col("id_x"), col("id_y")).as("id_a"),
         greatest(col("id_x"), col("id_y")).as("id_b"))
-    // verify against collected shingle sets: one O(|a|+|b|) array_intersect
-    // per candidate pair, instead of exploding pairs against a postings
-    // table (the same measured win as jaccardPrefixPairs' verify)
-    val sets = df.select(col(idCol).cast("long").as("id"),
-        TextAnalysis.shingles(col(textCol), shingleLen).as("shs"))
-      .withColumn("sz", size(col("shs")))
-      .filter(col("sz") > 0)
-    cand
-      .join(sets.select(col("id").as("id_a"), col("shs").as("sa"),
-        col("sz").as("sza")), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b"), col("shs").as("sb"),
-        col("sz").as("szb")), Seq("id_b"))
-      .withColumn("i", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .withColumn("jaccard",
-        col("i").cast("double") / (col("sza") + col("szb") - col("i")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    jaccardAtLeast(verifiedOverlaps(cand,
+      shingleSets(df, col(idCol).cast("long"), textCol, shingleLen)), minJaccard)
   }
 
   /** Cross-source duplicate-overlap estimation via theta-sketch (KMV)

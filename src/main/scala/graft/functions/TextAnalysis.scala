@@ -384,21 +384,27 @@ object TextAnalysis {
     val post = tf.join(dfreq, Seq("token"))
       .withColumn("wq", expr("(tf * 1000000L) div df"))
       .select("token", "doc_id", "wq").localCheckpointCapped()
-    val norms = post.groupBy("doc_id")
-      .agg(sum(expr("CAST(wq AS DECIMAL(38,0)) * wq")).as("n2"))
-    val a = post.select(col("token"), col("doc_id").as("doc_a"), col("wq").as("wa"))
-    val b = post.select(col("token"), col("doc_id").as("doc_b"), col("wq").as("wb"))
-    val dots = a.join(b, Seq("token")).filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(sum(expr("CAST(wa AS DECIMAL(38,0)) * wb")).as("dot"))
-    dots
-      .join(norms.select(col("doc_id").as("doc_a"), col("n2").as("na")), Seq("doc_a"))
-      .join(norms.select(col("doc_id").as("doc_b"), col("n2").as("nb")), Seq("doc_b"))
-      .withColumn("cos_q", expr(
-        """CAST(floor(CAST(dot AS DOUBLE)
-           / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) * 1000000) AS BIGINT)"""))
+    sparseCosine(post, "doc_id", "wq", "doc_a", "doc_b")
       .filter(col("cos_q") >= thresholdQ)
-      .select("doc_a", "doc_b", "cos_q")
+  }
+
+  /** (a < b, cos_q) between the sparse vectors of `key`s in the postings
+    * `post` (token, key, w): self-join on token, DECIMAL(38,0) dots and
+    * squared norms, then one fixed IEEE cosine floored at 1e6.
+    */
+  private def sparseCosine(post: DataFrame, key: String, w: String,
+                           a: String, b: String): DataFrame = {
+    val norms = post.groupBy(key)
+      .agg(sum(expr(s"CAST($w AS DECIMAL(38,0)) * $w")).as("n2"))
+    post.select(col("token"), col(key).as(a), col(w).as("wa"))
+      .join(post.select(col("token"), col(key).as(b), col(w).as("wb")), Seq("token"))
+      .filter(col(a) < col(b))
+      .groupBy(a, b)
+      .agg(sum(expr("CAST(wa AS DECIMAL(38,0)) * wb")).as("dot"))
+      .join(norms.select(col(key).as(a), col("n2").as("na")), Seq(a))
+      .join(norms.select(col(key).as(b), col("n2").as("nb")), Seq(b))
+      .select(col(a), col(b), expr("""CAST(floor(CAST(dot AS DOUBLE)
+        / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) * 1000000) AS BIGINT)""").as("cos_q"))
   }
 
   /** Count-min sketch of the corpus token stream: d md5-derived hash rows x
@@ -413,10 +419,13 @@ object TextAnalysis {
                      d: Int = 4, w: Int = 64): DataFrame =
     df.select(explode(tokens(col(textCol))).as("token"))
       .select(col("token"), explode(sequence(lit(0), lit(d - 1))).as("j"))
-      .select(col("j"),
-        (conv(substring(md5(concat(col("j").cast("string"), lit(":"),
-          col("token"))), 1, 8), 16, 10).cast("long") % w).as("bucket"))
+      .select(col("j"), probeCell(w).as("bucket"))
       .groupBy("j", "bucket").agg(count(lit(1)).as("n"))
+
+  /** Probe j's cell of a token: md5("j:token") head mod `cells`. */
+  private def probeCell(cells: Int): Column =
+    conv(substring(md5(concat(col("j").cast("string"), lit(":"), col("token"))), 1, 8),
+      16, 10).cast("long") % cells
 
   /** Point estimates from a count-min sketch next to the true counts, for
     * tokens at or above `minTrue` occurrences: est = min over the d rows of
@@ -432,9 +441,7 @@ object TextAnalysis {
     truec
       .select(col("token"), col("true_n"),
         explode(sequence(lit(0), lit(d - 1))).as("j"))
-      .select(col("token"), col("true_n"), col("j"),
-        (conv(substring(md5(concat(col("j").cast("string"), lit(":"),
-          col("token"))), 1, 8), 16, 10).cast("long") % w).as("bucket"))
+      .select(col("token"), col("true_n"), col("j"), probeCell(w).as("bucket"))
       .join(sketch, Seq("j", "bucket"))
       .groupBy("token", "true_n").agg(min("n").as("est_n"))
   }
@@ -457,9 +464,7 @@ object TextAnalysis {
       .distinct()
       .select(col("grp"), col("token"),
         explode(sequence(lit(0), lit(k - 1))).as("j"))
-      .select(col("grp"),
-        (conv(substring(md5(concat(col("j").cast("string"), lit(":"),
-          col("token"))), 1, 8), 16, 10).cast("long") % m).as("pos"))
+      .select(col("grp"), probeCell(m).as("pos"))
       .select(col("grp"), (col("pos") / 63).cast("long").as("word"),
         (col("pos") % 63).cast("int").as("bit"))
       .groupBy("grp", "word")
@@ -501,19 +506,7 @@ object TextAnalysis {
       .select(col(groupCol).as("grp"), explode(tokens(col(textCol))).as("token"))
       .groupBy("grp", "token").agg(count(lit(1)).as("c"))
       .localCheckpointCapped()
-    val norms = counts.groupBy("grp")
-      .agg(sum(expr("CAST(c AS DECIMAL(38,0)) * c")).as("n2"))
-    val a = counts.select(col("token"), col("grp").as("grp_a"), col("c").as("ca"))
-    val b = counts.select(col("token"), col("grp").as("grp_b"), col("c").as("cb"))
-    a.join(b, Seq("token")).filter(col("grp_a") < col("grp_b"))
-      .groupBy("grp_a", "grp_b")
-      .agg(sum(expr("CAST(ca AS DECIMAL(38,0)) * cb")).as("dot"))
-      .join(norms.select(col("grp").as("grp_a"), col("n2").as("na")), Seq("grp_a"))
-      .join(norms.select(col("grp").as("grp_b"), col("n2").as("nb")), Seq("grp_b"))
-      .select(col("grp_a"), col("grp_b"), expr(
-        """CAST(floor(CAST(dot AS DOUBLE)
-           / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) * 1000000) AS BIGINT)""")
-        .as("cos_q"))
+    sparseCosine(counts, "grp", "c", "grp_a", "grp_b")
   }
 
   /** Corpus vocabulary: top-`k` tokens by document frequency (ties broken
@@ -573,9 +566,7 @@ object TextAnalysis {
       .groupBy("w").agg(count(lit(1)).as("f"))
     val nTokens = toks.agg(sum(size(col("l"))).cast("decimal(38,0)").as("n"))
     val bg = toks.filter(size(col("l")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(l) - 1), i -> struct(element_at(l, i) AS w1, element_at(l, i + 1) AS w2))"))
-        .as("b"))
+      .select(explode(adjacentPairs(col("l"))((a, b) => struct(a.as("w1"), b.as("w2")))).as("b"))
       .select(col("b.w1"), col("b.w2"))
       .groupBy("w1", "w2").agg(count(lit(1)).as("fxy"))
       .filter(col("fxy") >= minCount)
@@ -607,9 +598,7 @@ object TextAnalysis {
   def bigramLm(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val bg = df.select(col(idCol), split(col(textCol), " ").as("l"))
       .filter(size(col("l")) >= 2)
-      .select(col(idCol), explode(expr(
-        "transform(sequence(1, size(l) - 1), i -> concat(element_at(l, i), ' ', element_at(l, i + 1)))"))
-        .as("bigram"))
+      .select(col(idCol), explode(adjacentPairs(col("l"))(concat(_, lit(" "), _))).as("bigram"))
     val freq = bg.groupBy("bigram").agg(count(lit(1)).as("f"))
     bg.join(freq, Seq("bigram"))
       .groupBy(idCol)
@@ -619,6 +608,10 @@ object TextAnalysis {
         col("fs").cast("long").as("freq_sum"),
         expr("CAST((fs * 1000000) DIV n_bigrams AS BIGINT)").as("lm_score_q"))
   }
+
+  /** `f(left, right)` for each adjacent pair of token array `l`. */
+  private def adjacentPairs(l: Column)(f: (Column, Column) => Column): Column =
+    transform(sequence(lit(1), size(l) - 1), i => f(element_at(l, i), element_at(l, i + 1)))
 
   /** Kneser-Ney continuation statistics — the vocabulary-level pass of
     * n-gram LM smoothing: per token w, the number of DISTINCT left contexts
@@ -634,9 +627,7 @@ object TextAnalysis {
   def knContinuation(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val bp = df.select(split(col(textCol), " ").as("l"))
       .filter(size(col("l")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(l) - 1), i -> struct(element_at(l, i) AS lt, element_at(l, i + 1) AS rt))"))
-        .as("p"))
+      .select(explode(adjacentPairs(col("l"))((a, b) => struct(a.as("lt"), b.as("rt")))).as("p"))
       .select(col("p.lt").as("lt"), col("p.rt").as("rt"))
       .distinct()
       .localCheckpointCapped()
@@ -692,9 +683,8 @@ object TextAnalysis {
     while (r <= rounds && !exhausted) {
       val pairs = sym.select(col("freq"), split(trim(col("sym")), "  ").as("a"))
         .filter(size(col("a")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(0, size(a) - 2), i -> struct(a[i] AS l, a[i+1] AS r))"))
-          .as("p"))
+        .select(col("freq"),
+          explode(adjacentPairs(col("a"))((l, r) => struct(l.as("l"), r.as("r")))).as("p"))
         .select(col("freq"), col("p.l").as("l"), col("p.r").as("r"))
         .groupBy("l", "r").agg(sum("freq").as("cnt"))
       val best = pairs.orderBy(desc("cnt"), asc("l"), asc("r")).limit(1).collect()
@@ -876,21 +866,12 @@ object TextAnalysis {
     val base = df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"),
         col(textCol).as("txt"))
       .select(col("doc_id"), size(col("toks")).as("dl"), col("toks"), col("txt"))
-    val stats = base.agg(count(lit(1)).as("n_docs"),
-      sum("dl").as("sumdl"))
     val containsAny = queryTerms.map(t => col("txt").contains(t))
       .reduce(_ || _)
-    val tf = base.filter(containsAny)
+    val hits = base.filter(containsAny)
       .select(col("doc_id"), col("dl"), explode(col("toks")).as("token"))
       .filter(col("token").isin(queryTerms: _*))
-      .groupBy("doc_id", "dl", "token").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-    val contrib = tf.join(dfreq, Seq("token")).crossJoin(broadcast(stats))
-      .withColumn("idf_q", expr("(n_docs * 1000000L) div df"))
-      .withColumn("contrib_q", expr(
-        """(CAST(idf_q AS DECIMAL(38,0)) * tf * 44 * sumdl)
-           div (CAST(20 AS DECIMAL(38,0)) * sumdl * tf + 6 * sumdl + 18 * dl * n_docs)"""))
-    contrib.groupBy("doc_id")
+    bm25Contributions(base, hits).groupBy("doc_id")
       .agg(count(lit(1)).as("n_hits"), sum("contrib_q").as("score_q"))
       .orderBy(desc("score_q"), asc("doc_id"))
       .limit(k)
@@ -917,24 +898,30 @@ object TextAnalysis {
     val terms = queries.select(col("term")).distinct()
     val base = df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
       .select(col("doc_id"), size(col("toks")).as("dl"), col("toks"))
-    val stats = base.agg(count(lit(1)).as("n_docs"), sum("dl").as("sumdl"))
-    val tf = base.select(col("doc_id"), col("dl"), explode(col("toks")).as("token"))
+    val hits = base.select(col("doc_id"), col("dl"), explode(col("toks")).as("token"))
       .join(broadcast(terms.select(col("term").as("token"))), Seq("token"))
-      .groupBy("doc_id", "dl", "token").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-    val contrib = tf.join(dfreq, Seq("token")).crossJoin(broadcast(stats))
-      .withColumn("idf_q", expr("(n_docs * 1000000L) div df"))
-      .withColumn("contrib_q", expr(
-        """(CAST(idf_q AS DECIMAL(38,0)) * tf * 44 * sumdl)
-           div (CAST(20 AS DECIMAL(38,0)) * sumdl * tf + 6 * sumdl + 18 * dl * n_docs)"""))
     val w = Window.partitionBy("query_id").orderBy(desc("score_q"), asc("doc_id"))
-    contrib
+    bm25Contributions(base, hits)
       .join(broadcast(queries.select(col("query_id"), col("term").as("token"))),
         Seq("token"))
       .groupBy("query_id", "doc_id")
       .agg(count(lit(1)).as("n_hits"), sum("contrib_q").as("score_q"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
+  }
+
+  /** BM25 contrib_q per (doc_id, token) of the query-term rows `hits`
+    * (doc_id, dl, token); corpus stats N and sumdl come from `docs`.
+    */
+  private def bm25Contributions(docs: DataFrame, hits: DataFrame): DataFrame = {
+    val stats = docs.agg(count(lit(1)).as("n_docs"), sum("dl").as("sumdl"))
+    val tf = hits.groupBy("doc_id", "dl", "token").agg(count(lit(1)).as("tf"))
+    val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
+    tf.join(dfreq, Seq("token")).crossJoin(broadcast(stats))
+      .withColumn("idf_q", expr("(n_docs * 1000000L) div df"))
+      .withColumn("contrib_q", expr(
+        """(CAST(idf_q AS DECIMAL(38,0)) * tf * 44 * sumdl)
+           div (CAST(20 AS DECIMAL(38,0)) * sumdl * tf + 6 * sumdl + 18 * dl * n_docs)"""))
   }
 
   /** Reciprocal-rank fusion of two ranked item lists — the standard hybrid-
@@ -1067,11 +1054,8 @@ object TextAnalysis {
                              textCol: String): DataFrame = {
     val bg = df.select(col(idCol), tokens(col(textCol)).as("l"))
       .filter(size(col("l")) >= 2)
-      .select(col(idCol), explode(expr(
-        """transform(sequence(1, size(l) - 1),
-           i -> struct(element_at(l, i) AS w1,
-                       concat(element_at(l, i), ' ', element_at(l, i + 1)) AS bigram))"""))
-        .as("b"))
+      .select(col(idCol), explode(adjacentPairs(col("l"))((a, b) =>
+        struct(a.as("w1"), concat(a, lit(" "), b).as("bigram")))).as("b"))
       .select(col(idCol), col("b.w1").as("w1"), col("b.bigram").as("bigram"))
     val fxy = bg.groupBy("bigram").agg(count(lit(1)).as("fxy"))
     val fx = bg.groupBy("w1").agg(count(lit(1)).as("fx"))

@@ -1,7 +1,8 @@
 package graft
 
 /** Optimization-round evidence harness: for each named gated query, write
-  * its `.explain("formatted")` physical plan to `<outDir>/<name>_<tag>.txt`
+  * its `.explain("formatted")` physical plan, with run-specific tokens made
+  * stable by [[ExplainDump.normalizePlan]], to `<outDir>/<name>_<tag>.txt`
   * and time one noop-sink materialization (guide §1.4 — computes every
   * column of every row, no sink cost, full plan in the SQL tab) with the
   * job labeled (guide §1.5). Between queries it resets memoized artifacts
@@ -23,6 +24,22 @@ object ExplainDump {
     "InMemoryFileIndex(?: ?\\(\\d+ paths?\\))?\\[([^\\],]+)".r.findAllMatchIn(plan)
       .map(m => m.group(1).split("/").last)
       .toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+
+  /** A formatted plan with its run-specific tokens made stable, so two
+    * dumps of one plan diff as equal across builds and query orders:
+    * expression ids (`#123`), RDD ids, exchange plan ids, Spark's global
+    * lambda-variable counter (`x_82`), call sites (`at Dedup.scala:559`),
+    * and a file location's directory and scratch-table hash.
+    */
+  def normalizePlan(plan: String): String = Seq(
+      "#\\d+" -> "#N",
+      "RDD\\[\\d+\\]" -> "RDD[N]",
+      "plan_id=\\d+" -> "plan_id=N",
+      "\\b([xyz])_\\d+\\b" -> "$1_N",
+      "(\\w+\\.scala):\\d+" -> "$1:N",
+      "file:[^\\s,\\]]*/" -> "file:.../",
+      "(file:\\.\\.\\./[A-Za-z_]*)[0-9a-f]{8}\\b" -> "$1H")
+    .foldLeft(plan) { case (p, (re, to)) => p.replaceAll(re, to) }
 
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {
@@ -68,7 +85,7 @@ object ExplainDump {
             val w = new java.io.PrintWriter(f, "UTF-8")
             try {
               w.println(f"# $name ($tag) noop-sink materialization: $sec%.2f s at $sfDir")
-              w.println(plan)
+              w.println(normalizePlan(plan))
             } finally w.close()
             System.err.println(f"[explain] $name%-24s $sec%8.2f s -> $f")
           } catch {

@@ -796,4 +796,149 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       }
     }
   }
+
+  /** A corpus of (id, source, text) rows over a five-word vocabulary, so
+    * shingles collide often, plus the operator knobs. Most documents after
+    * the first are planted near-duplicates of an earlier one: one token
+    * replaced, one token dropped, or an exact copy. Some documents are
+    * shorter than a shingle. Ids descend as rows go on, so id order is not
+    * row order.
+    */
+  private val genShingleCorpus = for {
+    n <- Gen.choose(4, 12)
+    fresh <- Gen.listOfN(n, Gen.choose(1, 12).flatMap(Gen.listOfN(_, Gen.oneOf("a", "b", "c", "d", "e"))))
+    plants <- Gen.listOfN(n, Gen.zip(Gen.frequency(2 -> Gen.const(0), 1 -> Gen.const(1),
+      1 -> Gen.const(2), 1 -> Gen.const(3)), Gen.choose(0, 99), Gen.choose(0, 99), Gen.oneOf("a", "f")))
+    shingleLen <- Gen.oneOf(2, 3)
+    maxDf <- Gen.choose(2, 4)
+    tau <- Gen.oneOf(0.4, 0.5, 0.8, 1.0)
+    minJ <- Gen.oneOf(0.0, 0.4)
+    thresholdQ <- Gen.oneOf(0L, 500000L, 1000000L)
+    window <- Gen.choose(1, 3)
+    keyLen <- Gen.choose(1, 6)
+    segLen <- Gen.choose(1, 3)
+    minDocs <- Gen.choose(2, 3)
+  } yield {
+    val texts = fresh.indices.foldLeft(Vector.empty[List[String]]) { (acc, i) =>
+      val (kind, from, pos, w) = plants(i)
+      val base = if (i == 0) Nil else acc(from % i)
+      acc :+ (kind match {
+        case 1 if i > 0 => base.updated(pos % base.size, w)
+        case 2 if i > 0 && base.size > 1 => base.patch(pos % base.size, Nil, 1)
+        case 3 if i > 0 => base
+        case _ => fresh(i)
+      })
+    }
+    val docs = texts.zipWithIndex.map { case (ws, i) => (1000L - 3L * i, s"s${i % 2}", ws.mkString(" ")) }
+    (docs, (shingleLen, maxDf, tau, minJ, thresholdQ), (window, keyLen, segLen, minDocs))
+  }
+
+  private def words(text: String): Seq[String] = text.split(" ", -1).toSeq
+
+  /** Distinct `len`-word shingle set per id, empty below `len` words. */
+  private def shingleSets(docs: Seq[(Long, String, String)], len: Int): Map[Long, Set[String]] =
+    docs.map { case (id, _, t) =>
+      id -> words(t).sliding(len).filter(_.size == len).map(_.mkString(" ")).toSet
+    }.toMap
+
+  /** The sets with every shingle held by more than `maxDf` ids removed. */
+  private def dfCapped(sets: Map[Long, Set[String]], maxDf: Int): Map[Long, Set[String]] = {
+    val df = sets.values.toSeq.flatten.groupBy(identity).map { case (s, v) => s -> v.size }
+    sets.map { case (id, s) => id -> s.filter(df(_) <= maxDf) }
+  }
+
+  /** (id_a < id_b, inter, sza, szb) for every pair of ids in `pairs`. */
+  private def overlaps(sets: Map[Long, Set[String]], pairs: Seq[(Long, Long)]) =
+    pairs.map { case (a, b) => (a, b, (sets(a) & sets(b)).size.toLong, sets(a).size, sets(b).size) }
+
+  private def allPairs(ids: Iterable[Long]): Seq[(Long, Long)] =
+    for (a <- ids.toSeq; b <- ids.toSeq if a < b) yield (a, b)
+
+  private def jaccard(inter: Long, sza: Int, szb: Int): Double =
+    inter.toDouble / (sza + szb - inter).toDouble
+
+  /** Per id: (source, segment count, kept segments in order) of the
+    * `segLen`-token segments, keeping those for which `keep(id, source,
+    * start, segment)` holds.
+    */
+  private def segmentRef(docs: Seq[(Long, String, String)], segLen: Int)(
+      keep: (Long, String, Int, String) => Boolean): Seq[(Long, String, Long, Long, Option[String])] =
+    docs.map { case (id, src, t) =>
+      val segs = words(t).grouped(segLen).map(_.mkString(" ")).zipWithIndex.toSeq
+      val kept = segs.filter { case (s, j) => keep(id, src, j * segLen, s) }.map(_._1)
+      (id, src, segs.size.toLong, kept.size.toLong, if (kept.isEmpty) None else Some(kept.mkString(" ")))
+    }
+
+  test("the shingle-pair and segment operators equal plain-Scala set references") {
+    import graft.functions.Dedup
+    val seen = collection.mutable.Set.empty[String]
+    (1 to 8).foreach { i =>
+      val (docs, (len, maxDf, tau, minJ, thresholdQ), (window, keyLen, segLen, minDocs)) =
+        genShingleCorpus(Gen.Parameters.default, Seed(i.toLong)).get
+      val df = docs.toDF("id", "source", "text")
+      val ctx = s"corpus $i: len=$len maxDf=$maxDf tau=$tau minJ=$minJ q=$thresholdQ " +
+        s"window=$window keyLen=$keyLen segLen=$segLen minDocs=$minDocs"
+      val sets = shingleSets(docs, len)
+      def sharing(s: Map[Long, Set[String]]) =
+        overlaps(s, allPairs(s.keys)).filter(_._3 > 0)
+
+      Seq(0, maxDf).foreach { cap =>
+        val capped = if (cap <= 0) sets else dfCapped(sets, cap)
+        val want = sharing(capped).map { case (a, b, in, sa, sb) => (a, b, jaccard(in, sa, sb)) }
+          .filter(_._3 >= minJ)
+        val got = Dedup.ngramJaccardPairs(df, "id", "text", len, minJ, cap)
+          .as[(Long, Long, Double)].collect().toSeq
+        assert(got.sorted == want.sorted, s"$ctx ngramJaccardPairs maxDf=$cap")
+      }
+      val wantContain = sharing(dfCapped(sets, maxDf)).map { case (a, b, in, sa, sb) =>
+        (a, b, in, in * 1000000L / math.min(sa, sb)) }.filter(_._4 >= thresholdQ)
+      val gotContain = Dedup.ngramContainmentPairs(df, "id", "text", len, thresholdQ, maxDf)
+        .as[(Long, Long, Long, Long)].collect().toSeq
+      assert(gotContain.sorted == wantContain.sorted, s"$ctx ngramContainmentPairs")
+
+      val wantPrefix = sharing(sets).map { case (a, b, in, sa, sb) => (a, b, jaccard(in, sa, sb)) }
+        .filter(_._3 >= tau)
+      val gotPrefix = Dedup.jaccardPrefixPairs(df, "id", "text", len, tau)
+        .as[(Long, Long, Double)].collect().toSeq
+      assert(gotPrefix.sorted == wantPrefix.sorted, s"$ctx jaccardPrefixPairs")
+
+      val ranked = docs.sortBy { case (id, _, t) => (t.take(keyLen), id) }.map(_._1)
+      val neighbors = for (x <- ranked.indices; off <- 1 to window if x + off < ranked.size)
+        yield (math.min(ranked(x), ranked(x + off)), math.max(ranked(x), ranked(x + off)))
+      val wantSnm = overlaps(sets, neighbors).filter { case (_, _, _, sa, sb) => sa > 0 && sb > 0 }
+        .map { case (a, b, in, sa, sb) => (a, b, jaccard(in, sa, sb)) }.filter(_._3 >= minJ)
+      val gotSnm = Dedup.sortedNeighborhoodPairs(df, "id", "text", window, len, minJ, keyLen)
+        .as[(Long, Long, Double)].collect().toSeq
+      assert(gotSnm.sorted == wantSnm.sorted, s"$ctx sortedNeighborhoodPairs")
+
+      val firstAt = docs.flatMap { case (id, _, t) =>
+        words(t).grouped(segLen).zipWithIndex.map { case (s, j) => s.mkString(" ") -> (id, j * segLen) }
+      }.groupBy(_._1).map { case (s, occ) => s -> occ.map(_._2).min }
+      val wantSeg = segmentRef(docs, segLen)((id, _, start, s) => firstAt(s) == (id, start))
+        .map { case (id, _, n, k, clean) => (id, n, k, clean) }
+      val gotSeg = Dedup.segmentDedup(df, "id", "text", segLen).collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), Option(r.getString(3))))
+      assert(gotSeg.sorted == wantSeg.sorted, s"$ctx segmentDedup")
+
+      val docsWith = docs.flatMap { case (id, src, t) =>
+        words(t).grouped(segLen).map(s => (src, s.mkString(" ")) -> id)
+      }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct.size }
+      val wantBoiler = segmentRef(docs, segLen)((_, src, _, s) => docsWith((src, s)) < minDocs)
+        .map { case (id, src, n, k, clean) => (id, src, n, n - k, clean) }
+      val gotBoiler = Dedup.boilerplateSegments(df, "id", "source", "text", segLen, minDocs)
+        .collect().toSeq
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3), Option(r.getString(4))))
+      assert(gotBoiler.sorted == wantBoiler.sorted, s"$ctx boilerplateSegments")
+
+      if (sets.values.exists(_.isEmpty)) seen += "short doc"
+      if (dfCapped(sets, maxDf) != sets) seen += "df cap drops a shingle"
+      if (wantPrefix.exists(_._3 == 1.0)) seen += "identical sets"
+      if (sharing(sets).exists { case (_, _, in, sa, sb) => jaccard(in, sa, sb) < tau })
+        seen += "overlap below tau"
+      if (wantSeg.exists(_._4.isEmpty)) seen += "nothing kept"
+      if (wantBoiler.exists(_._4 > 0)) seen += "boilerplate"
+    }
+    assert(seen == Set("short doc", "df cap drops a shingle", "identical sets", "overlap below tau",
+      "nothing kept", "boilerplate"), seen)
+  }
 }

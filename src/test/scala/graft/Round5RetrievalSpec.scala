@@ -53,6 +53,20 @@ class Round5RetrievalSpec extends AnyFunSuite with SparkFixture {
       "per-query top-k must plan as WindowGroupLimit")
   }
 
+  test("bm25TopK equals bm25TopKPerQuery on a one-query table") {
+    val docs = corpus.union(Seq((5L, "cat fish dog bird cat"), (6L, "dog"),
+      (7L, "fish cat")).toDF("doc_id", "text"))
+    val terms = Seq("cat", "fish", "dog")
+    val single = TextAnalysis.bm25TopK(docs, "doc_id", "text", terms, 20)
+      .select("doc_id", "n_hits", "score_q", "rank")
+    val perQuery = TextAnalysis.bm25TopKPerQuery(docs, "doc_id", "text",
+        terms.map(t => (1L, t)).toDF("query_id", "term"), 20)
+      .select("doc_id", "n_hits", "score_q", "rank")
+    val want = single.collect().map(_.toString).sorted.toSeq
+    assert(want.size == 6)
+    assert(perQuery.collect().map(_.toString).sorted.toSeq == want)
+  }
+
   test("rrfFuse is integral, handles one-sided items, and orders by fused score") {
     val a = Seq((1L, 1), (2L, 2)).toDF("id", "rank")
     val b = Seq((2L, 1), (3L, 2)).toDF("id", "rank")
