@@ -42,47 +42,73 @@ object GraphAlgorithms {
   /** Edge relations at or below this row count are labeled on the driver
     * instead of by a distributed fixpoint — one collect job (~16 MB of long
     * pairs at the cap, the size class AQE broadcasts) replaces the
-    * fixpoint's jobs. Used by the component finishes above and by the
-    * Borůvka contraction in [[minimumSpanningForest]].
+    * fixpoint's jobs. Used by the component finishes above, by the
+    * Borůvka contraction in [[minimumSpanningForest]] and by the LSH
+    * clustering finish of `Dedup.nearDupClusters*`, always through
+    * [[driverCap]].
     */
   private val DriverContractionCap = 1L << 20
+  private val driverCapScope = new scala.util.DynamicVariable[Long](DriverContractionCap)
+
+  /** The driver-finish cap in force on this thread: [[DriverContractionCap]]
+    * unless a [[withDriverCap]] scope overrides it. */
+  private[graft] def driverCap: Long = driverCapScope.value
+
+  /** Runs `body` with the driver-finish cap set to `cap` on this thread (and
+    * threads it starts), restoring the previous cap after. `withDriverCap(0L)`
+    * sends every gated finish to its distributed path, so tests can compare
+    * the two on the same input.
+    */
+  private[graft] def withDriverCap[T](cap: Long)(body: => T): T =
+    driverCapScope.withValue(cap)(body)
 
   /** The driver finish shared by [[componentLabels]] and
     * [[strongComponentLabels]]. Applies when the node ids and edge
     * endpoints are integral ([[numericCol]]) and the distinct
     * (source, target) pairs with BOTH endpoints in the node table — the
     * edges the fixpoints can see; dangling edges drop exactly as they do
-    * there — number at most [[DriverContractionCap]]: the pairs are
-    * cached, counted, and collected in one job, `label` maps every
-    * endpoint id to its component's min member id, and that small
-    * (id, component) frame left-joins onto the node table, so nodes are
-    * never collected and untouched nodes label themselves. Output rows,
-    * column names and types match the distributed fixpoints. None when
-    * the gate fails.
+    * there — number at most [[driverCap]]: the pairs are collected
+    * ([[collectWithinCap]]), `label` maps every endpoint id to its
+    * component's min member id, and [[labelIds]] joins that onto the node
+    * table. None when the gate fails.
     */
   private def driverComponents(nf: NetworkFrame,
       label: Array[(Long, Long)] => Seq[(Long, Long)]): Option[DataFrame] = {
     if (!(numericCol(nf.nodes, "id") && numericCol(nf.edges, "source") &&
           numericCol(nf.edges, "target"))) return None
     val ids = nf.nodes.select("id")
-    // persisted, not localCheckpointed: the count that materializes the
-    // cache is the cap check itself, one job fewer than a checkpoint + count
     val pairs = nf.edges.select(col("source"), col("target")).distinct()
       .join(ids.withColumnRenamed("id", "source"), Seq("source"), "left_semi")
       .join(ids.withColumnRenamed("id", "target"), Seq("target"), "left_semi")
       .select(col("source").cast("long"), col("target").cast("long"))
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val collected =
-      try if (pairs.count() > DriverContractionCap) None else Some(pairs.collect())
-      finally pairs.unpersist(blocking = false)
-    collected.map { p =>
-      val idType = nf.nodes.schema("id").dataType
-      val lab = nf.nodes.sparkSession.createDataFrame(label(p)).toDF("id", "component")
-        .select(col("id").cast(idType), col("component").cast(idType))
-      ids.join(lab, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-    }
+    collectWithinCap(pairs).map(p => labelIds(ids, label(p)))
+  }
+
+  /** `rows` on the driver when there are at most [[driverCap]] of them, else
+    * None. Persisted, not localCheckpointed: the count that materializes
+    * the cache is the cap check itself, one job fewer than a checkpoint +
+    * count, and the collect reads the cache.
+    */
+  private[graft] def collectWithinCap[T](rows: org.apache.spark.rdd.RDD[T]): Option[Array[T]] = {
+    rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try if (rows.count() > driverCap) None else Some(rows.collect())
+    finally rows.unpersist(blocking = false)
+  }
+
+  /** The driver finishes' last step: the integral `id` column of `ids` with
+    * each id's `component` from the small driver-side `labels`, and ids
+    * that `labels` omits labelling themselves. One left join onto `ids`, so
+    * the ids are never collected and keep their type, duplicates and NULLs.
+    * Output (id, component) matches the distributed fixpoints' rows, names
+    * and types.
+    */
+  private[graft] def labelIds(ids: DataFrame, labels: Seq[(Long, Long)]): DataFrame = {
+    val idType = ids.schema("id").dataType
+    val lab = ids.sparkSession.createDataFrame(labels).toDF("id", "component")
+      .select(col("id").cast(idType), col("component").cast(idType))
+    ids.join(lab, Seq("id"), "left_outer")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
   }
 
   /** Driver-side union-find over integral id pairs: every id in `pairs`
@@ -90,7 +116,7 @@ object GraphAlgorithms {
     * larger root under the smaller, so every root is its set's minimum and
     * `find` returns the min-member label directly.
     */
-  private def unionFindMinLabels(pairs: Array[(Long, Long)]): Seq[(Long, Long)] = {
+  private[graft] def unionFindMinLabels(pairs: Array[(Long, Long)]): Seq[(Long, Long)] = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x

@@ -1,8 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.commons.codec.digest.DigestUtils
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftext.CappedCheckpoint._
+import org.apache.spark.sql.graftext.ExpressionColumns
+import org.apache.spark.storage.StorageLevel
+
+import graft.{GraphAlgorithms, NetworkFrame}
 
 /** Deduplication operators for training-data pipelines, each designed around
   * one shuffle-on-a-compact-key so they scale to 100 TB corpora:
@@ -19,7 +24,8 @@ import org.apache.spark.sql.graftext.CappedCheckpoint._
   * (df-capped overlap join), `shingleSets` + `verifiedOverlaps` (exact-set
   * verifier), `jaccardAtLeast`, `signatureAgreement` (LSH agreement
   * scorer), [[hammingBlockPairs]], `segments` + `keptText` (segment split
-  * and reassembly).
+  * and reassembly), the native [[MinHashArray]] signature kernel, and
+  * `localClusters` (the driver finish of LSH clustering).
   *
   * All hashing is MD5-based so the DuckDB oracle can mirror it exactly.
   */
@@ -63,56 +69,45 @@ object Dedup {
     * family is ever needed, derive further (x, y) pairs from additional
     * md5 substrings or a second digest (e.g. md5(shingle || '#2')) rather
     * than raising the coefficient.
+    *
+    * The rows are [[minhashArray]] exploded by position, then the minimum
+    * per (id, h): numHashes rows per document enter the aggregate (not
+    * numHashes per shingle), and a duplicate id merges by element-wise
+    * minimum. Documents too short to shingle have no rows.
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int = 16, shingleLen: Int = 3): DataFrame = {
-    requireHashCap(numHashes)
-    // ONE digest per shingle; the numHashes-member family is derived from
-    // its two 60-bit halves via the classic universal-hash form
-    // v_h = (x + h*y) mod M — long arithmetic inside whole-stage codegen
-    // instead of numHashes md5 calls per shingle (16x fewer digests; the
-    // signature value is an 8-byte long instead of a 32-char hex string,
-    // so the shuffle and the at-rest signature table shrink ~4x too)
-    val hs = df.select(col(idCol).as("id"),
-        explode(TextAnalysis.shingles(col(textCol), shingleLen)).as("shingle"))
-      .select(col("id") +: hashHalves(md5(col("shingle"))): _*)
-      .select(col("id"), col("x"), col("y"),
-        explode(sequence(lit(0), lit(numHashes - 1))).as("h"))
-      .select(col("id"), col("h"),
-        ((col("x") + col("h") * col("y")) % HashModulus).as("v"))
-    hs.groupBy("id", "h").agg(min("v").as("minhash"))
-  }
+                        numHashes: Int = 16, shingleLen: Int = 3): DataFrame =
+    signatureRows(inRowSignatures(df, idCol, textCol, numHashes, shingleLen))
 
-  private def requireHashCap(numHashes: Int): Unit = require(numHashes <= 16,
-    s"numHashes must be <= 16 (got $numHashes): (x + h*y) with h <= 15 is the " +
+  /** (id, sig): each row's id and [[minhashArray]]. */
+  private def inRowSignatures(df: DataFrame, idCol: String, textCol: String,
+                              numHashes: Int, shingleLen: Int): DataFrame =
+    df.select(col(idCol).as("id"), minhashArray(col(textCol), numHashes, shingleLen).as("sig"))
+
+  /** (id, h, minhash) rows of (id, sig) in-row signatures: the minimum per
+    * (id, h), so duplicate ids merge; a NULL signature gives no rows. */
+  private def signatureRows(sigs: DataFrame): DataFrame =
+    sigs.select(col("id"), posexplode(col("sig")).as(Seq("h", "v")))
+      .groupBy("id", "h").agg(min("v").as("minhash"))
+
+  private def requireHashCap(numHashes: Int): Unit = require(numHashes >= 1 && numHashes <= 16,
+    s"numHashes must be in 1..16 (got $numHashes): (x + h*y) with h <= 15 is the " +
       s"largest coefficient that cannot overflow int64 under modulus $HashModulus")
-
-  /** The family's x and y: hex digest `m`'s two 60-bit halves mod M. */
-  private def hashHalves(m: Column): Seq[Column] = Seq("x" -> 1, "y" -> 17).map {
-    case (n, i) => (conv(substring(m, i, 15), 16, 10).cast("long") % HashModulus).as(n) }
 
   /** In-row MinHash signature: the whole numHashes-member signature as ONE
     * `ARRAY<BIGINT>` column computed per row — same md5-derived universal
-    * family as [[minhashSignatures]], value for value (min over a multiset
-    * equals min over the distinct set, so shingle duplicates cannot drift
-    * the two forms apart; spec-pinned). No explode, no groupBy, no
-    * shuffle: every operation is a codegen'd array expression, which makes
-    * this THE signature form for streams (a stateless map on each
-    * microbatch) and for map-only signature backfills at 100 TB. NULL when
-    * the document is too short to shingle.
+    * family as [[minhashSignatures]], value for value. The native
+    * [[MinHashArray]] kernel: one split, one md5 per distinct shingle and
+    * numHashes long minima, inside whole-stage codegen. No explode, no
+    * groupBy, no shuffle, which makes this THE signature form for streams
+    * (a stateless map on each microbatch) and for map-only signature
+    * backfills at 100 TB. NULL when the document is too short to shingle.
     */
   def minhashArray(text: Column, numHashes: Int = 16,
                    shingleLen: Int = 3): Column = {
     requireHashCap(numHashes)
-    val sh = TextAnalysis.shingles(text, shingleLen)
-    // Higher-order functions share no subexpressions: a digest used in
-    // several of them is computed once per use. So md5 appears once, and one
-    // fold over the (x, y) pairs keeps all numHashes minima.
-    val xy = transform(transform(sh, md5(_)), m => struct(hashHalves(m): _*))
-    val sig = aggregate(xy, array(Seq.fill(numHashes)(lit(Long.MaxValue)): _*),
-      (acc, p) => array((0 until numHashes).map(h => least(acc.getItem(h),
-        (p.getField("x") + lit(h.toLong) * p.getField("y")) % HashModulus)): _*))
-    when(size(sh) > 0, sig)
+    ExpressionColumns.column(MinHashArray(ExpressionColumns.expression(text.cast("string")),
+      numHashes, shingleLen))
   }
 
   /** LSH band buckets from an in-row signature array: (band, bucket) structs
@@ -287,30 +282,128 @@ object Dedup {
     * with the minimum doc id of its cluster (the canonical representative —
     * the standard "keep one per near-dup cluster" step of a training-data
     * pipeline; singletons label themselves). Composes the LSH candidate
-    * generator with the pointer-doubling component fixpoint, so both stages
-    * scale: candidates are bucket-bounded, components converge in
-    * O(log diameter) rounds.
+    * generator with the component labeling, so both stages scale:
+    * candidates are bucket-bounded, components converge in O(log diameter)
+    * rounds.
+    *
+    * The in-row signatures ([[minhashArray]]) are computed once and
+    * persisted. '''Driver finish''': when `idCol` is integral and the
+    * signatures hold at most `GraphAlgorithms.driverCap` values (documents
+    * x numHashes), they are counted and collected in one pass each and the
+    * clustering finishes on the driver ([[localClusters]]) — the same
+    * buckets, pairs, estimates and union-find labels as the distributed
+    * path, bit for bit. Otherwise the persisted rows explode into
+    * signature rows for the distributed LSH join and component labeling.
     */
   def nearDupClusters(df: DataFrame, idCol: String, textCol: String,
                       minJaccard: Double, numHashes: Int = 16, bands: Int = 4,
-                      shingleLen: Int = 3): DataFrame =
-    nearDupClustersFromSignatures(df, idCol,
-      minhashSignatures(df, idCol, textCol, numHashes, shingleLen).localCheckpointCapped(),
-      minJaccard, numHashes, bands)
+                      shingleLen: Int = 3): DataFrame = {
+    val sigs = inRowSignatures(df, idCol, textCol, numHashes, shingleLen)
+    if (!GraphAlgorithms.numericCol(df, idCol))
+      return lshClusters(df, idCol, signatureRows(sigs).localCheckpointCapped(),
+        minJaccard, numHashes, bands)
+    // an RDD, not a cached Dataset: the cache is then built inside the
+    // count job, not by a query stage of its own
+    val kept = sigs.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val local =
+        if (kept.count() * numHashes > GraphAlgorithms.driverCap) None
+        else localClusters(df, idCol, mergedSignatures(kept.collect()), minJaccard, numHashes, bands)
+      local.getOrElse(lshClusters(df, idCol,
+        signatureRows(df.sparkSession.createDataFrame(kept, sigs.schema)).localCheckpointCapped(),
+        minJaccard, numHashes, bands))
+    } finally kept.unpersist(blocking = false)
+  }
 
-  /** Clustering over precomputed signatures; `ids` supplies the id universe
-    * (singleton docs label themselves).
+  /** Clustering over precomputed (id, h, minhash) signatures; `ids`
+    * supplies the id universe (singleton docs label themselves, and
+    * signatures of ids outside it join no cluster).
+    *
+    * '''Driver finish''': when `idCol` and the signature columns are
+    * integral, the signature rows whose id is in `ids` are at most
+    * `GraphAlgorithms.driverCap` and form exactly one row per (id, h) for
+    * h in [0, numHashes), they are collected and the clustering finishes
+    * on the driver ([[localClusters]]), with the distributed path's
+    * output bit for bit. Any other table takes the distributed path.
     */
   def nearDupClustersFromSignatures(ids: DataFrame, idCol: String,
                                     sig: DataFrame, minJaccard: Double,
                                     numHashes: Int = 16,
                                     bands: Int = 4): DataFrame = {
+    val integral = GraphAlgorithms.numericCol(ids, idCol) &&
+      Seq("id", "h", "minhash").forall(GraphAlgorithms.numericCol(sig, _))
+    val local = if (!integral) None else {
+      // a NULL h or minhash maps to h = -1, a shape no well-formed table has
+      val rows = sig.join(ids.select(col(idCol).as("id")), Seq("id"), "left_semi")
+        .select(col("id").cast("long"), col("h").cast("long"), col("minhash").cast("long"))
+        .rdd.map(r => if (r.isNullAt(1) || r.isNullAt(2)) (r.getLong(0), -1L, 0L)
+          else (r.getLong(0), r.getLong(1), r.getLong(2)))
+      GraphAlgorithms.collectWithinCap(rows)
+        .flatMap(signatureTable(_, numHashes))
+        .flatMap(localClusters(ids, idCol, _, minJaccard, numHashes, bands))
+    }
+    local.getOrElse(lshClusters(ids, idCol, sig, minJaccard, numHashes, bands))
+  }
+
+  /** The distributed clustering: LSH candidate pairs at or above
+    * `minJaccard`, then `GraphAlgorithms.componentLabels` over `ids`. */
+  private def lshClusters(ids: DataFrame, idCol: String, sig: DataFrame, minJaccard: Double,
+                          numHashes: Int, bands: Int): DataFrame = {
     val pairs = minhashLshPairsFromSignatures(sig, numHashes, bands)
       .filter(col("est_jaccard") >= minJaccard)
       .select(col("id_a").as("source"), col("id_b").as("target"))
     val nodes = ids.select(col(idCol).as("id"))
-    graft.GraphAlgorithms.componentLabels(graft.NetworkFrame(nodes, pairs), "weak")
+    GraphAlgorithms.componentLabels(NetworkFrame(nodes, pairs), "weak")
       .select(col("id").as(idCol), col("component").as("cluster_rep"))
+  }
+
+  /** Collected (id, sig) rows as one signature per id: NULL ids and NULL
+    * signatures drop, and a duplicate id merges by element-wise minimum,
+    * as [[signatureRows]] does. */
+  private def mergedSignatures(rows: Array[Row]): Map[Long, Array[Long]] =
+    rows.filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+      .groupBy(_.getAs[Number](0).longValue)
+      .map { case (id, rs) => id -> rs.map(_.getSeq[Long](1).toArray).reduce((a, b) =>
+        a.indices.map(h => math.min(a(h), b(h))).toArray) }
+
+  /** Collected (id, h, minhash) rows as one signature per id, or None unless
+    * every id has exactly one row for each h in [0, numHashes) — the shape
+    * whose band digests and agreement counts the driver finish reproduces.
+    */
+  private def signatureTable(rows: Array[(Long, Long, Long)],
+                             numHashes: Int): Option[Map[Long, Array[Long]]] = {
+    val byId = rows.groupBy(_._1).map { case (id, rs) => id -> rs.sortBy(_._2) }
+    if (byId.values.forall(_.map(_._2).toSeq == (0L until numHashes.toLong)))
+      Some(byId.map { case (id, rs) => id -> rs.map(_._3) })
+    else None
+  }
+
+  /** The driver finish of LSH clustering over one signature per id: each
+    * band's bucket is the md5 of its values joined by '|' in h order (the
+    * [[lshBucketsFromSignatures]] digest); candidates are the id pairs
+    * a < b sharing a (band, bucket); a pair's estimate is its agreeing
+    * positions / numHashes, and pairs at or above `minJaccard` are
+    * union-found into min-id labels, left-joined onto `ids`. None, for the
+    * distributed path, once the candidates pass `GraphAlgorithms.driverCap`.
+    */
+  private def localClusters(ids: DataFrame, idCol: String, sigs: Map[Long, Array[Long]],
+                            minJaccard: Double, numHashes: Int, bands: Int): Option[DataFrame] = {
+    val rows = rowsPerBand(numHashes, bands)
+    val buckets = sigs.toSeq.flatMap { case (id, s) => (0 until bands).map { b =>
+      (b, DigestUtils.md5Hex(s.slice(b * rows, (b + 1) * rows).mkString("|"))) -> id }
+    }.groupBy(_._1).values.map(_.map(_._2))
+    val candidates = buckets.iterator.flatMap(m =>
+      for (a <- m.iterator; b <- m.iterator if a < b) yield (a, b))
+    val pairs = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    val cap = GraphAlgorithms.driverCap
+    while (candidates.hasNext && pairs.size <= cap) pairs += candidates.next()
+    if (pairs.size > cap) return None
+    val edges = pairs.toArray.filter { case (a, b) =>
+      (0 until numHashes).count(h => sigs(a)(h) == sigs(b)(h)).toDouble / numHashes.toDouble >=
+        minJaccard }
+    Some(GraphAlgorithms.labelIds(ids.select(col(idCol).as("id")),
+        GraphAlgorithms.unionFindMinLabels(edges))
+      .select(col("id").as(idCol), col("component").as("cluster_rep")))
   }
 
   /** The curation step after clustering: ONE surviving document per

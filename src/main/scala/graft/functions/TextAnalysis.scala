@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftext.CappedCheckpoint._
+import org.apache.spark.sql.graftext.ExpressionColumns
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * language ID, quality scoring, token counting, document fingerprinting.
@@ -167,16 +168,8 @@ object TextAnalysis {
     * all sliding `w`-word windows — a content-defined document signature
     * robust to local edits. Null for docs shorter than `w` words.
     */
-  def rollingFingerprint(text: Column, w: Int = 5): Column = {
-    val toks = tokens(text)
-    // guard: sequence(1, 0) DESCENDS in Spark, so short docs must yield an
-    // empty window list (-> null fingerprint), not a slice(_, 0) error
-    val windows = when(size(toks) >= w,
-      transform(sequence(lit(1), size(toks) - lit(w - 1)),
-        i => md5(array_join(slice(toks, i, lit(w)), " "))))
-      .otherwise(array().cast("array<string>"))
-    array_min(windows)
-  }
+  def rollingFingerprint(text: Column, w: Int = 5): Column =
+    array_min(transform(allShingles(text, w), md5(_)))
 
   /** Vocabulary growth curve (Heaps'-law profile): distinct-token count
     * after ingesting documents up to each checkpoint id — each token
@@ -260,24 +253,21 @@ object TextAnalysis {
       .distinct()
   }
 
-  /** Distinct `n`-word shingles of a document — the unit of MinHash /
-    * Jaccard dedup.
+  /** Distinct `n`-word shingles of a document, first occurrences in
+    * document order — the unit of MinHash / Jaccard dedup. The native
+    * [[WordShingles]] kernel; empty below `n` words and for NULL text.
     */
-  def shingles(text: Column, n: Int = 3): Column =
-    array_distinct(allShingles(text, n))
+  def shingles(text: Column, n: Int = 3): Column = wordShingles(text, n, distinct = true)
 
-  /** All `n`-word shingles WITH multiplicity — the unit of within-document
-    * repetition metrics.
+  /** All `n`-word shingles WITH multiplicity, in document order — the unit
+    * of within-document repetition metrics. The native [[WordShingles]]
+    * kernel: window i is tokens i..i+n-1 of [[tokens]] joined by one space;
+    * empty below `n` words and for NULL text.
     */
-  def allShingles(text: Column, n: Int = 3): Column = {
-    val toks = tokens(text)
-    // same descending-sequence guard as rollingFingerprint
-    when(size(toks) >= n,
-      transform(
-        sequence(lit(1), size(toks) - lit(n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
+  def allShingles(text: Column, n: Int = 3): Column = wordShingles(text, n, distinct = false)
+
+  private def wordShingles(text: Column, n: Int, distinct: Boolean): Column =
+    ExpressionColumns.column(WordShingles(ExpressionColumns.expression(text.cast("string")), n, distinct))
 
   /** Fixed-size token windows with stride — training-sequence preparation
     * (context-length chunking). One row per (doc, window start): starts are

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -940,5 +940,143 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     }
     assert(seen == Set("short doc", "df cap drops a shingle", "identical sets", "overlap below tau",
       "nothing kept", "boilerplate"), seen)
+  }
+
+  // ---------------- native text kernels and the LSH driver finish --------
+
+  /** The Column formulations `allShingles`, `shingles`, `minhashArray`,
+    * `minhashSignatures` and `rollingFingerprint` had before the native
+    * kernels: the references the kernels must equal value for value.
+    */
+  private object ColumnForms {
+    def allShingles(text: Column, n: Int): Column = {
+      val toks = split(text, " ")
+      when(size(toks) >= n,
+        transform(sequence(lit(1), size(toks) - lit(n - 1)),
+          i => array_join(slice(toks, i, lit(n)), " ")))
+        .otherwise(array().cast("array<string>"))
+    }
+    def shingles(text: Column, n: Int): Column = array_distinct(allShingles(text, n))
+    private def halves(m: Column): Seq[Column] = Seq("x" -> 1, "y" -> 17).map { case (c, i) =>
+      (conv(substring(m, i, 15), 16, 10).cast("long") % graft.functions.Dedup.HashModulus).as(c) }
+    def minhashArray(text: Column, numHashes: Int, n: Int): Column = {
+      val sh = shingles(text, n)
+      val xy = transform(transform(sh, md5(_)), m => struct(halves(m): _*))
+      val sig = aggregate(xy, array(Seq.fill(numHashes)(lit(Long.MaxValue)): _*),
+        (acc, p) => array((0 until numHashes).map(h => least(acc.getItem(h),
+          (p.getField("x") + lit(h.toLong) * p.getField("y")) % graft.functions.Dedup.HashModulus)): _*))
+      when(size(sh) > 0, sig)
+    }
+    def minhashSignatures(df: DataFrame, numHashes: Int, n: Int): DataFrame =
+      df.select(col("id"), explode(shingles(col("text"), n)).as("shingle"))
+        .select(col("id") +: halves(md5(col("shingle"))): _*)
+        .select(col("id"), col("x"), col("y"), explode(sequence(lit(0), lit(numHashes - 1))).as("h"))
+        .select(col("id"), col("h"), ((col("x") + col("h") * col("y")) %
+          graft.functions.Dedup.HashModulus).as("v"))
+        .groupBy("id", "h").agg(min("v").as("minhash"))
+    def rollingFingerprint(text: Column, w: Int): Column = {
+      val toks = split(text, " ")
+      array_min(when(size(toks) >= w,
+        transform(sequence(lit(1), size(toks) - lit(w - 1)),
+          i => md5(array_join(slice(toks, i, lit(w)), " "))))
+        .otherwise(array().cast("array<string>")))
+    }
+  }
+
+  /** (id, text) rows: empty tokens (runs of spaces, leading and trailing
+    * spaces), accented and CJK words, repeated windows, a NULL text and an
+    * empty text; lengths from 0 to 14 tokens, so n often exceeds the
+    * token count.
+    */
+  private val genTexts: Gen[Seq[(Long, String)]] = for {
+    k <- Gen.choose(4, 10)
+    texts <- Gen.listOfN(k, Gen.choose(0, 14).flatMap(Gen.listOfN(_,
+      Gen.oneOf("", "a", "b", "a", "café", "日本語", "ß", "x1"))))
+  } yield (texts.map(_.mkString(" ")) ++ Seq("", null)).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+
+  test("the native shingle and MinHash kernels equal their Column formulations") {
+    import graft.functions.{Dedup, TextAnalysis}
+    (1 to 6).foreach { i =>
+      val df = genTexts(Gen.Parameters.default, Seed(i.toLong)).get.toDF("id", "text")
+      Seq(1, 2, 3, 5).foreach { n =>
+        val t = col("text")
+        val pairs = Seq(
+          "allShingles" -> (TextAnalysis.allShingles(t, n), ColumnForms.allShingles(t, n)),
+          "shingles" -> (TextAnalysis.shingles(t, n), ColumnForms.shingles(t, n)),
+          "minhashArray" -> (Dedup.minhashArray(t, 16, n), ColumnForms.minhashArray(t, 16, n)),
+          "minhashArray(5)" -> (Dedup.minhashArray(t, 5, n), ColumnForms.minhashArray(t, 5, n)),
+          "rollingFingerprint" -> (TextAnalysis.rollingFingerprint(t, n),
+            ColumnForms.rollingFingerprint(t, n)))
+        pairs.foreach { case (name, (lib, ref)) =>
+          val rows = df.select(col("id"), col("text"), lib.as("lib"), ref.as("ref")).collect()
+          rows.foreach(r => assert(r.get(2) == r.get(3), s"seed $i n=$n $name on '${r.get(1)}'"))
+        }
+        // a duplicate id merges by element-wise minimum
+        val dup = df.union(df.limit(3).select(col("id"), upper(col("text"))))
+        assertSameFrame(Dedup.minhashSignatures(dup, "id", "text", 16, n),
+          ColumnForms.minhashSignatures(dup, 16, n))
+      }
+    }
+  }
+
+  /** A shingle corpus of (doc_id, text) with unique ids, INT ids on odd
+    * seeds, and its min Jaccard. */
+  private def lshCorpus(i: Int): (DataFrame, Double) = {
+    val (docs, (_, _, tau, _, _), _) = genShingleCorpus(Gen.Parameters.default, Seed(i.toLong)).get
+    val df = docs.map { case (id, _, t) => (id, t) }.toDF("doc_id", "text")
+    (if (i % 2 == 1) df.select(col("doc_id").cast("int"), col("text")) else df, tau)
+  }
+
+  /** Whether `df` reads a checkpoint: the distributed component fixpoint
+    * returns one, the driver finish only joins driver-side labels onto the
+    * (here local) ids.
+    */
+  private def readsCheckpoint(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r }.isDefined
+
+  test("nearDupClusters' driver finish equals the distributed LSH clustering") {
+    import graft.functions.Dedup
+    val seen = collection.mutable.Set.empty[String]
+    (1 to 8).foreach { i =>
+      val (df, tau) = lshCorpus(i)
+      Seq((16, 4, 2), (8, 8, 3)).foreach { case (h, b, len) =>
+        val ctx = s"corpus $i tau=$tau numHashes=$h bands=$b len=$len"
+        def distributed(out: => DataFrame) = GraphAlgorithms.withDriverCap(0L)(out)
+        val local = Dedup.nearDupClusters(df, "doc_id", "text", tau, h, b, len)
+        assert(!readsCheckpoint(local), ctx)
+        assertSameFrame(local, distributed(Dedup.nearDupClusters(df, "doc_id", "text", tau, h, b, len)))
+        val reps = local.collect().map(_.get(1))
+        if (reps.distinct.length < reps.length - 1) seen += "a cluster"
+        if (df.select("text").collect().exists(_.getString(0).split(" ", -1).length < len))
+          seen += "short doc"
+        // a repeated id (the first id, with the last text) merges its
+        // signatures by element-wise minimum and keeps both rows
+        val dup = df.union(df.orderBy(col("doc_id").desc).limit(1)
+          .select(lit(df.head.get(0)).cast(df.schema("doc_id").dataType), col("text")))
+        val sig = Dedup.minhashSignatures(dup, "doc_id", "text", h, len).localCheckpoint()
+        assertSameFrame(Dedup.nearDupClusters(dup, "doc_id", "text", tau, h, b, len),
+          dup.select("doc_id").join(distributed(
+            Dedup.nearDupClustersFromSignatures(df, "doc_id", sig, tau, h, b)), "doc_id"))
+        // signatures of ids outside `ids` join no cluster; ids without
+        // signatures label themselves
+        val ids = df.filter(col("doc_id") % 3 =!= 0)
+          .union(df.limit(1).select(lit(7).cast(df.schema("doc_id").dataType), col("text")))
+        val fromSig = Dedup.nearDupClustersFromSignatures(ids, "doc_id", sig, tau, h, b)
+        assert(!readsCheckpoint(fromSig), ctx)
+        assertSameFrame(fromSig,
+          distributed(Dedup.nearDupClustersFromSignatures(ids, "doc_id", sig, tau, h, b)))
+        // a table that is not one row per (id, h) takes the distributed path
+        val ragged = sig.union(sig.filter(col("h") === 0).withColumn("minhash", col("minhash") + 1))
+        assertSameFrame(Dedup.nearDupClustersFromSignatures(ids, "doc_id", ragged, tau, h, b),
+          distributed(Dedup.nearDupClustersFromSignatures(ids, "doc_id", ragged, tau, h, b)))
+      }
+      // string ids run the distributed path
+      val byName = df.select(col("doc_id").cast("string").as("doc_id"), col("text"))
+      val strOut = Dedup.nearDupClusters(byName, "doc_id", "text", tau)
+      assert(readsCheckpoint(strOut), s"corpus $i string ids")
+      assert(strOut.count() == df.count())
+    }
+    assert(seen == Set("a cluster", "short doc"), seen)
   }
 }

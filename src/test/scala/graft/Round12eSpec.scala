@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.Md5
+import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, Md5}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.Dedup
+import graft.functions.{Dedup, MinHashArray}
 
 /** Round-12 continuation: the streaming ingest-admission gate and its
   * in-row signature building blocks.
@@ -38,8 +38,13 @@ class Round12eSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("minhashArray hashes each shingle once") {
+    // the one native kernel digests each distinct shingle once; no Md5
+    // expression or interpreted higher-order function is left to digest again
     val plan = fixture.select(Dedup.minhashArray(col("text"), 16, 3)).queryExecution.analyzed
-    assert(plan.flatMap(_.expressions.flatMap(_.collect { case m: Md5 => m })).size == 1)
+    def nodes[T](pf: PartialFunction[Expression, T]) = plan.flatMap(_.expressions.flatMap(_.collect(pf)))
+    assert(nodes { case m: MinHashArray => m }.size == 1)
+    assert(nodes { case f: HigherOrderFunction => f }.isEmpty)
+    assert(nodes { case m: Md5 => m }.isEmpty)
   }
 
   test("lshBandArray matches lshBucketsFromSignatures digest for digest") {
